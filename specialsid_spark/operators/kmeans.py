@@ -16,6 +16,9 @@ each iteration.  So every assignment decision is an integer comparison
 
 from __future__ import annotations
 
+import pandas as pd  # module-level: pandas_udf type hints must
+# resolve in module globals under `from __future__ import annotations`
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -123,17 +126,15 @@ def assign_clusters_udf(mu_df: DataFrame, centroids: list[list[int]]) -> DataFra
     cids (tests/test_kmeans.py pins all three twins)."""
     import numpy as np  # noqa: PLC0415
 
-    import pandas as pd  # noqa: PLC0415
-
     cents = np.array(centroids, dtype=np.int64)
 
-    def _cid_of(mu):
+    def _cid_of(mu: pd.Series) -> pd.Series:
         if len(mu) == 0:
             return pd.Series([], dtype="int32")
         x = np.stack(mu.to_numpy()).astype(np.int64, copy=False)
         return pd.Series(_np_cids(x, cents).astype("int32"))
 
-    cid_of = F.pandas_udf(_cid_of, "int", F.PandasUDFType.SCALAR)
+    cid_of = F.pandas_udf(_cid_of, "int")
 
     return mu_df.withColumn("cid", cid_of("mu"))
 
@@ -160,8 +161,6 @@ def kmeans_fit(
     dim-fold row explosion).  The driver still collects only k×dim
     partials per iteration — a few KB at any corpus size."""
     import numpy as np  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
 
     if "mu" in df.columns:
         mu_df = df
@@ -235,8 +234,6 @@ def kmeans_stats(
     (arbitrary precision — a superset of the old F.sum(long) domain).
     Returns ({cid: n_vectors}, total_inertia)."""
     import numpy as np  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
 
     cents = np.array(centroids, dtype=np.int64)
 

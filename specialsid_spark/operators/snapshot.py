@@ -196,7 +196,13 @@ def snapshot_commit_generations(
     sitting in the same frame.  Returns the committed version numbers
     in order; the LAST manifest rename is the visibility point for the
     final version (each earlier version becomes visible exactly when
-    its own manifest lands, preserving per-version atomicity)."""
+    its own manifest lands, preserving per-version atomicity).
+
+    Raises ValueError on duplicate ``gens``: a repeated generation would
+    list its files twice, so every later read would return its rows
+    twice."""
+    if len(set(gens)) != len(gens):
+        raise ValueError(f"duplicate generations in {gens!r}")
     root = Path(path)
     versions = snapshot_versions(path)
     first_version = (versions[-1] + 1) if versions else 1

@@ -17,6 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from specialsid_spark.catalog import load, load_parallel
+from specialsid_spark.operators.snapshot import (
+    snapshot_commit,
+    snapshot_read,
+    snapshot_versions,
+)
 from specialsid_spark.operators.textops import (
     SQL_MINHASH_BASES,
     SQL_TOKEN_DIGEST16,
@@ -235,6 +240,187 @@ def lsh_band_keys(d: DataFrame) -> DataFrame:
     return sigs.select("doc_id", F.explode(_band_structs()).alias("b")).select(
         "doc_id", F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey")
     )
+
+
+def simhash_probes(sigs: DataFrame) -> DataFrame:
+    """Pigeonhole probe expansion of (doc_id, blk0..blk3) SimHash
+    signatures: 4 rows per doc — (doc_id, band, v, blk0..blk3), where
+    (band, v) is the block key and the full signature rides along for
+    in-join radius verification (simhash_verdict)."""
+    return sigs.select(
+        "doc_id",
+        *[F.col(f"blk{b}") for b in range(4)],
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"), F.col(f"blk{b}").alias("v")
+                    )
+                    for b in range(4)
+                ]
+            )
+        ).alias("p"),
+    ).select(
+        "doc_id",
+        F.col("p.band").alias("band"),
+        F.col("p.v").alias("v"),
+        *[F.col(f"blk{b}") for b in range(4)],
+    )
+
+
+def simhash_ham_to_index() -> "F.Column":
+    """Hamming distance column between a probe row's blk0..blk3 and an
+    index row's iblk0..iblk3 (post-join projection)."""
+    return sum(
+        F.bit_count(F.col(f"blk{i}").bitwiseXOR(F.col(f"iblk{i}")))
+        for i in range(4)
+    )
+
+
+# The incremental near-dup gates: one verdict rule per signature family
+# (lsh_verdict, simhash_verdict) and one verdict-and-commit path over a
+# persisted snapshot index (lsh_gate, simhash_gate).  The daily batch
+# queries below and the hop4 streams (streaming/pipeline.py) both call
+# these, so the gate rule, the index layout and the barrier placement
+# live here once for both drivers.
+
+
+def _verdict(seeds: DataFrame, hitc: DataFrame | None, hiti: DataFrame) -> DataFrame:
+    """(doc_id, hit_corpus, hit_intra, admitted) for every doc of
+    ``seeds``: ONE map-side-combined groupBy over zero-flag seed rows
+    unioned with the corpus-probe hits ``hitc`` (None: no prior index)
+    and the intra-batch hits ``hiti`` — one small doc_id shuffle, with
+    no distinct or left join per hit kind."""
+
+    def flags(df: DataFrame, hc: int, hi: int) -> DataFrame:
+        return df.select("doc_id", F.lit(hc).alias("hc"), F.lit(hi).alias("hi"))
+
+    rows = flags(seeds, 0, 0).unionByName(flags(hiti, 0, 1))
+    if hitc is not None:
+        rows = rows.unionByName(flags(hitc, 1, 0))
+    return (
+        rows.groupBy("doc_id")
+        .agg(F.max("hc").alias("hc"), F.max("hi").alias("hi"))
+        .select(
+            "doc_id",
+            F.col("hc").cast("int").alias("hit_corpus"),
+            F.col("hi").cast("int").alias("hit_intra"),
+            ((F.col("hc") + F.col("hi")) == 0).cast("int").alias("admitted"),
+        )
+    )
+
+
+def lsh_verdict(bands: DataFrame, index: DataFrame | None = None) -> DataFrame:
+    """The MinHash-LSH gate rule over one batch's lsh_band_keys rows.
+
+    A doc is a corpus hit when any of its (band, bkey) buckets is in
+    ``index`` (a (band, bkey) frame, None when there is no prior index),
+    and an intra hit when a lower doc_id of the same batch shares a
+    bucket (greedy keep-lowest).  The probe is a LEFT SEMI join on the
+    band keys, so the index side stays joinable on its storage layout —
+    a bucketed band table feeds it without an index shuffle (the
+    window/union single-shuffle shape measured slower,
+    OPTIMIZATION_r13.md).  Returns (doc_id, hit_corpus, hit_intra,
+    admitted), one row per doc with band rows."""
+    hitc = (
+        None if index is None
+        else bands.join(index, ["band", "bkey"], "left_semi")
+    )
+    mins = bands.groupBy("band", "bkey").agg(F.min("doc_id").alias("m"))
+    hiti = bands.join(mins, ["band", "bkey"]).filter(F.col("doc_id") > F.col("m"))
+    return _verdict(bands, hitc, hiti)
+
+
+def simhash_verdict(probes: DataFrame, index: DataFrame | None = None) -> DataFrame:
+    """The SimHash gate rule over one batch's simhash_probes rows.
+
+    A doc is a corpus hit when any ``index`` row ((band, v, blk0..blk3),
+    None when there is no prior index) lies within Hamming 3, and an
+    intra hit when a lower doc_id of the same batch does.  Candidates
+    come from an equi join on the pigeonhole block key (band, v) and the
+    radius is verified IN the join — exact, not probabilistic: 3 flipped
+    bits across 4 disjoint blocks leave >= 1 block untouched, so every
+    qualifying pair shares a block key.  Same output as lsh_verdict."""
+    ham = simhash_ham_to_index()
+
+    def index_side(df: DataFrame, *extra: F.Column) -> DataFrame:
+        return df.select(
+            *extra, "band", "v",
+            *[F.col(f"blk{b}").alias(f"iblk{b}") for b in range(4)],
+        )
+
+    hitc = (
+        None if index is None
+        else probes.join(index_side(index), ["band", "v"]).filter(ham <= 3)
+    )
+    lower = index_side(probes, F.col("doc_id").alias("doc_b"))
+    hiti = probes.join(lower, ["band", "v"]).filter(
+        (F.col("doc_id") > F.col("doc_b")) & (ham <= 3)
+    )
+    return _verdict(probes, hitc, hiti)
+
+
+def _index_rows(
+    keys: DataFrame, kind: str, admitted: DataFrame | None = None
+) -> DataFrame:
+    """The one gate-table layout, (kind, <key columns>, doc_id): distinct
+    ``kind`` rows carry the key columns of ``keys`` with a NULL doc_id,
+    and 'doc' rows carry the ``admitted`` doc ids with NULL keys."""
+    cols = [c for c in keys.columns if c != "doc_id"]
+    rows = keys.select(
+        F.lit(kind).alias("kind"), *cols, F.lit(None).cast("long").alias("doc_id")
+    ).distinct()
+    if admitted is None:
+        return rows
+    return rows.unionByName(
+        admitted.select(
+            F.lit("doc").alias("kind"),
+            *[F.lit(None).cast(keys.schema[c].dataType).alias(c) for c in cols],
+            "doc_id",
+        )
+    )
+
+
+def _gate(verdict, keys: DataFrame, table: str, kind: str, tag: str | None) -> DataFrame:
+    """Verdict-and-commit over the persisted index ``table``: probe its
+    ``kind`` rows (when the table has committed), compute ``verdict``
+    under ONE lazy localCheckpoint, and append the admitted docs' key
+    rows and doc ids as ONE snapshot commit carrying ``tag`` (the
+    streaming replay token).  The commit is the first action over the
+    verdict, so probe + verdict + write run as one job and the returned
+    frame reuses the blocks that job materialized."""
+    index = None
+    if snapshot_versions(table):
+        cols = [c for c in keys.columns if c != "doc_id"]
+        index = (
+            snapshot_read(keys.sparkSession, table)
+            .filter(F.col("kind") == kind)
+            .select(*cols)
+        )
+    res = verdict(keys, index).localCheckpoint(eager=False)
+    admitted = res.filter(F.col("admitted") == 1).select("doc_id")
+    snapshot_commit(
+        _index_rows(keys.join(admitted, "doc_id"), kind, admitted).coalesce(1),
+        table,
+        mode="append",
+        tag=tag,
+    )
+    return res
+
+
+def lsh_gate(bands: DataFrame, table: str, tag: str | None = None) -> DataFrame:
+    """Gate one batch's lsh_band_keys rows against the persisted band
+    index ``table`` and commit its admitted docs; returns the
+    lsh_verdict frame.  Index rows are (kind='band', band, bkey)."""
+    return _gate(lsh_verdict, bands, table, "band", tag)
+
+
+def simhash_gate(probes: DataFrame, table: str, tag: str | None = None) -> DataFrame:
+    """Gate one batch's simhash_probes rows against the persisted probe
+    index ``table`` and commit its admitted docs; returns the
+    simhash_verdict frame.  Index rows are (kind='probe', band, v,
+    blk0..blk3)."""
+    return _gate(simhash_verdict, probes, table, "probe", tag)
 
 
 def _sql_minhash_sigs() -> str:
@@ -1456,52 +1642,23 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     5th doc, the scale-invariant split) against an EXISTING deduped
     corpus (the rest) without ever pairing the corpus with itself —
     the daily-ingest shape whose cost is |batch| × bands, not
-    |corpus|².  A batch doc is dropped when any of its MinHash-LSH
-    band buckets is already occupied by the corpus (left-semi against
-    the corpus's (band, bkey) index — the SAME bytes-per-doc state the
-    streaming ingest gate persists) or by a lower-id doc of the same
-    batch (greedy keep-lowest, the batch pipeline's rule).  Both hit
-    kinds are emitted per doc, so the oracle value-checks the DECISION
-    decomposition, not just the survivor count.
+    |corpus|².  The corpus's (band, bkey) index is built in the same
+    run, so this calls only the shared gate rule (lsh_verdict): a batch
+    doc is dropped when any of its band buckets is already occupied by
+    the corpus or by a lower-id doc of the same batch (greedy
+    keep-lowest).  Both hit kinds are emitted per doc, so the oracle
+    value-checks the DECISION decomposition, not just the survivor
+    count.
 
     At 100 TB: the corpus index is (band, bkey) pairs — rebuildable
-    from signatures, shareable with the streaming gate — and the gate
-    shuffles only the batch's band keys."""
+    from signatures, the same rows the persisted-index gates keep — and
+    the gate shuffles only the batch's band keys."""
     d = load_parallel(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 5 != 0).select("doc_id", "text")
     batch = d.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text")
     cb = lsh_band_keys(corpus).select("band", "bkey").distinct()
     bb = lsh_band_keys(batch).localCheckpoint(eager=True)
-    hitc = (
-        bb.join(cb, ["band", "bkey"], "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("hit_corpus", F.lit(1))
-    )
-    mins = bb.groupBy("band", "bkey").agg(F.min("doc_id").alias("m"))
-    hiti = (
-        bb.join(mins, ["band", "bkey"])
-        .filter(F.col("doc_id") > F.col("m"))
-        .select("doc_id")
-        .distinct()
-        .withColumn("hit_intra", F.lit(1))
-    )
-    return (
-        bb.select("doc_id")
-        .distinct()
-        .join(hitc, "doc_id", "left")
-        .join(hiti, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("hit_corpus", F.lit(0)).cast("int").alias("hit_corpus"),
-            F.coalesce("hit_intra", F.lit(0)).cast("int").alias("hit_intra"),
-            (
-                F.coalesce("hit_corpus", F.lit(0)) + F.coalesce("hit_intra", F.lit(0))
-                == 0
-            ).cast("int").alias("admitted"),
-        )
-        .orderBy("doc_id")
-    )
+    return lsh_verdict(bb, cb).orderBy("doc_id")
 
 
 _PARA_LEN = 12  # tokens per pseudo-paragraph (fixture text has no \n\n)
@@ -2092,32 +2249,36 @@ def dedup_lsh_recall_referee(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id
     """.format(sigs=_sql_minhash_sigs(), bands=_sql_bands()),
 )
-def dedup_incremental_lsh(
-    spark: SparkSession, sf_dir: str, _return_table: bool = False,
-) -> DataFrame:
+def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1, r12 (VERDICT r11 #6) — incremental MinHash-LSH dedup against
     a PERSISTED, ACCUMULATING band index: the daily-crawl-drop shape.
     dedup_incremental_batch recomputes the corpus bands every run; here
     the corpus's (band, bkey) index lives in a snapshot table
-    (operators/snapshot.py) and each day's drop (1) probes the
-    accumulated index WITHOUT touching corpus text, (2) intra-dedups
-    itself (greedy keep-lowest per bucket), and (3) appends only its
-    admitted docs' bands as a new snapshot version.  Three deterministic
-    "days" (doc_id mod 3): day 0 bootstraps version 1, day 1 probes it
-    and appends version 2, day 2 probes the accumulated v2 index.
+    (operators/snapshot.py) and each day's drop goes through lsh_gate,
+    which (1) probes the accumulated index WITHOUT touching corpus text,
+    (2) intra-dedups the drop (greedy keep-lowest per bucket), and (3)
+    appends only its admitted docs' bands and ids as a new snapshot
+    version.  Three deterministic "days" (doc_id mod 3): day 0
+    bootstraps version 1, day 1 probes it and appends version 2, day 2
+    probes the accumulated v2 index.
 
     At 100 TB: the index is distinct (band, bkey) pairs — a few bytes
     per corpus doc, append-only, time-travelable (a bad crawl drop
     rolls back by restoring the prior version) — and each daily gate
     shuffles only the new batch's band keys against a bucketable
-    parquet table.  The snapshot verbs are the same ones the streaming
-    ingest gate chains after hop3 (tests/test_streaming.py)."""
+    parquet table.  hop4_incremental_lsh_gate runs the same lsh_gate
+    per micro-batch, so either driver can extend the other's table."""
+    return _incremental_lsh(spark, sf_dir)[0]
+
+
+def _incremental_lsh(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, str, DataFrame]:
+    """The 3-day story behind dedup_incremental_lsh and
+    dedup_index_compaction: returns (verdict, index table path,
+    checkpointed full-corpus band frame)."""
     from pathlib import Path
 
-    from specialsid_spark.operators.snapshot import (
-        snapshot_commit,
-        snapshot_read,
-    )
     from specialsid_spark.session import session_workdir
 
     d = load_parallel(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2136,99 +2297,22 @@ def dedup_incremental_lsh(
     def day_bands(n: int) -> DataFrame:
         return bk.filter(F.col("doc_id") % 3 == n)
 
-    # table layout shared with the streaming gate (r12 review: the
-    # "shareable with hop4_incremental_lsh_gate" claim requires ONE
-    # schema): (kind, band, bkey, doc_id) — kind='band' index rows,
-    # kind='doc' admitted-survivor rows
-    def _band_rows(bands: DataFrame, admitted: DataFrame | None) -> DataFrame:
-        rows = bands.select(
-            F.lit("band").alias("kind"),
-            "band",
-            "bkey",
-            F.lit(None).cast("long").alias("doc_id"),
-        ).distinct()
-        if admitted is not None:
-            rows = rows.unionByName(
-                admitted.select(
-                    F.lit("doc").alias("kind"),
-                    F.lit(None).cast("int").alias("band"),
-                    F.lit(None).cast("string").alias("bkey"),
-                    "doc_id",
-                )
-            )
-        return rows
-
     # day 0: bootstrap — commit the corpus band index (version 1) with
     # NATURAL partitioning (r13, VERDICT r12 #3): the day-0 index of a
     # 100 TB corpus must not serialize through one write task; the
     # manifest is multi-file and snapshot_read globs every data file.
-    # Per-day appends below keep coalesce(1) — a daily drop's band rows
-    # are the small-file-hygiene case.
-    snapshot_commit(
-        _band_rows(day_bands(0).select("band", "bkey"), None),
-        t,
-    )
+    # The gated days append through lsh_gate with coalesce(1) — a daily
+    # drop's band rows are the small-file-hygiene case.
+    snapshot_commit(_index_rows(day_bands(0), "band"), t)
 
-    def gate(bb: DataFrame, day_no: int) -> DataFrame:
-        """Probe the CURRENT persisted index, intra-dedup the batch,
-        append admitted docs' bands as a new snapshot version.
-        ``bb`` is a day slice of the checkpointed corpus band frame.
+    def gate(n: int) -> DataFrame:
+        return lsh_gate(day_bands(n), t).select(
+            "doc_id", F.lit(n).alias("day"), "hit_corpus", "hit_intra", "admitted"
+        )
 
-        r13 opt: the probe joins keep their persisted-index shape (the
-        index side stays joinable on its storage layout — at 100 TB a
-        bucketed band table feeds the semi-join without an index
-        shuffle; a window/union shape was measured and REVERTED, see
-        OPTIMIZATION_r13.md), but the verdict assembly is now one
-        map-side-combined groupBy over zero-flag seed rows unioned
-        with the two probes' flag rows — replacing two distincts and
-        two left joins with a single tiny doc_id shuffle."""
-        idx = (
-            snapshot_read(spark, t)
-            .filter(F.col("kind") == "band")
-            .select("band", "bkey")
-        )
-        hitc = bb.join(idx, ["band", "bkey"], "left_semi").select(
-            "doc_id", F.lit(1).alias("hc"), F.lit(0).alias("hi")
-        )
-        mins = bb.groupBy("band", "bkey").agg(F.min("doc_id").alias("m"))
-        hiti = (
-            bb.join(mins, ["band", "bkey"])
-            .filter(F.col("doc_id") > F.col("m"))
-            .select("doc_id", F.lit(0).alias("hc"), F.lit(1).alias("hi"))
-        )
-        seeds = bb.select("doc_id", F.lit(0).alias("hc"), F.lit(0).alias("hi"))
-        res = (
-            seeds.unionByName(hitc).unionByName(hiti)
-            .groupBy("doc_id")
-            .agg(F.max("hc").alias("hc"), F.max("hi").alias("hi"))
-            .select(
-                "doc_id",
-                F.lit(day_no).alias("day"),
-                F.col("hc").cast("int").alias("hit_corpus"),
-                F.col("hi").cast("int").alias("hit_intra"),
-                ((F.col("hc") + F.col("hi")) == 0).cast("int").alias("admitted"),
-            )
-            # LAZY checkpoint (r14): the append commit below is the
-            # first action over the verdict frame, so probe + verdict +
-            # admitted-band write run as ONE job and the returned frame
-            # reuses the blocks that job materialized (was: an eager
-            # materialization job, then the write job re-read it)
-            .localCheckpoint(eager=False)
-        )
-        admitted = res.filter(F.col("admitted") == 1).select("doc_id")
-        admitted_bands = bb.join(admitted, "doc_id").select("band", "bkey")
-        snapshot_commit(
-            _band_rows(admitted_bands, admitted).coalesce(1), t, mode="append"
-        )
-        return res
-
-    r1 = gate(day_bands(1), 1)
-    r2 = gate(day_bands(2), 2)
-    return (
-        r1.unionByName(r2).orderBy("doc_id"),
-        t,
-        bk,
-    ) if _return_table else r1.unionByName(r2).orderBy("doc_id")
+    r1 = gate(1)
+    r2 = gate(2)
+    return r1.unionByName(r2).orderBy("doc_id"), t, bk
 
 
 _COMPACTION_ORACLE = f"""
@@ -2302,14 +2386,9 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic + file unlinks, and the deduplicated generation keeps
     the probe join's build side minimal.  Byte-level reclamation and
     streaming-gate parity are pinned in tests/test_streaming.py."""
-    from specialsid_spark.operators.snapshot import (
-        snapshot_compact,
-        snapshot_read,
-        snapshot_vacuum,
-        snapshot_versions,
-    )
+    from specialsid_spark.operators.snapshot import snapshot_compact, snapshot_vacuum
 
-    _res, t, bk = dedup_incremental_lsh(spark, sf_dir, _return_table=True)
+    _res, t, bk = _incremental_lsh(spark, sf_dir)
     snapshot_compact(spark, t, target_files=None, dedup=True)
     snapshot_vacuum(t, keep_last=1)
     n_versions = len(snapshot_versions(t))
@@ -2635,8 +2714,9 @@ def pipeline_pdf_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
       language gate (stopword vote == en) ->
       PII gate (reject docs matching the email/IPv4 regexes —
       cur_pii_scrub's patterns as a REJECT policy) ->
-      incremental LSH gate against the prior corpus's band index
-      (doc_id %% 3 == 0 prefix corpus, same door on prior days) ->
+      incremental LSH gate (lsh_verdict, the rule every LSH gate
+      shares) against the prior corpus's band index (doc_id %% 3 == 0
+      prefix corpus, same door on prior days) ->
       deterministic epoch-shard manifest (md5 %% 8).
 
     The oracle restates the extracted text as substr(text, 1, 240) ||
@@ -2724,31 +2804,14 @@ def pipeline_pdf_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ONE banding pass over corpus ∪ gated drop (r13 opt): doc_id % 3
     # distinguishes the two sides, band keys are per-doc, so slicing
-    # the checkpointed union replaces two separate signature pipelines
+    # the checkpointed union replaces two separate signature pipelines.
+    # The corpus index is built in this run, so the drop goes through
+    # the shared gate rule (lsh_verdict) and nothing is committed.
     bk = lsh_band_keys(corpus.unionByName(gated)).localCheckpoint(eager=True)
-    # r13: the probe keeps its LeftSemi band-key kernel (the codec
-    # budget caps this door at _PDI_N docs, so the window/union gate
-    # shape measured pure overhead here — see OPTIMIZATION_r13.md);
-    # the verdict assembly is one map-side-combined groupBy over
-    # zero-flag seeds unioned with the probes' flag rows, replacing
-    # three distincts and two anti-joins.
     corpus_idx = bk.filter(F.col("doc_id") % 3 == 0).select("band", "bkey")
-    bb = bk.filter(F.col("doc_id") % 3 == 1)
-    hitc = bb.join(corpus_idx, ["band", "bkey"], "left_semi").select(
-        "doc_id", F.lit(1).alias("hc"), F.lit(0).alias("hi")
-    )
-    mins = bb.groupBy("band", "bkey").agg(F.min("doc_id").alias("m"))
-    hiti = (
-        bb.join(mins, ["band", "bkey"])
-        .filter(F.col("doc_id") > F.col("m"))
-        .select("doc_id", F.lit(0).alias("hc"), F.lit(1).alias("hi"))
-    )
-    seeds = bb.select("doc_id", F.lit(0).alias("hc"), F.lit(0).alias("hi"))
     adm = (
-        seeds.unionByName(hitc).unionByName(hiti)
-        .groupBy("doc_id")
-        .agg(F.max("hc").alias("hc"), F.max("hi").alias("hi"))
-        .filter((F.col("hc") + F.col("hi")) == 0)
+        lsh_verdict(bk.filter(F.col("doc_id") % 3 == 1), corpus_idx)
+        .filter(F.col("admitted") == 1)
         .select("doc_id")
     )
     hx = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":epoch:1")))
@@ -2772,43 +2835,6 @@ def _sh_ham(a: str, b: str) -> str:
     """DuckDB 4-block Hamming distance between probe aliases."""
     return " + ".join(
         f"bit_count(xor({a}.blk{i}, {b}.blk{i}))" for i in range(4)
-    )
-
-
-def simhash_probes(sigs: DataFrame) -> DataFrame:
-    """Pigeonhole probe expansion shared by the batch gate
-    (dedup_incremental_simhash) and its streaming twin
-    (streaming/pipeline.py hop4_incremental_simhash_gate): 4 rows per
-    doc — (doc_id, band, v, blk0..blk3), where (band, v) is the block
-    key and the full signature rides along for in-join radius
-    verification."""
-    return sigs.select(
-        "doc_id",
-        *[F.col(f"blk{b}") for b in range(4)],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), F.col(f"blk{b}").alias("v")
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("p"),
-    ).select(
-        "doc_id",
-        F.col("p.band").alias("band"),
-        F.col("p.v").alias("v"),
-        *[F.col(f"blk{b}") for b in range(4)],
-    )
-
-
-def simhash_ham_to_index() -> "F.Column":
-    """Hamming distance column between a probe row's blk0..blk3 and an
-    index row's iblk0..iblk3 (post-join projection)."""
-    return sum(
-        F.bit_count(F.col(f"blk{i}").bitwiseXOR(F.col(f"iblk{i}")))
-        for i in range(4)
     )
 
 
@@ -2878,21 +2904,21 @@ def simhash_ham_to_index() -> "F.Column":
 )
 def dedup_incremental_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1, r13 — incremental SimHash dedup against a PERSISTED,
-    ACCUMULATING probe index: the SimHash twin of
-    dedup_incremental_lsh, for pipelines whose near-dup definition is
-    Hamming radius (bit-flip tolerant) rather than Jaccard banding.
-    The corpus index is the 4-probe expansion of every admitted doc's
-    128-bit signature — rows (band, v, blk0..blk3), where (band, v) is
-    the pigeonhole block key and the four blocks ride along so radius
-    verification happens IN the probe join, no second lookup.  Three
-    deterministic "days" (doc_id mod 3): day 0 bootstraps version 1
-    with NATURAL partitioning, each later day (1) probes the
-    accumulated index for any corpus signature within Hamming 3 —
-    EXACT, not probabilistic: 3 flipped bits across 4 disjoint blocks
-    leave >= 1 block untouched, so every qualifying pair shares a
-    block key — (2) intra-dedups itself (a lower-id same-day doc
-    within radius 3), and (3) appends only its admitted docs' probe
-    rows as a new snapshot version.
+    ACCUMULATING probe index: dedup_incremental_lsh's daily-drop story
+    for pipelines whose near-dup definition is Hamming radius (bit-flip
+    tolerant) rather than Jaccard banding.  The corpus index is the
+    4-probe expansion of every admitted doc's 128-bit signature — rows
+    (band, v, blk0..blk3), where (band, v) is the pigeonhole block key
+    and the four blocks ride along so radius verification happens IN
+    the probe join, no second lookup.  Three deterministic "days"
+    (doc_id mod 3): day 0 bootstraps version 1 with NATURAL
+    partitioning; each later day goes through simhash_gate, which (1)
+    probes the accumulated index for any corpus signature within
+    Hamming 3 — EXACT, not probabilistic (simhash_verdict) — (2)
+    intra-dedups the drop (a lower-id same-day doc within radius 3),
+    and (3) appends only its admitted docs' probe rows and ids as a new
+    snapshot version, in the table layout hop4_incremental_simhash_gate
+    reads and writes.
 
     At 100 TB: the index is 4 rows x 4 longs per admitted doc (~160
     bytes), append-only, time-travelable (a bad crawl drop rolls back
@@ -2904,10 +2930,6 @@ def dedup_incremental_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerates toward all-pairs."""
     from pathlib import Path
 
-    from specialsid_spark.operators.snapshot import (
-        snapshot_commit,
-        snapshot_read,
-    )
     from specialsid_spark.session import session_workdir
 
     d = load_parallel(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2928,74 +2950,18 @@ def dedup_incremental_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # day 0: bootstrap — the corpus probe index commits with natural
     # partitioning (a 100 TB corpus's day-0 index must not serialize
-    # through one write task); per-day appends below keep coalesce(1)
-    # (a daily drop's probe rows are the small-file-hygiene case)
-    snapshot_commit(
-        day_probes(0).drop("doc_id").distinct(),
-        t,
-    )
+    # through one write task); the gated days append through
+    # simhash_gate with coalesce(1) (a daily drop's probe rows are the
+    # small-file-hygiene case)
+    snapshot_commit(_index_rows(day_probes(0), "probe"), t)
 
-    ham = simhash_ham_to_index()
+    def gate(n: int) -> DataFrame:
+        return simhash_gate(day_probes(n), t).select(
+            "doc_id", F.lit(n).alias("day"), "hit_corpus", "hit_intra", "admitted"
+        )
 
-    def gate(bp: DataFrame, day_no: int) -> DataFrame:
-        """r13 opt: probe joins keep their persisted-index shape (the
-        index side stays joinable on its storage layout — see the LSH
-        gate note), but the verdict assembly is one map-side-combined
-        groupBy over zero-flag seed rows unioned with both probes'
-        flag rows, replacing two distincts and two left joins."""
-        idx = snapshot_read(spark, t).select(
-            "band",
-            "v",
-            *[F.col(f"blk{b}").alias(f"iblk{b}") for b in range(4)],
-        )
-        hitc = (
-            bp.join(idx, ["band", "v"])
-            .filter(ham <= 3)
-            .select("doc_id", F.lit(1).alias("hc"), F.lit(0).alias("hi"))
-        )
-        lower = bp.select(
-            F.col("doc_id").alias("doc_b"),
-            "band",
-            F.col("v"),
-            *[F.col(f"blk{b}").alias(f"iblk{b}") for b in range(4)],
-        )
-        hiti = (
-            bp.join(lower, ["band", "v"])
-            .filter((F.col("doc_id") > F.col("doc_b")) & (ham <= 3))
-            .select("doc_id", F.lit(0).alias("hc"), F.lit(1).alias("hi"))
-        )
-        seeds = bp.select(
-            "doc_id", F.lit(0).alias("hc"), F.lit(0).alias("hi")
-        )
-        res = (
-            seeds.unionByName(hitc).unionByName(hiti)
-            .groupBy("doc_id")
-            .agg(F.max("hc").alias("hc"), F.max("hi").alias("hi"))
-            .select(
-                "doc_id",
-                F.lit(day_no).alias("day"),
-                F.col("hc").cast("int").alias("hit_corpus"),
-                F.col("hi").cast("int").alias("hit_intra"),
-                ((F.col("hc") + F.col("hi")) == 0).cast("int").alias("admitted"),
-            )
-            # LAZY checkpoint (r14): the append commit below
-            # materializes it — probe + verdict + write are ONE job
-            # (see the LSH gate note)
-            .localCheckpoint(eager=False)
-        )
-        admitted = res.filter(F.col("admitted") == 1).select("doc_id")
-        snapshot_commit(
-            bp.join(admitted, "doc_id")
-            .select("band", "v", "blk0", "blk1", "blk2", "blk3")
-            .distinct()
-            .coalesce(1),
-            t,
-            mode="append",
-        )
-        return res
-
-    r1 = gate(day_probes(1), 1)
-    r2 = gate(day_probes(2), 2)
+    r1 = gate(1)
+    r2 = gate(2)
     return r1.unionByName(r2).orderBy("doc_id")
 
 

@@ -843,8 +843,13 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch (vec_id % 4 = 0) is then assigned against the FROZEN
     centroids — no retraining, no touching base vectors — and appended
     as a second snapshot version.  The new vectors immediately query
-    the combined postings; each answer row carries neighbor_is_new so
+    base ∪ batch postings; each answer row carries neighbor_is_new so
     the oracle value-checks that search really spans both generations.
+    The committed postings table is written and never read here: the
+    search reuses the in-session assigned frame (the same rows), so
+    the snapshot write/read round trip is covered by
+    tests/test_snapshot.py (snapshot_commit_generations), not by this
+    query's oracle.
 
     Scale shape: the add is one map-side assignment pass (centroids are
     plan literals) + an append-only commit of (vec_id, cid) pairs; the
@@ -891,9 +896,10 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     # job commits both versions (r14 opt, snapshot_commit_generations —
     # base and batch rows sit in the same assigned frame, so a second
     # write job re-ran the write machinery for rows already in hand);
-    # the assignment itself is the codegen'd SQL kernel (r14 cold A/B —
-    # shipping every mu through Arrow and back measured 2.5× the
-    # in-place k×d-literal evaluation).
+    # the assignment itself is assign_clusters_udf, the cid-only Arrow
+    # pandas_udf (only mu crosses the Arrow boundary and one int column
+    # returns — the mapInPandas twin that shipped every mu back out
+    # measured 2.5× slower, r14 cold A/B).
     assigned = assign_clusters_udf(mu_df, centroids).localCheckpoint(eager=False)
     snapshot_commit_generations(
         assigned.select(

@@ -1400,46 +1400,34 @@ def streaming_cusum_monitor(
     )
 
 
-def hop4_incremental_lsh_gate(
+def _hop4_gate_stream(
     spark: SparkSession,
     clean_dir: str,
     index_table: str,
     checkpoint_dir: str,
-    id_expr: str = "xxhash64(source_file, product_name)",
-    text_expr: str = "concat_ws(' ', product_name, brand)",
+    id_expr: str,
+    text_expr: str,
+    name: str,
+    keys_of,
+    gate,
 ) -> StreamingQuery:
-    """T1 ∘ X1 (r12, VERDICT r11 #6): the incremental MinHash-LSH dedup
-    gate CHAINED AFTER hop3 — the clean zone streams into a foreachBatch
-    that (1) probes the PERSISTED snapshot band index (the same
-    snapshot-table verbs as queries/dedup.py::dedup_incremental_lsh),
-    (2) intra-dedups the micro-batch with the greedy keep-lowest-id
-    rule, and (3) appends the admitted docs' bands AND their doc ids as
-    ONE tagged snapshot commit — commit and idempotency token become
-    visible in the same atomic manifest rename, so a replayed
-    micro-batch is a no-op (snapshot_version_by_tag short-circuit).
-
-    vs. streaming_neardup_ingest: same gate semantics, different state
-    backend — this one accumulates in a versioned snapshot table a daily
-    BATCH drop (dedup_incremental_lsh) can share, time-travel, and roll
-    back, instead of the generation-swap summary table.
-
-    At 100 TB: per batch the shuffle is the batch's band keys only; the
-    index table is distinct (band, bkey) pairs + admitted doc ids,
-    append-only and vacuumable."""
-    from specialsid_spark.operators.snapshot import (
-        snapshot_commit,
-        snapshot_read,
-        snapshot_version_by_tag,
-        snapshot_versions,
-    )
-    from specialsid_spark.queries.dedup import lsh_band_keys
+    """The stream body both hop4 gates share: the clean zone streams
+    into a foreachBatch that projects (doc_id, text) through
+    ``id_expr``/``text_expr``, builds the batch's signature key rows
+    with ``keys_of`` behind ONE eager barrier (the verdict reads them
+    three times and the commit once more), and hands them to ``gate``
+    (queries/dedup.py lsh_gate / simhash_gate) with the tag
+    ``hop4-<name>-<batch_id>``.  The gate's commit carries that tag, so
+    commit and idempotency token become visible in the same atomic
+    manifest rename and a crash-replayed micro-batch is a no-op
+    (snapshot_version_by_tag short-circuit)."""
+    from specialsid_spark.operators.snapshot import snapshot_version_by_tag
 
     schema = spark.read.parquet(clean_dir).schema
     stream = spark.readStream.schema(schema).parquet(clean_dir)
 
-    def gate(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        tag = f"hop4-lsh-{batch_id}"
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        tag = f"hop4-{name}-{batch_id}"
         if snapshot_version_by_tag(index_table, tag) is not None:
             return  # replayed micro-batch: already committed
         docs = (
@@ -1449,55 +1437,47 @@ def hop4_incremental_lsh_gate(
             .filter("doc_id IS NOT NULL AND text <> ''")
             .distinct()
         )
-        bb = lsh_band_keys(docs).localCheckpoint(eager=True)
-        ids = bb.select("doc_id").distinct()
-        if snapshot_versions(index_table):
-            idx = (
-                snapshot_read(sess, index_table)
-                .filter(F.col("kind") == "band")
-                .select("band", "bkey")
-            )
-            hitc = (
-                bb.join(idx, ["band", "bkey"], "left_semi")
-                .select("doc_id")
-                .distinct()
-            )
-            ids = ids.join(hitc, "doc_id", "left_anti")
-        mins = bb.groupBy("band", "bkey").agg(F.min("doc_id").alias("m"))
-        intra = (
-            bb.join(mins, ["band", "bkey"])
-            .filter(F.col("doc_id") > F.col("m"))
-            .select("doc_id")
-            .distinct()
-        )
-        admitted = ids.join(intra, "doc_id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        new_rows = (
-            bb.join(admitted, "doc_id")
-            .select(
-                F.lit("band").alias("kind"),
-                "band",
-                "bkey",
-                F.lit(None).cast("long").alias("doc_id"),
-            )
-            .distinct()
-            .unionByName(
-                admitted.select(
-                    F.lit("doc").alias("kind"),
-                    F.lit(None).cast("int").alias("band"),
-                    F.lit(None).cast("string").alias("bkey"),
-                    "doc_id",
-                )
-            )
-        )
-        snapshot_commit(new_rows.coalesce(1), index_table, mode="append", tag=tag)
+        gate(keys_of(docs).localCheckpoint(eager=True), index_table, tag=tag)
 
     return (
-        stream.writeStream.foreachBatch(gate)
+        stream.writeStream.foreachBatch(run)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
+    )
+
+
+def hop4_incremental_lsh_gate(
+    spark: SparkSession,
+    clean_dir: str,
+    index_table: str,
+    checkpoint_dir: str,
+    id_expr: str = "xxhash64(source_file, product_name)",
+    text_expr: str = "concat_ws(' ', product_name, brand)",
+) -> StreamingQuery:
+    """T1 ∘ X1: the incremental MinHash-LSH dedup gate CHAINED AFTER
+    hop3 — each clean-zone micro-batch goes through
+    queries/dedup.py::lsh_gate, the same verdict-and-commit path
+    dedup_incremental_lsh runs per daily drop: (1) probe the PERSISTED
+    snapshot band index, (2) intra-dedup the micro-batch with the
+    greedy keep-lowest-id rule, and (3) append the admitted docs' bands
+    AND their doc ids as ONE tagged snapshot commit (replay-safe, see
+    _hop4_gate_stream).
+
+    vs. streaming_neardup_ingest: same gate semantics, different state
+    backend — this one accumulates in a versioned snapshot table that
+    the daily batch gate writes in the same layout and can share,
+    time-travel, and roll back, instead of the generation-swap summary
+    table.
+
+    At 100 TB: per batch the shuffle is the batch's band keys only; the
+    index table is distinct (band, bkey) pairs + admitted doc ids,
+    append-only and vacuumable."""
+    from specialsid_spark.queries.dedup import lsh_band_keys, lsh_gate
+
+    return _hop4_gate_stream(
+        spark, clean_dir, index_table, checkpoint_dir, id_expr, text_expr,
+        "lsh", lsh_band_keys, lsh_gate,
     )
 
 
@@ -1557,114 +1537,33 @@ def hop4_incremental_simhash_gate(
     id_expr: str = "xxhash64(source_file, product_name)",
     text_expr: str = "concat_ws(' ', product_name, brand)",
 ) -> StreamingQuery:
-    """T1 ∘ X1 (r13): the incremental SimHash dedup gate CHAINED AFTER
-    hop3 — the Hamming-radius twin of hop4_incremental_lsh_gate for
-    pipelines whose near-dup definition is bit-flip tolerance rather
-    than Jaccard banding.  Each micro-batch (1) probes the PERSISTED
-    snapshot probe index for any admitted signature within Hamming 3
-    (radius verified IN the pigeonhole join — exact, see
-    queries/dedup.py::dedup_incremental_simhash), (2) intra-dedups
-    itself with the greedy keep-lowest-id rule at the same radius, and
-    (3) appends the admitted docs' probe rows AND their doc ids as ONE
-    tagged snapshot commit — commit and idempotency token become
-    visible in the same atomic manifest rename, so a crash-replayed
-    micro-batch is a no-op (snapshot_version_by_tag short-circuit).
+    """T1 ∘ X1: the incremental SimHash dedup gate CHAINED AFTER hop3,
+    for pipelines whose near-dup definition is bit-flip tolerance
+    rather than Jaccard banding.  Each clean-zone micro-batch goes
+    through queries/dedup.py::simhash_gate, the same verdict-and-commit
+    path dedup_incremental_simhash runs per daily drop: (1) probe the
+    PERSISTED snapshot probe index for any admitted signature within
+    Hamming 3 (radius verified IN the pigeonhole join — exact), (2)
+    intra-dedup the micro-batch with the greedy keep-lowest-id rule at
+    the same radius, and (3) append the admitted docs' probe rows AND
+    their doc ids as ONE tagged snapshot commit (replay-safe, see
+    _hop4_gate_stream).
 
     At 100 TB: per batch the shuffle is the batch's block keys only
     (4 rows x 4 longs per doc); the index table is append-only,
-    vacuumable, and shareable with the daily BATCH gate."""
-    from specialsid_spark.operators.snapshot import (
-        snapshot_commit,
-        snapshot_read,
-        snapshot_version_by_tag,
-        snapshot_versions,
-    )
+    vacuumable, and written in the daily batch gate's layout."""
     from specialsid_spark.queries.dedup import (
         _simhash_block_sigs,
-        simhash_ham_to_index,
+        simhash_gate,
         simhash_probes,
     )
 
-    schema = spark.read.parquet(clean_dir).schema
-    stream = spark.readStream.schema(schema).parquet(clean_dir)
-    ham = simhash_ham_to_index()
+    def probes_of(docs: DataFrame) -> DataFrame:
+        return simhash_probes(
+            _simhash_block_sigs(docs.sparkSession, clean_dir, 32, docs=docs)
+        )
 
-    def gate(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        tag = f"hop4-simhash-{batch_id}"
-        if snapshot_version_by_tag(index_table, tag) is not None:
-            return  # replayed micro-batch: already committed
-        docs = (
-            batch_df.selectExpr(
-                f"{id_expr} AS doc_id", f"{text_expr} AS text"
-            )
-            .filter("doc_id IS NOT NULL AND text <> ''")
-            .distinct()
-        )
-        bp = simhash_probes(
-            _simhash_block_sigs(sess, clean_dir, 32, docs=docs)
-        ).localCheckpoint(eager=True)
-        ids = bp.select("doc_id").distinct()
-        if snapshot_versions(index_table):
-            idx = (
-                snapshot_read(sess, index_table)
-                .filter(F.col("kind") == "probe")
-                .select(
-                    "band",
-                    "v",
-                    *[F.col(f"blk{b}").alias(f"iblk{b}") for b in range(4)],
-                )
-            )
-            hitc = (
-                bp.join(idx, ["band", "v"])
-                .filter(ham <= 3)
-                .select("doc_id")
-                .distinct()
-            )
-            ids = ids.join(hitc, "doc_id", "left_anti")
-        lower = bp.select(
-            F.col("doc_id").alias("doc_b"),
-            "band",
-            F.col("v"),
-            *[F.col(f"blk{b}").alias(f"iblk{b}") for b in range(4)],
-        )
-        intra = (
-            bp.join(lower, ["band", "v"])
-            .filter((F.col("doc_id") > F.col("doc_b")) & (ham <= 3))
-            .select("doc_id")
-            .distinct()
-        )
-        admitted = ids.join(intra, "doc_id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        new_rows = (
-            bp.join(admitted, "doc_id")
-            .select(
-                F.lit("probe").alias("kind"),
-                "band",
-                "v",
-                "blk0",
-                "blk1",
-                "blk2",
-                "blk3",
-                F.lit(None).cast("long").alias("doc_id"),
-            )
-            .distinct()
-            .unionByName(
-                admitted.select(
-                    F.lit("doc").alias("kind"),
-                    F.lit(None).cast("int").alias("band"),
-                    F.lit(None).cast("long").alias("v"),
-                    *[F.lit(None).cast("long").alias(f"blk{b}") for b in range(4)],
-                    "doc_id",
-                )
-            )
-        )
-        snapshot_commit(new_rows.coalesce(1), index_table, mode="append", tag=tag)
-
-    return (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _hop4_gate_stream(
+        spark, clean_dir, index_table, checkpoint_dir, id_expr, text_expr,
+        "simhash", probes_of, simhash_gate,
     )

@@ -577,22 +577,21 @@ def test_incremental_lsh_probe_is_semi_join_on_band_keys(spark, qs):
     """r12: each daily gate probes the persisted index with a LEFT SEMI
     join on (band, bkey) — the batch side shuffles only its band keys;
     the corpus text is never rejoined.  The registered query
-    materializes each day eagerly (localCheckpoint between generations),
-    so the final plan shows only checkpointed scans; the probe KERNEL —
-    the same expression the query and hop4 build — is pinned here, and
-    the full query's plan is asserted SinglePartition-free."""
+    checkpoints each day, so its final plan shows only checkpointed
+    scans; the verdict kernel itself (lsh_verdict, the one rule the
+    daily queries and hop4 call) is pinned here, and the full query's
+    plan is asserted SinglePartition-free."""
     from pyspark.sql import functions as F
 
     from specialsid_spark.catalog import load_parallel
-    from specialsid_spark.queries.dedup import lsh_band_keys
+    from specialsid_spark.queries.dedup import lsh_band_keys, lsh_verdict
 
     d = load_parallel(spark, SF_DIR, "documents").select("doc_id", "text")
     bb = lsh_band_keys(d.filter(F.col("doc_id") % 3 == 1))
     idx = lsh_band_keys(d.filter(F.col("doc_id") % 3 == 0)).select(
         "band", "bkey"
     )
-    probe = bb.join(idx, ["band", "bkey"], "left_semi").select("doc_id")
-    pk = plan_of(spark, probe)
+    pk = plan_of(spark, lsh_verdict(bb, idx))
     assert "LeftSemi" in pk
     # the probe's only exchanges key on the band columns, never the text
     assert "SinglePartition" not in pk
@@ -653,35 +652,26 @@ def test_incremental_simhash_probe_verifies_in_join(spark, qs):
     """r13: the SimHash gate probes the persisted index with an equi
     join on the pigeonhole block key (band, v) and verifies Hamming
     radius IN the join filter (bit_count over xor) — no second lookup,
-    no all-pairs; the full query's plan never funnels the corpus
+    no all-pairs.  Pinned on simhash_verdict, the one rule the daily
+    query and hop4 call; the full query's plan never funnels the corpus
     through one partition."""
     from pyspark.sql import functions as F
 
     from specialsid_spark.catalog import load_parallel
-    from specialsid_spark.queries.dedup import _simhash_block_sigs
+    from specialsid_spark.queries.dedup import (
+        _simhash_block_sigs,
+        simhash_probes,
+        simhash_verdict,
+    )
 
     d = load_parallel(spark, SF_DIR, "documents").select("doc_id", "text")
-    sigs = _simhash_block_sigs(spark, SF_DIR, 32, docs=d.filter(F.col("doc_id") % 3 == 1))
-    idx = _simhash_block_sigs(spark, SF_DIR, 32, docs=d.filter(F.col("doc_id") % 3 == 0))
-    bp = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(*[F.struct(F.lit(b).alias("band"), F.col(f"blk{b}").alias("v")) for b in range(4)])
-        ).alias("p"),
-        *[F.col(f"blk{b}") for b in range(4)],
-    ).select("doc_id", "p.band", "p.v", "blk0", "blk1", "blk2", "blk3")
-    ip = idx.select(
-        F.explode(
-            F.array(*[F.struct(F.lit(b).alias("band"), F.col(f"blk{b}").alias("v")) for b in range(4)])
-        ).alias("p"),
-        *[F.col(f"blk{b}").alias(f"iblk{b}") for b in range(4)],
-    ).select("p.band", "p.v", "iblk0", "iblk1", "iblk2", "iblk3")
-    ham = sum(
-        F.bit_count(F.col(f"blk{i}").bitwiseXOR(F.col(f"iblk{i}")))
-        for i in range(4)
-    )
-    probe = bp.join(ip, ["band", "v"]).filter(ham <= 3).select("doc_id")
-    pk = plan_of(spark, probe)
+
+    def probes(n: int):
+        return simhash_probes(
+            _simhash_block_sigs(spark, SF_DIR, 32, docs=d.filter(F.col("doc_id") % 3 == n))
+        )
+
+    pk = plan_of(spark, simhash_verdict(probes(1), probes(0).drop("doc_id")))
     assert "bit_count" in pk  # radius verification inside the join stage
     assert "SinglePartition" not in pk
     p = plan_of(spark, qs["dedup_incremental_simhash"](spark, SF_DIR))

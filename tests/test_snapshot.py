@@ -845,3 +845,19 @@ def test_commit_generations_matches_sequential_appends(spark, tmp_path):
     # vacuum keeps every retained generation readable
     snapshot_vacuum(t, keep_last=3)
     assert snapshot_read(spark, t, 1).count() == 80
+
+
+def test_commit_generations_rejects_duplicate_gens(spark, tmp_path):
+    """A repeated generation would list its files twice in every later
+    manifest (duplicate rows on each read) — it must raise before any
+    data or manifest is written."""
+    from pyspark.sql import functions as F
+
+    from specialsid_spark.operators.snapshot import snapshot_commit_generations
+
+    t = str(tmp_path / "dup_gen_tbl")
+    df = _df(spark, 0, 10).withColumn("gen", F.lit(0))
+    with pytest.raises(ValueError, match="duplicate"):
+        snapshot_commit_generations(df, t, "gen", [0, 0])
+    assert snapshot_versions(t) == []
+    assert not (Path(t) / "data").exists()

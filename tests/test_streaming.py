@@ -1244,7 +1244,6 @@ def test_hop4_incremental_lsh_gate_chains_after_hop3(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from specialsid_spark.operators.snapshot import snapshot_read, snapshot_versions
-    from specialsid_spark.queries.dedup import lsh_band_keys
     from specialsid_spark.streaming.pipeline import (
         hop3_json_to_clean,
         hop4_incremental_lsh_gate,
@@ -1311,22 +1310,7 @@ def test_hop4_incremental_lsh_gate_chains_after_hop3(spark, tmp_path):
         .selectExpr(f"{id_expr} AS doc_id", f"{text_expr} AS text")
         .distinct()
     )
-    bands = lsh_band_keys(docs)
-    dup_b = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("b.doc_id").alias("doc_id"))
-        .distinct()
-    )
-    kept_batch = {
-        r.doc_id
-        for r in docs.select("doc_id").join(dup_b, "doc_id", "left_anti").collect()
-    }
+    kept_batch = _lsh_keep_lowest(docs)
     assert kept_stream == kept_batch
     assert len(kept_stream) < 16  # the gate really dropped near-dups
     assert len(snapshot_versions(index)) > len(v_after_1)  # index accumulated
@@ -1465,7 +1449,6 @@ def test_hop4_index_compaction_vacuum_preserves_gate(spark, tmp_path):
         snapshot_vacuum,
         snapshot_versions,
     )
-    from specialsid_spark.queries.dedup import lsh_band_keys
     from specialsid_spark.streaming.pipeline import (
         hop3_json_to_clean,
         hop4_incremental_lsh_gate,
@@ -1554,22 +1537,7 @@ def test_hop4_index_compaction_vacuum_preserves_gate(spark, tmp_path):
         .selectExpr(f"{id_expr} AS doc_id", f"{text_expr} AS text")
         .distinct()
     )
-    bands = lsh_band_keys(docs)
-    dup_b = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("b.doc_id").alias("doc_id"))
-        .distinct()
-    )
-    kept_batch = {
-        r.doc_id
-        for r in docs.select("doc_id").join(dup_b, "doc_id", "left_anti").collect()
-    }
+    kept_batch = _lsh_keep_lowest(docs)
     assert kept_stream == kept_batch
 
 
@@ -1694,3 +1662,163 @@ def test_hop4_incremental_simhash_gate_parity_and_replay(spark, tmp_path):
     versions_before = snapshot_versions(index)
     run_gate()
     assert snapshot_versions(index) == versions_before
+
+
+def _lsh_keep_lowest(docs):
+    """Batch greedy keep-lowest LSH referee over a (doc_id, text) frame:
+    the doc ids no lower doc_id shares a band bucket with."""
+    from pyspark.sql import functions as F
+
+    from specialsid_spark.queries.dedup import lsh_band_keys
+
+    bands = lsh_band_keys(docs)
+    dup_b = (
+        bands.alias("a")
+        .join(
+            bands.alias("b"),
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bkey") == F.col("b.bkey"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("b.doc_id").alias("doc_id"))
+        .distinct()
+    )
+    return {
+        r.doc_id
+        for r in docs.select("doc_id").join(dup_b, "doc_id", "left_anti").collect()
+    }
+
+
+_GATE_BASE = [
+    "the quick brown fox jumps over the lazy dog near the river bank today",
+    "spark shuffles data between stages when wide dependencies appear in plans",
+    "minhash banding buckets similar documents together with high probability",
+    "completely unrelated text about cooking pasta with garlic and olive oil",
+]
+
+
+def _lsh_gate_doc(i: int) -> tuple[int, str]:
+    """Doc i of the hop4 LSH fixtures: ids >= 8 are edited copies."""
+    t = _GATE_BASE[i % 4]
+    if i >= 8:
+        t = t.replace("the", "a") if i % 2 else t + " extra token"
+    return i, f"P{i:02d} {t}"
+
+
+def _admitted(spark, index):
+    from pyspark.sql import functions as F
+
+    from specialsid_spark.operators.snapshot import snapshot_read
+
+    return {
+        r.doc_id
+        for r in snapshot_read(spark, index).filter(F.col("kind") == "doc").collect()
+    }
+
+
+def test_hop4_lsh_stream_extends_batch_written_index(spark, tmp_path):
+    """One table, two drivers: drop 1 is gated the way the daily batch
+    query gates a day (lsh_gate over lsh_band_keys), drop 2 streams
+    through hop4 against the SAME table, and the admitted set equals
+    the batch greedy keep-lowest referee over both drops."""
+    from specialsid_spark.queries.dedup import lsh_band_keys, lsh_gate
+    from specialsid_spark.streaming.pipeline import hop4_incremental_lsh_gate
+
+    schema = "doc_id long, text string"
+    index = str(tmp_path / "lsh_index")
+    clean_dir = str(tmp_path / "clean")
+    drop1 = spark.createDataFrame([_lsh_gate_doc(i) for i in range(8)], schema)
+    lsh_gate(lsh_band_keys(drop1), index)
+    spark.createDataFrame(
+        [_lsh_gate_doc(i) for i in range(8, 16)], schema
+    ).coalesce(1).write.parquet(clean_dir)
+    hop4_incremental_lsh_gate(
+        spark, clean_dir, index, str(tmp_path / "ckpt"),
+        id_expr="doc_id", text_expr="text",
+    ).awaitTermination()
+
+    both = spark.createDataFrame([_lsh_gate_doc(i) for i in range(16)], schema)
+    kept = _admitted(spark, index)
+    assert kept == _lsh_keep_lowest(both)
+    assert len(kept) < 16  # the gate really dropped near-dups
+
+
+def test_hop4_simhash_stream_extends_batch_written_index(spark, tmp_path):
+    """The SimHash twin of the shared-table case: drop 1 gated the way
+    dedup_incremental_simhash gates a day (simhash_gate over
+    simhash_probes), drop 2 through hop4 against the same table.  The
+    survivors are the ones test_hop4_incremental_simhash_gate_parity_and_replay
+    pins: the 4 originals and the 4 fresh docs."""
+    from specialsid_spark.queries.dedup import (
+        _simhash_block_sigs,
+        simhash_gate,
+        simhash_probes,
+    )
+    from specialsid_spark.streaming.pipeline import hop4_incremental_simhash_gate
+
+    base = [
+        "quick brown fox jumps over lazy dog near river bank today",
+        "spark shuffles data between stages when wide dependencies appear",
+        "banding buckets similar documents together with high probability",
+        "unrelated text about cooking pasta with garlic and olive oil",
+    ]
+    perm = [" ".join(reversed(t.split())) for t in base]
+    fresh = [
+        "completely new subject matter one about mountains and glaciers",
+        "another novel document regarding harbor cranes and cargo ships",
+        "fresh content on violin practice scales and bow technique",
+        "distinct prose concerning beekeeping hives and clover fields",
+    ]
+    schema = "doc_id long, text string"
+    index = str(tmp_path / "sh_index")
+    clean_dir = str(tmp_path / "clean")
+    drop1 = spark.createDataFrame(
+        [(i, base[i]) for i in range(4)] + [(4 + i, perm[i]) for i in range(4)],
+        schema,
+    )
+    simhash_gate(
+        simhash_probes(_simhash_block_sigs(spark, clean_dir, 32, docs=drop1)),
+        index,
+    )
+    spark.createDataFrame(
+        [(8 + i, perm[i]) for i in range(4)] + [(12 + i, fresh[i]) for i in range(4)],
+        schema,
+    ).coalesce(1).write.parquet(clean_dir)
+    hop4_incremental_simhash_gate(
+        spark, clean_dir, index, str(tmp_path / "ckpt"),
+        id_expr="doc_id", text_expr="text",
+    ).awaitTermination()
+
+    assert _admitted(spark, index) == {0, 1, 2, 3, 12, 13, 14, 15}
+
+
+# Spark jobs of one hop4 LSH micro-batch against an existing index:
+# the band barrier, the probe + verdict + commit job and their AQE
+# stage jobs.  An extra eager barrier in the gate adds jobs and fails.
+_HOP4_LSH_BATCH_JOBS = 11
+
+
+def test_hop4_lsh_micro_batch_job_ceiling(spark, tmp_path):
+    """Counts the jobs of one hop4_incremental_lsh_gate micro-batch
+    through the stream's job group (its run id) and the status tracker,
+    and pins the count as a ceiling."""
+    from specialsid_spark.streaming.pipeline import hop4_incremental_lsh_gate
+
+    clean_dir = str(tmp_path / "clean")
+
+    def drop(lo: int, hi: int):
+        spark.createDataFrame(
+            [_lsh_gate_doc(i) for i in range(lo, hi)], "doc_id long, text string"
+        ).coalesce(1).write.mode("append").parquet(clean_dir)
+        q = hop4_incremental_lsh_gate(
+            spark, clean_dir, str(tmp_path / "index"), str(tmp_path / "ckpt"),
+            id_expr="doc_id", text_expr="text",
+        )
+        q.awaitTermination()
+        return q
+
+    drop(0, 8)  # the first micro-batch creates the index
+    q = drop(8, 16)
+    assert len(q.recentProgress) == 1  # one micro-batch
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= _HOP4_LSH_BATCH_JOBS
