@@ -364,23 +364,6 @@ def crop_gif(
     PNG re-encode by default (same contract and same
     ``out_format="jpeg"`` reference-parity opt-in as
     :func:`specialsid_spark.operators.jpeg.crop_jpeg`)."""
-    from specialsid_spark.operators.multimodal import encode_png
+    from specialsid_spark.operators.multimodal import _crop_decoded
 
-    dec = decode_gif(blob)
-    if dec is None:
-        return None
-    w, h, ch, px = dec
-    ymin, ymax = max(0, min(h, ymin)), max(0, min(h, ymax))
-    xmin, xmax = max(0, min(w, xmin)), max(0, min(w, xmax))
-    cw, chh = xmax - xmin, ymax - ymin
-    if cw <= 0 or chh <= 0:
-        return None
-    out = bytearray()
-    for y in range(ymin, ymax):
-        o = 3 * (y * w + xmin)
-        out += px[o : o + 3 * cw]
-    if out_format == "jpeg":
-        from specialsid_spark.operators.jpeg import encode_jpeg
-
-        return encode_jpeg(cw, chh, 3, bytes(out), quality=90)
-    return encode_png(cw, chh, 3, out)
+    return _crop_decoded(decode_gif(blob), ymin, xmin, ymax, xmax, out_format)

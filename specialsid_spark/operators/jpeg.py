@@ -12,9 +12,16 @@ sequential DCT process (ITU-T T.81):
   markers, dequantize, de-zigzag, 8×8 IDCT (numpy matrix form), chroma
   upsampling for 4:4:4 / 4:2:2 / 4:2:0, YCbCr→RGB.
 * :func:`encode_jpeg` — the forward path (FDCT, quality-scaled Annex K
-  quantization tables, Annex K standard Huffman tables, 4:4:4 or
-  grayscale), emitting a well-formed JFIF stream that this decoder and
-  any standard decoder can read.
+  quantization tables, Annex K standard Huffman tables, 4:4:4 / 4:2:2 /
+  4:2:0 or grayscale / CMYK), emitting a well-formed JFIF stream that
+  this decoder and any standard decoder can read.  Its entropy coder
+  (:func:`_emit_scan`) is one numpy pass over all blocks: per-block
+  tokens (DC difference; each nonzero AC with its ZRL prefix folded
+  in; EOB), expanded to bits, padded per restart interval, packed and
+  byte-stuffed.  Contract: its output is byte-identical to the serial
+  per-bit ``_BitWriter``/``_encode_block`` emission, which the
+  progressive encoder and operators/jpeg12.py still use
+  (tests/test_jpeg_emitter.py rebuilds it as the referee).
 * :func:`crop_jpeg` — decode → pixel-space bbox slice (clamped, the
   P5/F7 validity discipline) → re-encode.
 
@@ -49,6 +56,7 @@ the oracle hashing needs.
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -158,6 +166,7 @@ class _HuffTable:
     """Canonical Huffman decoder per T.81 F.2.2.3 (MINCODE/MAXCODE/VALPTR)."""
 
     def __init__(self, bits: list[int], vals: list[int]) -> None:
+        self.key = (tuple(bits), tuple(vals))
         code = 0
         k = 0
         self.mincode = [0] * 17
@@ -612,25 +621,35 @@ def _finish(w, h, comps, planes, hmax, vmax, adobe=None):
     return w, h, 3, rgb.tobytes()
 
 
-def _lut_of(t: _HuffTable) -> list[int]:
+def _lut_of(t: _HuffTable) -> tuple[int, ...]:
     """65536-entry peek-16 decode table for a Huffman table: entry =
     (symbol << 5) | code_length, 0 = invalid prefix.  ONE table lookup
     replaces the old bit-at-a-time MINCODE/MAXCODE walk (up to 16
     Python-level iterations per symbol) — the core of the r5 hot-loop
-    vectorization.  Built lazily, cached on the table (tables are
-    per-image, so the ~0.5 ms build amortizes over every block)."""
+    vectorization.  Tables are shared by content (:func:`_lut_for`):
+    every page from one encoder carries the same DHT tables, so the
+    ~0.5 ms build is paid once per process, not once per image."""
     lut = getattr(t, "lut", None)
     if lut is None:
-        lut = [0] * 65536
-        for ln in range(1, 17):
-            if t.maxcode[ln] < t.mincode[ln] or t.maxcode[ln] < 0:
-                continue
-            span = 1 << (16 - ln)
-            for code in range(t.mincode[ln], t.maxcode[ln] + 1):
-                sym = t.vals[t.valptr[ln] + code - t.mincode[ln]]
-                lut[code * span : (code + 1) * span] = [(sym << 5) | ln] * span
-        t.lut = lut
+        lut = t.lut = _lut_for(t.key)
     return lut
+
+
+@functools.lru_cache(maxsize=16)
+def _lut_for(key: tuple[tuple[int, ...], tuple[int, ...]]) -> tuple[int, ...]:
+    """The peek-16 LUT of a ``(bits, vals)`` table, built once per
+    distinct table (16 tables ≈ 8 MB; the Annex K set is 4) and
+    immutable, since every image with that table shares it."""
+    t = _HuffTable(list(key[0]), list(key[1]))
+    lut = [0] * 65536
+    for ln in range(1, 17):
+        if t.maxcode[ln] < t.mincode[ln] or t.maxcode[ln] < 0:
+            continue
+        span = 1 << (16 - ln)
+        for code in range(t.mincode[ln], t.maxcode[ln] + 1):
+            sym = t.vals[t.valptr[ln] + code - t.mincode[ln]]
+            lut[code * span : (code + 1) * span] = [(sym << 5) | ln] * span
+    return tuple(lut)
 
 
 def _entropy_segments(blob: bytes, pos: int) -> tuple[list[bytes], int]:
@@ -896,23 +915,21 @@ def _scaled_qt(base: np.ndarray, quality: int) -> np.ndarray:
     return np.clip(qt, 1, 255)
 
 
-def _fdct_plane(padded: np.ndarray, qt: np.ndarray) -> list:
+def _fdct_blocks(padded: np.ndarray, qt: np.ndarray) -> np.ndarray:
     """Batched FDCT + quantize + zigzag for one MCU-padded, level-
-    shifted plane: (bh·8, bw·8) -> nested python lists [bh][bw][64]
-    (zigzag order).  ONE broadcast matmul pair per component (r5 —
-    same fix as the decoder's _idct_blocks; the per-block `_C @ b @
-    _C.T` numpy-call overhead dominated encode).  tolist() because the
-    serial Huffman emitter below indexes scalars, where list access is
-    ~10× numpy scalar indexing."""
+    shifted plane: (bh·8, bw·8) -> int64 [bh, bw, 64] (zigzag order).
+    ONE broadcast matmul pair per component (r5 — same fix as the
+    decoder's _idct_blocks; the per-block `_C @ b @ _C.T` numpy-call
+    overhead dominated encode)."""
     bh, bw = padded.shape[0] // 8, padded.shape[1] // 8
     blocks = padded.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
     q = np.round((_C @ blocks @ _C.T) / qt).astype(np.int64)
-    return q.reshape(bh, bw, 64)[:, :, _ZZ].tolist()
+    return q.reshape(bh, bw, 64)[:, :, _ZZ]
 
 
 def _encode_block(wtr, zz, enc_dc, enc_ac, pred_val):
     """Huffman-emit one block's quantized zigzag coefficients (a plain
-    64-int list from :func:`_fdct_plane`)."""
+    64-int list, e.g. a row of ``_fdct_blocks(...).tolist()``)."""
     t, mag = _mag(int(zz[0]) - pred_val)
     code, ln = enc_dc[t]
     wtr.put(code, ln)
@@ -939,6 +956,121 @@ def _encode_block(wtr, zz, enc_dc, enc_ac, pred_val):
     return int(zz[0])
 
 
+def _code_arrays(tab: tuple[list[int], list[int]]) -> tuple[np.ndarray, np.ndarray]:
+    """(code, length) per symbol 0..255 of a canonical Huffman table as
+    numpy lookup arrays; length 0 marks a symbol the table lacks."""
+    code = np.zeros(256, np.uint64)
+    length = np.zeros(256, np.uint64)
+    for sym, (c, ln) in _build_enc(*tab).items():
+        code[sym], length[sym] = c, ln
+    return code, length
+
+
+#: Annex K code lookups indexed [table, symbol], table 0 = luma, 1 = chroma.
+_DC_CODE, _DC_LEN = (np.stack(a) for a in zip(_code_arrays(_DC_LUMA), _code_arrays(_DC_CHROMA)))
+_AC_CODE, _AC_LEN = (np.stack(a) for a in zip(_code_arrays(_AC_LUMA), _code_arrays(_AC_CHROMA)))
+#: z ZRL codes back to back, z = 0..3 (a zero run before a nonzero AC
+#: coefficient is at most 62, so at most three ZRLs precede it).
+_ZRL_REP = np.array(
+    [[sum(int(_AC_CODE[t, 0xF0]) << (k * int(_AC_LEN[t, 0xF0])) for k in range(z)) for z in range(4)]
+     for t in range(2)],
+    dtype=np.uint64,
+)
+
+#: Blocks tokenized per step: bounds the working memory of the token arrays
+#: (≤65 tokens a block, ~150 bytes a token) whatever the image size.
+_EMIT_BLOCKS = 2048
+
+
+def _block_tokens(blocks: np.ndarray, tab: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Huffman tokens of (n, 64) quantized zigzag blocks whose DC slot
+    already holds the predictor difference; ``tab`` is each block's
+    table (0 luma, 1 chroma).  Returns (block index, code bits as
+    uint64, bit count) per token in stream order: the DC, one token per
+    nonzero AC coefficient with its ZRL prefix folded in (≤59 bits),
+    and an EOB when the block's last coefficient is zero."""
+    mask = np.empty((len(blocks), 65), bool)
+    np.not_equal(blocks, 0, out=mask[:, :64])
+    mask[:, 0] = True
+    np.equal(blocks[:, 63], 0, out=mask[:, 64])
+    blk, pos = np.nonzero(mask)  # row-major: (block, position) order
+    v = blocks[blk, np.minimum(pos, 63)]  # an EOB reads the zero at 63
+    size = np.frexp(np.abs(v))[1].astype(np.uint64)
+    mag = (v - (v < 0)).astype(np.uint64) & ((np.uint64(1) << size) - np.uint64(1))
+    t = tab[blk]
+    is_dc = pos == 0
+    is_ac = ~is_dc & (pos < 64)
+    run = (pos - np.concatenate(([0], pos[:-1])) - 1) * is_ac  # zeros since the last token
+    sym = np.where(is_ac, ((run & 15) << 4) | size.astype(np.int64), 0)
+    dc_sym = np.minimum(size, 255).astype(np.intp)
+    hcode = np.where(is_dc, _DC_CODE[t, dc_sym], _AC_CODE[t, sym])
+    hlen = np.where(is_dc, _DC_LEN[t, dc_sym], _AC_LEN[t, sym])
+    if not hlen.all():
+        raise ValueError("coefficient outside the baseline Huffman tables")
+    zrl = run >> 4
+    tail = hlen + size
+    value = (_ZRL_REP[t, zrl] << tail) | (hcode << size) | mag
+    nbits = zrl.astype(np.uint64) * _AC_LEN[t, 0xF0] + tail
+    return blk, value, nbits.astype(np.int64)
+
+
+def _emit_scan(coefs: list[np.ndarray], sfac: list[tuple[int, int]], restart_interval: int) -> bytes:
+    """Entropy-code one interleaved baseline scan with numpy, byte-for-
+    byte what the serial ``_BitWriter``/``_encode_block`` loop emits.
+
+    ``coefs[ci]`` is component ci's quantized zigzag blocks, shape
+    (mcuy·v, mcux·h, 64); ``sfac[ci]`` its (h, v) sampling factors.
+    Blocks are gathered in MCU emission order (my, mx, component, by,
+    bx) — the nest the decoder's meshgrid inverts — and each DC becomes
+    the difference to the previous block of its component, reset at
+    every restart interval.  :func:`_block_tokens` turns them into
+    tokens, which expand to one byte per bit; each interval is padded
+    to a byte with 1-bits, the bits are packed, and every 0xFF gets its
+    stuffed 0x00 before the RSTn markers go in between intervals."""
+    nc = len(coefs)
+    mcuy = coefs[0].shape[0] // sfac[0][1]
+    mcux = coefs[0].shape[1] // sfac[0][0]
+    nmcu = mcuy * mcux
+    if nmcu == 0:
+        return b""  # a zero-width or zero-height image has no blocks
+    parts, tabs = [], []
+    for ci, ((sh, sv), c) in enumerate(zip(sfac, coefs)):
+        nb = sh * sv
+        blk = c.reshape(mcuy, sv, mcux, sh, 64).transpose(0, 2, 1, 3, 4).reshape(nmcu, nb, 64).copy()
+        prev = np.concatenate(([0], blk[:, :, 0].ravel()[:-1])).reshape(nmcu, nb)
+        if restart_interval:
+            prev[::restart_interval, 0] = 0  # predictor reset per interval
+        blk[:, :, 0] -= prev
+        parts.append(blk)
+        tabs += [0 if (ci == 0 or nc == 4) else 1] * nb
+    bpm = len(tabs)  # blocks per MCU
+    blocks = np.concatenate(parts, axis=1).reshape(nmcu * bpm, 64)
+    tab = np.tile(np.array(tabs, np.intp), nmcu)
+
+    seg_blocks = bpm * restart_interval if restart_interval else len(blocks)
+    nseg = -(-len(blocks) // seg_blocks)
+    seg_bits = np.zeros(nseg, np.int64)
+    col = np.arange(64)
+    bits = []
+    for lo in range(0, len(blocks), _EMIT_BLOCKS):
+        blk, value, nbits = _block_tokens(blocks[lo : lo + _EMIT_BLOCKS], tab[lo : lo + _EMIT_BLOCKS])
+        seg_bits += np.bincount((lo + blk) // seg_blocks, weights=nbits, minlength=nseg).astype(np.int64)
+        msb_first = np.unpackbits(value.astype(">u8").view(np.uint8)).reshape(-1, 64)
+        bits.append(msb_first[col >= 64 - nbits[:, None]])
+    pad = -seg_bits % 8
+    packed = np.packbits(np.insert(np.concatenate(bits), np.repeat(np.cumsum(seg_bits), pad), 1))
+    # a stuffed 0x00 after every 0xFF, then RSTn (n = k mod 8) after
+    # interval k; at a shared offset the stuffing byte goes first
+    ff = np.flatnonzero(packed == 0xFF) + 1
+    starts = np.cumsum((seg_bits + pad) // 8)[:-1]
+    rst = np.stack([np.full(nseg - 1, 0xFF), 0xD0 + np.arange(nseg - 1) % 8], axis=1).ravel()
+    return np.insert(
+        packed,
+        np.concatenate([ff, np.repeat(starts, 2)]),
+        np.concatenate([np.zeros(len(ff), np.uint8), rst.astype(np.uint8)]),
+    ).tobytes()
+
+
 def encode_jpeg(
     w: int,
     h: int,
@@ -956,7 +1088,12 @@ def encode_jpeg(
     JPEGs) so the decoder's isotropic AND anisotropic upsampling paths
     get exercised by streams this encoder emits.  ``restart_interval``
     > 0 emits DRI + RSTn markers every that many MCUs.  Deterministic
-    byte-for-byte for identical inputs."""
+    byte-for-byte for identical inputs.
+
+    The scan is entropy-coded by :func:`_emit_scan` in numpy; its bytes
+    are exactly those of the serial per-block ``_BitWriter`` emission
+    (pinned by tests/test_jpeg_emitter.py), so streams from before and
+    after the vectorization hash the same."""
     arr = np.frombuffer(bytes(pixels), dtype=np.uint8).reshape(h, w, ch).astype(np.float64)
     if ch == 3:
         r, g, b = arr[..., 0], arr[..., 1], arr[..., 2]
@@ -991,8 +1128,6 @@ def encode_jpeg(
 
     qt_l = _scaled_qt(_QT_LUMA, quality).reshape(8, 8)
     qt_c = _scaled_qt(_QT_CHROMA, quality).reshape(8, 8)
-    enc_dc = [_build_enc(*_DC_LUMA), _build_enc(*_DC_CHROMA)]
-    enc_ac = [_build_enc(*_AC_LUMA), _build_enc(*_AC_CHROMA)]
 
     # Per-component sampling factors and planes (chroma pre-downsampled
     # for 4:2:0 by 2×2 box mean, matching the decoder's replication
@@ -1038,38 +1173,11 @@ def encode_jpeg(
         pp[:, pw0:] = pp[:, pw0 - 1 : pw0]
         padded.append(pp - 128.0)
 
-    # r5: ALL blocks FDCT'd/quantized/zigzagged in one batched matmul
-    # per component before the serial Huffman emission loop
     coefs = [
-        _fdct_plane(pp, qt_l if (ci == 0 or len(padded) == 4) else qt_c)
+        _fdct_blocks(pp, qt_l if (ci == 0 or len(padded) == 4) else qt_c)
         for ci, pp in enumerate(padded)
     ]
-    wtr = _BitWriter()
-    pred = [0] * len(cplanes)
-    mcu_count = 0
-    rst = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                wtr.flush()
-                wtr.out += bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-                pred = [0] * len(cplanes)
-            for ci in range(len(padded)):
-                sh, sv = sfac[ci]
-                tsel = 0 if (ci == 0 or len(padded) == 4) else 1
-                cc = coefs[ci]
-                for by in range(sv):
-                    for bx in range(sh):
-                        pred[ci] = _encode_block(
-                            wtr,
-                            cc[my * sv + by][mx * sh + bx],
-                            enc_dc[tsel],
-                            enc_ac[tsel],
-                            pred[ci],
-                        )
-            mcu_count += 1
-    wtr.flush()
+    scan = _emit_scan(coefs, sfac, restart_interval)
 
     def seg(marker: int, payload: bytes) -> bytes:
         return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
@@ -1105,7 +1213,7 @@ def encode_jpeg(
     if restart_interval:
         out += seg(0xDD, struct.pack(">H", restart_interval))
     out += seg(0xDA, sos)
-    out += wtr.out
+    out += scan
     out += b"\xff\xd9"
     return bytes(out)
 
@@ -1120,8 +1228,8 @@ def crop_jpeg(
 ) -> bytes | None:
     """REAL pixel crop for baseline JPEG bytes (ref
     pnp-cropperLambda.py:96-98 ``img.crop((xmin, ymin, xmax, ymax))``):
-    full decode, bbox slice in top-down visual coordinates with
-    clamping, then re-encode.
+    :func:`decode_jpeg`, then the shared clamp/slice/re-encode step
+    (operators/multimodal.py ``_crop_decoded``).
 
     PUBLIC CONTRACT — output byte format: the DEFAULT is PNG (lossless;
     re-JPEG-ing a crop would add a second generation loss the
@@ -1131,23 +1239,10 @@ def crop_jpeg(
     ``*.jpg`` keys).  Consumers that need byte-format parity with the
     reference pass ``out_format="jpeg"`` to get a quality-90 baseline
     JPEG instead.  Returns None when the payload is not a decodable
-    JPEG."""
-    from specialsid_spark.operators.multimodal import encode_png
+    JPEG or the clamped box is empty."""
+    from specialsid_spark.operators.multimodal import _crop_decoded
 
-    dec = decode_jpeg(blob)
-    if dec is None:
-        return None
-    w, h, ch, px = dec
-    ymin, ymax = max(0, min(h, ymin)), max(0, min(h, ymax))
-    xmin, xmax = max(0, min(w, xmin)), max(0, min(w, xmax))
-    cw, chh = xmax - xmin, ymax - ymin
-    if cw <= 0 or chh <= 0:
-        return None
-    arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
-    crop = arr[ymin:ymax, xmin:xmax, :]
-    if out_format == "jpeg":
-        return encode_jpeg(cw, chh, ch, crop.tobytes(), quality=90)
-    return encode_png(cw, chh, ch, crop.tobytes())
+    return _crop_decoded(decode_jpeg(blob), ymin, xmin, ymax, xmax, out_format)
 
 
 def _quantized_coefs(w, h, ch, pixels, quality):
@@ -1177,9 +1272,7 @@ def _quantized_coefs(w, h, ch, pixels, quality):
         pp[h:, :w] = p[h - 1 : h, :]
         pp[:, w:] = pp[:, w - 1 : w]
         pp -= 128.0
-        blocks = pp.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
-        q = np.round((_C @ blocks @ _C.T) / qt).astype(np.int64)
-        out.append(q.reshape(bh, bw, 64)[:, :, _ZZ].astype(np.int32))
+        out.append(_fdct_blocks(pp, qt).astype(np.int32))
     return out, qt_l, qt_c
 
 

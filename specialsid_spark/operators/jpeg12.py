@@ -37,7 +37,7 @@ from specialsid_spark.operators.jpeg import (
     _build_enc,
     _encode_block,
     _extend,
-    _fdct_plane,
+    _fdct_blocks,
     _scaled_qt,
     _QT_LUMA,
 )
@@ -82,7 +82,7 @@ def encode_jpeg12(
     enc_dc = _build_enc(_DC12_BITS, _DC12_VALS)
     enc_ac = _build_enc(_AC12_BITS, _AC12_VALS)
     wtr = _BitWriter()
-    zzs = _fdct_plane(pad, qt)  # batched FDCT/quantize/zigzag (shared)
+    zzs = _fdct_blocks(pad, qt).tolist()  # batched FDCT/quantize/zigzag (shared)
     pred = 0
     mcu = 0
     rst = 0

@@ -229,9 +229,11 @@ def kmeans_stats(
     the assignment, ran the inertia when-chain aggregate, then a count
     groupBy — three jobs over the same rows.  One numpy batch kernel
     computes the distance matrix once, takes its row-min for inertia and
-    its argmin for the cluster id, and emits ≤k (cid, n, d2_sum) partial
-    rows per Arrow batch; the driver folds partials as Python ints
-    (arbitrary precision — a superset of the old F.sum(long) domain).
+    its argmin for the cluster id, and emits (cid, n, d2_sum) partial
+    rows per Arrow batch — one per cluster, split further wherever a
+    cluster's sum could pass int64 — and the driver folds partials as
+    Python ints (arbitrary precision — a superset of the old
+    F.sum(long) domain).
     Returns ({cid: n_vectors}, total_inertia)."""
     import numpy as np  # noqa: PLC0415
 
@@ -249,16 +251,18 @@ def kmeans_stats(
             )
             cid = d2.argmin(axis=1)
             best = d2[np.arange(len(cid)), cid]
-            cs = np.unique(cid)
             # exact int64 per-cluster sums (bincount weights are float64
-            # and would round above 2^53; d2 sums reach ~2.6e18/batch)
-            yield pd.DataFrame(
-                {
-                    "cid": cs.astype("int32"),
-                    "n": [int(np.count_nonzero(cid == c)) for c in cs],
-                    "s": [int(best[cid == c].sum()) for c in cs],
-                }
-            )
+            # and would round above 2^53): each partial sums at most
+            # `run` rows, so it stays below 2^63 however many rows
+            # arrow.maxRecordsPerBatch lets into one batch
+            run = max(1, (2**63 - 1) // max(1, int(best.max())))
+            out = []
+            for c in np.unique(cid):
+                d = best[cid == c]
+                for lo in range(0, len(d), run):
+                    part = d[lo : lo + run]
+                    out.append((int(c), len(part), int(part.sum())))
+            yield pd.DataFrame(out, columns=["cid", "n", "s"]).astype({"cid": "int32"})
 
     counts: dict[int, int] = {}
     total = 0

@@ -10,10 +10,13 @@ Pixel codecs (PIL / pdf2image / ffmpeg) are not in this container, so
 every codec here is from scratch: ``parse_image_meta`` reads real
 width/height/format straight from JPEG SOF / PNG IHDR / GIF / WebP /
 BMP headers; ``pdf_page_count`` counts ``/Type /Page`` objects in a
-real PDF; ``crop_bmp`` / ``crop_png`` /
-``specialsid_spark.operators.jpeg.crop_jpeg`` produce REAL cropped
-pixels for the three mainstream raster formats (BMP scanline slice,
-stdlib-zlib PNG decode/unfilter, baseline-JPEG Huffman+IDCT); and
+real PDF; ``crop_regions`` produces REAL cropped pixels (BMP scanline
+slice, or decode → clamp/slice → re-encode for PNG, JPEG, GIF, PNM and
+TIFF), decoding each distinct page once per batch (``crop_boxes``)
+through one clamp/slice/encode step (``_crop_decoded``) that the
+single-image croppers ``crop_png`` / ``crop_raster`` /
+``specialsid_spark.operators.jpeg.crop_jpeg`` /
+``specialsid_spark.operators.gif.crop_gif`` wrap as well; and
 ``explode_pdf_pages`` emits each page's real embedded image for
 image-per-page PDFs (operators/pdf.py).  PROGRESSIVE JPEG decodes too
 (operators/jpeg.py SOF2 path), and PNG covers palette/sub-byte/16-bit/
@@ -27,7 +30,7 @@ from __future__ import annotations
 import hashlib
 import re
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -172,22 +175,9 @@ def pdf_page_count(blob: bytes) -> int | None:
     return max(1, len(_PDF_PAGE_RE.findall(blob)))
 
 
-def crop_bmp(blob: bytes, ymin: int, xmin: int, ymax: int, xmax: int) -> bytes | None:
-    """REAL pixel crop for uncompressed BMP bytes, dependency-free.
-
-    BMP is the one mainstream raster format whose pixel array is plain
-    bytes (BI_RGB, no entropy coding), so the reference's crop kernel
-    (pnp-cropperLambda.py:48-98, PIL ``img.crop((xmin, ymin, xmax,
-    ymax))``) can be reproduced exactly without a codec: locate the
-    pixel array via the data-offset field, slice ``[xmin, xmax)`` of
-    each scanline in ``[ymin, ymax)`` (top-down visual coordinates,
-    handling bottom-up row storage), re-pad scanlines to the 4-byte
-    stride rule, and emit a well-formed BITMAPINFOHEADER BMP.
-
-    The bbox is clamped to the image bounds (the P5/F7 validity+clamp
-    discipline).  Returns None when the payload is not an uncompressed
-    24/32-bit BMP — callers fall back to the byte-slice stub (JPEG/PDF
-    still need codecs this container doesn't have)."""
+def _bmp_layout(blob: bytes) -> tuple[int, int, int, int, bool] | None:
+    """(pixel-array offset, width, height, bits per pixel, top-down) of
+    an uncompressed 24/32-bit BMP, or None for any other payload."""
     if len(blob) < 54 or blob[:2] != b"BM":
         return None
     data_off = int.from_bytes(blob[10:14], "little")
@@ -200,12 +190,28 @@ def crop_bmp(blob: bytes, ymin: int, xmin: int, ymax: int, xmax: int) -> bytes |
     comp = int.from_bytes(blob[30:34], "little")
     if comp != 0 or bpp not in (24, 32) or w <= 0 or h == 0:
         return None
-    top_down, H = h < 0, abs(h)
-    ymin, ymax = max(0, min(H, ymin)), max(0, min(H, ymax))
+    return data_off, w, abs(h), bpp, h < 0
+
+
+def _clamp_box(
+    ymin: int, xmin: int, ymax: int, xmax: int, w: int, h: int
+) -> tuple[int, int, int, int] | None:
+    """The box clamped to a w×h image (the P5/F7 validity+clamp
+    discipline), or None when nothing of it lies on the image."""
+    ymin, ymax = max(0, min(h, ymin)), max(0, min(h, ymax))
     xmin, xmax = max(0, min(w, xmin)), max(0, min(w, xmax))
-    cw, ch = xmax - xmin, ymax - ymin
-    if cw <= 0 or ch <= 0:
+    if xmax <= xmin or ymax <= ymin:
         return None
+    return ymin, xmin, ymax, xmax
+
+
+def _slice_bmp(blob: bytes, layout: tuple, box: tuple[int, int, int, int]) -> bytes | None:
+    """Scanline slice of a clamped box out of a BMP with ``layout``
+    (:func:`_bmp_layout`) into a new bottom-up BMP; None when the
+    declared dimensions exceed the actual payload."""
+    data_off, w, H, bpp, top_down = layout
+    ymin, xmin, ymax, xmax = box
+    cw, ch = xmax - xmin, ymax - ymin
     bypp = bpp // 8
     stride = (bpp * w + 31) // 32 * 4
     out_stride = (bpp * cw + 31) // 32 * 4
@@ -222,6 +228,28 @@ def crop_bmp(blob: bytes, ymin: int, xmin: int, ymax: int, xmax: int) -> bytes |
     px = b"".join(rows)
     dib_out = struct.pack("<IiiHHIIiiII", 40, cw, ch, 1, bpp, 0, len(px), 2835, 2835, 0, 0)
     return b"BM" + struct.pack("<IHHI", 54 + len(px), 0, 0, 54) + dib_out + px
+
+
+def crop_bmp(blob: bytes, ymin: int, xmin: int, ymax: int, xmax: int) -> bytes | None:
+    """REAL pixel crop for uncompressed BMP bytes, dependency-free.
+
+    BMP is the one mainstream raster format whose pixel array is plain
+    bytes (BI_RGB, no entropy coding), so the reference's crop kernel
+    (pnp-cropperLambda.py:48-98, PIL ``img.crop((xmin, ymin, xmax,
+    ymax))``) can be reproduced exactly without a codec: locate the
+    pixel array via the data-offset field, slice ``[xmin, xmax)`` of
+    each scanline in ``[ymin, ymax)`` (top-down visual coordinates,
+    handling bottom-up row storage), re-pad scanlines to the 4-byte
+    stride rule, and emit a well-formed BITMAPINFOHEADER BMP.
+
+    The bbox is clamped to the image bounds.  Returns None when the
+    payload is not an uncompressed 24/32-bit BMP or the clamped box is
+    empty."""
+    layout = _bmp_layout(blob)
+    if layout is None:
+        return None
+    box = _clamp_box(ymin, xmin, ymax, xmax, layout[1], layout[2])
+    return None if box is None else _slice_bmp(blob, layout, box)
 
 
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # colortype -> samples/pixel
@@ -409,26 +437,33 @@ def decode_png(blob: bytes) -> tuple[int, int, int, bytearray] | None:
     return w, h, ch, bytearray(samples)
 
 
+def _decode_raster(blob: bytes) -> tuple[str, tuple[int, int, int, bytes | bytearray]] | None:
+    """(format, (w, h, ch, pixels)) from the first pixel decoder that
+    accepts ``blob`` — PNG, JPEG (baseline and progressive), GIF, PNM,
+    then TIFF — or None."""
+    from specialsid_spark.operators.gif import decode_gif
+    from specialsid_spark.operators.jpeg import decode_jpeg
+    from specialsid_spark.operators.pnm import decode_pnm
+    from specialsid_spark.operators.tiff import decode_tiff
+
+    for fmt, decode in (("png", decode_png), ("jpeg", decode_jpeg), ("gif", decode_gif), ("pnm", decode_pnm)):
+        dec = decode(blob)
+        if dec is not None:
+            return fmt, dec
+    if blob[:2] in (b"II", b"MM"):
+        dec = decode_tiff(blob)
+        if dec is not None:
+            return "tiff", dec
+    return None
+
+
 def decode_image(blob: bytes) -> tuple[int, int, int, bytes] | None:
     """Decode ANY supported raster payload to (w, h, ch, pixels): PNG,
     baseline/progressive JPEG, GIF, BMP, PNM, TIFF — the single entry
     point the resize/feature operators dispatch through.  None for
     unsupported payloads (degrade contract)."""
-    from specialsid_spark.operators.gif import decode_gif
-    from specialsid_spark.operators.jpeg import decode_jpeg
-
-    from specialsid_spark.operators.pnm import decode_pnm
-    from specialsid_spark.operators.tiff import decode_tiff
-
-    dec = decode_png(blob)
-    if dec is None:
-        dec = decode_jpeg(blob)
-    if dec is None:
-        dec = decode_gif(blob)
-    if dec is None:
-        dec = decode_pnm(blob)
-    if dec is None and blob[:2] in (b"II", b"MM"):
-        dec = decode_tiff(blob)
+    got = _decode_raster(blob)
+    dec = got[1] if got is not None else None
     if dec is None:
         meta = parse_image_meta(blob)
         if meta is not None and meta[2] == "bmp":
@@ -517,50 +552,100 @@ def encode_png(w: int, h: int, ch: int, pixels: bytes | bytearray) -> bytes:
     )
 
 
-def crop_png(blob: bytes, ymin: int, xmin: int, ymax: int, xmax: int) -> bytes | None:
-    """REAL pixel crop for PNG bytes, dependency-free: full decode
-    (:func:`decode_png`), row/column slice in top-down visual
-    coordinates with bbox clamping (the P5/F7 validity+clamp
-    discipline), re-encode (:func:`encode_png`).  Returns None for
-    PNG variants the decoder does not support — callers fall back to
-    the byte-slice stub."""
-    dec = decode_png(blob)
+def _crop_decoded(
+    dec: tuple[int, int, int, bytes | bytearray] | None,
+    ymin: int,
+    xmin: int,
+    ymax: int,
+    xmax: int,
+    out_format: str = "png",
+) -> bytes | None:
+    """The one clamp/slice/re-encode step behind every pixel cropper:
+    clamp the box to a decoded ``(w, h, ch, pixels)`` image, slice it
+    in top-down visual coordinates, and encode it as PNG (lossless) or,
+    with ``out_format="jpeg"``, as quality-90 baseline JPEG.  None when
+    ``dec`` is None or the clamped box is empty."""
+    import numpy as np
+
     if dec is None:
         return None
     w, h, ch, px = dec
-    ymin, ymax = max(0, min(h, ymin)), max(0, min(h, ymax))
-    xmin, xmax = max(0, min(w, xmin)), max(0, min(w, xmax))
-    cw, chh = xmax - xmin, ymax - ymin
-    if cw <= 0 or chh <= 0:
+    box = _clamp_box(ymin, xmin, ymax, xmax, w, h)
+    if box is None:
         return None
-    stride = w * ch
-    out = bytearray()
-    for y in range(ymin, ymax):
-        off = y * stride + xmin * ch
-        out += px[off : off + cw * ch]
-    return encode_png(cw, chh, ch, out)
+    ymin, xmin, ymax, xmax = box
+    arr = np.frombuffer(px, np.uint8, w * h * ch).reshape(h, w, ch)
+    crop = arr[ymin:ymax, xmin:xmax].tobytes()
+    if out_format == "jpeg":
+        from specialsid_spark.operators.jpeg import encode_jpeg
+
+        return encode_jpeg(xmax - xmin, ymax - ymin, ch, crop, quality=90)
+    return encode_png(xmax - xmin, ymax - ymin, ch, crop)
+
+
+def crop_png(blob: bytes, ymin: int, xmin: int, ymax: int, xmax: int) -> bytes | None:
+    """REAL pixel crop for PNG bytes, dependency-free: :func:`decode_png`
+    then :func:`_crop_decoded` (PNG out).  Returns None for PNG variants
+    the decoder does not support or an empty clamped box."""
+    return _crop_decoded(decode_png(blob), ymin, xmin, ymax, xmax)
 
 
 def crop_raster(blob: bytes, ymin: int, xmin: int, ymax: int, xmax: int) -> bytes | None:
-    """Generic pixel crop through the universal ``decode_image`` entry
-    point (r7): covers the formats without a format-specific cropper —
-    TIFF and PNM — with the same clamp discipline as :func:`crop_png`;
-    output is always PNG (lossless re-encode)."""
-    dec = decode_image(blob)
-    if dec is None:
+    """Generic pixel crop through the universal :func:`decode_image`
+    entry point (r7) — the path for TIFF and PNM, which have no
+    format-specific cropper; output is always PNG."""
+    return _crop_decoded(decode_image(blob), ymin, xmin, ymax, xmax)
+
+
+def _page_cropper(blob: bytes, out_format: str) -> Callable[[tuple[int, ...]], bytes] | None:
+    """Decode one page image ONCE and return ``crop(box) -> bytes`` for
+    all of its boxes, or None when no decoder accepts the payload.
+    Output per source format: BMP → exact BMP scanline slice; PNG,
+    TIFF, PNM → PNG; JPEG, GIF → PNG, or quality-90 JPEG when
+    ``out_format="jpeg"``.  A box that lies off the page crops to b""."""
+    layout = _bmp_layout(blob)
+    if layout is not None:
+
+        def crop_bmp_box(box: tuple[int, ...]) -> bytes:
+            clamped = _clamp_box(*box, layout[1], layout[2])
+            if clamped is None:
+                return b""
+            return _slice_bmp(blob, layout, clamped) or _byte_slice(blob, box)
+
+        return crop_bmp_box
+    got = _decode_raster(blob)
+    if got is None:
         return None
-    w, h, ch, px = dec
-    ymin, ymax = max(0, min(h, ymin)), max(0, min(h, ymax))
-    xmin, xmax = max(0, min(w, xmin)), max(0, min(w, xmax))
-    cw, chh = xmax - xmin, ymax - ymin
-    if cw <= 0 or chh <= 0:
-        return None
-    stride = w * ch
-    out = bytearray()
-    for y in range(ymin, ymax):
-        off = y * stride + xmin * ch
-        out += px[off : off + cw * ch]
-    return encode_png(cw, chh, ch, out)
+    fmt, dec = got
+    enc = out_format if fmt in ("jpeg", "gif") else "png"
+    return lambda box: _crop_decoded(dec, *box, enc) or b""
+
+
+def _byte_slice(blob: bytes, box: tuple[int, ...]) -> bytes:
+    """The stub crop of a payload no decoder recognises: bytes
+    [ymin, ymax) of the blob, clamped to at least one byte."""
+    lo = max(0, min(len(blob) - 1, box[0]))
+    hi = max(lo + 1, min(len(blob), box[2]))
+    return bytes(blob[lo:hi])
+
+
+def crop_boxes(boxes, blobs, out_format: str = "png") -> list[bytes | None]:
+    """The crop kernel of :func:`crop_regions` over one batch: one
+    ``(ymin, xmin, ymax, xmax)`` box (or None) per row and the row's
+    page image.  Rows are grouped by image bytes, so each distinct page
+    is decoded once however many products it boxes, and only one
+    decoded page is alive at a time (a 300 DPI page is ~26 MB of
+    pixels).  A row without a 4-value box gets None."""
+    crops: list[bytes | None] = [None] * len(boxes)
+    pages: dict[bytes, list[tuple[int, tuple[int, ...]]]] = {}
+    for i, (box, blob) in enumerate(zip(boxes, blobs)):
+        if box is not None and len(box) == 4:
+            pages.setdefault(bytes(blob), []).append((i, tuple(int(v) for v in box)))
+    for blob, rows in pages.items():
+        crop = _page_cropper(blob, out_format)
+        for i, box in rows:
+            crops[i] = _byte_slice(blob, box) if crop is None else crop(box)
+    return crops
 
 
 def _decode_bytes(blob: bytes) -> tuple[int, int, str]:
@@ -701,28 +786,34 @@ def crop_regions(
     out_format: str = "png",
 ) -> DataFrame:
     """D3/J1: products ⋈ page-image (broadcast the small image batch),
-    then a mapInPandas crop (ref pnp-cropperLambda.py:58-101).
+    then a mapInPandas crop (ref pnp-cropperLambda.py:58-101) through
+    :func:`crop_boxes`, which decodes each distinct page of a batch
+    ONCE and cuts every box of that page from the decoded pixels.
 
-    BMP, PNG, baseline JPEG and GIF payloads all produce REAL cropped
-    pixels (:func:`crop_bmp` — exact scanline slicing; :func:`crop_png`
-    — stdlib-zlib decode, unfilter, slice, re-encode;
-    :func:`specialsid_spark.operators.jpeg.crop_jpeg` — from-scratch
-    Huffman+IDCT decode covering baseline AND progressive streams,
-    slice, re-encode, the reference's actual image format;
-    :func:`specialsid_spark.operators.gif.crop_gif` — LZW expansion,
-    interlace reorder, palette lookup).  Only payloads none of the
-    four decoders recognize (e.g. arithmetic-coded JPEG, opaque test
-    bytes) fall back to a byte-slice stub.
+    Decoders are tried in this order, and the first that accepts the
+    page decides the ``crop_bytes`` format:
 
-    PUBLIC CONTRACT — ``crop_bytes`` format: PNG by default (lossless;
-    deliberate deviation from the reference's JPEG-quality-90 crops,
+    ===================================  ====================================
+    page payload                         ``crop_bytes``
+    ===================================  ====================================
+    uncompressed 24/32-bit BMP           exact BMP scanline slice
+    PNG                                  PNG
+    JPEG (baseline/progressive), GIF     PNG; quality-90 JPEG with
+                                         ``out_format="jpeg"``
+    PNM, TIFF                            PNG
+    nothing recognises it                byte-slice stub ``[ymin, ymax)``
+    ===================================  ====================================
+
+    Boxes are clamped to the page.  A box that lies wholly off a page
+    that decoded yields EMPTY ``crop_bytes`` (b""), not a slice of the
+    compressed file; a row without a 4-value box yields NULL.
+
+    PUBLIC CONTRACT — PNG is the default output (lossless; deliberate
+    deviation from the reference's JPEG-quality-90 crops,
     pnp-cropperLambda.py:96-98, to avoid a second generation loss).
-    Pass ``out_format="jpeg"`` for byte-format parity with the
-    reference (JPEG/GIF sources re-encode at quality 90; BMP/PNG crops
-    stay PNG — they were never JPEG in the reference either)."""
-    from specialsid_spark.operators.gif import crop_gif
-    from specialsid_spark.operators.jpeg import crop_jpeg
-
+    ``out_format="jpeg"`` gives byte-format parity with the reference
+    for JPEG/GIF sources; BMP/PNG crops stay in their lossless formats
+    (they were never JPEG in the reference either)."""
     joined = products.join(F.broadcast(images), on)
 
     out_schema = T.StructType(
@@ -735,33 +826,11 @@ def crop_regions(
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            crops = []
-            for bbox, blob in zip(pdf["bounding_box"], pdf["image_bytes"]):
-                if bbox is None or len(bbox) != 4:
-                    crops.append(None)
-                    continue
-                ymin, xmin, ymax, xmax = (int(v) for v in bbox)
-                real = crop_bmp(bytes(blob), ymin, xmin, ymax, xmax)
-                if real is None:
-                    real = crop_png(bytes(blob), ymin, xmin, ymax, xmax)
-                if real is None:
-                    real = crop_jpeg(bytes(blob), ymin, xmin, ymax, xmax, out_format)
-                if real is None:
-                    real = crop_gif(bytes(blob), ymin, xmin, ymax, xmax, out_format)
-                if real is None:
-                    # TIFF / PNM: the universal-decoder crop path (r7)
-                    real = crop_raster(bytes(blob), ymin, xmin, ymax, xmax)
-                if real is not None:
-                    crops.append(real)
-                    continue
-                lo = max(0, min(len(blob) - 1, ymin))
-                hi = max(lo + 1, min(len(blob), ymax))
-                crops.append(bytes(blob[lo:hi]))
             yield pd.DataFrame(
                 {
                     on: pdf[on],
                     "product_name": pdf["product_name"],
-                    "crop_bytes": crops,
+                    "crop_bytes": crop_boxes(pdf["bounding_box"], pdf["image_bytes"], out_format),
                 }
             )
 

@@ -159,3 +159,30 @@ def test_grouped_kmeans_matches_ungrouped_on_single_group(spark, sf_dir):
     got = {r.vec_id: r.cid for r in assigned.collect()}
     want = {r.vec_id: r.cid for r in plain_a.select("vec_id", "cid").collect()}
     assert got == want
+
+
+def test_kmeans_stats_exact_when_batch_sum_passes_int64(spark):
+    """Worst-case magnitudes (64 dims at ±4e6 micro-units, ~1.0e15 d2
+    per row) with arrow.maxRecordsPerBatch raised so 12k rows share one
+    Arrow batch: the batch's d2 sum (1.2e19) is past int64, and the
+    per-cluster partials must still fold to the exact total."""
+    from pyspark.sql import functions as F
+
+    from specialsid_spark.operators.kmeans import kmeans_stats
+
+    n, dim, mag = 12_000, 64, 4_000_000
+    mu_df = spark.range(0, n, numPartitions=1).select(
+        F.col("id").alias("vec_id"),
+        F.array_repeat(
+            F.when(F.col("id") % 2 == 0, F.lit(mag)).otherwise(F.lit(-mag)).cast("long"), dim
+        ).alias("mu"),
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "20000")
+    try:
+        counts, total = kmeans_stats(mu_df, [[0] * dim, [3 * mag] * dim])
+    finally:
+        spark.conf.set(key, old)
+    assert counts == {0: n}
+    assert total == n * dim * mag * mag
