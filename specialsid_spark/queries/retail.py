@@ -1256,7 +1256,7 @@ def clean_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFra
     just its shape; time-traveling to v1 still yields the old schema.
 
     Scale shape: identical to the other snapshot queries — commits are
-    parquet writes + one O(1) manifest rename; per-version aggregates
+    parquet writes + one O(1) manifest publish; per-version aggregates
     are lazy unions over manifest-pinned reads."""
     from pathlib import Path
 

@@ -17,6 +17,11 @@ What it demonstrates, each a first-class capability of the new API:
   row-level: pruning is a performance layer, never a correctness one.
 * **Arrow-batch reads**: `read()` yields pyarrow RecordBatches straight
   from the parquet file — the vectorized path, no per-row Python.
+  A table whose head carries deletion vectors is refused, not read:
+  the file-granular reader cannot mask rows (use ``snapshot_read``).
+
+Every manifest read and commit goes through ``operators/snapshot.py``;
+this module never writes the manifest format itself.
 
 At 100 TB this shape is how a Python-implemented table format stays
 usable: planning cost is one small JSON manifest, scan parallelism is
@@ -25,7 +30,6 @@ file-granular, and the row data never materializes as Python objects.
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 from pathlib import Path
@@ -47,27 +51,13 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-
-def _versions(path: str) -> list[int]:
-    mdir = Path(path) / "_manifests"
-    if not mdir.is_dir():
-        return []
-    return sorted(
-        int(p.stem[1:]) for p in mdir.glob("v*.json") if p.stem[1:].isdigit()
-    )
-
-
-def _manifest(path: str, version: int) -> dict:
-    return json.loads(
-        (Path(path) / "_manifests" / f"v{version}.json").read_text()
-    )
-
-
-def _latest_manifest(path: str) -> dict:
-    versions = _versions(path)
-    if not versions:
-        raise ValueError(f"no snapshot versions at {path!r}")
-    return _manifest(path, versions[-1])
+from specialsid_spark.operators.snapshot import (
+    _commit_files,
+    _read_manifest,
+    _resolve,
+    _routes,
+    snapshot_versions,
+)
 
 
 class SnapshotFilePartition(InputPartition):
@@ -78,7 +68,15 @@ class SnapshotFilePartition(InputPartition):
 class SnapshotReader(DataSourceReader):
     def __init__(self, path: str) -> None:
         self._root = path
-        m = _latest_manifest(path)
+        v, m = _resolve(path)
+        if m.get("deletes"):
+            # same loud contract as the stream reader's append-only check:
+            # whole-file reads would return the masked rows
+            raise ValueError(
+                f"version {v} of {path} has deletion vectors; the "
+                "specialsid_snapshot reader cannot mask rows — read it "
+                "with snapshot_read"
+            )
         self._files: list[str] = list(m["files"])
         self._stats: dict = m.get("stats", {})
 
@@ -94,12 +92,9 @@ class SnapshotReader(DataSourceReader):
             if bound is None:
                 continue
             col, lo, hi = bound
-            kept = []
-            for rel in self._files:
-                rng = self._stats.get(rel, {}).get(col)
-                if rng is None or (rng[0] <= hi and rng[1] >= lo):
-                    kept.append(rel)
-            self._files = kept
+            self._files = [
+                rel for rel in self._files if _routes(self._stats, rel, col, lo, hi)
+            ]
         return filters  # Spark re-applies everything row-level
 
     @staticmethod
@@ -158,20 +153,20 @@ class SnapshotStreamReader(DataSourceStreamReader):
         return {"version": 0}
 
     def latestOffset(self) -> dict:  # noqa: N802
-        vs = _versions(self._root)
+        vs = snapshot_versions(self._root)
         return {"version": vs[-1] if vs else 0}
 
     def partitions(self, start: dict, end: dict):
         parts: list[SnapshotFilePartition] = []
         for v in range(start["version"] + 1, end["version"] + 1):
-            m = _manifest(self._root, v)
+            m = _read_manifest(self._root, v)
             if v > 1 and m.get("op", "append") != "append":
                 raise ValueError(
                     f"version {v} is op={m.get('op')!r}: the snapshot "
                     "stream source is append-only (rewritten files "
                     "would double-deliver rows)"
                 )
-            prev = set(_manifest(self._root, v - 1)["files"]) if v > 1 else set()
+            prev = set(_read_manifest(self._root, v - 1)["files"]) if v > 1 else set()
             for rel in m["files"]:
                 if rel not in prev:
                     parts.append(
@@ -200,9 +195,12 @@ class SnapshotArrowWriter(DataSourceArrowWriter):
     its Arrow batches into a uniquely-named parquet file under
     ``data/`` and reports the path in its commit message; only the
     driver-side ``commit()`` — which runs IFF every task succeeded —
-    publishes those paths as a new manifest version.  Files from
-    failed/speculative tasks are never referenced by any manifest, so
-    they are invisible to every reader and reclaimable by vacuum: no
+    publishes those paths as a new manifest version through the same
+    put-if-absent commit as ``snapshot_commit``: an append carries the
+    head's stats and deletion vectors and rebases if another writer
+    published first; an overwrite that loses the race raises.  Files
+    from failed/speculative tasks are never referenced by any manifest,
+    so they are invisible to every reader and reclaimable by vacuum: no
     rename dance, no output committer, no partial table ever visible.
     """
 
@@ -230,27 +228,9 @@ class SnapshotArrowWriter(DataSourceArrowWriter):
         new_files = sorted(
             rel for m in messages if m is not None for rel in m.rel_files
         )
-        versions = _versions(self._root)
-        parent = versions[-1] if versions else 0
-        files = new_files
-        stats = {}
-        if not self._overwrite and parent:
-            pm = _manifest(self._root, parent)
-            files = pm["files"] + new_files
-            stats = pm.get("stats", {})
-        manifest = {
-            "version": parent + 1,
-            "parent": parent,
-            "op": "overwrite" if self._overwrite and parent else "append",
-            "files": files,
-        }
-        if stats:
-            manifest["stats"] = stats
-        mdir = Path(self._root) / "_manifests"
-        mdir.mkdir(parents=True, exist_ok=True)
-        tmp = mdir / f"v{parent + 1}.json.tmp"
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.rename(tmp, mdir / f"v{parent + 1}.json")
+        _commit_files(
+            self._root, new_files, "overwrite" if self._overwrite else "append"
+        )
 
     def abort(self, messages) -> None:
         for m in messages or []:

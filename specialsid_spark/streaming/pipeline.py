@@ -705,7 +705,7 @@ def streaming_snapshot_ivm(
     atomically with its data:
 
     * the TABLE commit: ``snapshot_commit(tag=batch-N)`` records the
-      batch id inside the manifest (one atomic rename covers both), so
+      batch id inside the manifest (one atomic publish covers both), so
       a crash-replayed batch finds its version via
       ``snapshot_version_by_tag`` instead of appending twice;
     * the SUMMARY merge: :func:`crash_safe_summary_merge`'s _BATCH_ID
@@ -720,7 +720,6 @@ def streaming_snapshot_ivm(
         snapshot_diff,
         snapshot_read,
         snapshot_version_by_tag,
-        snapshot_versions,
     )
 
     grp = (F.col("doc_id") % 7).cast("long").alias("grp")
@@ -729,11 +728,10 @@ def streaming_snapshot_ivm(
         tag = f"stream-batch-{batch_id}"
         v = snapshot_version_by_tag(table_path, tag)
         if v is None:
-            parents = snapshot_versions(table_path)
             v = snapshot_commit(batch_df, table_path, mode="append", tag=tag)
-            parent = parents[-1] if parents else None
-        else:
-            parent = v - 1 if v > 1 else None
+        # the batch's rows are exactly the diff from the version before
+        # its own, also when its append rebased past another writer
+        parent = v - 1 if v > 1 else None
         if parent is None:
             deltas = (
                 snapshot_read(batch_df.sparkSession, table_path, v)
@@ -1419,7 +1417,7 @@ def _hop4_gate_stream(
     (queries/dedup.py lsh_gate / simhash_gate) with the tag
     ``hop4-<name>-<batch_id>``.  The gate's commit carries that tag, so
     commit and idempotency token become visible in the same atomic
-    manifest rename and a crash-replayed micro-batch is a no-op
+    manifest publish and a crash-replayed micro-batch is a no-op
     (snapshot_version_by_tag short-circuit)."""
     from specialsid_spark.operators.snapshot import snapshot_version_by_tag
 

@@ -224,3 +224,55 @@ def test_query_green_on_default_conf_session(spark, tmp_path):
         assert spark.conf.get(conf) == "true"
     finally:
         spark.conf.set(conf, prior)
+
+
+def _dv_table(spark, tmp_path):
+    """100 rows with stats, rows 0..9 masked by a deletion vector."""
+    from specialsid_spark.operators.snapshot import snapshot_delete_dv
+
+    t = str(tmp_path / "tbl")
+    snapshot_commit_stats(
+        spark.range(0, 100).selectExpr("id", "id * 10 AS v"), t, ["id"]
+    )
+    assert snapshot_delete_dv(spark, t, "id", 0, 9) == (2, 10)
+    return t
+
+
+def test_reader_refuses_deletion_vectors(spark, tmp_path):
+    """The file-granular reader cannot mask rows, so a head with
+    deletion vectors fails loudly instead of returning deleted rows."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    t = _dv_table(spark, tmp_path)
+    with pytest.raises(ValueError, match="deletion vectors"):
+        SnapshotReader(t)
+    register_snapshot_source(spark)
+    df = (
+        spark.read.format("specialsid_snapshot")
+        .schema("id long, v long")
+        .option("path", t)
+        .load()
+    )
+    with pytest.raises(AnalysisException, match="deletion vectors"):
+        df.count()
+
+
+def test_writer_append_keeps_deletion_vectors(spark, tmp_path):
+    """A custom-format append carries the head's deletion vectors, so
+    the masked rows stay deleted."""
+    from specialsid_spark.operators.snapshot import _read_manifest, snapshot_read
+
+    t = _dv_table(spark, tmp_path)
+    register_snapshot_source(spark)
+    (
+        spark.range(100, 105)
+        .selectExpr("id", "id * 10 AS v")
+        .write.format("specialsid_snapshot")
+        .option("path", t)
+        .mode("append")
+        .save()
+    )
+    assert snapshot_read(spark, t).count() == 95
+    dvs = _read_manifest(t, 2)["deletes"]
+    assert dvs and _read_manifest(t, 3)["deletes"] == dvs

@@ -861,3 +861,185 @@ def test_commit_generations_rejects_duplicate_gens(spark, tmp_path):
         snapshot_commit_generations(df, t, "gen", [0, 0])
     assert snapshot_versions(t) == []
     assert not (Path(t) / "data").exists()
+
+
+# ------------------------------------------- concurrent writers (fault matrix)
+# Each commit publishes vN.json put-if-absent: a loser never replaces a
+# winner's version.  Appends rebase onto the new head; every other verb
+# raises.  The hooks below replace _publish to force an interleaving.
+
+
+def test_concurrent_appends_both_land(spark, tmp_path, monkeypatch):
+    """Two threads append 5 rows each to a 5-row table, both having
+    read the same head: both commits land at distinct versions and all
+    15 rows are visible (a replaced vN.json would lose one batch)."""
+    import threading
+
+    from specialsid_spark.operators import snapshot as S
+
+    t = str(tmp_path / "tbl")
+    snapshot_commit(_df(spark, 0, 5), t)
+    start = threading.Barrier(2, timeout=120)
+    at_publish = threading.Barrier(2, timeout=120)
+    real = getattr(S, "_publish", None)
+    waited: set[int] = set()
+
+    def publish_together(*args, **kwargs):
+        # hold each thread's FIRST publish until both have read head 1
+        if threading.get_ident() not in waited:
+            waited.add(threading.get_ident())
+            at_publish.wait()
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(S, "_publish", publish_together, raising=False)
+    got: list[int] = []
+    errors: list[BaseException] = []
+
+    def append(lo):
+        try:
+            start.wait()
+            got.append(snapshot_commit(_df(spark, lo, lo + 5), t, mode="append"))
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+
+    threads = [threading.Thread(target=append, args=(lo,)) for lo in (5, 10)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=300)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    assert sorted(got) == [2, 3]
+    assert snapshot_versions(t) == [1, 2, 3]
+    assert sorted(r.id for r in snapshot_read(spark, t).collect()) == list(range(15))
+    assert not list((Path(t) / "_manifests").glob("*.tmp"))
+
+
+def test_commit_files_stress_no_lost_append(tmp_path):
+    """Metadata-only stress: 8 threads x 10 appends through
+    _commit_files with a tiny switch interval.  Every append lands at
+    its own version and the head lists every file exactly once."""
+    import sys
+    import threading
+
+    from specialsid_spark.operators.snapshot import _commit_files, _read_manifest
+
+    t = str(tmp_path / "tbl")
+    names = [[f"data/w{i}-{j}.parquet" for j in range(10)] for i in range(8)]
+    got: list[int] = []
+    errors: list[BaseException] = []
+
+    def worker(files):
+        try:
+            for f in files:
+                got.append(_commit_files(t, [f], "append"))
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(fs,)) for fs in names]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    assert sorted(got) == list(range(1, 81))
+    head = _read_manifest(t, 80)["files"]
+    assert sorted(head) == sorted(f for fs in names for f in fs)
+
+
+def test_append_overwrite_race_loses_no_version(spark, tmp_path, monkeypatch):
+    """An overwrite that loses version 2 to an append raises, naming the
+    table and version; the append's version stays intact.  In the other
+    order the append rebases onto the overwrite and nothing raises."""
+    import re
+
+    from specialsid_spark.operators import snapshot as S
+
+    t = str(tmp_path / "tbl")
+    snapshot_commit(_df(spark, 0, 5), t)
+    real = S._publish
+
+    def other_writer_first(lo, hi, mode):
+        def hook(*args, **kwargs):
+            monkeypatch.setattr(S, "_publish", real)
+            snapshot_commit(_df(spark, lo, hi), t, mode=mode)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(S, "_publish", hook)
+
+    other_writer_first(5, 10, "append")
+    with pytest.raises(FileExistsError, match=f"version 2 of {re.escape(t)}"):
+        snapshot_commit(_df(spark, 100, 103), t, mode="overwrite")
+    assert snapshot_versions(t) == [1, 2]
+    assert sorted(r.id for r in snapshot_read(spark, t).collect()) == list(range(10))
+
+    other_writer_first(100, 103, "overwrite")
+    assert snapshot_commit(_df(spark, 10, 15), t, mode="append") == 4
+    assert snapshot_versions(t) == [1, 2, 3, 4]
+    assert snapshot_read(spark, t, 2).count() == 10
+    assert snapshot_read(spark, t, 3).count() == 3
+    got = sorted(r.id for r in snapshot_read(spark, t).collect())
+    assert got == [*range(10, 15), *range(100, 103)]
+    assert not list((Path(t) / "_manifests").glob("*.tmp"))
+
+
+def test_crash_between_write_and_publish(spark, tmp_path, monkeypatch):
+    """A commit that dies after its data write but before the publish
+    leaves orphan files: invisible to readers, reclaimed by vacuum."""
+    from specialsid_spark.operators import snapshot as S
+
+    t = str(tmp_path / "tbl")
+    snapshot_commit(_df(spark, 0, 10), t)
+    live = set(S._read_manifest(t, 1)["files"])
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before publish")
+
+    monkeypatch.setattr(S, "_publish", crash)
+    with pytest.raises(RuntimeError, match="crash before publish"):
+        snapshot_commit(_df(spark, 10, 20), t, mode="append")
+    monkeypatch.undo()
+    orphans = sorted(
+        str(p.relative_to(t))
+        for p in (Path(t) / "data").rglob("*.parquet")
+        if str(p.relative_to(t)) not in live
+    )
+    assert orphans
+    assert snapshot_versions(t) == [1]
+    assert snapshot_read(spark, t).count() == 10
+    assert snapshot_vacuum(t, keep_last=1) == orphans
+    assert snapshot_read(spark, t).count() == 10
+
+
+def test_tagged_append_conflict_returns_tagged_version(spark, tmp_path, monkeypatch):
+    """A tagged append whose publish loses to a commit carrying the same
+    tag (a replay racing the original) returns that commit's version
+    and does not append the batch twice."""
+    from specialsid_spark.operators import snapshot as S
+
+    t = str(tmp_path / "tbl")
+    snapshot_commit(_df(spark, 0, 5), t)
+    real = S._publish
+
+    def replay_first(*args, **kwargs):
+        monkeypatch.setattr(S, "_publish", real)
+        assert snapshot_commit(_df(spark, 5, 10), t, tag="batch-7") == 2
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(S, "_publish", replay_first)
+    assert snapshot_commit(_df(spark, 5, 10), t, tag="batch-7") == 2
+    assert snapshot_versions(t) == [1, 2]
+    assert sorted(r.id for r in snapshot_read(spark, t).collect()) == list(range(10))
+
+
+def test_scan_without_versions_raises_file_not_found(spark, tmp_path):
+    from specialsid_spark.operators.snapshot import snapshot_scan
+
+    with pytest.raises(FileNotFoundError, match="no committed snapshot"):
+        snapshot_scan(spark, str(tmp_path / "never"), "id", 0, 1)
