@@ -301,11 +301,6 @@ def _parse_objects(blob: bytes) -> dict[int, tuple[bytes, bytes | None]]:
     return _scan_objects(blob)[0]
 
 
-def _object_offsets(blob: bytes) -> dict[int, int]:
-    """obj_num -> byte offset of its `N 0 obj` header."""
-    return _scan_objects(blob)[1]
-
-
 def _page_order(
     objs: dict[int, tuple[bytes, bytes | None]], offsets: dict[int, int]
 ) -> list[int]:

@@ -1626,15 +1626,6 @@ def _qd_exact_rank_select(
     return int(row)
 
 
-def _qd_rank_le(hist_df: DataFrame, x: int) -> int:
-    row = (
-        hist_df.filter(F.col("v") <= x)
-        .agg(F.sum("cnt").cast("long").alias("s"))
-        .collect()[0]["s"]
-    )
-    return int(row) if row is not None else 0
-
-
 def _qd_rank_le_multi(hist_df: DataFrame, xs: list[int]) -> list[int]:
     """rank_le for several cut points in ONE aggregate job (r13 opt —
     each cut was a separate filter-sum pass over the histogram)."""

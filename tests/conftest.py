@@ -17,6 +17,24 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def jobs_in_group(spark):
+    """``run(group, fn)`` calls ``fn`` under a Spark job group of its own
+    and returns (number of Spark jobs it launched, its result)."""
+    sc = spark.sparkContext
+
+    def run(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"

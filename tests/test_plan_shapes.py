@@ -708,3 +708,13 @@ def test_knn_graph_is_bucket_join_never_cartesian(spark, qs):
         p = plan_of(spark, qs[q](spark, SF_DIR))
         assert "Cartesian" not in p and "BroadcastNestedLoopJoin" not in p
         assert "SinglePartition" not in p
+
+
+def test_q9_rebuild_launches_no_job(spark, qs, jobs_in_group):
+    """Building a query plans it against catalog.load's cached schemas:
+    once every table it reads has been loaded, a rebuild launches no
+    Spark job (each uncached parquet read would infer its schema in one)."""
+    build = qs["tpch_q9_profit_by_nation_year"]
+    build(spark, SF_DIR)
+    jobs, _ = jobs_in_group("q9-rebuild", lambda: build(spark, SF_DIR))
+    assert jobs == 0
