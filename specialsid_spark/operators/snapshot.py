@@ -38,6 +38,8 @@ pointer in a metastore — the local put-if-absent link is the stand-in
 for that primitive.  Manifests store RELATIVE file paths so a table
 directory can be relocated wholesale; this module is the only writer
 of the manifest format (``sources/pyds.py`` commits through it).
+The foreachBatch summary streams of ``streaming/pipeline.py`` commit
+through it too: each micro-batch is one tagged overwrite.
 """
 
 from __future__ import annotations

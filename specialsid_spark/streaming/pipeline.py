@@ -24,6 +24,7 @@ aggregations (T8) bound their state by event time.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -485,75 +486,75 @@ def streaming_corpus_ingest(
     )
 
 
-def crash_safe_summary_merge(
-    batch_df: DataFrame,
-    batch_id: int,
-    summary_path: str,
-    checkpoint_dir: str,
-    combine,
-    context: str,
-) -> None:
-    """The effectively-once summary-maintenance protocol, factored out of
-    :func:`streaming_incremental_rollup` (see its docstring for the full
-    crash-window analysis) so any foreachBatch-maintained table — count
-    rollups, HLL registers, CMS counters — gets the identical
-    guarantees:
-
-    * checkpoint-identity pinning (a fresh checkpoint over an old
-      summary fails loudly instead of silently dropping batches),
-    * ``_BATCH_ID`` sidecar promoted atomically WITH the data,
-    * keep-one-generation swap with interrupted-swap recovery.
-
-    ``combine(current: DataFrame | None) -> DataFrame`` produces the
-    merged summary from the existing one (None on first batch)."""
-    import json as _json  # noqa: PLC0415
-    import os as _os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    query_id = ""
-    meta_file = _os.path.join(checkpoint_dir, "metadata")
-    if _os.path.exists(meta_file):
-        with open(meta_file) as fh:
-            query_id = _json.load(fh).get("id", "")
-
-    nxt, old = summary_path + "_next", summary_path + "_old"
-    if not _os.path.exists(summary_path) and _os.path.exists(old):
-        _os.rename(old, summary_path)
-    if _os.path.exists(nxt):
-        shutil.rmtree(nxt)
-    marker = _os.path.join(summary_path, "_BATCH_ID")
-    if _os.path.exists(marker):
-        with open(marker) as fh:
-            lines = fh.read().splitlines()
-        applied_id = int(lines[0].strip() or -1) if lines else -1
-        applied_query = lines[1].strip() if len(lines) > 1 else ""
-        if applied_query and query_id and applied_query != query_id:
-            raise ValueError(
-                f"{context}: summary at {summary_path} was built by "
-                f"checkpoint id {applied_query!r} but the current "
-                f"checkpoint is {query_id!r} — the checkpoint dir was "
-                "lost or recreated over an existing summary. Replaying "
-                "into it could silently drop batches; delete the summary "
-                "(full rebuild) or restore the original checkpoint."
-            )
-        if batch_id <= applied_id:
-            return  # crash-replayed batch: already merged
-    current = (
-        batch_df.sparkSession.read.parquet(summary_path)
-        if _os.path.exists(summary_path)
-        else None
+def _summary_stream(
+    source: DataFrame, path: str, checkpoint_dir: str, context: str, merge
+) -> StreamingQuery:
+    """Maintain the snapshot table at ``path`` from ``source``, exactly
+    once per micro-batch.  ``merge(batch_df, batch_id, current)`` returns
+    the new summary from the batch and the table's head (None before the
+    first commit); it is committed as an overwrite whose manifest tag
+    ``"{query_id}:{batch_id}"`` is the replay token, so the data and the
+    record of the batch it applied become visible in ONE atomic publish
+    (operators/snapshot.py).  A crash before the publish leaves only
+    orphan files and the batch replays; a replayed batch at or below
+    the head's id is skipped.  A head written under another checkpoint
+    id, or a missing table past batch 0, fails loudly: replaying into
+    either would silently drop batches.  Vacuum after each commit keeps
+    two generations on disk."""
+    from specialsid_spark.operators.snapshot import (
+        _resolve,
+        snapshot_commit,
+        snapshot_read,
+        snapshot_vacuum,
     )
-    merged = combine(current)
-    merged.write.mode("overwrite").parquet(nxt)
-    with open(_os.path.join(nxt, "_BATCH_ID"), "w") as fh:
-        fh.write(f"{batch_id}\n{query_id}")
-    if _os.path.exists(old):
-        shutil.rmtree(old)
-    if _os.path.exists(summary_path):
-        _os.rename(summary_path, old)
-    _os.rename(nxt, summary_path)
-    if _os.path.exists(old):
-        shutil.rmtree(old)
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        query_id = ""
+        meta_file = os.path.join(checkpoint_dir, "metadata")
+        if os.path.exists(meta_file):
+            with open(meta_file) as fh:
+                query_id = json.load(fh).get("id", "")
+        try:
+            head, manifest = _resolve(path)
+        except FileNotFoundError:
+            if batch_id > 0:
+                raise ValueError(
+                    f"{context}: summary at {path} has no committed version "
+                    f"but checkpoint {checkpoint_dir} is at batch {batch_id} "
+                    "— the summary was lost or predates snapshot commits. "
+                    "Merging into an empty summary would silently drop "
+                    "batches; delete the checkpoint (full rebuild) or "
+                    "restore the summary."
+                ) from None
+            current = None
+        else:
+            applied_query, _, applied_id = manifest.get("tag", "").rpartition(":")
+            if applied_query != query_id:
+                raise ValueError(
+                    f"{context}: summary at {path} was built by checkpoint "
+                    f"id {applied_query!r} but the current checkpoint is "
+                    f"{query_id!r} — the checkpoint dir was lost or "
+                    "recreated over an existing summary. Replaying into it "
+                    "could silently drop batches; delete the summary (full "
+                    "rebuild) or restore the original checkpoint."
+                )
+            if batch_id <= int(applied_id):
+                return  # crash-replayed batch: already merged
+            current = snapshot_read(batch_df.sparkSession, path, head)
+        snapshot_commit(
+            merge(batch_df, batch_id, current),
+            path,
+            mode="overwrite",
+            tag=f"{query_id}:{batch_id}",
+        )
+        snapshot_vacuum(path)
+
+    return (
+        source.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def streaming_decontaminate_ingest(
@@ -618,70 +619,39 @@ def streaming_incremental_rollup(
 ) -> StreamingQuery:
     """T3/A1 ∘ streaming: MAINTAIN a per-event-type summary table from a
     stream via ``foreachBatch`` — each micro-batch's partial counts are
-    merged into the parquet summary (read-modify-write of a tiny
-    aggregate, NOT a rescan of history).  This is the incremental-view
-    pattern for metrics a 100 TB/day firehose feeds: state lives in the
-    summary table itself, so the streaming query needs no state store
-    at all.
+    merged into the summary (read-modify-write of a tiny aggregate, NOT
+    a rescan of history).  This is the incremental-view pattern for
+    metrics a 100 TB/day firehose feeds: state lives in the summary
+    table itself, so the streaming query needs no state store at all.
 
-    Effectively-once (ADVICE r3 — the checkpoint alone is NOT enough):
-    foreachBatch is at-least-once — a crash between a completed merge
-    and the checkpoint commit replays that batch on restart.  Two
-    mechanisms close every crash window:
-
-    * The applied batch_id travels INSIDE the summary directory (an
-      ``_BATCH_ID`` sidecar; Spark/pyarrow skip underscore files), so
-      the single atomic directory promote carries data and marker
-      together — there is no ordering where the data says "merged" and
-      the marker disagrees.  A replayed batch_id <= the summary's
-      recorded id is skipped.
-    * The swap keeps one complete generation on disk at every instant
-      (``summary -> _old``, ``_next -> summary``, drop ``_old``), and
-      the preamble recovers interrupted swaps (missing summary with
-      ``_old`` present -> restore; stale ``_next`` -> discard, its
-      batch replays).  With rmtree-then-rename, a crash between the
-      two would lose the whole summary while the checkpoint marks its
-      batches committed — unrecoverable, no upstream rescan path.
-
-    foreachBatch is the escape hatch for sinks Spark cannot express
-    declaratively (here: an aggregate UPSERT into plain parquet); the
-    batch function gets a NORMAL DataFrame, so the merge reuses the
+    foreachBatch is at-least-once; the summary is a snapshot table
+    committed through :func:`_summary_stream`, whose tagged manifest
+    publish (operators/snapshot.py) makes each batch effectively-once.
+    The batch function gets a NORMAL DataFrame, so the merge reuses the
     same groupBy/unionByName operators as batch code."""
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(
+        batch_df: DataFrame, batch_id: int, current: DataFrame | None
+    ) -> DataFrame:
         partial = batch_df.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value")
         )
-
-        def combine(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return partial
-            return (
-                current.unionByName(partial)
-                .groupBy("event_type")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("sum_value").alias("sum_value"),
-                )
+        if current is None:
+            return partial
+        return (
+            current.unionByName(partial)
+            .groupBy("event_type")
+            .agg(
+                F.sum("n_events").alias("n_events"),
+                F.sum("sum_value").alias("sum_value"),
             )
-
-        crash_safe_summary_merge(
-            batch_df,
-            batch_id,
-            summary_path,
-            checkpoint_dir,
-            combine,
-            "streaming_incremental_rollup",
         )
 
     ev = spark.readStream.schema(
         "event_id long, ts timestamp, user_id long, event_type string, value double"
     ).json(events_dir)
-    return (
-        ev.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _summary_stream(
+        ev, summary_path, checkpoint_dir, "streaming_incremental_rollup", merge
     )
 
 
@@ -701,15 +671,15 @@ def streaming_snapshot_ivm(
     diff→signed-partials→union-reaggregate algebra, so stream and batch
     produce the same summary by construction.
 
-    Exactly-once has TWO halves here, each with its own token carried
-    atomically with its data:
+    Exactly-once has TWO halves here, each a tagged snapshot commit
+    that publishes its token atomically with its data:
 
-    * the TABLE commit: ``snapshot_commit(tag=batch-N)`` records the
-      batch id inside the manifest (one atomic publish covers both), so
-      a crash-replayed batch finds its version via
+    * the TABLE commit: ``snapshot_commit(tag=stream-batch-N)``, so a
+      crash-replayed batch finds its version via
       ``snapshot_version_by_tag`` instead of appending twice;
-    * the SUMMARY merge: :func:`crash_safe_summary_merge`'s _BATCH_ID
-      sidecar + generation swap, unchanged.
+    * the SUMMARY commit, through :func:`_summary_stream`; it lands
+      after the table commit, so a summary that records batch N implies
+      the table holds it.
 
     A replay therefore re-derives the SAME diff (manifests are
     immutable) and the merge layer decides idempotently whether it was
@@ -724,7 +694,9 @@ def streaming_snapshot_ivm(
 
     grp = (F.col("doc_id") % 7).cast("long").alias("grp")
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(
+        batch_df: DataFrame, batch_id: int, current: DataFrame | None
+    ) -> DataFrame:
         tag = f"stream-batch-{batch_id}"
         v = snapshot_version_by_tag(table_path, tag)
         if v is None:
@@ -756,37 +728,23 @@ def streaming_snapshot_ivm(
                     .alias("sum_value"),
                 )
             )
-
-        def combine(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return deltas
-            return (
-                current.unionByName(deltas)
-                .groupBy("grp")
-                .agg(
-                    F.sum("n_rows").cast("long").alias("n_rows"),
-                    F.sum("sum_value").cast("long").alias("sum_value"),
-                )
-                .where(F.col("n_rows") > 0)  # retraction drops the group
+        if current is None:
+            return deltas
+        return (
+            current.unionByName(deltas)
+            .groupBy("grp")
+            .agg(
+                F.sum("n_rows").cast("long").alias("n_rows"),
+                F.sum("sum_value").cast("long").alias("sum_value"),
             )
-
-        crash_safe_summary_merge(
-            batch_df,
-            batch_id,
-            summary_path,
-            checkpoint_dir,
-            combine,
-            "streaming_snapshot_ivm",
+            .where(F.col("n_rows") > 0)  # retraction drops the group
         )
 
     docs = spark.readStream.schema("doc_id long, ts timestamp, value long").json(
         docs_dir
     )
-    return (
-        docs.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _summary_stream(
+        docs, summary_path, checkpoint_dir, "streaming_snapshot_ivm", merge
     )
 
 
@@ -801,8 +759,8 @@ def streaming_hll_registers(
     query agg_hll_manual builds) incrementally at the ingest door.
 
     Each micro-batch reduces to its partial (event_type, bucket,
-    max-rho) rows and MAX-merges them into the parquet register table
-    under the crash-safe protocol of :func:`crash_safe_summary_merge`.
+    max-rho) rows and MAX-merges them into the register table, a
+    snapshot table committed through :func:`_summary_stream`.
     MAX-merge is idempotent AND associative — precisely why HLL is the
     distinct-count structure a 100 TB/day firehose can maintain: the
     summary is at most |types| * 1024 rows forever, replays cannot
@@ -811,7 +769,9 @@ def streaming_hll_registers(
     demo target (the classic "daily uniques" metric)."""
     from specialsid_spark.operators.sketches import hll_bucket, hll_rho
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(
+        batch_df: DataFrame, batch_id: int, current: DataFrame | None
+    ) -> DataFrame:
         h = batch_df.select(
             "event_type", F.md5(F.col("user_id").cast("string")).alias("hh")
         )
@@ -824,34 +784,20 @@ def streaming_hll_registers(
             .groupBy("event_type", "bucket")
             .agg(F.max("rho").alias("mj"))
         )
-
-        def combine(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return partial
-            return (
-                current.withColumnRenamed("mj", "rho")
-                .unionByName(partial.withColumnRenamed("mj", "rho"))
-                .groupBy("event_type", "bucket")
-                .agg(F.max("rho").alias("mj"))
-            )
-
-        crash_safe_summary_merge(
-            batch_df,
-            batch_id,
-            summary_path,
-            checkpoint_dir,
-            combine,
-            "streaming_hll_registers",
+        if current is None:
+            return partial
+        return (
+            current.withColumnRenamed("mj", "rho")
+            .unionByName(partial.withColumnRenamed("mj", "rho"))
+            .groupBy("event_type", "bucket")
+            .agg(F.max("rho").alias("mj"))
         )
 
     ev = spark.readStream.schema(
         "event_id long, ts timestamp, user_id long, event_type string, value double"
     ).json(events_dir)
-    return (
-        ev.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _summary_stream(
+        ev, summary_path, checkpoint_dir, "streaming_hll_registers", merge
     )
 
 
@@ -867,13 +813,15 @@ def streaming_cms_counters(
     count-min counter matrix over event user_ids maintained per
     micro-batch.  CMS counters merge by ADDITION — which is NOT
     idempotent under replay, so unlike the MAX-merged HLL this sink is
-    only correct because crash_safe_summary_merge's _BATCH_ID guard
-    makes each batch effectively-once (the same reason the count
+    only correct because :func:`_summary_stream`'s tagged snapshot
+    commit makes each batch effectively-once (the same reason the count
     rollup is safe).  The summary is d*w rows forever; heavy-hitter
     point queries read it with min-over-rows, batch or streaming
     alike."""
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(
+        batch_df: DataFrame, batch_id: int, current: DataFrame | None
+    ) -> DataFrame:
         j = F.explode(F.array(*[F.lit(i) for i in range(d)])).alias("j")
         cells = batch_df.select(F.col("user_id").cast("string").alias("k"), j)
         partial = (
@@ -894,33 +842,19 @@ def streaming_cms_counters(
             .groupBy("j", "col")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-
-        def combine(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return partial
-            return (
-                current.unionByName(partial)
-                .groupBy("j", "col")
-                .agg(F.sum("c").alias("c"))
-            )
-
-        crash_safe_summary_merge(
-            batch_df,
-            batch_id,
-            summary_path,
-            checkpoint_dir,
-            combine,
-            "streaming_cms_counters",
+        if current is None:
+            return partial
+        return (
+            current.unionByName(partial)
+            .groupBy("j", "col")
+            .agg(F.sum("c").alias("c"))
         )
 
     ev = spark.readStream.schema(
         "event_id long, ts timestamp, user_id long, event_type string, value double"
     ).json(events_dir)
-    return (
-        ev.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _summary_stream(
+        ev, summary_path, checkpoint_dir, "streaming_cms_counters", merge
     )
 
 
@@ -930,8 +864,9 @@ def hll_summary_estimates(spark: SparkSession, summary_path: str) -> DataFrame:
     register table maintained by the STREAM yields bit-identical
     estimates to one built by the batch query over the same rows."""
     from specialsid_spark.operators.sketches import hll_estimate, hll_s33
+    from specialsid_spark.operators.snapshot import snapshot_read
 
-    regs = spark.read.parquet(summary_path)
+    regs = snapshot_read(spark, summary_path)
     agg = regs.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_hit"),
         F.sum(F.pow(F.lit(2.0), 33 - F.col("mj")).cast("long")).alias("s_hit"),
@@ -1022,10 +957,9 @@ def streaming_neardup_ingest(
 
     State design for 100 TB: the index holds (band, bkey) pairs — 16
     bytes per band per SEEN document, never text or signatures — and is
-    maintained under crash_safe_summary_merge (checkpoint-identity
-    pinning, _BATCH_ID sidecar, generation swap), so replays are
-    idempotent.  Kept doc_ids ride the same summary table as
-    kind='doc' rows: one atomic swap covers the index AND the
+    a snapshot table committed through :func:`_summary_stream`, so
+    replays are idempotent.  Kept doc_ids ride the same table as
+    kind='doc' rows: one atomic publish covers the index AND the
     survivor list.
 
     Retention horizon (r7, VERDICT #5): with ``retention_seconds`` set,
@@ -1044,8 +978,9 @@ def streaming_neardup_ingest(
         docs_dir
     )
 
-    def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
+    def merge(
+        batch_df: DataFrame, batch_id: int, current: DataFrame | None
+    ) -> DataFrame:
         bands = (
             lsh_band_keys(batch_df.select("doc_id", "text"))
             .join(batch_df.select("doc_id", "ts"), "doc_id")
@@ -1061,108 +996,88 @@ def streaming_neardup_ingest(
 
                 cutoff = mx - _dt.timedelta(seconds=retention_seconds)
 
-        def combine(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                prior_bands = None
-                prior_docs = None
-            else:
-                current = current.localCheckpoint(eager=True)
-                if "last_seen" not in current.columns:
-                    # index table persisted by a pre-retention release:
-                    # tolerate the missing column so the first
-                    # post-upgrade micro-batch doesn't fail analysis
-                    current = current.withColumn(
-                        "last_seen", F.lit(None).cast("timestamp")
-                    )
-                prior_bands = current.filter(F.col("kind") == "band").select(
-                    "band", "bkey", "last_seen"
+        if current is None:
+            prior_bands = None
+            prior_docs = None
+        else:
+            current = current.localCheckpoint(eager=True)
+            prior_bands = current.filter(F.col("kind") == "band").select(
+                "band", "bkey", "last_seen"
+            )
+            if cutoff is not None:
+                # evict BEFORE gating: an expired bucket no longer
+                # blocks, and no longer occupies state.  NULL
+                # last_seen (band rows of docs whose ts is NULL) =
+                # unknown age: keep — the gate may only err toward
+                # blocking, never toward wrongly admitting a dup; the
+                # row picks up a real last_seen on its next touch.
+                prior_bands = prior_bands.filter(
+                    F.col("last_seen").isNull()
+                    | (F.col("last_seen") >= F.lit(cutoff))
                 )
-                if cutoff is not None:
-                    # evict BEFORE gating: an expired bucket no longer
-                    # blocks, and no longer occupies state.  NULL
-                    # last_seen (legacy pre-retention rows) = unknown
-                    # age: keep — the gate may only err toward blocking,
-                    # never toward wrongly admitting a dup; the row
-                    # picks up a real last_seen on its next touch.
-                    prior_bands = prior_bands.filter(
-                        F.col("last_seen").isNull()
-                        | (F.col("last_seen") >= F.lit(cutoff))
-                    )
-                prior_docs = current.filter(F.col("kind") == "doc")
-            # dup if any band bucket is occupied by a prior batch ...
-            hit_prior = (
-                bands.join(
-                    prior_bands.select("band", "bkey"),
-                    ["band", "bkey"],
-                    "left_semi",
-                )
-                if prior_bands is not None
-                else bands.limit(0)
+            prior_docs = current.filter(F.col("kind") == "doc")
+        # dup if any band bucket is occupied by a prior batch ...
+        hit_prior = (
+            bands.join(
+                prior_bands.select("band", "bkey"),
+                ["band", "bkey"],
+                "left_semi",
             )
-            # ... or by a lower-id doc of the SAME batch
-            mins = bands.groupBy("band", "bkey").agg(F.min("doc_id").alias("m"))
-            hit_intra = bands.join(mins, ["band", "bkey"]).filter(
-                F.col("doc_id") > F.col("m")
-            )
-            dups = (
-                hit_prior.select("doc_id")
-                .unionByName(hit_intra.select("doc_id"))
-                .distinct()
-            )
-            kept = (
-                batch_df.select("doc_id")
-                .distinct()
-                .join(dups, "doc_id", "left_anti")
-                .select(
-                    F.lit("doc").alias("kind"),
-                    F.lit(None).cast("int").alias("band"),
-                    F.lit(None).cast("string").alias("bkey"),
-                    "doc_id",
-                    F.lit(None).cast("timestamp").alias("last_seen"),
-                )
-            )
-            new_bands = bands.groupBy("band", "bkey").agg(
-                F.max("ts").alias("last_seen")
-            )
-            all_bands = (
-                new_bands.unionByName(prior_bands)
-                if prior_bands is not None
-                else new_bands
-            )
-            band_rows = (
-                all_bands.groupBy("band", "bkey")
-                .agg(F.max("last_seen").alias("last_seen"))
-                .select(
-                    F.lit("band").alias("kind"),
-                    F.col("band").cast("int").alias("band"),
-                    "bkey",
-                    F.lit(None).cast("long").alias("doc_id"),
-                    "last_seen",
-                )
-            )
-            out = kept.unionByName(band_rows)
-            if prior_docs is not None:
-                out = out.unionByName(
-                    prior_docs.select(
-                        "kind", "band", "bkey", "doc_id", "last_seen"
-                    )
-                ).distinct()
-            return out
-
-        crash_safe_summary_merge(
-            batch_df,
-            batch_id,
-            index_path,
-            checkpoint_dir,
-            combine,
-            "streaming_neardup_ingest",
+            if prior_bands is not None
+            else bands.limit(0)
         )
+        # ... or by a lower-id doc of the SAME batch
+        mins = bands.groupBy("band", "bkey").agg(F.min("doc_id").alias("m"))
+        hit_intra = bands.join(mins, ["band", "bkey"]).filter(
+            F.col("doc_id") > F.col("m")
+        )
+        dups = (
+            hit_prior.select("doc_id")
+            .unionByName(hit_intra.select("doc_id"))
+            .distinct()
+        )
+        kept = (
+            batch_df.select("doc_id")
+            .distinct()
+            .join(dups, "doc_id", "left_anti")
+            .select(
+                F.lit("doc").alias("kind"),
+                F.lit(None).cast("int").alias("band"),
+                F.lit(None).cast("string").alias("bkey"),
+                "doc_id",
+                F.lit(None).cast("timestamp").alias("last_seen"),
+            )
+        )
+        new_bands = bands.groupBy("band", "bkey").agg(
+            F.max("ts").alias("last_seen")
+        )
+        all_bands = (
+            new_bands.unionByName(prior_bands)
+            if prior_bands is not None
+            else new_bands
+        )
+        band_rows = (
+            all_bands.groupBy("band", "bkey")
+            .agg(F.max("last_seen").alias("last_seen"))
+            .select(
+                F.lit("band").alias("kind"),
+                F.col("band").cast("int").alias("band"),
+                "bkey",
+                F.lit(None).cast("long").alias("doc_id"),
+                "last_seen",
+            )
+        )
+        out = kept.unionByName(band_rows)
+        if prior_docs is not None:
+            out = out.unionByName(
+                prior_docs.select(
+                    "kind", "band", "bkey", "doc_id", "last_seen"
+                )
+            ).distinct()
+        return out
 
-    return (
-        docs.writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _summary_stream(
+        docs, index_path, checkpoint_dir, "streaming_neardup_ingest", merge
     )
 
 
@@ -1179,8 +1094,8 @@ def streaming_scd2_maintain(
     them with one lead() at read time, so the stored state is exactly
     the information content of the dimension, nothing derived.
 
-    Per micro-batch (under crash_safe_summary_merge, so replays are
-    effectively-once): each user's last stored change point seeds a
+    Per micro-batch (committed through :func:`_summary_stream`, so
+    replays are effectively-once): each user's last stored change point seeds a
     lag() window over that user's new events in event order, and only
     genuine segment transitions append.  Contract: event time moves
     forward across batches per user (the file-source + watermark
@@ -1201,52 +1116,45 @@ def streaming_scd2_maintain(
         .otherwise("high")
     )
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(
+        batch_df: DataFrame, batch_id: int, current: DataFrame | None
+    ) -> DataFrame:
         from pyspark.sql.window import Window  # noqa: PLC0415
 
-        batch = batch_df.select(
-            "user_id", "ts", "event_id", segment.alias("segment")
-        ).localCheckpoint(eager=True)
-
-        def combine(current: DataFrame | None) -> DataFrame:
-            rows = batch.withColumn("is_state", F.lit(0))
-            if current is not None:
-                current = current.localCheckpoint(eager=True)
-                wlast = Window.partitionBy("user_id").orderBy(
-                    F.col("ts").desc(), F.col("event_id").desc()
-                )
-                last = (
-                    current.withColumn("rn", F.row_number().over(wlast))
-                    .filter(F.col("rn") == 1)
-                    .select("user_id", "ts", "event_id", "segment")
-                    .withColumn("is_state", F.lit(1))
-                )
-                rows = rows.unionByName(last)
-            w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-            changed = (
-                rows.withColumn("prev", F.lag("segment").over(w))
-                .filter(
-                    (F.col("is_state") == 0)
-                    & (F.col("prev").isNull() | (F.col("prev") != F.col("segment")))
-                )
-                .select("user_id", "ts", "event_id", "segment")
-            )
-            if current is None:
-                return changed
-            return current.select(
-                "user_id", "ts", "event_id", "segment"
-            ).unionByName(changed)
-
-        crash_safe_summary_merge(
-            batch_df, batch_id, dim_path, checkpoint_dir, combine,
-            "streaming_scd2_maintain",
+        rows = (
+            batch_df.select("user_id", "ts", "event_id", segment.alias("segment"))
+            .localCheckpoint(eager=True)
+            .withColumn("is_state", F.lit(0))
         )
+        if current is not None:
+            current = current.localCheckpoint(eager=True)
+            wlast = Window.partitionBy("user_id").orderBy(
+                F.col("ts").desc(), F.col("event_id").desc()
+            )
+            last = (
+                current.withColumn("rn", F.row_number().over(wlast))
+                .filter(F.col("rn") == 1)
+                .select("user_id", "ts", "event_id", "segment")
+                .withColumn("is_state", F.lit(1))
+            )
+            rows = rows.unionByName(last)
+        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+        changed = (
+            rows.withColumn("prev", F.lag("segment").over(w))
+            .filter(
+                (F.col("is_state") == 0)
+                & (F.col("prev").isNull() | (F.col("prev") != F.col("segment")))
+            )
+            .select("user_id", "ts", "event_id", "segment")
+        )
+        if current is None:
+            return changed
+        return current.select(
+            "user_id", "ts", "event_id", "segment"
+        ).unionByName(changed)
 
-    return (
-        ev.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _summary_stream(
+        ev, dim_path, checkpoint_dir, "streaming_scd2_maintain", merge
     )
 
 
@@ -1256,7 +1164,9 @@ def scd2_intervals(spark: SparkSession, dim_path: str) -> DataFrame:
     current — identical output contract to ev_scd2_user_segments."""
     from pyspark.sql.window import Window  # noqa: PLC0415
 
-    cp = spark.read.parquet(dim_path)
+    from specialsid_spark.operators.snapshot import snapshot_read
+
+    cp = snapshot_read(spark, dim_path)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
         cp.withColumn("valid_to", F.lead("ts").over(w))
@@ -1462,11 +1372,10 @@ def hop4_incremental_lsh_gate(
     AND their doc ids as ONE tagged snapshot commit (replay-safe, see
     _hop4_gate_stream).
 
-    vs. streaming_neardup_ingest: same gate semantics, different state
-    backend — this one accumulates in a versioned snapshot table that
-    the daily batch gate writes in the same layout and can share,
-    time-travel, and roll back, instead of the generation-swap summary
-    table.
+    vs. streaming_neardup_ingest: same gate semantics, different table
+    layout — this one APPENDS to a snapshot table that the daily batch
+    gate writes in the same layout and can share, where
+    streaming_neardup_ingest rewrites its whole index per batch.
 
     At 100 TB: per batch the shuffle is the batch's band keys only; the
     index table is distinct (band, bkey) pairs + admitted doc ids,

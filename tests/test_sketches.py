@@ -9,6 +9,7 @@ flag sit inside the 2.5m small-range regime where the RAW estimate
 
 from __future__ import annotations
 
+from specialsid_spark.operators.snapshot import snapshot_read
 from specialsid_spark.queries import all_queries
 
 SF001 = "/root/testdata/sf0.01"
@@ -109,7 +110,7 @@ def test_streaming_hll_registers_match_batch_and_replay(spark, tmp_path):
 
     got = {
         (r["event_type"], r["bucket"]): r["mj"]
-        for r in spark.read.parquet(summary).collect()
+        for r in snapshot_read(spark, summary).collect()
     }
     assert got == _batch_registers(spark, b1 + b2)
 
@@ -117,7 +118,7 @@ def test_streaming_hll_registers_match_batch_and_replay(spark, tmp_path):
     streaming_hll_registers(spark, str(ev_dir), summary, ckpt).awaitTermination()
     again = {
         (r["event_type"], r["bucket"]): r["mj"]
-        for r in spark.read.parquet(summary).collect()
+        for r in snapshot_read(spark, summary).collect()
     }
     assert again == got
 
@@ -163,8 +164,8 @@ def test_pca_from_gram_matches_numpy(spark):
 def test_streaming_cms_counters_match_batch_and_replay(spark, tmp_path):
     """CMS counters maintained over two micro-batches equal one batch
     build over the union, and a checkpointed re-run adds nothing —
-    SUM-merge is only safe because the _BATCH_ID guard makes each batch
-    effectively-once."""
+    SUM-merge is only safe because the summary's tagged snapshot commit
+    makes each batch effectively-once."""
     from pyspark.sql import functions as F
 
     from specialsid_spark.streaming.pipeline import streaming_cms_counters
@@ -189,7 +190,7 @@ def test_streaming_cms_counters_match_batch_and_replay(spark, tmp_path):
     streaming_cms_counters(spark, str(ev_dir), summary, ckpt).awaitTermination()
 
     got = {
-        (r["j"], r["col"]): r["c"] for r in spark.read.parquet(summary).collect()
+        (r["j"], r["col"]): r["c"] for r in snapshot_read(spark, summary).collect()
     }
     # batch reference over the union, same hash derivation
     df = spark.createDataFrame(
@@ -222,7 +223,7 @@ def test_streaming_cms_counters_match_batch_and_replay(spark, tmp_path):
     # replay: re-run with the same checkpoint adds nothing
     streaming_cms_counters(spark, str(ev_dir), summary, ckpt).awaitTermination()
     again = {
-        (r["j"], r["col"]): r["c"] for r in spark.read.parquet(summary).collect()
+        (r["j"], r["col"]): r["c"] for r in snapshot_read(spark, summary).collect()
     }
     assert again == got
 

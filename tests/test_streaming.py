@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from specialsid_spark.operators.extraction import ExtractionConfig
+from specialsid_spark.operators.snapshot import snapshot_read
 from specialsid_spark.streaming.pipeline import (
     run_full_pipeline,
     streaming_dedup_within_watermark,
@@ -499,6 +500,9 @@ def test_streaming_corpus_ingest_gate_and_dedup(spark, tmp_path):
 def test_streaming_incremental_rollup_foreachbatch(spark, tmp_path):
     """foreachBatch-maintained summary: equals the batch aggregate,
     grows incrementally with new files, re-run merges nothing."""
+    import os
+
+    from specialsid_spark.operators.snapshot import snapshot_versions
     from specialsid_spark.streaming.pipeline import streaming_incremental_rollup
 
     ev_dir = tmp_path / "events_roll"
@@ -514,12 +518,12 @@ def test_streaming_incremental_rollup_foreachbatch(spark, tmp_path):
         ],
     )
     streaming_incremental_rollup(spark, str(ev_dir), summary, ckpt).awaitTermination()
-    out = {r["event_type"]: (r["n_events"], r["sum_value"]) for r in spark.read.parquet(summary).collect()}
+    out = {r["event_type"]: (r["n_events"], r["sum_value"]) for r in snapshot_read(spark, summary).collect()}
     assert out == {"click": (2, 3.0), "view": (1, 5.0)}
 
     # re-run: checkpoint replays nothing, summary unchanged
     streaming_incremental_rollup(spark, str(ev_dir), summary, ckpt).awaitTermination()
-    out2 = {r["event_type"]: (r["n_events"], r["sum_value"]) for r in spark.read.parquet(summary).collect()}
+    out2 = {r["event_type"]: (r["n_events"], r["sum_value"]) for r in snapshot_read(spark, summary).collect()}
     assert out2 == out
 
     # incremental: a new file merges only its rows
@@ -530,18 +534,26 @@ def test_streaming_incremental_rollup_foreachbatch(spark, tmp_path):
         ],
     )
     streaming_incremental_rollup(spark, str(ev_dir), summary, ckpt).awaitTermination()
-    out3 = {r["event_type"]: (r["n_events"], r["sum_value"]) for r in spark.read.parquet(summary).collect()}
+    out3 = {r["event_type"]: (r["n_events"], r["sum_value"]) for r in snapshot_read(spark, summary).collect()}
     assert out3 == {"click": (3, 13.0), "view": (1, 5.0)}
+
+    # two generations on disk: the previous one still reads by version
+    versions = snapshot_versions(summary)
+    assert len(versions) == 2
+    prev = {r["event_type"]: (r["n_events"], r["sum_value"]) for r in snapshot_read(spark, summary, version=versions[0]).collect()}
+    assert prev == out
+    assert not os.path.exists(summary + "_old")
+    assert not os.path.exists(summary + "_next")
 
 
 def test_streaming_incremental_rollup_replay_idempotent(spark, tmp_path):
     """ADVICE r3: foreachBatch is at-least-once — a crash between the
     merge and the checkpoint commit replays batch 0 with identical data
-    under the SAME checkpoint, and without the _BATCH_ID guard the
-    replay would double every count.  Simulated by deleting the
-    checkpoint's commit record for batch 0 while keeping its metadata
-    (so the checkpoint identity is unchanged — the r4-ADVICE identity
-    check must NOT fire here)."""
+    under the SAME checkpoint, and without the batch id in the
+    summary's manifest tag the replay would double every count.
+    Simulated by deleting the checkpoint's commit record for batch 0
+    while keeping its metadata (so the checkpoint identity is unchanged
+    — the r4-ADVICE identity check must NOT fire here)."""
     import os
 
     from specialsid_spark.streaming.pipeline import streaming_incremental_rollup
@@ -558,7 +570,7 @@ def test_streaming_incremental_rollup_replay_idempotent(spark, tmp_path):
         ],
     )
     streaming_incremental_rollup(spark, str(ev_dir), summary, ckpt).awaitTermination()
-    before = {r["event_type"]: (r["n_events"], r["sum_value"]) for r in spark.read.parquet(summary).collect()}
+    before = {r["event_type"]: (r["n_events"], r["sum_value"]) for r in snapshot_read(spark, summary).collect()}
     assert before == {"click": (1, 1.0), "view": (1, 2.0)}
 
     # simulate crash-before-checkpoint-commit: drop the batch-0 commit
@@ -569,7 +581,7 @@ def test_streaming_incremental_rollup_replay_idempotent(spark, tmp_path):
     if os.path.exists(crc):  # local ChecksumFs sidecar
         os.remove(crc)
     streaming_incremental_rollup(spark, str(ev_dir), summary, ckpt).awaitTermination()
-    after = {r["event_type"]: (r["n_events"], r["sum_value"]) for r in spark.read.parquet(summary).collect()}
+    after = {r["event_type"]: (r["n_events"], r["sum_value"]) for r in snapshot_read(spark, summary).collect()}
     assert after == before, "replayed micro-batch was merged twice"
 
 
@@ -577,8 +589,8 @@ def test_streaming_incremental_rollup_fresh_checkpoint_fails_loudly(spark, tmp_p
     """ADVICE r4: a LOST/recreated checkpoint over a surviving summary
     restarts batch ids at 0, and the bare batch_id guard would silently
     skip the batch — data loss if new events arrived before the
-    restart.  The identity line in _BATCH_ID turns this into a loud
-    error instead."""
+    restart.  The checkpoint id in the summary's manifest tag turns
+    this into a loud error instead."""
     import shutil
 
     import pytest
@@ -610,38 +622,96 @@ def test_streaming_incremental_rollup_fresh_checkpoint_fails_loudly(spark, tmp_p
         ).awaitTermination()
 
 
-def test_streaming_incremental_rollup_recovers_interrupted_swap(spark, tmp_path):
-    """ADVICE r3: a crash between `summary -> _old` and `_next ->
-    summary` must not lose the accumulated summary — the preamble
-    restores the complete _old generation and replays the batch."""
-    import os
+def test_streaming_incremental_rollup_lost_summary_fails_loudly(spark, tmp_path):
+    """A summary deleted while its checkpoint survives must not be
+    rebuilt from the next batch alone — it would silently hold only the
+    new rows.  Past batch 0, a summary with no committed version fails
+    the query."""
     import shutil
+
+    from pyspark.sql.streaming import StreamingQueryException
 
     from specialsid_spark.streaming.pipeline import streaming_incremental_rollup
 
-    ev_dir = tmp_path / "events_swap"
+    ev_dir = tmp_path / "events_lost"
     ev_dir.mkdir()
     summary = str(tmp_path / "summary")
+    ckpt = str(tmp_path / "ckpt")
+    _write_events(
+        ev_dir / "b1.json",
+        [{"event_id": 1, "ts": "2024-01-01 10:00:00", "user_id": 1, "event_type": "click", "value": 1.0}],
+    )
+    streaming_incremental_rollup(spark, str(ev_dir), summary, ckpt).awaitTermination()
+
+    shutil.rmtree(summary)
+    _write_events(
+        ev_dir / "b2.json",
+        [{"event_id": 2, "ts": "2024-01-01 10:05:00", "user_id": 2, "event_type": "view", "value": 2.0}],
+    )
+    with pytest.raises(StreamingQueryException, match="no committed version"):
+        streaming_incremental_rollup(spark, str(ev_dir), summary, ckpt).awaitTermination()
+
+
+def test_streaming_incremental_rollup_crash_before_publish(spark, tmp_path, monkeypatch):
+    """A crash after the merged summary's files are written but before
+    its manifest publish fails the query and leaves only orphan files:
+    the head still records batch 0, so a restart on the same checkpoint
+    applies batch 1 exactly once, and its vacuum reclaims exactly the
+    orphans."""
+    from pathlib import Path
+
+    from pyspark.sql.streaming import StreamingQueryException
+
+    import specialsid_spark.operators.snapshot as S
+    from specialsid_spark.streaming.pipeline import streaming_incremental_rollup
+
+    ev_dir = tmp_path / "events_crash"
+    ev_dir.mkdir()
+    summary = str(tmp_path / "summary")
+    ckpt = str(tmp_path / "ck1")
     _write_events(
         ev_dir / "b1.json",
         [{"event_id": 1, "ts": "2024-01-01 10:00:00", "user_id": 1, "event_type": "click", "value": 3.0}],
     )
-    streaming_incremental_rollup(spark, str(ev_dir), summary, str(tmp_path / "ck1")).awaitTermination()
+    streaming_incremental_rollup(spark, str(ev_dir), summary, ckpt).awaitTermination()
+    assert S.snapshot_versions(summary) == [1]
 
-    # simulate the mid-swap crash state: summary renamed aside, a stale
-    # _next from the in-flight (uncommitted) merge left behind
-    os.rename(summary, summary + "_old")
-    shutil.copytree(summary + "_old", summary + "_next")
+    real_publish = S._publish
 
+    def crash_once(*args, **kwargs):
+        monkeypatch.setattr(S, "_publish", real_publish)
+        raise RuntimeError("crash before publish")
+
+    monkeypatch.setattr(S, "_publish", crash_once)
     _write_events(
         ev_dir / "b2.json",
         [{"event_id": 2, "ts": "2024-01-01 10:05:00", "user_id": 2, "event_type": "click", "value": 4.0}],
     )
-    streaming_incremental_rollup(spark, str(ev_dir), summary, str(tmp_path / "ck1")).awaitTermination()
-    out = {r["event_type"]: (r["n_events"], r["sum_value"]) for r in spark.read.parquet(summary).collect()}
+    with pytest.raises(StreamingQueryException, match="crash before publish"):
+        streaming_incremental_rollup(spark, str(ev_dir), summary, ckpt).awaitTermination()
+    assert S.snapshot_versions(summary) == [1]
+    root = Path(summary)
+    live = set(S._resolve(summary)[1]["files"])
+    orphans = sorted(
+        str(p.relative_to(root))
+        for p in (root / "data").rglob("*.parquet")
+        if str(p.relative_to(root)) not in live
+    )
+    assert orphans
+
+    reclaimed = []
+    real_vacuum = S.snapshot_vacuum
+
+    def recording_vacuum(path, keep_last=2):
+        reclaimed.append(real_vacuum(path, keep_last))
+        return reclaimed[-1]
+
+    monkeypatch.setattr(S, "snapshot_vacuum", recording_vacuum)
+    streaming_incremental_rollup(spark, str(ev_dir), summary, ckpt).awaitTermination()
+    out = {r["event_type"]: (r["n_events"], r["sum_value"]) for r in snapshot_read(spark, summary).collect()}
     assert out == {"click": (2, 7.0)}
-    assert not os.path.exists(summary + "_old")
-    assert not os.path.exists(summary + "_next")
+    assert S.snapshot_versions(summary) == [1, 2]
+    assert reclaimed == [orphans]
 
 
 def test_hop1t_pdf_to_text_stream(spark, tmp_path):
@@ -827,7 +897,7 @@ def test_streaming_snapshot_ivm_parity_and_growth(spark, tmp_path):
     def summary_rows():
         return {
             r["grp"]: (r["n_rows"], r["sum_value"])
-            for r in spark.read.parquet(summary).collect()
+            for r in snapshot_read(spark, summary).collect()
         }
 
     assert summary_rows() == batch_recompute()
@@ -850,8 +920,8 @@ def test_streaming_snapshot_ivm_parity_and_growth(spark, tmp_path):
 
 def test_streaming_snapshot_ivm_replay_idempotent_both_halves(spark, tmp_path):
     """A crash-replayed micro-batch must neither COMMIT twice (the
-    manifest tag dedupes the table half) nor MERGE twice (the _BATCH_ID
-    sidecar dedupes the summary half)."""
+    manifest tag dedupes the table half) nor MERGE twice (the summary's
+    own manifest tag dedupes the summary half)."""
     import os
 
     from specialsid_spark.operators.snapshot import snapshot_versions
@@ -869,7 +939,7 @@ def test_streaming_snapshot_ivm_replay_idempotent_both_halves(spark, tmp_path):
     streaming_snapshot_ivm(spark, str(docs_dir), table, summary, ckpt).awaitTermination()
     before = {
         r["grp"]: (r["n_rows"], r["sum_value"])
-        for r in spark.read.parquet(summary).collect()
+        for r in snapshot_read(spark, summary).collect()
     }
     # crash window: merge + commit ran, checkpoint commit record lost
     os.remove(os.path.join(ckpt, "commits", "0"))
@@ -880,7 +950,7 @@ def test_streaming_snapshot_ivm_replay_idempotent_both_halves(spark, tmp_path):
     assert snapshot_versions(table) == [1], "replayed batch committed twice"
     after = {
         r["grp"]: (r["n_rows"], r["sum_value"])
-        for r in spark.read.parquet(summary).collect()
+        for r in snapshot_read(spark, summary).collect()
     }
     assert after == before, "replayed batch merged twice"
 
@@ -921,7 +991,7 @@ def test_streaming_neardup_parity_with_batch_lsh(spark, tmp_path):
 
     kept_stream = {
         r.doc_id
-        for r in spark.read.parquet(index).filter(F.col("kind") == "doc").collect()
+        for r in snapshot_read(spark, index).filter(F.col("kind") == "doc").collect()
     }
 
     # batch survivor set over the same corpus
@@ -970,7 +1040,7 @@ def test_streaming_neardup_replay_idempotent(spark, tmp_path):
     streaming_neardup_ingest(spark, str(docs_dir), index, ckpt).awaitTermination()
     before = sorted(
         r.doc_id
-        for r in spark.read.parquet(index).filter(F.col("kind") == "doc").collect()
+        for r in snapshot_read(spark, index).filter(F.col("kind") == "doc").collect()
     )
     # crash window: merge ran, checkpoint commit record lost
     os.remove(os.path.join(ckpt, "commits", "0"))
@@ -980,7 +1050,7 @@ def test_streaming_neardup_replay_idempotent(spark, tmp_path):
     streaming_neardup_ingest(spark, str(docs_dir), index, ckpt).awaitTermination()
     after = sorted(
         r.doc_id
-        for r in spark.read.parquet(index).filter(F.col("kind") == "doc").collect()
+        for r in snapshot_read(spark, index).filter(F.col("kind") == "doc").collect()
     )
     assert after == before
 
@@ -1008,7 +1078,7 @@ def test_streaming_neardup_retention_ages_buckets_out(spark, tmp_path):
             streaming_neardup_ingest(
                 spark, str(docs_dir), index, ckpt, retention_seconds=retention
             ).awaitTermination()
-        idx = spark.read.parquet(index)
+        idx = snapshot_read(spark, index)
         kept = {r.doc_id for r in idx.filter(F.col("kind") == "doc").collect()}
         n_bands = idx.filter(F.col("kind") == "band").count()
         return kept, n_bands
@@ -1066,7 +1136,7 @@ def test_streaming_neardup_retention_replay_idempotent(spark, tmp_path):
     ).awaitTermination()
     snap = lambda: sorted(  # noqa: E731
         (r.kind, r.band, r.bkey, r.doc_id, str(r.last_seen))
-        for r in spark.read.parquet(index).collect()
+        for r in snapshot_read(spark, index).collect()
     )
     before = snap()
     os.remove(os.path.join(ckpt, "commits", "0"))

@@ -64,6 +64,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from specialsid_spark.catalog import load
+    from specialsid_spark.operators.snapshot import snapshot_read
     from specialsid_spark.session import get_spark
     from specialsid_spark.streaming.pipeline import (
         streaming_click_attribution_join,
@@ -127,7 +128,7 @@ def main() -> None:
             spark, ev_dir, summary, os.path.join(work, "ck_roll")
         ).awaitTermination()
         dt = round(time.time() - t0, 2)
-        out_rows = spark.read.parquet(summary).count()
+        out_rows = snapshot_read(spark, summary).count()
         results["incremental_rollup"] = {"sec": dt, "summary_rows": out_rows, "state_rows": 0}
         print(json.dumps({"op": "incremental_rollup", **results["incremental_rollup"]}))
 
