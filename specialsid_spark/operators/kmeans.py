@@ -48,82 +48,34 @@ def _dist2_sql(vec: str, centroid: list[int]) -> str:
     )
 
 
-def _dist2(vec: str, centroid: list[int]) -> Column:
-    """Column twin of :func:`_dist2_sql` for single-use call sites
-    (inertia); ``vec`` is the vector column NAME so the signature can't
-    lie about which column the distance is computed on."""
-    return F.expr(_dist2_sql(vec, centroid))
-
-
-def assign_clusters(mu_df: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """Add `cid`: index of the nearest centroid (ties -> lowest cid).
-    One pass, no shuffle — the centroid matrix is a plan literal.
-    Two-step select so the CASE ranks cheap column refs, not k inlined
-    re-evaluations of each distance aggregate."""
-    k = len(centroids)
-    d_exprs = [f"{_dist2_sql('mu', c)} AS d{i}" for i, c in enumerate(centroids)]
-    with_d = mu_df.selectExpr("*", *d_exprs)
-    best = "least(" + ",".join(f"d{i}" for i in range(k)) + ")"
-    case = (
-        "CASE "
-        + " ".join(f"WHEN d{i} = {best} THEN {i}" for i in range(k - 1))
-        + f" ELSE {k - 1} END AS cid"
-    )
-    keep = [c for c in mu_df.columns]
-    return with_d.selectExpr(*keep, case)
-
-
-def _np_cids(x, cents) -> "object":
-    """Nearest-centroid ids for one stacked int64 batch matrix: d2 =
-    |x|^2 - 2 x.C^T + |c|^2 expands the same integer lattice arithmetic
-    as :func:`_dist2_sql` (|mu| <= 2e6 -> every term <= ~2.6e14, no
-    overflow), and argmin's first-match tie-break IS the SQL CASE's
-    lowest-cid rule.  tests/test_kmeans.py pins numpy/SQL parity."""
-    d2 = (
+def _np_d2(x, cents) -> "object":
+    """Exact squared distances from each row of one stacked int64 batch
+    matrix to every centroid: |x|^2 - 2 x.C^T + |c|^2 expands the same
+    integer lattice arithmetic as :func:`_dist2_sql` (|mu| <= 2e6 ->
+    every term <= ~2.6e14, no overflow)."""
+    return (
         (x * x).sum(axis=1)[:, None]
         - 2 * (x @ cents.T)
         + (cents * cents).sum(axis=1)[None, :]
     )
-    return d2.argmin(axis=1)
 
 
-def assign_clusters_np(mu_df: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """`assign_clusters` twin that evaluates the distance matrix as one
-    numpy int64 matmul per Arrow batch instead of k plan-literal
-    interpreted HOF aggregates (r13 opt): the higher-order-function
-    route is CodegenFallback — per-element interpreted — and its k×d
-    literals cost ~0.2 s of Catalyst analysis per plan; the closure
-    carries the centroids so the plan stays literal-free and constant-
-    size.  Bit-identical cids (exact integer arithmetic both ways)."""
-    import numpy as np  # noqa: PLC0415
-
-    from pyspark.sql.types import IntegerType, StructType  # noqa: PLC0415
-
-    cents = np.array(centroids, dtype=np.int64)
-    schema = StructType(mu_df.schema.fields[:]).add("cid", IntegerType())
-
-    def assign(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf["mu"].to_numpy()).astype(np.int64, copy=False)
-            pdf = pdf.copy()
-            pdf["cid"] = _np_cids(x, cents).astype("int32")
-            yield pdf
-
-    return mu_df.mapInPandas(assign, schema)
+def _np_cids(x, cents) -> "object":
+    """Nearest-centroid ids for one stacked int64 batch matrix; argmin's
+    first-match tie-break is the lowest-cid rule.  tests/test_kmeans.py
+    pins it against an independent SQL CASE referee."""
+    return _np_d2(x, cents).argmin(axis=1)
 
 
-def assign_clusters_udf(mu_df: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """Third twin of :func:`assign_clusters` (r14): `cid` as ONE
-    vectorized pandas_udf over the ``mu`` column only.  The numpy
+def assign_clusters(mu_df: DataFrame, centroids: list[list[int]]) -> DataFrame:
+    """Add `cid`: index of the nearest centroid (ties -> lowest cid), as
+    ONE vectorized pandas_udf over the ``mu`` column only.  The numpy
     matmul crosses the Arrow boundary once INWARD (mu) and returns a
-    single int column — half the transfer of the mapInPandas twin
-    (which shipped every mu back out, measured 2.5× the SQL kernel at
-    sf0.1) and none of the serial interpreted cost of the k×d-literal
-    HOF CASE on a narrow scan (measured +38% on sim_ivf_trained_topk at
-    sf1, where the natural layout is one row group).  Bit-identical
-    cids (tests/test_kmeans.py pins all three twins)."""
+    single int column; the closure carries the centroids, so the plan
+    holds no k×d literals.  Measured against the retired kernels: a
+    mapInPandas wrapper that shipped every mu back out ran 2.5× slower
+    at sf0.1, and the interpreted k×d-literal HOF CASE ran +38% on
+    sim_ivf_trained_topk at sf1 (serial on a one-row-group scan)."""
     import numpy as np  # noqa: PLC0415
 
     cents = np.array(centroids, dtype=np.int64)
@@ -212,13 +164,9 @@ def kmeans_fit(
             new[cid] = [_floored_mean(s, cnt[cid]) for s in vec]
         centroids = new
 
-    # Final assignment: the cid-only pandas_udf twin (r14) — only mu
-    # crosses the Arrow boundary inward and one int column returns, so
-    # it beats both the mapInPandas twin (shipped mu back out, 2.5× at
-    # sf0.1) and the interpreted k×d HOF CASE (serial on a one-row-
-    # group scan, +38% at sf1).  Bit-identical cids across all three
-    # twins (tests/test_kmeans.py).
-    return centroids, assign_clusters_udf(mu_df, centroids)
+    # final assignment: the same numpy kernel as the iterations, as the
+    # cid-only pandas_udf every IVF add uses
+    return centroids, assign_clusters(mu_df, centroids)
 
 
 def kmeans_stats(
@@ -244,11 +192,7 @@ def kmeans_stats(
             if len(pdf) == 0:
                 continue
             x = np.stack(pdf["mu"].to_numpy()).astype(np.int64, copy=False)
-            d2 = (
-                (x * x).sum(axis=1)[:, None]
-                - 2 * (x @ cents.T)
-                + (cents * cents).sum(axis=1)[None, :]
-            )
+            d2 = _np_d2(x, cents)
             cid = d2.argmin(axis=1)
             best = d2[np.arange(len(cid)), cid]
             # exact int64 per-cluster sums (bincount weights are float64
@@ -270,17 +214,6 @@ def kmeans_stats(
         counts[r.cid] = counts.get(r.cid, 0) + int(r.n)
         total += int(r.s)
     return counts, total
-
-
-def inertia(assigned: DataFrame, centroids: list[list[int]]) -> int:
-    """Total within-cluster squared distance (exact integer)."""
-    chain = _dist2("mu", centroids[0])
-    for i in range(1, len(centroids)):
-        chain = F.when(F.col("cid") == i, _dist2("mu", centroids[i])).otherwise(
-            chain
-        )
-    row = assigned.agg(F.sum(chain).alias("total")).collect()[0]
-    return int(row.total)
 
 
 def _floored_mean(s: int, n: int) -> int:

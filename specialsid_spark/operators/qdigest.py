@@ -40,33 +40,12 @@ steps; at this fixture's domain the node table is collected (the
 from __future__ import annotations
 
 
-def _compress_levels_py(
-    cnt: dict[int, int], thr: int, top_level: int, down_to: int = 0
-) -> dict[int, int]:
-    """Reference implementation of the bottom-up sibling-merge pass —
-    the module docstring's spec, verbatim.  Kept as the parity twin for
-    the vectorized path (tests/test_qdigest.py pins equality)."""
-    for lvl in range(top_level, down_to, -1):
-        lo, hi = 1 << lvl, 1 << (lvl + 1)
-        # only PRESENT sibling pairs (the domain can be 2^26 wide; the
-        # node table never is)
-        pairs = sorted({x & ~1 for x in cnt if lo <= x < hi})
-        for left in pairs:
-            cl = cnt.get(left, 0)
-            cr = cnt.get(left + 1, 0)
-            parent = left >> 1
-            cp = cnt.get(parent, 0)
-            if cl + cr + cp <= thr:
-                cnt[parent] = cl + cr + cp
-                cnt.pop(left, None)
-                cnt.pop(left + 1, None)
-    return cnt
-
-
 def _compress_levels_arrays(nodes, counts, thr: int, top_level: int, down_to: int):
     """Vectorized core of :func:`compress_levels` over parallel int64
     numpy arrays (``nodes`` UNIQUE, ``counts`` positive).  Bit-identical
-    to the reference loop: sibling pairs at one level have disjoint
+    to the module docstring's per-pair loop, which
+    tests/test_qdigest.py::test_vectorized_pass_matches_reference_loop
+    keeps as its referee: sibling pairs at one level have disjoint
     parents (each parent sits one level up and is read/written by
     exactly its own pair), so the per-pair merge decisions are
     order-free and evaluate as one boolean mask per level.  All

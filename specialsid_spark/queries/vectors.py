@@ -609,9 +609,9 @@ def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the loop training→index→search with every stage value-verified.
 
     Scale shape: training collects only k×d centroids per iteration;
-    assignment is one map-side pass (centroids are plan literals);
-    candidate generation is an equi-join on cell id with per-cell work
-    scaled by nprobe — never |Q|×|N|."""
+    assignment is one map-side pass (a numpy pandas_udf whose closure
+    carries the k centroids); candidate generation is an equi-join on
+    cell id with per-cell work scaled by nprobe — never |Q|×|N|."""
     from specialsid_spark.operators.kmeans import kmeans_fit
 
     # natural parquet layout (r14): the Lloyd iterations are numpy
@@ -622,15 +622,19 @@ def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source layout is the scale-correct default here.
     e = load(spark, sf_dir, "embeddings")
     centroids, assigned = kmeans_fit(e, k=_KMEANS_K, iterations=_KMEANS_ITERS)
-    return _ivf_search(assigned, centroids)
+    return _ivf_search(assigned, centroids, F.col("vec_id") < _IVF_NQUERY)
 
 
-def _ivf_search(assigned: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """The IVF search stage shared by the inline-trained and
-    from-table quantizer queries (identical results are BY
-    CONSTRUCTION): probe each query's nprobe nearest cells by the same
-    exact-integer L2 training used, equi-join candidates on cell id,
-    exact cosine rerank.  ``assigned`` carries (vec_id, mu, cid)."""
+def _ivf_search(
+    assigned: DataFrame, centroids: list[list[int]], is_query: F.Column
+) -> DataFrame:
+    """The IVF search stage of sim_ivf_trained_topk,
+    sim_ivf_from_table_topk and sim_ivf_incremental_add: probe each
+    query's nprobe nearest cells by the same exact-integer L2 training
+    used, equi-join candidates on cell id, exact cosine rerank.
+    ``assigned`` carries (vec_id, mu, cid) for every indexed vector;
+    ``is_query`` picks the rows of ``assigned`` that ask.  Returns
+    (query_id, neighbor_id, rk, cos_sim)."""
     # r13 opt: the checkpoint carries each vector's EXACT integer
     # squared norm once, so pair scoring costs one fold, not three
     # (the old shape re-folded n2(qmu) and n2(nmu) per candidate
@@ -651,10 +655,7 @@ def _ivf_search(assigned: DataFrame, centroids: list[list[int]]) -> DataFrame:
 
     k = len(centroids)
     d_exprs = [f"{_dist2_sql('mu', c)} AS d{i}" for i, c in enumerate(centroids)]
-    qd = (
-        assigned.filter(F.col("vec_id") < _IVF_NQUERY)
-        .selectExpr("vec_id", "mu", "nn2", *d_exprs)
-    )
+    qd = assigned.filter(is_query).selectExpr("vec_id", "mu", "nn2", *d_exprs)
     pairs = qd.select(
         "vec_id",
         "mu",
@@ -780,10 +781,13 @@ def sim_ivf_from_table_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     table = ivf_index_commit(spark, sf_dir)
     centroids = ivf_centroids_from_table(spark, table)
-    e = load_parallel(spark, sf_dir, "embeddings")
+    # natural parquet layout, as in sim_ivf_trained_topk: the assignment
+    # is a numpy pandas_udf, and fanning out a one-row-group fixture
+    # multiplies its Arrow round-trips by the partition count
+    e = load(spark, sf_dir, "embeddings")
     mu_df = e.select("vec_id", _mu_vec(F.col("embedding")).alias("mu"))
     assigned = assign_clusters(mu_df, centroids)
-    return _ivf_search(assigned, centroids)
+    return _ivf_search(assigned, centroids, F.col("vec_id") < _IVF_NQUERY)
 
 
 def _ivf_incremental_oracle() -> str:
@@ -851,17 +855,17 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_snapshot.py (snapshot_commit_generations), not by this
     query's oracle.
 
-    Scale shape: the add is one map-side assignment pass (centroids are
-    plan literals) + an append-only commit of (vec_id, cid) pairs; the
-    search is the usual nprobe cell-keyed candidate join.  At 100 TB a
-    daily embedding drop indexes in one pass over the drop — never the
-    corpus — and any index version is time-travelable."""
+    Scale shape: the add is one map-side assignment pass (the numpy
+    pandas_udf kernel, centroids in its closure) + an append-only
+    commit of (vec_id, cid) pairs; the search is _ivf_search's nprobe
+    cell-keyed candidate join.  At 100 TB a daily embedding drop
+    indexes in one pass over the drop — never the corpus — and any
+    index version is time-travelable."""
     from pathlib import Path
 
     from specialsid_spark.operators.kmeans import (
-        _dist2_sql,
         _mu_vec,
-        assign_clusters_udf,
+        assign_clusters,
         kmeans_fit,
     )
     from specialsid_spark.operators.snapshot import snapshot_commit_generations
@@ -874,8 +878,8 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     # real multi-file corpus the scan is already wide, so trusting the
     # source layout is the scale-correct default here.
     e = load(spark, sf_dir, "embeddings")
-    # ONE checkpointed micro-unit projection feeds training, the commit
-    # pass, the query side and the neighbor side (r13 opt — each
+    # ONE checkpointed micro-unit projection feeds training and the
+    # assignment that the commit and the search share (r13 opt — each
     # consumer re-scanned parquet and re-ran the transform); LAZY (r14):
     # the training seed is the first action over it, so projection +
     # seed stay one job.  kmeans_fit detects the ready `mu` column and
@@ -884,7 +888,6 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", _mu_vec(F.col("embedding")).alias("mu")
     ).localCheckpoint(eager=False)
     base = mu_df.filter(F.col("vec_id") % 4 != 0)
-    batch = mu_df.filter(F.col("vec_id") % 4 == 0)
 
     centroids, _ = kmeans_fit(base, k=_KMEANS_K, iterations=_KMEANS_ITERS)
     t = str(Path(session_workdir("specialsid_ivfinc_")) / "postings")
@@ -895,12 +898,8 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assignment pass serves both (r13 opt), and ONE generational write
     # job commits both versions (r14 opt, snapshot_commit_generations —
     # base and batch rows sit in the same assigned frame, so a second
-    # write job re-ran the write machinery for rows already in hand);
-    # the assignment itself is assign_clusters_udf, the cid-only Arrow
-    # pandas_udf (only mu crosses the Arrow boundary and one int column
-    # returns — the mapInPandas twin that shipped every mu back out
-    # measured 2.5× slower, r14 cold A/B).
-    assigned = assign_clusters_udf(mu_df, centroids).localCheckpoint(eager=False)
+    # write job re-ran the write machinery for rows already in hand).
+    assigned = assign_clusters(mu_df, centroids).localCheckpoint(eager=False)
     snapshot_commit_generations(
         assigned.select(
             "vec_id", "cid", (F.col("vec_id") % 4 == 0).cast("int").alias("gen")
@@ -914,66 +913,9 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the one-job commit above), and it already carries each vector's
     # mu — so the search reuses it instead of re-listing the manifest
     # and re-joining postings back onto the mu projection (r14 opt;
-    # time-travel reads stay pinned by tests/test_snapshot.py)
-
-    # query-side probe: new vectors rank cells by the same exact L2
-    k = len(centroids)
-    d_exprs = [f"{_dist2_sql('mu', c)} AS d{i}" for i, c in enumerate(centroids)]
-    qd = batch.filter(F.col("vec_id") < 4 * _IVF_NQUERY).selectExpr(
-        "vec_id", "mu", *d_exprs
-    )
-    pairs = qd.select(
-        "vec_id",
-        "mu",
-        F.explode(
-            F.arrays_zip(
-                F.array(*[F.lit(i) for i in range(k)]),
-                F.array(*[F.col(f"d{i}") for i in range(k)]),
-            )
-        ).alias("z"),
-    ).select("vec_id", "mu", F.col("z.0").alias("cid"), F.col("z.1").alias("d"))
-    w = Window.partitionBy("vec_id").orderBy("d", "cid")
-    qprobe = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .select(F.col("vec_id").alias("query_id"), F.col("mu").alias("qmu"), "cid")
-    )
-    nbr = assigned.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("mu").alias("nmu"), "cid"
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("qmu"), F.col("nmu"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    n2 = lambda c: F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0).cast("long"), lambda a, v: a + v
-    )
-    scored = (
-        F.broadcast(qprobe)
-        .join(nbr, (nbr.cid == qprobe.cid) & (F.col("neighbor_id") != F.col("query_id")))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot.cast("double")
-                / (
-                    F.sqrt(n2(F.col("qmu")).cast("double"))
-                    * F.sqrt(n2(F.col("nmu")).cast("double"))
-                )
-            ).alias("cs"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.col("cs").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rk") <= _IVF_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rk",
-            F.round("cs", 6).alias("cos_sim"),
-            (F.col("neighbor_id") % 4 == 0).cast("int").alias("neighbor_is_new"),
-        )
-        .orderBy("query_id", "rk")
+    # time-travel reads stay pinned by tests/test_snapshot.py); the new
+    # vectors are the queries
+    is_query = (F.col("vec_id") % 4 == 0) & (F.col("vec_id") < 4 * _IVF_NQUERY)
+    return _ivf_search(assigned, centroids, is_query).withColumn(
+        "neighbor_is_new", (F.col("neighbor_id") % 4 == 0).cast("int")
     )

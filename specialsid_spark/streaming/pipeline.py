@@ -951,9 +951,11 @@ def streaming_neardup_ingest(
     components, 4 bands of 4, s* ≈ 0.71) and a document is dropped when
     ANY of its band buckets was already occupied — by a prior batch
     (the persisted index) or by a lower-id document in the same batch —
-    exactly the batch pipeline's greedy keep-lowest-id rule, so a
-    stream over ordered slices reproduces the batch survivor set
-    bit-for-bit (tested).
+    the batch pipeline's greedy keep-lowest-id rule, evaluated by the
+    same dedup.lsh_verdict the gates use, so a stream over ordered
+    slices reproduces the batch survivor set bit-for-bit (tested).
+    Unlike lsh_gate's index, which holds only ADMITTED docs' bands,
+    this index holds every SEEN doc's bands with their ``last_seen``.
 
     State design for 100 TB: the index holds (band, bkey) pairs — 16
     bytes per band per SEEN document, never text or signatures — and is
@@ -972,7 +974,7 @@ def streaming_neardup_ingest(
     wall clock — replays stay byte-idempotent.  The same idea as the
     watermark bounding streaming_content_dedup's state, applied to a
     foreachBatch-owned table."""
-    from specialsid_spark.queries.dedup import lsh_band_keys
+    from specialsid_spark.queries.dedup import lsh_band_keys, lsh_verdict
 
     docs = spark.readStream.schema("doc_id long, ts timestamp, text string").json(
         docs_dir
@@ -1016,26 +1018,13 @@ def streaming_neardup_ingest(
                     | (F.col("last_seen") >= F.lit(cutoff))
                 )
             prior_docs = current.filter(F.col("kind") == "doc")
-        # dup if any band bucket is occupied by a prior batch ...
-        hit_prior = (
-            bands.join(
-                prior_bands.select("band", "bkey"),
-                ["band", "bkey"],
-                "left_semi",
-            )
-            if prior_bands is not None
-            else bands.limit(0)
-        )
-        # ... or by a lower-id doc of the SAME batch
-        mins = bands.groupBy("band", "bkey").agg(F.min("doc_id").alias("m"))
-        hit_intra = bands.join(mins, ["band", "bkey"]).filter(
-            F.col("doc_id") > F.col("m")
-        )
-        dups = (
-            hit_prior.select("doc_id")
-            .unionByName(hit_intra.select("doc_id"))
-            .distinct()
-        )
+        # dup if any band bucket is occupied by a prior batch or by a
+        # lower-id doc of the SAME batch: the shared LSH gate rule.
+        # Docs too short to shingle have no band rows and stay kept.
+        dups = lsh_verdict(
+            bands,
+            prior_bands.select("band", "bkey") if prior_bands is not None else None,
+        ).filter("admitted = 0")
         kept = (
             batch_df.select("doc_id")
             .distinct()
@@ -1395,17 +1384,18 @@ def streaming_ann_postings_ingest(
     postings_table: str,
     checkpoint_dir: str,
 ) -> StreamingQuery:
-    """X2 ∘ T1 (r12): the streaming twin of sim_ivf_incremental_add's
+    """X2 ∘ T1 (r12): the streaming form of sim_ivf_incremental_add's
     add step — new embedding drops stream in as JSON, each micro-batch
     is assigned against the FROZEN persisted quantizer (centroids load
-    from the snapshot table; a bounded k-row collect) in one map-side
-    pass, and the (vec_id, cid) postings append as ONE tagged snapshot
+    from the snapshot table; a bounded k-row collect) by the same
+    ``assign_clusters`` kernel as the batch add, in one map-side pass,
+    and the (vec_id, cid) postings append as ONE tagged snapshot
     commit, so crash-replayed micro-batches short-circuit on the
     idempotency tag.  The index never stores vectors and never touches
     prior generations; any postings version stays time-travelable.
 
     At 100 TB: a daily embedding drop indexes in one pass over the
-    drop — the quantizer is k plan literals, the commit is
+    drop — the k centroids ride the kernel's closure, the commit is
     append-only."""
     from specialsid_spark.operators.kmeans import _mu_vec, assign_clusters
     from specialsid_spark.operators.snapshot import (

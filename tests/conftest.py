@@ -38,3 +38,25 @@ def jobs_in_group(spark):
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def assign_clusters_sql():
+    """Independent referee for ``operators.kmeans.assign_clusters``:
+    ``assign(mu_df, centroids)`` adds `cid`, the nearest centroid by
+    exact int64 squared L2 (ties -> lowest cid), as a CASE over k×d SQL
+    literals instead of the package's numpy kernel."""
+    from specialsid_spark.operators.kmeans import _dist2_sql
+
+    def assign(mu_df, centroids):
+        k = len(centroids)
+        d_exprs = [f"{_dist2_sql('mu', c)} AS d{i}" for i, c in enumerate(centroids)]
+        best = "least(" + ",".join(f"d{i}" for i in range(k)) + ")"
+        case = (
+            "CASE "
+            + " ".join(f"WHEN d{i} = {best} THEN {i}" for i in range(k - 1))
+            + f" ELSE {k - 1} END AS cid"
+        )
+        return mu_df.selectExpr("*", *d_exprs).selectExpr(*mu_df.columns, case)
+
+    return assign

@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 
 from specialsid_spark.catalog import load
-from specialsid_spark.operators.kmeans import inertia, kmeans_fit
+from specialsid_spark.operators.kmeans import kmeans_fit, kmeans_stats
 
 
 def _numpy_kmeans(vecs: np.ndarray, ids: np.ndarray, k: int, iterations: int):
@@ -43,7 +43,7 @@ def test_kmeans_matches_numpy_reference(spark, sf_dir, k, iters):
     assert centroids == [list(c) for c in ref_centroids]
     ref_map = dict(zip(ids.tolist(), ref_cid.tolist()))
     assert got == ref_map
-    assert inertia(assigned, centroids) == ref_inertia
+    assert kmeans_stats(assigned.select("vec_id", "mu"), centroids)[1] == ref_inertia
 
 
 def test_kmeans_inertia_decreases(spark, sf_dir):
@@ -51,22 +51,25 @@ def test_kmeans_inertia_decreases(spark, sf_dir):
     prev = None
     for iters in (1, 2, 3):
         c, a = kmeans_fit(e, k=8, iterations=iters)
-        cur = inertia(a, c)
+        cur = kmeans_stats(a.select("vec_id", "mu"), c)[1]
         if prev is not None:
             assert cur <= prev, f"inertia rose at iteration {iters}"
         prev = cur
 
 
-def test_ivf_index_time_travel_reproduces_search(spark, sf_dir, tmp_path):
+def test_ivf_index_time_travel_reproduces_search(
+    spark, sf_dir, tmp_path, assign_clusters_sql
+):
     """A persisted quantizer is a versioned artifact: overwriting the
     index with a retrained version must NOT change what a time-traveled
     search over the old version returns."""
     from specialsid_spark.operators.snapshot import snapshot_commit
     from specialsid_spark.queries.vectors import (
+        _IVF_NQUERY,
         _ivf_search,
         ivf_centroids_from_table,
     )
-    from specialsid_spark.operators.kmeans import _mu_vec, assign_clusters
+    from specialsid_spark.operators.kmeans import _mu_vec
     from pyspark.sql import functions as F
 
     e = load(spark, sf_dir, "embeddings")
@@ -89,7 +92,9 @@ def test_ivf_index_time_travel_reproduces_search(spark, sf_dir, tmp_path):
     def run(cs):
         return [
             tuple(r)
-            for r in _ivf_search(assign_clusters(mu_df, cs), cs).collect()
+            for r in _ivf_search(
+                assign_clusters_sql(mu_df, cs), cs, F.col("vec_id") < _IVF_NQUERY
+            ).collect()
         ]
 
     # time-traveled index == the exact historical search
@@ -97,17 +102,13 @@ def test_ivf_index_time_travel_reproduces_search(spark, sf_dir, tmp_path):
     assert run(ivf_centroids_from_table(spark, t)) == run(c2)
 
 
-def test_assign_clusters_np_matches_sql(spark, sf_dir):
-    """The numpy mapInPandas assignment twin (r13 opt) must be
-    bit-identical to the SQL CASE route for every row — same exact
-    int64 lattice distances, same lowest-cid tie-break."""
+def test_assign_clusters_matches_sql_referee(spark, sf_dir, assign_clusters_sql):
+    """The numpy assignment kernel must be bit-identical to the SQL CASE
+    referee for every row — same exact int64 lattice distances, same
+    lowest-cid tie-break."""
     from pyspark.sql import functions as F
 
-    from specialsid_spark.operators.kmeans import (
-        _mu_vec,
-        assign_clusters,
-        assign_clusters_np,
-    )
+    from specialsid_spark.operators.kmeans import _mu_vec, assign_clusters
 
     e = load(spark, sf_dir, "embeddings")
     centroids, _ = kmeans_fit(e, k=8, iterations=1)
@@ -118,25 +119,15 @@ def test_assign_clusters_np_matches_sql(spark, sf_dir):
     mu_df = e.select("vec_id", _mu_vec(F.col("embedding")).alias("mu"))
     sql_map = {
         r.vec_id: r.cid
+        for r in assign_clusters_sql(mu_df, centroids).select("vec_id", "cid").collect()
+    }
+    got = {
+        r.vec_id: r.cid
         for r in assign_clusters(mu_df, centroids).select("vec_id", "cid").collect()
     }
-    np_map = {
-        r.vec_id: r.cid
-        for r in assign_clusters_np(mu_df, centroids)
-        .select("vec_id", "cid")
-        .collect()
-    }
-    assert np_map == sql_map
-    # third twin (r14): cid-only pandas_udf — same lattice, same ties
-    from specialsid_spark.operators.kmeans import assign_clusters_udf
-
-    udf_map = {
-        r.vec_id: r.cid
-        for r in assign_clusters_udf(mu_df, centroids)
-        .select("vec_id", "cid")
-        .collect()
-    }
-    assert udf_map == sql_map
+    assert got == sql_map
+    # the tie case really occurs and breaks low: cid 5 is never chosen
+    assert 2 in sql_map.values() and 5 not in sql_map.values()
 
 
 def test_grouped_kmeans_matches_ungrouped_on_single_group(spark, sf_dir):

@@ -195,16 +195,35 @@ def test_merge_preserves_counts_and_2x_bound():
         assert abs(rank_le - r) <= 2 * L * thr, p
 
 
+def _compress_levels_py(
+    cnt: dict[int, int], thr: int, top_level: int, down_to: int = 0
+) -> dict[int, int]:
+    """Reference bottom-up sibling-merge pass — the spec in
+    operators/qdigest.py's module docstring, verbatim, one pair at a
+    time."""
+    for lvl in range(top_level, down_to, -1):
+        lo, hi = 1 << lvl, 1 << (lvl + 1)
+        # only PRESENT sibling pairs (the domain can be 2^26 wide; the
+        # node table never is)
+        pairs = sorted({x & ~1 for x in cnt if lo <= x < hi})
+        for left in pairs:
+            cl = cnt.get(left, 0)
+            cr = cnt.get(left + 1, 0)
+            parent = left >> 1
+            cp = cnt.get(parent, 0)
+            if cl + cr + cp <= thr:
+                cnt[parent] = cl + cr + cp
+                cnt.pop(left, None)
+                cnt.pop(left + 1, None)
+    return cnt
+
+
 def test_vectorized_pass_matches_reference_loop():
     """r14: compress_levels evaluates through the numpy level pass;
     it must be node-for-node identical to the reference Python loop on
     dense, sparse, skewed and pre-merged (internal-node) inputs, at
     every cut level."""
-    from specialsid_spark.operators.qdigest import (
-        _compress_levels_py,
-        compress_levels,
-        hist_to_leaves,
-    )
+    from specialsid_spark.operators.qdigest import compress_levels, hist_to_leaves
 
     rng = random.Random(14)
     L = 12

@@ -1407,11 +1407,13 @@ def test_hop4_incremental_lsh_gate_chains_after_hop3(spark, tmp_path):
     assert kept_replay == kept_stream
 
 
-def test_streaming_ann_postings_ingest_matches_batch_assignment(spark, tmp_path):
+def test_streaming_ann_postings_ingest_matches_batch_assignment(
+    spark, tmp_path, assign_clusters_sql
+):
     """r12: streaming embedding drops index against the FROZEN
     persisted quantizer — the accumulated postings must equal a batch
-    assignment of the same vectors, and a crash-replayed micro-batch
-    must be a no-op (tag short-circuit)."""
+    assignment of the same vectors by the independent SQL referee, and
+    a crash-replayed micro-batch must be a no-op (tag short-circuit)."""
     import json as _json
     import os
 
@@ -1478,7 +1480,7 @@ def test_streaming_ann_postings_ingest_matches_batch_assignment(spark, tmp_path)
     )
     want = {
         (r.vec_id, r.cid)
-        for r in assign_clusters(
+        for r in assign_clusters_sql(
             all_df.select("vec_id", _mu_vec(F.col("embedding")).alias("mu")),
             ivf_centroids_from_table(spark, qt),
         ).select("vec_id", "cid").collect()
