@@ -22,6 +22,43 @@ def tokens(text: Column | str) -> Column:
     return F.split(F.lower(F.trim(c)), r"\s+")
 
 
+def quality_gate(toks: Column) -> Column:
+    """The corpus quality gate: 5 to 1000 tokens, and more than a tenth
+    of them distinct (lexical diversity)."""
+    n = F.size(toks)
+    return n.between(5, 1000) & (F.size(F.array_distinct(toks)).cast("double") / n > 0.1)
+
+
+# Stopword markers per language for the stopword-vote language rule;
+# the dict order is the tie-break order (en > es > fr > de).
+LANG_MARKERS = {
+    "en": ("the", "and", "of"),
+    "es": ("el", "la", "de"),
+    "fr": ("le", "la", "et"),
+    "de": ("der", "die", "und"),
+}
+
+
+def _isin(markers: tuple[str, ...]):
+    # factory keeps the HOF lambda unary: PySpark infers HOF arity from
+    # the Python signature, so a default arg would receive the INDEX
+    return lambda x: x.isin(*markers)
+
+
+def lang_guess(toks: Column) -> Column:
+    """Stopword-vote language ID: the language whose markers occur most
+    often among ``toks``, ties to the earlier one in LANG_MARKERS."""
+    votes = [F.size(F.filter(toks, _isin(m))) for m in LANG_MARKERS.values()]
+    langs = list(LANG_MARKERS)
+    guess = None
+    for i, lang in enumerate(langs[:-1]):
+        wins = votes[i] >= votes[i + 1]
+        for v in votes[i + 2 :]:
+            wins = wins & (votes[i] >= v)
+        guess = F.when(wins, lang) if guess is None else guess.when(wins, lang)
+    return guess.otherwise(langs[-1])
+
+
 def word_kgrams(toks: Column, k: int = 3) -> Column:
     """ORDERED word k-grams (duplicates kept) — position matters for
     rolling-hash winnowing.  Same named-projection rule as

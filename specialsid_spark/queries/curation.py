@@ -10,6 +10,8 @@ hashes, not engine hashes, drive every decision).
 
 from __future__ import annotations
 
+import hashlib
+
 import pandas as pd  # module-level: pandas_udf type hints must
 # resolve in module globals under `from __future__ import annotations`
 from pyspark.sql import DataFrame, SparkSession
@@ -17,8 +19,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from specialsid_spark.catalog import load_parallel
-from specialsid_spark.operators.textops import tokens, word_kgrams
+from specialsid_spark.operators.textops import lang_guess, tokens, word_kgrams
 from specialsid_spark.queries import register
+from specialsid_spark.queries._rows import map_rows
 
 
 @register(
@@ -509,32 +512,8 @@ def cur_lang_mismatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy."""
     d = load_parallel(spark, sf_dir, "documents")
     t = d.select("doc_id", "lang", tokens("text").alias("toks"))
-
-    def _marker_filter(markers: tuple[str, ...]):
-        return lambda x: x.isin(*markers)
-
-    votes = {
-        lang: F.size(F.filter(F.col("toks"), _marker_filter(markers)))
-        for lang, markers in (
-            ("en", ("the", "and", "of")),
-            ("es", ("el", "la", "de")),
-            ("fr", ("le", "la", "et")),
-            ("de", ("der", "die", "und")),
-        )
-    }
-    guess = (
-        F.when(
-            (votes["en"] >= votes["es"])
-            & (votes["en"] >= votes["fr"])
-            & (votes["en"] >= votes["de"]),
-            "en",
-        )
-        .when((votes["es"] >= votes["fr"]) & (votes["es"] >= votes["de"]), "es")
-        .when(votes["fr"] >= votes["de"], "fr")
-        .otherwise("de")
-    )
     return (
-        t.select("doc_id", "lang", guess.alias("lang_guess"))
+        t.select("doc_id", "lang", lang_guess(F.col("toks")).alias("lang_guess"))
         .groupBy("lang", "lang_guess")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -741,34 +720,17 @@ def cur_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds per doc, no per-char Python, no row inflation, zero shuffle
     before the final sort.  Downstream dedup is then a groupBy on
     chunk_md5 (hash-only shuffle), same as dedup_exact_hash."""
-    import pandas as pd
-
     from specialsid_spark.operators.cdc import cdc_chunks
 
     d = load_parallel(spark, sf_dir, "documents")
 
-    def fn(batches):
-        import hashlib
-
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                for ci, (start, ln, chunk) in enumerate(cdc_chunks(text)):
-                    out.append((int(doc_id), ci, start, ln,
-                                hashlib.md5(chunk.encode()).hexdigest()))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "chunk_idx", "start_pos",
-                              "chunk_len", "chunk_md5"],
-            ).astype({"doc_id": "int64", "chunk_idx": "int64",
-                      "start_pos": "int32", "chunk_len": "int32"})
+    def kernel(doc_id, text):
+        for ci, (start, ln, chunk) in enumerate(cdc_chunks(text)):
+            yield doc_id, ci, start, ln, hashlib.md5(chunk.encode()).hexdigest()
 
     schema = ("doc_id long, chunk_idx long, start_pos int, chunk_len int,"
               " chunk_md5 string")
-    return (
-        d.select("doc_id", "text")
-        .mapInPandas(fn, schema)
-        .orderBy("doc_id", "chunk_idx")
-    )
+    return map_rows(d.select("doc_id", "text"), kernel, schema).orderBy("doc_id", "chunk_idx")
 
 
 @register(
@@ -1386,8 +1348,6 @@ def cur_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     per host (hosts are Heaps-bounded like distinct words) onto
     millions of candidate URLs, so the eval is a per-row Arrow-batch
     call with no shuffle — here each doc stands in for a host."""
-    import pandas as pd
-
     from specialsid_spark.operators.robots import (
         crawl_delay,
         is_allowed,
@@ -1396,79 +1356,54 @@ def cur_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_parallel(spark, sf_dir, "documents")
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                txt = (
-                    f"# retailer robots fixture {doc_id}\n"
-                    "User-agent: specialsbot\n"
-                    "Disallow: /private/\n"
-                    f"Allow: /private/specials-{doc_id}.html\n"
-                    "Disallow: /*.tmp$\n"
-                    f"Crawl-delay: {1 + doc_id % 5}\n"
-                    "\n"
-                    "User-agent: emptybot\n"
-                    "Disallow:\n"
-                    "\n"
-                    "User-agent: *\n"
-                    "Disallow: /\n"
-                    "\n"
-                    # repeated-group forms (RFC 9309 §2.2.1: same-token
-                    # groups MUST combine — ADVICE r9): a second
-                    # specialsbot group re-allows one private page, a
-                    # second * group opens /public/
-                    "User-agent: specialsbot\n"
-                    f"Allow: /private/x{doc_id}.html\n"
-                    "\n"
-                    "User-agent: *\n"
-                    "Allow: /public/\n"
-                    "\n"
-                    f"Sitemap: https://example.test/sitemap-{doc_id}.xml\n"
-                    "Sitemap: https://example.test/sitemap-extra.xml\n"
-                )
-                robots = parse_robots(txt)
-                cases = [
-                    ("specialsbot", f"/public/page{doc_id}.html"),
-                    ("specialsbot", f"/private/x{doc_id}.html"),
-                    ("specialsbot", f"/private/specials-{doc_id}.html"),
-                    ("specialsbot", f"/file{doc_id}.tmp"),
-                    ("specialsbot", f"/file{doc_id}.tmp.bak"),
-                    ("specialsbot", f"/private/specials-x{doc_id}.html"),
-                    ("otherbot", f"/public/page{doc_id}.html"),
-                    ("emptybot", f"/anything/{doc_id}"),
-                ]
-                for k, (agent, path) in enumerate(cases):
-                    out.append(
-                        (
-                            doc_id,
-                            k,
-                            agent,
-                            path,
-                            int(is_allowed(robots, agent, path)),
-                            crawl_delay(robots, agent),
-                            len(robots.sitemaps),
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "k", "agent", "path",
-                    "allowed", "crawl_delay", "n_sitemaps",
-                ],
-            ).astype({"doc_id": "int64", "k": "int32", "allowed": "int64",
-                      "n_sitemaps": "int64"})
-
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            fn,
-            "doc_id long, k int, agent string, path string,"
-            " allowed long, crawl_delay double, n_sitemaps long",
+    def kernel(doc_id):
+        txt = (
+            f"# retailer robots fixture {doc_id}\n"
+            "User-agent: specialsbot\n"
+            "Disallow: /private/\n"
+            f"Allow: /private/specials-{doc_id}.html\n"
+            "Disallow: /*.tmp$\n"
+            f"Crawl-delay: {1 + doc_id % 5}\n"
+            "\n"
+            "User-agent: emptybot\n"
+            "Disallow:\n"
+            "\n"
+            "User-agent: *\n"
+            "Disallow: /\n"
+            "\n"
+            # repeated-group forms (RFC 9309 §2.2.1: same-token
+            # groups MUST combine — ADVICE r9): a second
+            # specialsbot group re-allows one private page, a
+            # second * group opens /public/
+            "User-agent: specialsbot\n"
+            f"Allow: /private/x{doc_id}.html\n"
+            "\n"
+            "User-agent: *\n"
+            "Allow: /public/\n"
+            "\n"
+            f"Sitemap: https://example.test/sitemap-{doc_id}.xml\n"
+            "Sitemap: https://example.test/sitemap-extra.xml\n"
         )
-        .orderBy("doc_id", "k")
-    )
+        robots = parse_robots(txt)
+        cases = [
+            ("specialsbot", f"/public/page{doc_id}.html"),
+            ("specialsbot", f"/private/x{doc_id}.html"),
+            ("specialsbot", f"/private/specials-{doc_id}.html"),
+            ("specialsbot", f"/file{doc_id}.tmp"),
+            ("specialsbot", f"/file{doc_id}.tmp.bak"),
+            ("specialsbot", f"/private/specials-x{doc_id}.html"),
+            ("otherbot", f"/public/page{doc_id}.html"),
+            ("emptybot", f"/anything/{doc_id}"),
+        ]
+        for k, (agent, path) in enumerate(cases):
+            yield (doc_id, k, agent, path, int(is_allowed(robots, agent, path)),
+                   crawl_delay(robots, agent), len(robots.sitemaps))
+
+    return map_rows(
+        d.select("doc_id"), kernel,
+        "doc_id long, k int, agent string, path string,"
+        " allowed long, crawl_delay double, n_sitemaps long",
+    ).orderBy("doc_id", "k")
 
 
 # --- DSIR: data selection with importance resampling (Xie et al. 2023) ---
@@ -1962,27 +1897,17 @@ def cur_blocklist_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ships in the mapInPandas closure; matching is a pure per-row
     scan with zero shuffle before the final sort — the curation-gate
     shape (cf. cur_gopher_repetition) at 100 TB."""
-    import pandas as pd
-
     from specialsid_spark.operators.ahocorasick import AhoCorasick
 
     d = load_parallel(spark, sf_dir, "documents").select("doc_id", "text")
-    patterns = list(_AC_BLOCKLIST)
+    ac = AhoCorasick(list(_AC_BLOCKLIST))
     threshold = _BLOCK_THRESHOLD
 
-    def fn(batches):
-        ac = AhoCorasick(patterns)
-        for pdf in batches:
-            counts = [ac.counts(t) for t in pdf["text"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_hits": [sum(c) for c in counts],
-                    "n_patterns": [sum(1 for x in c if x) for c in counts],
-                }
-            ).astype({"n_hits": "int64", "n_patterns": "int64"})
+    def kernel(doc_id, text):
+        c = ac.counts(text)
+        yield doc_id, sum(c), sum(1 for x in c if x)
 
-    scored = d.mapInPandas(fn, "doc_id long, n_hits long, n_patterns long")
+    scored = map_rows(d, kernel, "doc_id long, n_hits long, n_patterns long")
     return scored.select(
         "doc_id",
         "n_hits",

@@ -27,8 +27,10 @@ from specialsid_spark.operators.textops import (
     SQL_TOKEN_DIGEST16,
     SQL_TOKEN_MD5S,
     band_key,
+    lang_guess,
     minhash_bases,
     minhash_component,
+    quality_gate,
     simhash16_from_digests,
     sql_digest16_block,
     sql_minhash_component,
@@ -38,6 +40,7 @@ from specialsid_spark.operators.textops import (
     word_shingles,
 )
 from specialsid_spark.queries import register
+from specialsid_spark.queries._rows import map_rows
 
 _SQL_TOKENS = "string_split_regex(lower(trim(text)), '\\s+')"
 _SQL_SHINGLES = (
@@ -997,20 +1000,9 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tk = d.select(
         "doc_id", F.md5("text").alias("h"), tokens("text").alias("toks")
     ).localCheckpoint(eager=False)
-    n = F.size("toks")
-    votes = {
-        lang: F.size(F.filter(F.col("toks"), _markers_filter(markers)))
-        for lang, markers in _CURATION_MARKERS.items()
-    }
-    quality = tk.filter(
-        n.between(5, 1000)
-        & (F.size(F.array_distinct("toks")).cast("double") / n > 0.1)
-    ).select("doc_id", "h", n.alias("n_tokens"), *[v.alias(f"v_{k}") for k, v in votes.items()])
-    english = quality.filter(
-        (F.col("v_en") >= F.col("v_es"))
-        & (F.col("v_en") >= F.col("v_fr"))
-        & (F.col("v_en") >= F.col("v_de"))
-    ).select("doc_id", "h", "n_tokens")
+    english = tk.filter(
+        quality_gate(F.col("toks")) & (lang_guess(F.col("toks")) == "en")
+    ).select("doc_id", "h", F.size("toks").alias("n_tokens"))
     exact_keepers = english.groupBy("h").agg(
         F.min("doc_id").alias("doc_id")
     ).select("doc_id")
@@ -1045,19 +1037,6 @@ def pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.col("n_tokens").cast("long"))
         .orderBy("doc_id")
     )
-
-
-_CURATION_MARKERS = {
-    "en": ("the", "and", "of"),
-    "es": ("el", "la", "de"),
-    "fr": ("le", "la", "et"),
-    "de": ("der", "die", "und"),
-}
-
-
-def _markers_filter(markers):
-    # factory keeps the HOF lambda unary (PySpark infers arity)
-    return lambda x: x.isin(*markers)
 
 
 @register(
@@ -2733,8 +2712,6 @@ def pipeline_pdf_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate.  The per-run doc cap (_PDI_N) is the codec-budget
     discipline, not a scalability limit — at 100 TB each partition
     extracts its own PDFs independently."""
-    import pandas as pd  # noqa: PLC0415
-
     from specialsid_spark.operators.multimodal import explode_pdf_text
     from specialsid_spark.operators.pdf import build_text_pdf
     from specialsid_spark.queries.curation import _PII_EMAIL, _PII_IPV4
@@ -2743,23 +2720,13 @@ def pipeline_pdf_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d64 = d.filter(F.col("doc_id") < _PDI_N)
     drop = d64.filter(F.col("doc_id") % 3 == 1)
 
-    def build(batches):
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                p1, p2 = text[:120], text[120:240]
-                if doc_id % 5 == 0:
-                    p2 += " contact user%d@example.com from 10.0.%d.1" % (
-                        doc_id, doc_id % 256,
-                    )
-                ids.append(doc_id)
-                blobs.append(build_text_pdf([p1, p2]))
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(ids, dtype="int64"), "blob": blobs}
-            )
+    def build(doc_id, text):
+        p1, p2 = text[:120], text[120:240]
+        if doc_id % 5 == 0:
+            p2 += " contact user%d@example.com from 10.0.%d.1" % (doc_id, doc_id % 256)
+        yield doc_id, build_text_pdf([p1, p2])
 
-    pdfs = drop.mapInPandas(build, "doc_id long, blob binary")
+    pdfs = map_rows(drop, build, "doc_id long, blob binary")
     ext = (
         explode_pdf_text(pdfs)
         .groupBy("doc_id")

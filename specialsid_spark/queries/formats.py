@@ -22,6 +22,7 @@ a map-side-combine groupBy on low-cardinality keys.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +31,7 @@ from pyspark.sql import types as T
 
 from specialsid_spark.catalog import load
 from specialsid_spark.queries import register
+from specialsid_spark.queries._rows import map_rows
 from specialsid_spark.session import session_workdir
 
 # scratch roundtrip outputs, written once per (format, sf_dir) per process
@@ -285,37 +287,18 @@ def src_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = _roundtrip_dir("avro", sf_dir, write)
 
-    def read_part(batches):
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                _, recs = read_ocf(bytes(blob))
-                for r in recs:
-                    opt = "~" if r["opt"] is None else r["opt"]
-                    tags = ",".join(str(t) for t in r["tags"])
-                    k = "~" if r["props"]["k"] is None else str(r["props"]["k"])
-                    rows.append(
-                        (
-                            r["doc_id"],
-                            r["text"],
-                            r["lang"],
-                            r["n_chars"],
-                            f"{opt}|{tags}|{k}:{r['props']['j']}",
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "lang", "n_chars", "tricky"]
-            ).astype({"doc_id": "int64", "n_chars": "int64"})
+    def read_file(content):
+        for r in read_ocf(content)[1]:
+            opt = "~" if r["opt"] is None else r["opt"]
+            tags = ",".join(str(t) for t in r["tags"])
+            k = "~" if r["props"]["k"] is None else str(r["props"]["k"])
+            yield (r["doc_id"], r["text"], r["lang"], r["n_chars"],
+                   f"{opt}|{tags}|{k}:{r['props']['j']}")
 
-    back = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avro")
-        .load(out)
-        .select("content")
-        .mapInPandas(
-            read_part,
-            "doc_id long, text string, lang string, n_chars long, tricky string",
-        )
+    files = spark.read.format("binaryFile").option("pathGlobFilter", "*.avro").load(out)
+    back = map_rows(
+        files.select("content"), read_file,
+        "doc_id long, text string, lang string, n_chars long, tricky string",
     )
     return _summarize(back)
 
@@ -387,8 +370,6 @@ def src_protobuf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-row independent mapInPandas, no shuffle before
     the final sort — the same embarrassingly-parallel plan as every
     codec query."""
-    import pandas as pd
-
     from specialsid_spark.operators.proto import decode_message, encode_message
 
     _WRITE_DESC = {
@@ -407,45 +388,26 @@ def src_protobuf_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
 
-    def fn(batches):
-        import hashlib
-
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                i = int(r.doc_id)
-                blob = encode_message(
-                    _WRITE_DESC,
-                    {
-                        "doc_id": i,
-                        "text": r.text,
-                        "tags": [i, -i * 3, i % 7],
-                        "meta": {"lang": r.lang, "n_chars": int(r.n_chars)},
-                        "debug_note": f"writer-only {i}",
-                    },
-                )
-                m = decode_message(_READ_DESC, blob)
-                assert "debug_note" not in m
-                out.append(
-                    (
-                        m["doc_id"],
-                        hashlib.md5(m["text"].encode()).hexdigest(),
-                        m["meta"]["lang"],
-                        m["meta"]["n_chars"],
-                        sum(m["tags"]),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "text_md5", "lang", "n_chars", "tag_sum"]
-            ).astype({"doc_id": "int64", "n_chars": "int64", "tag_sum": "int64"})
-
-    return (
-        d.select("doc_id", "text", "lang", "n_chars")
-        .mapInPandas(
-            fn, "doc_id long, text_md5 string, lang string, n_chars long, tag_sum long"
+    def kernel(i, text, lang, n_chars):
+        blob = encode_message(
+            _WRITE_DESC,
+            {
+                "doc_id": i,
+                "text": text,
+                "tags": [i, -i * 3, i % 7],
+                "meta": {"lang": lang, "n_chars": n_chars},
+                "debug_note": f"writer-only {i}",
+            },
         )
-        .orderBy("doc_id")
-    )
+        m = decode_message(_READ_DESC, blob)
+        assert "debug_note" not in m
+        yield (m["doc_id"], hashlib.md5(m["text"].encode()).hexdigest(),
+               m["meta"]["lang"], m["meta"]["n_chars"], sum(m["tags"]))
+
+    return map_rows(
+        d.select("doc_id", "text", "lang", "n_chars"), kernel,
+        "doc_id long, text_md5 string, lang string, n_chars long, tag_sum long",
+    ).orderBy("doc_id")
 
 
 @register(
@@ -481,10 +443,6 @@ def src_msgpack_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-row independent mapInPandas, no shuffle before
     the final sort — the codec-family plan."""
-    import hashlib
-
-    import pandas as pd
-
     from specialsid_spark.operators.msgpack import (
         Ext,
         Timestamp,
@@ -494,67 +452,39 @@ def src_msgpack_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                i = int(r.doc_id)
-                recs = [
-                    {
-                        "doc_id": i,
-                        "seq": j,
-                        "ts": Timestamp(1_600_000_000 + i * 3 + j, (i * j) % 1000),
-                        "msg": r.text[:50],
-                        "tags": [j, -i, i % 7],
-                        "bin": r.text[:8].encode("utf-8"),
-                        "ext": Ext(7, b"\xab" * (1 + i % 4)),
-                        "nested": {"lang": r.lang, "neg": -(i + 1)},
-                    }
-                    for j in range(3)
-                ]
-                blob = b"".join(pack(rec) for rec in recs)
-                back = unpack_stream(blob)
-                assert back == recs  # full structural roundtrip
-                out.append(
-                    (
-                        i,
-                        len(back),
-                        sum(rec["ts"].seconds for rec in back),
-                        sum(rec["ts"].nanos for rec in back),
-                        hashlib.md5(back[0]["msg"].encode("utf-8")).hexdigest(),
-                        hashlib.md5(back[0]["bin"]).hexdigest(),
-                        sum(sum(rec["tags"]) for rec in back),
-                        int(
-                            all(
-                                rec["ext"] == Ext(7, b"\xab" * (1 + i % 4))
-                                for rec in back
-                            )
-                        ),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "n_records", "ts_sec_sum", "ts_nanos_sum",
-                    "msg_md5", "bin_md5", "tag_sum", "ext_ok",
-                ],
-            ).astype(
-                {
-                    "doc_id": "int64", "n_records": "int64",
-                    "ts_sec_sum": "int64", "ts_nanos_sum": "int64",
-                    "tag_sum": "int64", "ext_ok": "int64",
-                }
-            )
-
-    return (
-        d.select("doc_id", "text", "lang")
-        .mapInPandas(
-            fn,
-            "doc_id long, n_records long, ts_sec_sum long, ts_nanos_sum long,"
-            " msg_md5 string, bin_md5 string, tag_sum long, ext_ok long",
+    def kernel(i, text, lang):
+        ext = Ext(7, b"\xab" * (1 + i % 4))
+        recs = [
+            {
+                "doc_id": i,
+                "seq": j,
+                "ts": Timestamp(1_600_000_000 + i * 3 + j, (i * j) % 1000),
+                "msg": text[:50],
+                "tags": [j, -i, i % 7],
+                "bin": text[:8].encode("utf-8"),
+                "ext": ext,
+                "nested": {"lang": lang, "neg": -(i + 1)},
+            }
+            for j in range(3)
+        ]
+        back = unpack_stream(b"".join(pack(rec) for rec in recs))
+        assert back == recs  # full structural roundtrip
+        yield (
+            i,
+            len(back),
+            sum(rec["ts"].seconds for rec in back),
+            sum(rec["ts"].nanos for rec in back),
+            hashlib.md5(back[0]["msg"].encode("utf-8")).hexdigest(),
+            hashlib.md5(back[0]["bin"]).hexdigest(),
+            sum(sum(rec["tags"]) for rec in back),
+            int(all(rec["ext"] == ext for rec in back)),
         )
-        .orderBy("doc_id")
-    )
+
+    return map_rows(
+        d.select("doc_id", "text", "lang"), kernel,
+        "doc_id long, n_records long, ts_sec_sum long, ts_nanos_sum long,"
+        " msg_md5 string, bin_md5 string, tag_sum long, ext_ok long",
+    ).orderBy("doc_id")
 
 
 @register(
@@ -588,79 +518,51 @@ def src_cbor_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-row independent mapInPandas, no shuffle before
     the final sort — the codec-family plan."""
-    import hashlib
-
-    import pandas as pd
-
     from specialsid_spark.operators.cbor import Tag, decode, encode
 
     d = load(spark, sf_dir, "documents")
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                i = int(r.doc_id)
-                rec = {
-                    "doc_id": i,
-                    "msg": r.text[:40],
-                    "neg": -(i + 1),
-                    "ts": Tag(1, 1_700_000_000 + i),
-                    "arr": [i % 7, i % 5, i % 3],
-                    "meta": {"lang": r.lang, "n_chars": int(r.n_chars)},
-                    "bin": r.text[:6].encode("utf-8"),
-                    "score": i / 8.0,
-                }
-                back = decode(encode(rec))
-                assert back == rec  # canonical roundtrip
-                # non-canonical twin: indefinite text chunks + half float
-                msg8 = r.text[:8]
-                b0 = msg8[:3].encode("utf-8")
-                b1 = msg8[3:].encode("utf-8")
-                indef = (
-                    b"\xa2"  # map(2)
-                    b"\x63msg"
-                    b"\x7f"  # text, indefinite
-                    + bytes([0x60 | len(b0)]) + b0
-                    + bytes([0x60 | len(b1)]) + b1
-                    + b"\xff"
-                    + b"\x61f" + b"\xf9\x3e\x00"  # half 1.5
-                )
-                twin = decode(indef)
-                indef_ok = int(twin == {"msg": msg8, "f": 1.5})
-                out.append(
-                    (
-                        back["doc_id"],
-                        hashlib.md5(back["msg"].encode("utf-8")).hexdigest(),
-                        back["neg"],
-                        back["ts"].value,
-                        sum(back["arr"]),
-                        back["meta"]["n_chars"],
-                        indef_ok,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "msg_md5", "neg", "ts_epoch",
-                    "arr_sum", "n_chars", "indef_ok",
-                ],
-            ).astype(
-                {
-                    "doc_id": "int64", "neg": "int64", "ts_epoch": "int64",
-                    "arr_sum": "int64", "n_chars": "int64", "indef_ok": "int64",
-                }
-            )
-
-    return (
-        d.select("doc_id", "text", "lang", "n_chars")
-        .mapInPandas(
-            fn,
-            "doc_id long, msg_md5 string, neg long, ts_epoch long,"
-            " arr_sum long, n_chars long, indef_ok long",
+    def kernel(i, text, lang, n_chars):
+        rec = {
+            "doc_id": i,
+            "msg": text[:40],
+            "neg": -(i + 1),
+            "ts": Tag(1, 1_700_000_000 + i),
+            "arr": [i % 7, i % 5, i % 3],
+            "meta": {"lang": lang, "n_chars": n_chars},
+            "bin": text[:6].encode("utf-8"),
+            "score": i / 8.0,
+        }
+        back = decode(encode(rec))
+        assert back == rec  # canonical roundtrip
+        # non-canonical twin: indefinite text chunks + half float
+        msg8 = text[:8]
+        b0 = msg8[:3].encode("utf-8")
+        b1 = msg8[3:].encode("utf-8")
+        indef = (
+            b"\xa2"  # map(2)
+            b"\x63msg"
+            b"\x7f"  # text, indefinite
+            + bytes([0x60 | len(b0)]) + b0
+            + bytes([0x60 | len(b1)]) + b1
+            + b"\xff"
+            + b"\x61f" + b"\xf9\x3e\x00"  # half 1.5
         )
-        .orderBy("doc_id")
-    )
+        yield (
+            back["doc_id"],
+            hashlib.md5(back["msg"].encode("utf-8")).hexdigest(),
+            back["neg"],
+            back["ts"].value,
+            sum(back["arr"]),
+            back["meta"]["n_chars"],
+            int(decode(indef) == {"msg": msg8, "f": 1.5}),
+        )
+
+    return map_rows(
+        d.select("doc_id", "text", "lang", "n_chars"), kernel,
+        "doc_id long, msg_md5 string, neg long, ts_epoch long,"
+        " arr_sum long, n_chars long, indef_ok long",
+    ).orderBy("doc_id")
 
 
 _SQL_TRICKY_ARROW = (
@@ -747,44 +649,19 @@ def src_arrow_ipc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = _roundtrip_dir("arrow", sf_dir, write)
 
-    def read_part(batches):
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                rd = ipc.open_file(pa.BufferReader(bytes(blob)))
-                for bi in range(rd.num_record_batches):
-                    b = rd.get_batch(bi)
-                    ids = b.column("doc_id").to_pylist()
-                    texts = b.column("text").to_pylist()
-                    langs = b.column("lang").to_pylist()
-                    srcs = b.column("source").to_pylist()
-                    ncs = b.column("n_chars").to_pylist()
-                    opts = b.column("opt").to_pylist()
-                    tags = b.column("tags").to_pylist()
-                    for i in range(b.num_rows):
-                        o = "~" if opts[i] is None else opts[i]
-                        t = ",".join(str(x) for x in tags[i])
-                        rows.append(
-                            (
-                                ids[i],
-                                texts[i],
-                                langs[i],
-                                ncs[i],
-                                f"{o}|{t}|{srcs[i]}",
-                            )
-                        )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "lang", "n_chars", "tricky"]
-            ).astype({"doc_id": "int64", "n_chars": "int64"})
+    def read_file(content):
+        rd = ipc.open_file(pa.BufferReader(content))
+        for bi in range(rd.num_record_batches):
+            b = rd.get_batch(bi).to_pydict()
+            for i, text, lang, src, nc, o, tags in zip(
+                b["doc_id"], b["text"], b["lang"], b["source"], b["n_chars"], b["opt"], b["tags"]
+            ):
+                o = "~" if o is None else o
+                yield i, text, lang, nc, f"{o}|{','.join(str(x) for x in tags)}|{src}"
 
-    back = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.arrow")
-        .load(out)
-        .select("content")
-        .mapInPandas(
-            read_part,
-            "doc_id long, text string, lang string, n_chars long, tricky string",
-        )
+    files = spark.read.format("binaryFile").option("pathGlobFilter", "*.arrow").load(out)
+    back = map_rows(
+        files.select("content"), read_file,
+        "doc_id long, text string, lang string, n_chars long, tricky string",
     )
     return _summarize(back)

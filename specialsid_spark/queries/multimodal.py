@@ -8,12 +8,15 @@ allows; their *plumbing* correctness is pinned by tests/test_multimodal.py.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from specialsid_spark.catalog import load
 from specialsid_spark.operators.multimodal import decode_image_stub, explode_pdf_pages_stub
 from specialsid_spark.queries import register
+from specialsid_spark.queries._rows import map_rows
 
 
 def _as_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -135,31 +138,21 @@ def mm_jpeg_crop_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one mapInPandas over a doc-id spine; every encode/
     decode is per-row independent (Arrow-batched, embarrassingly
     parallel), no shuffle at all before the final sort."""
-    import pandas as pd
-
     from specialsid_spark.operators.jpeg import crop_jpeg, encode_jpeg
     from specialsid_spark.operators.multimodal import decode_png
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                img = _fixture_gray(doc_id, 0)
-                jb = encode_jpeg(_IMG_W, _IMG_H, 1, img.tobytes(), quality=100)
-                ymin, xmin = doc_id % 9, doc_id % 13
-                ymax, xmax = ymin + 8 + doc_id % 11, xmin + 10 + doc_id % 15
-                png = crop_jpeg(jb, ymin, xmin, ymax, xmax)
-                w, h, _ch, px = decode_png(png)
-                out.append((doc_id, w, h, int(sum(px))))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "crop_w", "crop_h", "pix_sum"]
-            ).astype({"doc_id": "int64", "crop_w": "int32", "crop_h": "int32", "pix_sum": "int64"})
+    def kernel(doc_id):
+        img = _fixture_gray(doc_id, 0)
+        jb = encode_jpeg(_IMG_W, _IMG_H, 1, img.tobytes(), quality=100)
+        ymin, xmin = doc_id % 9, doc_id % 13
+        ymax, xmax = ymin + 8 + doc_id % 11, xmin + 10 + doc_id % 15
+        w, h, _ch, px = decode_png(crop_jpeg(jb, ymin, xmin, ymax, xmax))
+        yield doc_id, w, h, sum(px)
 
     schema = "doc_id long, crop_w int, crop_h int, pix_sum long"
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -188,52 +181,30 @@ def mm_pdf_page_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: same as mm_jpeg_crop_pixels — per-doc independent
     mapInPandas work, then the explode's 1→N fan-out; the only shuffle
     is the final order."""
-    import pandas as pd
-
     from specialsid_spark.operators.jpeg import decode_jpeg, encode_jpeg
     from specialsid_spark.operators.multimodal import explode_pdf_pages
     from specialsid_spark.operators.pdf import build_image_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def build(batches):
-        for pdf in batches:
-            out_id, out_blob = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                pages = [
-                    encode_jpeg(
-                        _IMG_W, _IMG_H, 1, _fixture_gray(doc_id, p).tobytes(), quality=100
-                    )
-                    for p in range(2)
-                ]
-                out_id.append(doc_id)
-                out_blob.append(build_image_pdf(pages))
-            yield pd.DataFrame({"doc_id": pd.Series(out_id, dtype="int64"), "blob": out_blob})
+    def build(doc_id):
+        pages = [
+            encode_jpeg(_IMG_W, _IMG_H, 1, _fixture_gray(doc_id, p).tobytes(), quality=100)
+            for p in range(2)
+        ]
+        yield doc_id, build_image_pdf(pages)
 
-    pdfs = d.select("doc_id").mapInPandas(build, "doc_id long, blob binary")
+    pdfs = map_rows(d.select("doc_id"), build, "doc_id long, blob binary")
     pages = explode_pdf_pages(pdfs)
 
-    def measure(batches):
-        for pdf in batches:
-            out = []
-            for doc_id, pno, pb in zip(pdf["doc_id"], pdf["page_no"], pdf["page_bytes"]):
-                w, h, _ch, px = decode_jpeg(bytes(pb))
-                out.append((int(doc_id), int(pno), w, h, int(sum(px))))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "page_no", "width", "height", "pix_sum"]
-            ).astype(
-                {
-                    "doc_id": "int64",
-                    "page_no": "int32",
-                    "width": "int32",
-                    "height": "int32",
-                    "pix_sum": "int64",
-                }
-            )
+    def measure(doc_id, page_no, page_bytes):
+        w, h, _ch, px = decode_jpeg(page_bytes)
+        yield doc_id, page_no, w, h, sum(px)
 
-    return pages.mapInPandas(
-        measure, "doc_id long, page_no int, width int, height int, pix_sum long"
+    return map_rows(
+        pages.select("doc_id", "page_no", "page_bytes"),
+        measure,
+        "doc_id long, page_no int, width int, height int, pix_sum long",
     ).orderBy("doc_id", "page_no")
 
 
@@ -274,32 +245,21 @@ def mm_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the codec queries — per-doc independent
     mapInPandas, no shuffle before the final sort."""
-    import pandas as pd
-
     from specialsid_spark.operators.pdf import build_text_pdf, extract_page_text
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                pages = [
-                    f"doc {doc_id} page {p} alpha{(doc_id * 7 + p) % 10}\n"
-                    f"beta (v{(doc_id * 3 + p) % 5}) gamma\\delta"
-                    for p in range(2)
-                ]
-                blob = build_text_pdf(pages)
-                texts = extract_page_text(blob)
-                for p, text in enumerate(texts):
-                    out.append((doc_id, p + 1, len(text), text))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "page_no", "n_chars", "page_text"]
-            ).astype({"doc_id": "int64", "page_no": "int32", "n_chars": "int32"})
+    def kernel(doc_id):
+        pages = [
+            f"doc {doc_id} page {p} alpha{(doc_id * 7 + p) % 10}\n"
+            f"beta (v{(doc_id * 3 + p) % 5}) gamma\\delta"
+            for p in range(2)
+        ]
+        for p, text in enumerate(extract_page_text(build_text_pdf(pages))):
+            yield doc_id, p + 1, len(text), text
 
     schema = "doc_id long, page_no int, n_chars int, page_text string"
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id", "page_no")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id", "page_no")
 
 
 @register(
@@ -346,8 +306,6 @@ def mm_pdf_objstm_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the codec queries — per-doc independent
     mapInPandas, no shuffle before the final sort."""
-    import pandas as pd
-
     from specialsid_spark.operators.multimodal import pdf_page_count
     from specialsid_spark.operators.pdf import (
         build_text_pdf,
@@ -357,43 +315,24 @@ def mm_pdf_objstm_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                pages = [
-                    f"objstm doc {doc_id} pg {p} k{(doc_id * 11 + p) % 10}\n"
-                    f"packed (x{(doc_id * 5 + p) % 7}) tail\\end"
-                    for p in range(2)
-                ]
-                blob = build_text_pdf(pages, layout="objstm")
-                texts = extract_page_text(blob)
-                entries, _trailer = read_xref(blob)
-                n_packed = sum(1 for e in entries.values() if e[0] == 2)
-                n_pages = pdf_page_count(blob)
-                for p, text in enumerate(texts):
-                    out.append(
-                        (doc_id, p + 1, len(text), text, n_packed, n_pages)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "page_no", "n_chars", "page_text",
-                    "n_objstm_objects", "n_pages_counted",
-                ],
-            ).astype(
-                {
-                    "doc_id": "int64", "page_no": "int32", "n_chars": "int32",
-                    "n_objstm_objects": "int32", "n_pages_counted": "int32",
-                }
-            )
+    def kernel(doc_id):
+        pages = [
+            f"objstm doc {doc_id} pg {p} k{(doc_id * 11 + p) % 10}\n"
+            f"packed (x{(doc_id * 5 + p) % 7}) tail\\end"
+            for p in range(2)
+        ]
+        blob = build_text_pdf(pages, layout="objstm")
+        entries, _trailer = read_xref(blob)
+        n_packed = sum(1 for e in entries.values() if e[0] == 2)
+        n_pages = pdf_page_count(blob)
+        for p, text in enumerate(extract_page_text(blob)):
+            yield doc_id, p + 1, len(text), text, n_packed, n_pages
 
     schema = (
         "doc_id long, page_no int, n_chars int, page_text string, "
         "n_objstm_objects int, n_pages_counted int"
     )
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id", "page_no")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id", "page_no")
 
 
 @register(
@@ -434,8 +373,6 @@ def mm_pdf_winansi_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-doc independent mapInPandas, no shuffle before
     the final sort — identical to the codec queries."""
-    import pandas as pd
-
     from specialsid_spark.operators.pdf import build_text_pdf, extract_page_text
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
@@ -446,25 +383,17 @@ def mm_pdf_winansi_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         0xD7: "emdash",
     }
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                text = (
-                    f"doc {doc_id} “w{(doc_id * 7) % 10}” — "
-                    f"€{(doc_id * 3) % 100}\n"
-                    f"‘beta…’ †(v{(doc_id * 5) % 7})‡"
-                )
-                blob = build_text_pdf([text], differences=diffs)
-                got = extract_page_text(blob)[0]
-                out.append((doc_id, len(got), got))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "n_chars", "page_text"]
-            ).astype({"doc_id": "int64", "n_chars": "int32"})
+    def kernel(doc_id):
+        text = (
+            f"doc {doc_id} “w{(doc_id * 7) % 10}” — "
+            f"€{(doc_id * 3) % 100}\n"
+            f"‘beta…’ †(v{(doc_id * 5) % 7})‡"
+        )
+        got = extract_page_text(build_text_pdf([text], differences=diffs))[0]
+        yield doc_id, len(got), got
 
     schema = "doc_id long, n_chars int, page_text string"
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -509,28 +438,16 @@ def mm_pdf_text_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: build + extract are per-row-independent mapInPandas;
     the token/hash metrics are whole-stage-codegen'd column
     expressions; the only shuffle is the final sort."""
-    import pandas as pd
-
     from specialsid_spark.operators.multimodal import explode_pdf_text
     from specialsid_spark.operators.pdf import build_text_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def build(batches):
-        for pdf in batches:
-            out_id, out_blob = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                layout = "classic" if doc_id % 2 == 0 else "objstm"
-                out_id.append(doc_id)
-                out_blob.append(
-                    build_text_pdf([text[:120], text[120:240]], layout=layout)
-                )
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(out_id, dtype="int64"), "blob": out_blob}
-            )
+    def build(doc_id, text):
+        layout = "classic" if doc_id % 2 == 0 else "objstm"
+        yield doc_id, build_text_pdf([text[:120], text[120:240]], layout=layout)
 
-    pdfs = d.select("doc_id", "text").mapInPandas(build, "doc_id long, blob binary")
+    pdfs = map_rows(d.select("doc_id", "text"), build, "doc_id long, blob binary")
     pages = explode_pdf_text(pdfs)
     return pages.select(
         "doc_id",
@@ -572,35 +489,48 @@ def mm_compressed_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the member-by-member decompression a 100 TB web-dump lake
     runs at the ingest door — per-row independent, no shuffle before
     the final sort."""
-    import pandas as pd
+    import hashlib
 
     from specialsid_spark.operators.compress import compress_text, decompress_auto
 
     d = load(spark, sf_dir, "documents")
 
-    def fn(batches):
-        import hashlib
+    def kernel(doc_id, text):
+        codec = ("gzip", "bz2", "xz")[doc_id % 3]
+        back = decompress_auto(compress_text(text.encode("utf-8"), codec))
+        yield doc_id, codec, len(back.decode("utf-8")), hashlib.md5(back).hexdigest()
 
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                codec = ("gzip", "bz2", "xz")[doc_id % 3]
-                raw = text.encode("utf-8")
-                back = decompress_auto(compress_text(raw, codec))
-                out.append(
-                    (doc_id, codec, len(back.decode("utf-8")),
-                     hashlib.md5(back).hexdigest())
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "codec", "n_chars", "text_md5"]
-            ).astype({"doc_id": "int64", "n_chars": "int32"})
+    return map_rows(
+        d.select("doc_id", "text"), kernel,
+        "doc_id long, codec string, n_chars int, text_md5 string",
+    ).orderBy("doc_id")
 
-    return (
-        d.select("doc_id", "text")
-        .mapInPandas(fn, "doc_id long, codec string, n_chars int, text_md5 string")
-        .orderBy("doc_id")
-    )
+
+def _page_rgb(blob: bytes):
+    """Rasterize a one-page PDF (operators/pdfraster.py) and return its
+    pixels as a uint8 (height, width, 3) array, or None when the
+    rasterizer degrades — the caller then emits its impossible -1 row.
+    numpy sums uint8 in a 64-bit accumulator, so pixel sums are exact."""
+    import numpy as np
+
+    from specialsid_spark.operators.pdfraster import rasterize_page
+
+    r = rasterize_page(blob)
+    if r is None:
+        return None
+    w, h, _ch, px = r
+    return np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
+
+
+def _page_gray(blob: bytes):
+    """The gray (first) plane of :func:`_page_rgb`, or None."""
+    rgb = _page_rgb(blob)
+    return None if rgb is None else rgb[:, :, 0]
+
+
+def _ink(gray) -> tuple[int, int]:
+    """(non-white pixel count, gray sum) of a gray plane."""
+    return int((gray != 255).sum()), int(gray.sum())
 
 
 @register(
@@ -701,60 +631,25 @@ def mm_pdf_rasterize_page(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-row independent mapInPandas, buffer bounded by
     page size x dpi^2 — no shuffle before the final sort."""
-    import numpy as np
-    import pandas as pd
-
-    from specialsid_spark.operators.pdfraster import (
-        build_raster_pdf,
-        rasterize_page,
-    )
+    from specialsid_spark.operators.pdfraster import build_raster_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                text = f"DOC{doc_id}"
-                rw = 40 + doc_id % 8
-                rc = (doc_id * 7) % 200
-                ipx = bytes((doc_id * 5 + k) % 200 for k in range(64))
-                curve = (
-                    420 + doc_id % 5,
-                    100,
-                    80 + doc_id % 7,
-                    40 + doc_id % 9,
-                    (doc_id * 11) % 200,
-                )
-                blob = build_raster_pdf(
-                    text, (100, 100, rw, 30, rc), (8, 8, ipx), curve=curve
-                )
-                r = rasterize_page(blob)
-                if r is None:  # degrade surfaces as an impossible row
-                    out.append((doc_id, -1, -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                buf = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
-                gray = buf[:, :, 0]
-                out.append(
-                    (doc_id, w, h,
-                     int((gray != 255).sum()),
-                     int(gray.astype(np.int64).sum()))
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "ink_px", "gray_sum"]
-            ).astype({"doc_id": "int64", "width": "int32", "height": "int32",
-                      "ink_px": "int64", "gray_sum": "int64"})
+    def kernel(doc_id):
+        ipx = bytes((doc_id * 5 + k) % 200 for k in range(64))
+        curve = (420 + doc_id % 5, 100, 80 + doc_id % 7, 40 + doc_id % 9, (doc_id * 11) % 200)
+        gray = _page_gray(build_raster_pdf(
+            f"DOC{doc_id}", (100, 100, 40 + doc_id % 8, 30, (doc_id * 7) % 200),
+            (8, 8, ipx), curve=curve,
+        ))
+        if gray is None:  # degrade surfaces as an impossible row
+            yield doc_id, -1, -1, -1, -1
+            return
+        h, w = gray.shape
+        yield doc_id, w, h, *_ink(gray)
 
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            fn,
-            "doc_id long, width int, height int, ink_px long, gray_sum long",
-        )
-        .orderBy("doc_id")
-    )
+    schema = "doc_id long, width int, height int, ink_px long, gray_sum long"
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -839,53 +734,22 @@ def mm_pdf_glyph_text_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     r8 glyph-box model (mm_pdf_rasterize_page pins that path).
 
     Scale shape: per-row independent mapInPandas (the font parses once
-    per Arrow batch); buffer bounded by page size, never the corpus."""
-    import numpy as np
-    import pandas as pd
-
-    from specialsid_spark.operators.pdfraster import (
-        build_glyph_pdf,
-        rasterize_page,
-    )
+    per page render); buffer bounded by page size, never the corpus."""
+    from specialsid_spark.operators.pdfraster import build_glyph_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 3 + doc_id % 4
-                text = "".join("TOVX"[(doc_id + k) % 4] for k in range(n))
-                r = rasterize_page(build_glyph_pdf(text))
-                if r is None:  # degrade surfaces as an impossible row
-                    out.append((doc_id, -1, -1, -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                buf = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
-                gray = buf[:, :, 0]
-                out.append(
-                    (doc_id, w, h, n,
-                     int((gray != 255).sum()),
-                     int(gray.astype(np.int64).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "n_chars",
-                         "ink_px", "gray_sum"],
-            ).astype({"doc_id": "int64", "width": "int32", "height": "int32",
-                      "n_chars": "int32", "ink_px": "int64",
-                      "gray_sum": "int64"})
+    def kernel(doc_id):
+        n = 3 + doc_id % 4
+        gray = _page_gray(build_glyph_pdf("".join("TOVX"[(doc_id + k) % 4] for k in range(n))))
+        if gray is None:  # degrade surfaces as an impossible row
+            yield doc_id, -1, -1, -1, -1, -1
+            return
+        h, w = gray.shape
+        yield doc_id, w, h, n, *_ink(gray)
 
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            fn,
-            "doc_id long, width int, height int, n_chars int,"
-            " ink_px long, gray_sum long",
-        )
-        .orderBy("doc_id")
-    )
+    schema = "doc_id long, width int, height int, n_chars int, ink_px long, gray_sum long"
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -938,56 +802,26 @@ def mm_pdf_shading_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-row independent mapInPandas, no shuffle before
     the final sort."""
-    import numpy as np
-    import pandas as pd
-
-    from specialsid_spark.operators.pdfraster import (
-        build_shading_pdf,
-        rasterize_page,
-    )
+    from specialsid_spark.operators.pdfraster import build_shading_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                c0 = (40 + (doc_id * 3) % 160) / 255.0
-                c1 = (200 + doc_id % 55) / 255.0
-                blob = build_shading_pdf(
-                    (80, 620, 340, 100), (100, 0, 400, 0), c0, c1
-                )
-                r = rasterize_page(blob)
-                if r is None:  # degrade surfaces as an impossible row
-                    out.append((doc_id, -1, -1, -1, -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                gray = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)[:, :, 0]
-                region = gray[72:172, 80:420].astype(np.int64)
-                out.append(
-                    (doc_id, w, h,
-                     int((gray != 255).sum()),
-                     int(gray.astype(np.int64).sum()),
-                     int(region.min()), int(region.max()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "ink_px", "gray_sum",
-                         "v_left", "v_right"],
-            ).astype({"doc_id": "int64", "width": "int32", "height": "int32",
-                      "ink_px": "int64", "gray_sum": "int64",
-                      "v_left": "int64", "v_right": "int64"})
+    def kernel(doc_id):
+        c0 = (40 + (doc_id * 3) % 160) / 255.0
+        c1 = (200 + doc_id % 55) / 255.0
+        gray = _page_gray(build_shading_pdf((80, 620, 340, 100), (100, 0, 400, 0), c0, c1))
+        if gray is None:  # degrade surfaces as an impossible row
+            yield doc_id, -1, -1, -1, -1, -1, -1
+            return
+        h, w = gray.shape
+        region = gray[72:172, 80:420]
+        yield doc_id, w, h, *_ink(gray), region.min(), region.max()
 
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            fn,
-            "doc_id long, width int, height int, ink_px long,"
-            " gray_sum long, v_left long, v_right long",
-        )
-        .orderBy("doc_id")
+    schema = (
+        "doc_id long, width int, height int, ink_px long,"
+        " gray_sum long, v_left long, v_right long"
     )
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -1019,34 +853,18 @@ def mm_zstd_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-row independent mapInPandas — no shuffle before
     the final sort; at 100 TB each .zst member decodes where it lands,
     and frame history is bounded by the document, never the corpus."""
-    import pandas as pd
-
     from specialsid_spark.operators.compress import decompress_auto
     from specialsid_spark.operators.zstd import zstd_compress
 
     d = load(spark, sf_dir, "documents")
 
-    def fn(batches):
-        import hashlib
+    def kernel(doc_id, text):
+        back = decompress_auto(zstd_compress(text.encode("utf-8")))
+        yield doc_id, len(back.decode("utf-8")), hashlib.md5(back).hexdigest()
 
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = text.encode("utf-8")
-                back = decompress_auto(zstd_compress(raw))
-                out.append(
-                    (int(doc_id), len(back.decode("utf-8")),
-                     hashlib.md5(back).hexdigest())
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "n_chars", "text_md5"]
-            ).astype({"doc_id": "int64", "n_chars": "int32"})
-
-    return (
-        d.select("doc_id", "text")
-        .mapInPandas(fn, "doc_id long, n_chars int, text_md5 string")
-        .orderBy("doc_id")
-    )
+    return map_rows(
+        d.select("doc_id", "text"), kernel, "doc_id long, n_chars int, text_md5 string"
+    ).orderBy("doc_id")
 
 
 @register(
@@ -1077,34 +895,18 @@ def mm_lz4_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-row independent mapInPandas — no shuffle before
     the final sort; at 100 TB each .lz4 member decodes where it lands,
     match history bounded by the member (independent blocks)."""
-    import pandas as pd
-
     from specialsid_spark.operators.compress import decompress_auto
     from specialsid_spark.operators.lz4 import lz4_frame_compress
 
     d = load(spark, sf_dir, "documents")
 
-    def fn(batches):
-        import hashlib
+    def kernel(doc_id, text):
+        back = decompress_auto(lz4_frame_compress(text.encode("utf-8")))
+        yield doc_id, len(back.decode("utf-8")), hashlib.md5(back).hexdigest()
 
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = text.encode("utf-8")
-                back = decompress_auto(lz4_frame_compress(raw))
-                out.append(
-                    (int(doc_id), len(back.decode("utf-8")),
-                     hashlib.md5(back).hexdigest())
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "n_chars", "text_md5"]
-            ).astype({"doc_id": "int64", "n_chars": "int32"})
-
-    return (
-        d.select("doc_id", "text")
-        .mapInPandas(fn, "doc_id long, n_chars int, text_md5 string")
-        .orderBy("doc_id")
-    )
+    return map_rows(
+        d.select("doc_id", "text"), kernel, "doc_id long, n_chars int, text_md5 string"
+    ).orderBy("doc_id")
 
 
 @register(
@@ -1131,34 +933,22 @@ def mm_zip_archive_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
     per member.  Listing is the curation step that decides what is
     worth decompressing at 100 TB; it reads the directory at the END
     of the blob and never touches member payloads."""
-    import pandas as pd
-
     from specialsid_spark.operators.compress import build_zip, zip_entries
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                members = [
-                    (f"doc{doc_id}/part{p}.txt",
-                     text[p * 50 : (p + 1) * 50].encode("utf-8"))
-                    for p in range(3)
-                ]
-                for name, csize, usize in zip_entries(build_zip(members)):
-                    assert csize == usize  # STORED
-                    out.append((doc_id, name, usize))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "member_name", "n_bytes"]
-            ).astype({"doc_id": "int64", "n_bytes": "int32"})
+    def kernel(doc_id, text):
+        members = [
+            (f"doc{doc_id}/part{p}.txt", text[p * 50 : (p + 1) * 50].encode("utf-8"))
+            for p in range(3)
+        ]
+        for name, csize, usize in zip_entries(build_zip(members)):
+            assert csize == usize  # STORED
+            yield doc_id, name, usize
 
-    return (
-        d.select("doc_id", "text")
-        .mapInPandas(fn, "doc_id long, member_name string, n_bytes int")
-        .orderBy("doc_id", "member_name")
-    )
+    return map_rows(
+        d.select("doc_id", "text"), kernel, "doc_id long, member_name string, n_bytes int"
+    ).orderBy("doc_id", "member_name")
 
 
 @register(
@@ -1189,30 +979,21 @@ def mm_tar_webdataset_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     in 100 TB of tar shards — the listing reads headers only, and the
     sample-assembly shuffle carries (key, size) pairs, never payloads.
     """
-    import pandas as pd
-
     from specialsid_spark.operators.compress import build_tar, tar_entries
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                members = []
-                for s in range(2):
-                    key = f"s{doc_id}_{s}"
-                    members.append((f"{key}.txt", text[s * 30 : (s + 1) * 30].encode()))
-                    members.append((f"{key}.bin", b"\xab" * ((doc_id + 7 * s) % 90 + 10)))
-                for name, _off, size in tar_entries(build_tar(members)):
-                    out.append((doc_id, name, size))
-            yield pd.DataFrame(out, columns=["doc_id", "member", "size"]).astype(
-                {"doc_id": "int64", "size": "int64"}
-            )
+    def kernel(doc_id, text):
+        members = []
+        for s in range(2):
+            key = f"s{doc_id}_{s}"
+            members.append((f"{key}.txt", text[s * 30 : (s + 1) * 30].encode()))
+            members.append((f"{key}.bin", b"\xab" * ((doc_id + 7 * s) % 90 + 10)))
+        for name, _off, size in tar_entries(build_tar(members)):
+            yield doc_id, name, size
 
-    members = d.select("doc_id", "text").mapInPandas(
-        fn, "doc_id long, member string, size long"
+    members = map_rows(
+        d.select("doc_id", "text"), kernel, "doc_id long, member string, size long"
     )
     return (
         members.withColumn(
@@ -1251,8 +1032,6 @@ def mm_warc_crawl_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     HTTP header block, and emit the recovered body's length + md5.
     Per-row-independent mapInPandas; no shuffle before the final
     sort."""
-    import pandas as pd
-
     from specialsid_spark.operators.compress import (
         build_warc,
         split_gzip_members,
@@ -1261,39 +1040,22 @@ def mm_warc_crawl_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        import hashlib
+    def kernel(doc_id, text):
+        uri = f"http://corpus.test/doc/{doc_id}"
+        http = b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n\r\n" + text[:200].encode("utf-8")
+        wgz = build_warc(
+            [("request", uri, b"GET / HTTP/1.1\r\n\r\n"), ("response", uri, http)], gz=True
+        )
+        for member in split_gzip_members(wgz):
+            for rtype, ruri, off, ln in warc_records(member):
+                if rtype == "response":
+                    got = member[off : off + ln].split(b"\r\n\r\n", 1)[1]
+                    yield doc_id, ruri, len(got.decode("utf-8")), hashlib.md5(got).hexdigest()
 
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                uri = f"http://corpus.test/doc/{doc_id}"
-                body = text[:200].encode("utf-8")
-                http = b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n\r\n" + body
-                wgz = build_warc(
-                    [("request", uri, b"GET / HTTP/1.1\r\n\r\n"), ("response", uri, http)],
-                    gz=True,
-                )
-                for member in split_gzip_members(wgz):
-                    for rtype, ruri, off, ln in warc_records(member):
-                        if rtype != "response":
-                            continue
-                        payload = member[off : off + ln]
-                        got = payload.split(b"\r\n\r\n", 1)[1]
-                        out.append(
-                            (doc_id, ruri, len(got.decode("utf-8")),
-                             hashlib.md5(got).hexdigest())
-                        )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "uri", "body_n_chars", "body_md5"]
-            ).astype({"doc_id": "int64", "body_n_chars": "int32"})
-
-    return (
-        d.select("doc_id", "text")
-        .mapInPandas(fn, "doc_id long, uri string, body_n_chars int, body_md5 string")
-        .orderBy("doc_id")
-    )
+    return map_rows(
+        d.select("doc_id", "text"), kernel,
+        "doc_id long, uri string, body_n_chars int, body_md5 string",
+    ).orderBy("doc_id")
 
 
 @register(
@@ -1319,36 +1081,21 @@ def mm_flac_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (20-bit rate / 3-bit channels / 5-bit bits / 36-bit total straddle
     byte boundaries — parse_flac_meta).  The corpus-duration stats a
     100 TB audio lake computes without decoding a sample."""
-    import pandas as pd
-
     from specialsid_spark.operators.media_meta import build_flac_meta, parse_flac_meta
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
     rates = (8000, 16000, 22050, 44100, 48000)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                blob = build_flac_meta(
-                    rates[doc_id % 5], doc_id % 2 + 1,
-                    16 if doc_id % 2 == 0 else 24, doc_id * 1000 + 500,
-                )
-                rate, nch, bits, total = parse_flac_meta(blob)
-                out.append((doc_id, rate, nch, bits, total, total * 1000 // rate))
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "sample_rate", "n_channels", "bits",
-                         "total_samples", "duration_ms"],
-            ).astype(
-                {"doc_id": "int64", "sample_rate": "int32", "n_channels": "int32",
-                 "bits": "int32", "total_samples": "int64", "duration_ms": "int64"}
-            )
+    def kernel(doc_id):
+        blob = build_flac_meta(
+            rates[doc_id % 5], doc_id % 2 + 1, 16 if doc_id % 2 == 0 else 24, doc_id * 1000 + 500
+        )
+        rate, nch, bits, total = parse_flac_meta(blob)
+        yield doc_id, rate, nch, bits, total, total * 1000 // rate
 
     schema = ("doc_id long, sample_rate int, n_channels int, bits int,"
               " total_samples long, duration_ms long")
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -1388,55 +1135,35 @@ def mm_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     right-side / mid-side so all four spec channel assignments are
     exercised under the driver hash.  Scale shape: per-row-independent
     mapInPandas; the only shuffle is the final sort."""
-    import pandas as pd
+    import numpy as np
 
     from specialsid_spark.operators.flac import decode_flac, encode_flac
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
     modes = ("independent", "left_side", "right_side", "mid_side")
 
-    def fn(batches):
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 600 + (doc_id % 5) * 37
-                i = np.arange(n, dtype=np.int64)
-                left = (doc_id * 37 + i * 11) % 201 - 100
-                right = (doc_id * 13 + i * 7) % 101 - 50
-                rate = 8000 + (doc_id % 3) * 4000
-                mode = modes[doc_id % 4]
-                blob = encode_flac(
-                    rate, np.stack([left, right], axis=1),
-                    block_size=256, stereo_mode=mode,
-                )
-                got = decode_flac(blob)
-                if got is None:
-                    raise ValueError(f"flac decode failed for doc {doc_id}")
-                drate, nch, s = got
-                if drate != rate or nch != 2 or not (
-                    np.array_equal(s[:, 0], left) and np.array_equal(s[:, 1], right)
-                ):
-                    raise ValueError(f"flac roundtrip mismatch for doc {doc_id}")
-                out.append((
-                    doc_id, rate, n, mode,
-                    int(np.sum(s[:, 0].astype(np.int64) ** 2)),
-                    int(np.sum(s[:, 1].astype(np.int64) ** 2)),
-                    int(np.sum((s[:, 0].astype(np.int64) - s[:, 1]) * (i + 1))),
-                ))
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "sample_rate", "n_samples", "mode",
-                         "energy_l", "energy_r", "wsum"],
-            ).astype({"doc_id": "int64", "sample_rate": "int32",
-                      "n_samples": "int32", "energy_l": "int64",
-                      "energy_r": "int64", "wsum": "int64"})
+    def kernel(doc_id):
+        n = 600 + (doc_id % 5) * 37
+        i = np.arange(n, dtype=np.int64)
+        left = (doc_id * 37 + i * 11) % 201 - 100
+        right = (doc_id * 13 + i * 7) % 101 - 50
+        rate = 8000 + (doc_id % 3) * 4000
+        mode = modes[doc_id % 4]
+        blob = encode_flac(rate, np.stack([left, right], axis=1), block_size=256, stereo_mode=mode)
+        got = decode_flac(blob)
+        if got is None:
+            raise ValueError(f"flac decode failed for doc {doc_id}")
+        drate, nch, s = got
+        if drate != rate or nch != 2 or not (
+            np.array_equal(s[:, 0], left) and np.array_equal(s[:, 1], right)
+        ):
+            raise ValueError(f"flac roundtrip mismatch for doc {doc_id}")
+        sl, sr = s[:, 0].astype(np.int64), s[:, 1].astype(np.int64)
+        yield doc_id, rate, n, mode, np.sum(sl**2), np.sum(sr**2), np.sum((sl - sr) * (i + 1))
 
     schema = ("doc_id long, sample_rate int, n_samples int, mode string,"
               " energy_l long, energy_r long, wsum long")
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -1487,40 +1214,25 @@ def mm_wav_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
     dispatched from the shared decode_wav entry point), and emit
     sum/energy/min/max of the decoded int16 samples.  Per-row mapInPandas;
     the only shuffle is the final sort."""
-    import pandas as pd
+    import numpy as np
 
     from specialsid_spark.operators.audio import decode_wav, encode_wav_g711
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 400 + (doc_id % 7) * 16
-                i = np.arange(n, dtype=np.int64)
-                codes = (doc_id * 7 + i * 3) % 256
-                law = "alaw" if doc_id % 2 == 0 else "mulaw"
-                got = decode_wav(encode_wav_g711(8000, codes, law))
-                if got is None:
-                    raise ValueError(f"g711 decode failed for doc {doc_id}")
-                _, _, s = got
-                v = s[:, 0].astype(np.int64)
-                out.append((doc_id, law, n, int(v.sum()),
-                            int(np.sum(v * v)), int(v.min()), int(v.max())))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "law", "n_samples", "sum_samples",
-                              "energy", "vmin", "vmax"],
-            ).astype({"doc_id": "int64", "n_samples": "int32",
-                      "sum_samples": "int64", "energy": "int64",
-                      "vmin": "int32", "vmax": "int32"})
+    def kernel(doc_id):
+        n = 400 + (doc_id % 7) * 16
+        codes = (doc_id * 7 + np.arange(n, dtype=np.int64) * 3) % 256
+        law = "alaw" if doc_id % 2 == 0 else "mulaw"
+        got = decode_wav(encode_wav_g711(8000, codes, law))
+        if got is None:
+            raise ValueError(f"g711 decode failed for doc {doc_id}")
+        v = got[2][:, 0].astype(np.int64)
+        yield doc_id, law, n, v.sum(), np.sum(v * v), v.min(), v.max()
 
     schema = ("doc_id long, law string, n_samples int, sum_samples long,"
               " energy long, vmin int, vmax int")
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -1561,35 +1273,24 @@ def mm_pdf_cid_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the CMap), and emit per-doc page count, char count, and a
     hash of the recovered text.  Per-row mapInPandas; the only shuffle
     is the final sort."""
-    import pandas as pd
-
     from specialsid_spark.operators.pdf import build_cid_text_pdf, extract_page_text
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        import hashlib
-
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                pages = [
-                    f"doc {doc_id} p0\n{text[0:50]}\n{text[50:100]}",
-                    f"doc {doc_id} p1\n{text[100:150]}\n{text[150:200]}",
-                ]
-                got = extract_page_text(build_cid_text_pdf(pages))
-                if got is None or any(g is None for g in got):
-                    raise ValueError(f"cid text extract failed for doc {doc_id}")
-                joined = "\x1e".join(got)
-                out.append((doc_id, len(got), sum(len(g) for g in got),
-                            hashlib.md5(joined.encode()).hexdigest()))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "n_pages", "n_chars", "text_md5"],
-            ).astype({"doc_id": "int64", "n_pages": "int32", "n_chars": "int32"})
+    def kernel(doc_id, text):
+        pages = [
+            f"doc {doc_id} p0\n{text[0:50]}\n{text[50:100]}",
+            f"doc {doc_id} p1\n{text[100:150]}\n{text[150:200]}",
+        ]
+        got = extract_page_text(build_cid_text_pdf(pages))
+        if got is None or any(g is None for g in got):
+            raise ValueError(f"cid text extract failed for doc {doc_id}")
+        joined = "\x1e".join(got)
+        yield (doc_id, len(got), sum(len(g) for g in got),
+               hashlib.md5(joined.encode()).hexdigest())
 
     schema = "doc_id long, n_pages int, n_chars int, text_md5 string"
-    return d.select("doc_id", "text").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id", "text"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -1619,35 +1320,21 @@ def mm_image_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel sum.  Thumbnailing is how an image lake feeds vision-model
     preprocessing at 100 TB; per-row-independent mapInPandas, no
     shuffle before the final sort."""
-    import pandas as pd
+    import numpy as np
 
     from specialsid_spark.operators.jpeg import encode_jpeg
     from specialsid_spark.operators.multimodal import decode_png, resize_image_box
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        import numpy as np
+    def kernel(doc_id):
+        jb = encode_jpeg(_IMG_W, _IMG_H, 1, _fixture_gray(doc_id, 0).tobytes(), quality=100)
+        w, h, _ch, px = decode_png(resize_image_box(jb, 4, 3))
+        yield doc_id, w, h, np.frombuffer(bytes(px), np.uint8).sum()
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                img = _fixture_gray(doc_id, 0)
-                jb = encode_jpeg(_IMG_W, _IMG_H, 1, img.tobytes(), quality=100)
-                png = resize_image_box(jb, 4, 3)
-                w, h, _ch, px = decode_png(png)
-                out.append((doc_id, w, h, int(np.frombuffer(bytes(px), np.uint8).sum())))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "thumb_w", "thumb_h", "pix_sum"]
-            ).astype({"doc_id": "int64", "thumb_w": "int32", "thumb_h": "int32",
-                      "pix_sum": "int64"})
-
-    return (
-        d.select("doc_id")
-        .mapInPandas(fn, "doc_id long, thumb_w int, thumb_h int, pix_sum long")
-        .orderBy("doc_id")
-    )
+    return map_rows(
+        d.select("doc_id"), kernel, "doc_id long, thumb_w int, thumb_h int, pix_sum long"
+    ).orderBy("doc_id")
 
 
 @register(
@@ -1676,36 +1363,25 @@ def mm_html_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources/web.py html_to_text (stdlib parser walk: skip-subtree
     handling, charref decoding, whitespace normalization) and emit the
     recovered body verbatim."""
-    import pandas as pd
-
     from specialsid_spark.sources.web import html_to_text
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                h1, p = text[:60], text[60:180]
-                html = (
-                    f"<html><head><title>doc {doc_id} &amp; more</title>"
-                    "<script>var junk = '<p>not text</p>';</script>"
-                    "<style>.x{{color:red}}</style></head>"
-                    f"<body><!-- comment stays hidden --><h1>{h1}</h1>"
-                    f"<noscript>also hidden</noscript><p>{p}</p></body></html>"
-                )
-                body = html_to_text(html)
-                out.append((doc_id, body, len(body)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "body_text", "n_chars"]
-            ).astype({"doc_id": "int64", "n_chars": "int32"})
+    def kernel(doc_id, text):
+        h1, p = text[:60], text[60:180]
+        html = (
+            f"<html><head><title>doc {doc_id} &amp; more</title>"
+            "<script>var junk = '<p>not text</p>';</script>"
+            "<style>.x{{color:red}}</style></head>"
+            f"<body><!-- comment stays hidden --><h1>{h1}</h1>"
+            f"<noscript>also hidden</noscript><p>{p}</p></body></html>"
+        )
+        body = html_to_text(html)
+        yield doc_id, body, len(body)
 
-    return (
-        d.select("doc_id", "text")
-        .mapInPandas(fn, "doc_id long, body_text string, n_chars int")
-        .orderBy("doc_id")
-    )
+    return map_rows(
+        d.select("doc_id", "text"), kernel, "doc_id long, body_text string, n_chars int"
+    ).orderBy("doc_id")
 
 
 @register(
@@ -1747,8 +1423,6 @@ def pipeline_crawl_to_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas (members never leave the task that read them); the
     token/hash stats are computed in the same pass; the only shuffle
     is the final sort."""
-    import pandas as pd
-
     from specialsid_spark.operators.compress import (
         build_warc,
         split_gzip_members,
@@ -1758,48 +1432,28 @@ def pipeline_crawl_to_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        import hashlib
-
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                doc_id = int(doc_id)
-                uri = f"http://crawl.test/page/{doc_id}"
-                html = (
-                    f"<html><head><title>doc {doc_id}</title>"
-                    "<script>nope('<h1>fake</h1>');</script></head>"
-                    f"<body><!-- x --><h1>{text[:80]}</h1>"
-                    f"<style>.b{{}}</style><p>{text[80:240]}</p></body></html>"
-                )
-                http = (
-                    b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                    + html.encode("utf-8")
-                )
-                wgz = build_warc(
-                    [("request", uri, b"GET / HTTP/1.1\r\n\r\n"),
-                     ("response", uri, http)],
-                    gz=True,
-                )
-                for member in split_gzip_members(wgz):
-                    for rtype, ruri, off, ln in warc_records(member):
-                        if rtype != "response":
-                            continue
-                        payload = member[off : off + ln]
-                        body = html_to_text(
-                            payload.split(b"\r\n\r\n", 1)[1].decode("utf-8")
-                        )
-                        out.append(
-                            (doc_id, ruri, len(body),
-                             len(body.split()),
-                             hashlib.md5(body.encode()).hexdigest())
-                        )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "uri", "n_chars", "n_tokens", "body_md5"]
-            ).astype({"doc_id": "int64", "n_chars": "int32", "n_tokens": "int32"})
+    def kernel(doc_id, text):
+        uri = f"http://crawl.test/page/{doc_id}"
+        html = (
+            f"<html><head><title>doc {doc_id}</title>"
+            "<script>nope('<h1>fake</h1>');</script></head>"
+            f"<body><!-- x --><h1>{text[:80]}</h1>"
+            f"<style>.b{{}}</style><p>{text[80:240]}</p></body></html>"
+        )
+        http = b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + html.encode("utf-8")
+        wgz = build_warc(
+            [("request", uri, b"GET / HTTP/1.1\r\n\r\n"), ("response", uri, http)], gz=True
+        )
+        for member in split_gzip_members(wgz):
+            for rtype, ruri, off, ln in warc_records(member):
+                if rtype == "response":
+                    payload = member[off : off + ln]
+                    body = html_to_text(payload.split(b"\r\n\r\n", 1)[1].decode("utf-8"))
+                    yield (doc_id, ruri, len(body), len(body.split()),
+                           hashlib.md5(body.encode()).hexdigest())
 
     schema = "doc_id long, uri string, n_chars int, n_tokens int, body_md5 string"
-    return d.select("doc_id", "text").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id", "text"), kernel, schema).orderBy("doc_id")
 
 
 _WAV_N = 800  # PCM frames per fixture clip
@@ -1842,7 +1496,7 @@ def mm_wav_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-row-independent mapInPandas (Arrow-batched); no
     shuffle before the final sort."""
-    import pandas as pd
+    import numpy as np
 
     from specialsid_spark.operators.audio import (
         decode_wav,
@@ -1853,33 +1507,17 @@ def mm_wav_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        import numpy as np
+    def kernel(doc_id):
+        k = np.arange(_WAV_N, dtype=np.int64)
+        rate, nch, dec = decode_wav(encode_wav(16000, ((doc_id * 7 + k * 13) % 4096) - 2048))
+        assert (rate, nch) == (16000, 1)
+        rs = resample_nearest(dec[:, 0], rate, _WAV_RS_TO)
+        for fno, e in enumerate(frame_energy(rs, _WAV_FRAME)):
+            yield doc_id, fno, min(_WAV_FRAME, len(rs) - fno * _WAV_FRAME), e
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                k = np.arange(_WAV_N, dtype=np.int64)
-                samples = ((doc_id * 7 + k * 13) % 4096) - 2048
-                wav = encode_wav(16000, samples)
-                rate, nch, dec = decode_wav(wav)
-                assert (rate, nch) == (16000, 1)
-                rs = resample_nearest(dec[:, 0], rate, _WAV_RS_TO)
-                for fno, e in enumerate(frame_energy(rs, _WAV_FRAME)):
-                    n = min(_WAV_FRAME, len(rs) - fno * _WAV_FRAME)
-                    out.append((doc_id, fno, n, e))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "frame_no", "n_samples", "energy"]
-            ).astype(
-                {"doc_id": "int64", "frame_no": "int32", "n_samples": "int32", "energy": "int64"}
-            )
-
-    return (
-        d.select("doc_id")
-        .mapInPandas(fn, "doc_id long, frame_no int, n_samples int, energy long")
-        .orderBy("doc_id", "frame_no")
-    )
+    return map_rows(
+        d.select("doc_id"), kernel, "doc_id long, frame_no int, n_samples int, energy long"
+    ).orderBy("doc_id", "frame_no")
 
 
 @register(
@@ -1918,38 +1556,25 @@ def mm_gif_crop_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     (LZW expand → palette → slice → PNG), decode, report exact pixel
     sums (×3: the gray value lands in R=G=B).  Exercises dictionary
     growth and width bumps on every doc."""
-    import pandas as pd
+    import numpy as np
 
     from specialsid_spark.operators.gif import crop_gif, encode_gif
     from specialsid_spark.operators.multimodal import decode_png
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        import numpy as np
+    def kernel(doc_id):
+        yy, xx = np.mgrid[0:_IMG_H, 0:_IMG_W]
+        g = ((xx * 7 + yy * 11 + doc_id * 13) % 199).astype(np.uint8)
+        gb = encode_gif(_IMG_W, _IMG_H, np.stack([g, g, g], axis=-1).tobytes())
+        ymin, xmin = doc_id % 7, doc_id % 11
+        ymax, xmax = ymin + 9 + doc_id % 5, xmin + 12 + doc_id % 9
+        w, h, _ch, px = decode_png(crop_gif(gb, ymin, xmin, ymax, xmax))
+        yield doc_id, w, h, sum(px)
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                yy, xx = np.mgrid[0:_IMG_H, 0:_IMG_W]
-                g = ((xx * 7 + yy * 11 + doc_id * 13) % 199).astype(np.uint8)
-                rgb = np.stack([g, g, g], axis=-1)
-                gb = encode_gif(_IMG_W, _IMG_H, rgb.tobytes())
-                ymin, xmin = doc_id % 7, doc_id % 11
-                ymax, xmax = ymin + 9 + doc_id % 5, xmin + 12 + doc_id % 9
-                png = crop_gif(gb, ymin, xmin, ymax, xmax)
-                w, h, _ch, px = decode_png(png)
-                out.append((doc_id, w, h, int(sum(px))))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "crop_w", "crop_h", "pix_sum"]
-            ).astype({"doc_id": "int64", "crop_w": "int32", "crop_h": "int32", "pix_sum": "int64"})
-
-    return (
-        d.select("doc_id")
-        .mapInPandas(fn, "doc_id long, crop_w int, crop_h int, pix_sum long")
-        .orderBy("doc_id")
-    )
+    return map_rows(
+        d.select("doc_id"), kernel, "doc_id long, crop_w int, crop_h int, pix_sum long"
+    ).orderBy("doc_id")
 
 
 @register(
@@ -1991,8 +1616,6 @@ def mm_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer formulas — for DuckDB to restate arithmetically.  This is
     the corpus-stats pass a 100 TB multimodal lake runs: format/
     duration/resolution histograms without decoding a single sample."""
-    import pandas as pd
-
     from specialsid_spark.operators.media_meta import (
         build_mp3,
         build_mp4,
@@ -2003,32 +1626,19 @@ def mm_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
     bitrates = (32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                mp3 = build_mp3(bitrates[doc_id % 14], 44100, 10 + doc_id % 20)
-                br, sr, nf, ms = parse_mp3_meta(mp3)
-                mp4 = build_mp4(
-                    1000 + doc_id * 37,
-                    [(320 + (doc_id % 64) * 16, 240 + (doc_id % 48) * 12), (0, 0)],
-                )
-                dur, ntr, w, h = parse_mp4_meta(mp4)
-                out.append((doc_id, br, sr, nf, ms, dur, ntr, w, h))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "mp3_bitrate_kbps", "mp3_sample_rate", "mp3_frames",
-                    "mp3_ms", "mp4_ms", "mp4_tracks", "mp4_width", "mp4_height",
-                ],
-            ).astype("int64")
+    def kernel(doc_id):
+        mp3 = build_mp3(bitrates[doc_id % 14], 44100, 10 + doc_id % 20)
+        mp4 = build_mp4(
+            1000 + doc_id * 37,
+            [(320 + (doc_id % 64) * 16, 240 + (doc_id % 48) * 12), (0, 0)],
+        )
+        yield doc_id, *parse_mp3_meta(mp3), *parse_mp4_meta(mp4)
 
     schema = (
         "doc_id long, mp3_bitrate_kbps long, mp3_sample_rate long, mp3_frames long,"
         " mp3_ms long, mp4_ms long, mp4_tracks long, mp4_width long, mp4_height long"
     )
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 _VID_W, _VID_H, _VID_FRAMES, _VID_EVERY = 16, 12, 6, 2
@@ -2068,42 +1678,26 @@ def mm_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-row-independent mapInPandas; no shuffle before
     the final sort."""
-    import pandas as pd
+    import numpy as np
 
     from specialsid_spark.operators.video import build_avi, sample_frames
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        import numpy as np
+    def kernel(doc_id):
+        frames = []
+        for f in range(_VID_FRAMES):
+            fr = np.empty((_VID_H, _VID_W, 3), np.uint8)
+            fr[:, :, 0] = (doc_id * 3 + f * 17) % 256
+            fr[:, :, 1] = (doc_id * 5 + f * 29) % 256
+            fr[:, :, 2] = (doc_id * 7 + f * 41) % 256
+            frames.append(fr)
+        for idx, fr in sample_frames(build_avi(frames, fps=25), _VID_EVERY):
+            yield doc_id, idx, fr.shape[1], fr.shape[0], fr.astype(np.int64).sum()
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                frames = []
-                for f in range(_VID_FRAMES):
-                    fr = np.empty((_VID_H, _VID_W, 3), np.uint8)
-                    fr[:, :, 0] = (doc_id * 3 + f * 17) % 256
-                    fr[:, :, 1] = (doc_id * 5 + f * 29) % 256
-                    fr[:, :, 2] = (doc_id * 7 + f * 41) % 256
-                    frames.append(fr)
-                avi = build_avi(frames, fps=25)
-                for idx, fr in sample_frames(avi, _VID_EVERY):
-                    out.append(
-                        (doc_id, idx, fr.shape[1], fr.shape[0], int(fr.astype(np.int64).sum()))
-                    )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "frame_idx", "width", "height", "pix_sum"]
-            ).astype(
-                {"doc_id": "int64", "frame_idx": "int32", "width": "int32", "height": "int32", "pix_sum": "int64"}
-            )
-
-    return (
-        d.select("doc_id")
-        .mapInPandas(fn, "doc_id long, frame_idx int, width int, height int, pix_sum long")
-        .orderBy("doc_id", "frame_idx")
-    )
+    return map_rows(
+        d.select("doc_id"), kernel, "doc_id long, frame_idx int, width int, height int, pix_sum long"
+    ).orderBy("doc_id", "frame_idx")
 
 
 @register(
@@ -2138,39 +1732,23 @@ def mm_video_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-row-independent mapInPandas; no shuffle before
     the final sort."""
-    import pandas as pd
+    import numpy as np
 
     from specialsid_spark.operators.video import build_avi, sample_frames
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        import numpy as np
+    def kernel(doc_id):
+        frames = [
+            np.repeat(_fixture_gray(doc_id, f)[:, :, None], 3, axis=2) for f in range(_VID_FRAMES)
+        ]
+        avi = build_avi(frames, fps=25, codec="MJPG", quality=100)
+        for idx, fr in sample_frames(avi, _VID_EVERY):
+            yield doc_id, idx, fr.shape[1], fr.shape[0], fr.astype(np.int64).sum()
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                frames = [
-                    np.repeat(_fixture_gray(doc_id, f)[:, :, None], 3, axis=2)
-                    for f in range(_VID_FRAMES)
-                ]
-                avi = build_avi(frames, fps=25, codec="MJPG", quality=100)
-                for idx, fr in sample_frames(avi, _VID_EVERY):
-                    out.append(
-                        (doc_id, idx, fr.shape[1], fr.shape[0], int(fr.astype(np.int64).sum()))
-                    )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "frame_idx", "width", "height", "pix_sum"]
-            ).astype(
-                {"doc_id": "int64", "frame_idx": "int32", "width": "int32", "height": "int32", "pix_sum": "int64"}
-            )
-
-    return (
-        d.select("doc_id")
-        .mapInPandas(fn, "doc_id long, frame_idx int, width int, height int, pix_sum long")
-        .orderBy("doc_id", "frame_idx")
-    )
+    return map_rows(
+        d.select("doc_id"), kernel, "doc_id long, frame_idx int, width int, height int, pix_sum long"
+    ).orderBy("doc_id", "frame_idx")
 
 
 _ADPCM_NIBS = 128  # nibbles per fixture block -> 129 decoded samples
@@ -2236,50 +1814,33 @@ def mm_wav_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-row-independent mapInPandas; no shuffle before
     the final sort."""
-    import pandas as pd
+    import struct
+
+    import numpy as np
 
     from specialsid_spark.operators.audio import decode_wav
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        import struct
+    def kernel(doc_id):
+        pred0 = (doc_id * 97) % 2048 - 1024
+        nibs = [(doc_id * 7 + k * 3) % 16 for k in range(_ADPCM_NIBS)]
+        body = bytearray(struct.pack("<hBB", pred0, doc_id % 89, 0))
+        for a, b in zip(nibs[0::2], nibs[1::2]):
+            body.append(a | (b << 4))
+        block = bytes(body)
+        fmt = struct.pack("<HHIIHHHH", 0x11, 1, 8000, 4000, len(block), 4, 2, _ADPCM_NIBS + 1)
+        wav = (
+            b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(block)) + b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(block)) + block
+        )
+        s = decode_wav(wav)[2].reshape(-1).astype(np.int64)
+        yield doc_id, len(s), np.abs(s).sum(), s[-1]
 
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                pred0 = (doc_id * 97) % 2048 - 1024
-                idx0 = doc_id % 89
-                nibs = [(doc_id * 7 + k * 3) % 16 for k in range(_ADPCM_NIBS)]
-                body = bytearray(struct.pack("<hBB", pred0, idx0, 0))
-                for a, b in zip(nibs[0::2], nibs[1::2]):
-                    body.append(a | (b << 4))
-                block = bytes(body)
-                fmt = struct.pack(
-                    "<HHIIHHHH", 0x11, 1, 8000, 4000, len(block), 4, 2, _ADPCM_NIBS + 1
-                )
-                wav = (
-                    b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(block)) + b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(block)) + block
-                )
-                _rate, _nch, samples = decode_wav(wav)
-                s = samples.reshape(-1).astype(np.int64)
-                out.append((doc_id, len(s), int(np.abs(s).sum()), int(s[-1])))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "n_samples", "sum_abs", "final_pred"]
-            ).astype(
-                {"doc_id": "int64", "n_samples": "int32", "sum_abs": "int64", "final_pred": "int32"}
-            )
-
-    return (
-        d.select("doc_id")
-        .mapInPandas(fn, "doc_id long, n_samples int, sum_abs long, final_pred int")
-        .orderBy("doc_id")
-    )
+    return map_rows(
+        d.select("doc_id"), kernel, "doc_id long, n_samples int, sum_abs long, final_pred int"
+    ).orderBy("doc_id")
 
 
 @register(
@@ -2345,56 +1906,25 @@ def mm_jpeg12_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas over the doc-id spine, fixtures generated in executors,
     no shuffle before the final sort."""
     import numpy as np
-    import pandas as pd
 
     from specialsid_spark.operators.jpeg12 import decode_jpeg12, encode_jpeg12
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                vals = np.array(
-                    [(doc_id * 173 + bi * 521) % 4096 for bi in range(12)]
-                ).reshape(3, 4)
-                img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1).astype("<u2")
-                jb = encode_jpeg12(
-                    _J12_W, _J12_H, img.tobytes(), quality=100, restart_interval=2
-                )
-                w, h, samples = decode_jpeg12(jb)
-                dec = np.frombuffer(samples, dtype="<u2").reshape(h, w)
-                out.append(
-                    (
-                        doc_id,
-                        w,
-                        h,
-                        int(dec.astype(np.int64).sum()),
-                        int(vals.min()),
-                        int(vals.max()),
-                        int((dec != img).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "width", "height", "sample_sum",
-                    "min_block", "max_block", "n_mismatch",
-                ],
-            ).astype(
-                {
-                    "doc_id": "int64", "width": "int32", "height": "int32",
-                    "sample_sum": "int64", "min_block": "int64",
-                    "max_block": "int64", "n_mismatch": "int64",
-                }
-            )
+    def kernel(doc_id):
+        vals = np.array([(doc_id * 173 + bi * 521) % 4096 for bi in range(12)]).reshape(3, 4)
+        img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1).astype("<u2")
+        jb = encode_jpeg12(_J12_W, _J12_H, img.tobytes(), quality=100, restart_interval=2)
+        w, h, samples = decode_jpeg12(jb)
+        dec = np.frombuffer(samples, dtype="<u2").reshape(h, w)
+        yield (doc_id, w, h, dec.astype(np.int64).sum(), vals.min(), vals.max(),
+               (dec != img).sum())
 
     schema = (
         "doc_id long, width int, height int, sample_sum long, "
         "min_block long, max_block long, n_mismatch long"
     )
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 _PAT_W, _PAT_H, _PATCH = 48, 32, 16  # 6x4 blocks -> 3x2 patches
@@ -2434,47 +1964,27 @@ def mm_image_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same shape as the codec family: per-row-independent mapInPandas,
     no shuffle before the final sort."""
     import numpy as np
-    import pandas as pd
 
     from specialsid_spark.operators.jpeg import decode_jpeg, encode_jpeg
     from specialsid_spark.operators.multimodal import image_patches
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                yy, xx = np.mgrid[0:_PAT_H, 0:_PAT_W]
-                img = ((doc_id * 31 + (yy // 8) * 7 + (xx // 8) * 13) % 256).astype(
-                    np.uint8
-                )
-                jb = encode_jpeg(_PAT_W, _PAT_H, 1, img.tobytes(), quality=100)
-                w, h, ch, px = decode_jpeg(jb)
-                for pr, pc, s, q in image_patches(w, h, ch, px, _PATCH):
-                    # 64 pixels per 8x8 block: pull stats back to the
-                    # 4-block lattice for the exact variance form
-                    s4, q4 = s // 64, q // 64
-                    out.append((doc_id, pr, pc, s, q, 4 * q4 - s4 * s4))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "patch_row", "patch_col",
-                    "pix_sum", "pix_sq_sum", "ivar16",
-                ],
-            ).astype(
-                {
-                    "doc_id": "int64", "patch_row": "int32", "patch_col": "int32",
-                    "pix_sum": "int64", "pix_sq_sum": "int64", "ivar16": "int64",
-                }
-            )
+    def kernel(doc_id):
+        yy, xx = np.mgrid[0:_PAT_H, 0:_PAT_W]
+        img = ((doc_id * 31 + (yy // 8) * 7 + (xx // 8) * 13) % 256).astype(np.uint8)
+        w, h, ch, px = decode_jpeg(encode_jpeg(_PAT_W, _PAT_H, 1, img.tobytes(), quality=100))
+        for pr, pc, s, q in image_patches(w, h, ch, px, _PATCH):
+            # 64 pixels per 8x8 block: pull stats back to the
+            # 4-block lattice for the exact variance form
+            s4, q4 = s // 64, q // 64
+            yield doc_id, pr, pc, s, q, 4 * q4 - s4 * s4
 
     schema = (
         "doc_id long, patch_row int, patch_col int, "
         "pix_sum long, pix_sq_sum long, ivar16 long"
     )
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy(
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy(
         "doc_id", "patch_row", "patch_col"
     )
 
@@ -2532,7 +2042,7 @@ def mm_wav_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame) rows (island = frame_no - row_number per doc), the same SQL
     both engines execute — at 100 TB of audio the frame table is the
     shuffle payload (2 ints + 1 long per frame), never the samples."""
-    import pandas as pd
+    import numpy as np
 
     from specialsid_spark.operators.audio import (
         decode_wav,
@@ -2543,27 +2053,15 @@ def mm_wav_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        import numpy as np
+    def kernel(doc_id):
+        k = np.arange(_VAD_N, dtype=np.int64)
+        active = (doc_id + k // 256) % 3 != 0
+        samples = np.where(active, ((doc_id * 7 + k * 13) % 4096) - 2048, (k % 16) - 8)
+        _rate, _nch, dec = decode_wav(encode_wav(16000, samples))
+        for fno, e in enumerate(frame_energy(dec[:, 0], 256)):
+            yield doc_id, fno, e
 
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                k = np.arange(_VAD_N, dtype=np.int64)
-                active = (doc_id + k // 256) % 3 != 0
-                ramp = ((doc_id * 7 + k * 13) % 4096) - 2048
-                quiet = (k % 16) - 8
-                samples = np.where(active, ramp, quiet)
-                wav = encode_wav(16000, samples)
-                _rate, _nch, dec = decode_wav(wav)
-                for fno, e in enumerate(frame_energy(dec[:, 0], 256)):
-                    out.append((doc_id, fno, e))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "frame_no", "energy"]
-            ).astype({"doc_id": "int64", "frame_no": "int32", "energy": "int64"})
-
-    fe = d.select("doc_id").mapInPandas(fn, "doc_id long, frame_no int, energy long")
+    fe = map_rows(d.select("doc_id"), kernel, "doc_id long, frame_no int, energy long")
     act = fe.where(F.col("energy") > _VAD_THRESH).withColumn(
         "island",
         F.col("frame_no")
@@ -2646,8 +2144,6 @@ def mm_mp1_subband_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-row-independent mapInPandas; no shuffle before
     the final sort."""
-    import pandas as pd
-
     from specialsid_spark.operators.mp1 import (
         decode_mp1_frames,
         encode_mp1_frame,
@@ -2656,61 +2152,35 @@ def mm_mp1_subband_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                alloc = [
-                    0 if (doc_id + sb) % 5 == 0 else 1 + (doc_id * 3 + sb) % 8
-                    for sb in range(32)
-                ]
-                sfi = [3 * ((doc_id * 2 + sb) % 21) for sb in range(32)]
-                codes = [
-                    [
-                        (doc_id * 131 + (sb + 1) * (s + 7) * 97)
-                        % ((1 << (alloc[sb] + 1)) - 1)
-                        if alloc[sb]
-                        else 0
-                        for s in range(12)
-                    ]
-                    for sb in range(32)
-                ]
-                blob = encode_mp1_frame(448, 32000, alloc, sfi, codes)
-                _rate, _br, frames = decode_mp1_frames(blob)
-                fr = frames[0]
-                for sb in range(32):
-                    a = fr["alloc"][sb]
-                    if not a:
-                        continue
-                    nb = a + 1
-                    cs = fr["codes"][sb]
-                    num_sum = sum(2 * c + 2 - (1 << nb) for c in cs)
-                    micro0 = mp1_requantize_micro(cs[0], a, fr["sf_idx"][sb])
-                    out.append(
-                        (doc_id, sb, nb, fr["sf_idx"][sb], num_sum, micro0)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "subband", "nb", "sf_idx", "num_sum", "micro0",
-                ],
-            ).astype(
-                {
-                    "doc_id": "int64", "subband": "int32", "nb": "int32",
-                    "sf_idx": "int32", "num_sum": "int64", "micro0": "int64",
-                }
-            )
+    def kernel(doc_id):
+        alloc = [0 if (doc_id + sb) % 5 == 0 else 1 + (doc_id * 3 + sb) % 8 for sb in range(32)]
+        sfi = [3 * ((doc_id * 2 + sb) % 21) for sb in range(32)]
+        codes = [
+            [
+                (doc_id * 131 + (sb + 1) * (s + 7) * 97) % ((1 << (alloc[sb] + 1)) - 1)
+                if alloc[sb]
+                else 0
+                for s in range(12)
+            ]
+            for sb in range(32)
+        ]
+        _rate, _br, frames = decode_mp1_frames(encode_mp1_frame(448, 32000, alloc, sfi, codes))
+        fr = frames[0]
+        for sb in range(32):
+            a = fr["alloc"][sb]
+            if not a:
+                continue
+            nb = a + 1
+            cs = fr["codes"][sb]
+            num_sum = sum(2 * c + 2 - (1 << nb) for c in cs)
+            micro0 = mp1_requantize_micro(cs[0], a, fr["sf_idx"][sb])
+            yield doc_id, sb, nb, fr["sf_idx"][sb], num_sum, micro0
 
     schema = (
         "doc_id long, subband int, nb int, sf_idx int, "
         "num_sum long, micro0 long"
     )
-    return (
-        d.select("doc_id")
-        .mapInPandas(fn, schema)
-        .orderBy("doc_id", "subband")
-    )
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id", "subband")
 
 
 @register(
@@ -2747,56 +2217,25 @@ def mm_pnm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to every codec query — one mapInPandas over
     a doc-id spine, per-row independent, no shuffle before the sort."""
     import numpy as np
-    import pandas as pd
 
     from specialsid_spark.operators.multimodal import decode_image
     from specialsid_spark.operators.pnm import encode_pnm
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                yy, xx = np.mgrid[0:_IMG_H, 0:_IMG_W]
-                chans = [
-                    ((doc_id * 31 + c * 17 + (yy // 8) * 7 + (xx // 8) * 13) % 256).astype(
-                        np.uint8
-                    )
-                    for c in range(3)
-                ]
-                px = np.stack(chans, axis=-1).tobytes()
-                blob = encode_pnm(_IMG_W, _IMG_H, 3, px)
-                w, h, ch, back = decode_image(blob)
-                arr = np.frombuffer(back, dtype=np.uint8).reshape(h, w, ch)
-                out.append(
-                    (
-                        doc_id,
-                        w,
-                        h,
-                        ch,
-                        int(arr[:, :, 0].sum()),
-                        int(arr[:, :, 1].sum()),
-                        int(arr[:, :, 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "w", "h", "ch", "sum_r", "sum_g", "sum_b"]
-            ).astype(
-                {
-                    "doc_id": "int64",
-                    "w": "int32",
-                    "h": "int32",
-                    "ch": "int32",
-                    "sum_r": "int64",
-                    "sum_g": "int64",
-                    "sum_b": "int64",
-                }
-            )
+    def kernel(doc_id):
+        yy, xx = np.mgrid[0:_IMG_H, 0:_IMG_W]
+        chans = [
+            ((doc_id * 31 + c * 17 + (yy // 8) * 7 + (xx // 8) * 13) % 256).astype(np.uint8)
+            for c in range(3)
+        ]
+        blob = encode_pnm(_IMG_W, _IMG_H, 3, np.stack(chans, axis=-1).tobytes())
+        w, h, ch, back = decode_image(blob)
+        arr = np.frombuffer(back, dtype=np.uint8).reshape(h, w, ch)
+        yield doc_id, w, h, ch, *(int(arr[:, :, c].sum()) for c in range(3))
 
     schema = "doc_id long, w int, h int, ch int, sum_r long, sum_g long, sum_b long"
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -2847,60 +2286,51 @@ def mm_tiff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to every codec query — one mapInPandas over
     a doc-id spine, per-row independent, no shuffle before the sort."""
     import numpy as np
-    import pandas as pd
 
     from specialsid_spark.operators.multimodal import decode_image
     from specialsid_spark.operators.tiff import build_tiff
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                yy, xx = np.mgrid[0:_IMG_H, 0:_IMG_W]
-                chans = [
-                    ((doc_id * 29 + c * 19 + (yy // 4) * 5 + xx * 3) % 256).astype(
-                        np.uint8
-                    )
-                    for c in range(3)
-                ]
-                px = np.stack(chans, axis=-1).tobytes()
-                be = doc_id % 2 == 1
-                pb = build_tiff(
-                    _IMG_W, _IMG_H, 3, px, "packbits", be, rows_per_strip=6
-                )
-                lz = build_tiff(
-                    _IMG_W, _IMG_H, 3, px, "lzw", be, rows_per_strip=6, predictor=2
-                )
-                w, h, ch, back_pb = decode_image(pb)
-                _w2, _h2, _c2, back_lz = decode_image(lz)
-                ok = back_pb == back_lz == px
-                arr = np.frombuffer(back_lz, dtype=np.uint8).reshape(h, w, ch)
-                sums = [int(arr[:, :, c].sum()) if ok else -1 for c in range(3)]
-                out.append(
-                    (doc_id, "MM" if be else "II", w, h, ch, *sums)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "byte_order", "w", "h", "ch",
-                    "sum_r", "sum_g", "sum_b",
-                ],
-            ).astype(
-                {
-                    "doc_id": "int64", "w": "int32", "h": "int32",
-                    "ch": "int32", "sum_r": "int64", "sum_g": "int64",
-                    "sum_b": "int64",
-                }
-            )
+    def kernel(doc_id):
+        yy, xx = np.mgrid[0:_IMG_H, 0:_IMG_W]
+        chans = [
+            ((doc_id * 29 + c * 19 + (yy // 4) * 5 + xx * 3) % 256).astype(np.uint8)
+            for c in range(3)
+        ]
+        px = np.stack(chans, axis=-1).tobytes()
+        be = doc_id % 2 == 1
+        pb = build_tiff(_IMG_W, _IMG_H, 3, px, "packbits", be, rows_per_strip=6)
+        lz = build_tiff(_IMG_W, _IMG_H, 3, px, "lzw", be, rows_per_strip=6, predictor=2)
+        w, h, ch, back_pb = decode_image(pb)
+        _w2, _h2, _c2, back_lz = decode_image(lz)
+        ok = back_pb == back_lz == px
+        arr = np.frombuffer(back_lz, dtype=np.uint8).reshape(h, w, ch)
+        yield (doc_id, "MM" if be else "II", w, h, ch,
+               *(int(arr[:, :, c].sum()) if ok else -1 for c in range(3)))
 
     schema = (
         "doc_id long, byte_order string, w int, h int, ch int, "
         "sum_r long, sum_g long, sum_b long"
     )
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
+
+
+def _hamming3_pairs(hashes: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, hamming) for the (doc_id, h0, h1) 64-bit hashes
+    (two 32-bit halves) within Hamming radius 3, by the 4 x 16-bit
+    pigeonhole block join of queries/dedup.py ``_radius3_pairs``."""
+    from specialsid_spark.queries.dedup import _radius3_pairs
+
+    h0, h1 = F.col("h0"), F.col("h1")
+    blocks = hashes.select(
+        "doc_id",
+        (h0 % 65536).alias("blk0"),
+        (h0 / 65536).cast("long").alias("blk1"),
+        (h1 % 65536).alias("blk2"),
+        (h1 / 65536).cast("long").alias("blk3"),
+    )
+    return _radius3_pairs(blocks).select("doc_a", "doc_b", F.col("hamming").cast("int"))
 
 
 @register(
@@ -2973,90 +2403,35 @@ def dedup_image_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate set exactly as dedup_simhash64_radius3_pairs does at
     1e9 docs."""
     import numpy as np
-    import pandas as pd
 
     from specialsid_spark.operators.multimodal import decode_image
     from specialsid_spark.operators.tiff import build_tiff
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                base = doc_id - (doc_id % 2)
-                yy, xx = np.mgrid[0:32, 0:36]
-                a = (
-                    ((base * 31 + xx) * (base % 9 + 2)
-                     + yy * (base % 5 + 1)
-                     + (xx // 4) * (yy // 4) * (base % 7))
-                ) % 256
-                if doc_id % 2:
-                    a = (a + 3 * (((xx + yy) % 13) == 0)) % 256
-                blob = build_tiff(36, 32, 1, a.astype(np.uint8).tobytes(), "lzw")
-                w, h, _ch, px = decode_image(blob)
-                cells = (
-                    np.frombuffer(px, dtype=np.uint8)
-                    .reshape(h, w)
-                    .reshape(8, 4, 9, 4)
-                    .astype(np.int64)
-                    .sum(axis=(1, 3))
-                    // 16
-                )
-                grad = (cells[:, 1:] > cells[:, :-1]).astype(np.int64).ravel()
-                h0 = int((grad[:32] << np.arange(32)).sum())
-                h1 = int((grad[32:] << np.arange(32)).sum())
-                out.append((doc_id, h0, h1))
-            yield pd.DataFrame(out, columns=["doc_id", "h0", "h1"]).astype(
-                {"doc_id": "int64", "h0": "int64", "h1": "int64"}
-            )
+    def kernel(doc_id):
+        base = doc_id - (doc_id % 2)
+        yy, xx = np.mgrid[0:32, 0:36]
+        a = (
+            ((base * 31 + xx) * (base % 9 + 2)
+             + yy * (base % 5 + 1)
+             + (xx // 4) * (yy // 4) * (base % 7))
+        ) % 256
+        if doc_id % 2:
+            a = (a + 3 * (((xx + yy) % 13) == 0)) % 256
+        w, h, _ch, px = decode_image(build_tiff(36, 32, 1, a.astype(np.uint8).tobytes(), "lzw"))
+        cells = (
+            np.frombuffer(px, dtype=np.uint8)
+            .reshape(h, w)
+            .reshape(8, 4, 9, 4)
+            .astype(np.int64)
+            .sum(axis=(1, 3))
+            // 16
+        )
+        grad = (cells[:, 1:] > cells[:, :-1]).astype(np.int64).ravel()
+        yield doc_id, (grad[:32] << np.arange(32)).sum(), (grad[32:] << np.arange(32)).sum()
 
-    hashes = (
-        d.select("doc_id")
-        .mapInPandas(fn, "doc_id long, h0 long, h1 long")
-        .localCheckpoint(eager=True)
-    )
-    # pigeonhole block join: 4 x 16-bit blocks, radius 3 -> >=1 equal
-    blocks = hashes.select(
-        "doc_id",
-        "h0",
-        "h1",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("blk"), (F.col("h0") % 65536).alias("bv")),
-                F.struct(
-                    F.lit(1).alias("blk"),
-                    (F.col("h0") / 65536).cast("long").alias("bv"),
-                ),
-                F.struct(F.lit(2).alias("blk"), (F.col("h1") % 65536).alias("bv")),
-                F.struct(
-                    F.lit(3).alias("blk"),
-                    (F.col("h1") / 65536).cast("long").alias("bv"),
-                ),
-            )
-        ).alias("b"),
-    ).select("doc_id", "h0", "h1", F.col("b.blk").alias("blk"), F.col("b.bv").alias("bv"))
-    a, b = blocks.alias("a"), blocks.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (
-                F.bit_count(F.col("a.h0").bitwiseXOR(F.col("b.h0")))
-                + F.bit_count(F.col("a.h1").bitwiseXOR(F.col("b.h1")))
-            ).cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 3)
-        .distinct()
-    )
-    return pairs.orderBy("doc_a", "doc_b")
+    return _hamming3_pairs(map_rows(d.select("doc_id"), kernel, "doc_id long, h0 long, h1 long"))
 
 
 @register(
@@ -3102,7 +2477,6 @@ def mm_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the usual codec-query shape — mapInPandas over a
     doc-id spine, per-row independent, no shuffle before the sort."""
     import numpy as np
-    import pandas as pd
 
     from specialsid_spark.operators.jpeg import encode_jpeg
     from specialsid_spark.operators.media_meta import (
@@ -3113,93 +2487,36 @@ def mm_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                img = np.full((8, 8), (doc_id * 31) % 256, dtype=np.uint8)
-                jpeg = encode_jpeg(8, 8, 1, img.tobytes(), quality=100)
-                app1 = build_exif_app1(
-                    320 + doc_id % 17,
-                    240 + doc_id % 13,
-                    f"Cam{doc_id % 5}",
-                    1 + doc_id % 8,
-                    f"2024:01:{1 + doc_id % 28:02d} 12:00:00",
-                    big_endian=bool(doc_id % 2),
-                    exposure=(1, 60 + doc_id % 200),
-                    fnumber=(28 + doc_id % 40, 10),
-                    iso=100 * (1 + doc_id % 32),
-                    gps=(
-                        "N" if doc_id % 2 == 0 else "S",
-                        [
-                            ((doc_id * 3) % 90, 1),
-                            ((doc_id * 7) % 60, 1),
-                            ((doc_id * 11) % 600, 10),
-                        ],
-                        "E" if doc_id % 3 == 0 else "W",
-                        [
-                            ((doc_id * 5) % 180, 1),
-                            ((doc_id * 13) % 60, 1),
-                            ((doc_id * 17) % 600, 10),
-                        ],
-                    ),
-                )
-                m = parse_exif(insert_app1(jpeg, app1))
-                lat, lon = m["gps_lat"], m["gps_lon"]
-                # deg/min are den-1 rationals: assert and emit the ints
-                assert lat[0][1] == lat[1][1] == lon[0][1] == lon[1][1] == 1
-                out.append(
-                    (
-                        doc_id,
-                        m["byte_order"],
-                        m["width"],
-                        m["height"],
-                        m["orientation"],
-                        m["make"],
-                        m["datetime"],
-                        m["exposure"][0],
-                        m["exposure"][1],
-                        m["fnumber"][0],
-                        m["fnumber"][1],
-                        m["iso"],
-                        m["gps_lat_ref"],
-                        lat[0][0],
-                        lat[1][0],
-                        lat[2][0],
-                        lat[2][1],
-                        m["gps_lon_ref"],
-                        lon[0][0],
-                        lon[1][0],
-                        lon[2][0],
-                        lon[2][1],
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "byte_order", "width", "height",
-                    "orientation", "make", "dt",
-                    "exp_num", "exp_den", "fnum_num", "fnum_den", "iso",
-                    "lat_ref", "lat_deg", "lat_min", "lat_sec_num",
-                    "lat_sec_den", "lon_ref", "lon_deg", "lon_min",
-                    "lon_sec_num", "lon_sec_den",
-                ],
-            ).astype(
-                {
-                    "doc_id": "int64",
-                    "width": "int64",
-                    "height": "int64",
-                    "orientation": "int32",
-                    "exp_num": "int64", "exp_den": "int64",
-                    "fnum_num": "int64", "fnum_den": "int64",
-                    "iso": "int32",
-                    "lat_deg": "int64", "lat_min": "int64",
-                    "lat_sec_num": "int64", "lat_sec_den": "int64",
-                    "lon_deg": "int64", "lon_min": "int64",
-                    "lon_sec_num": "int64", "lon_sec_den": "int64",
-                }
-            )
+    def kernel(doc_id):
+        img = np.full((8, 8), (doc_id * 31) % 256, dtype=np.uint8)
+        jpeg = encode_jpeg(8, 8, 1, img.tobytes(), quality=100)
+        app1 = build_exif_app1(
+            320 + doc_id % 17,
+            240 + doc_id % 13,
+            f"Cam{doc_id % 5}",
+            1 + doc_id % 8,
+            f"2024:01:{1 + doc_id % 28:02d} 12:00:00",
+            big_endian=bool(doc_id % 2),
+            exposure=(1, 60 + doc_id % 200),
+            fnumber=(28 + doc_id % 40, 10),
+            iso=100 * (1 + doc_id % 32),
+            gps=(
+                "N" if doc_id % 2 == 0 else "S",
+                [((doc_id * 3) % 90, 1), ((doc_id * 7) % 60, 1), ((doc_id * 11) % 600, 10)],
+                "E" if doc_id % 3 == 0 else "W",
+                [((doc_id * 5) % 180, 1), ((doc_id * 13) % 60, 1), ((doc_id * 17) % 600, 10)],
+            ),
+        )
+        m = parse_exif(insert_app1(jpeg, app1))
+        lat, lon = m["gps_lat"], m["gps_lon"]
+        # deg/min are den-1 rationals: assert and emit the ints
+        assert lat[0][1] == lat[1][1] == lon[0][1] == lon[1][1] == 1
+        yield (
+            doc_id, m["byte_order"], m["width"], m["height"], m["orientation"],
+            m["make"], m["datetime"], *m["exposure"], *m["fnumber"], m["iso"],
+            m["gps_lat_ref"], lat[0][0], lat[1][0], *lat[2],
+            m["gps_lon_ref"], lon[0][0], lon[1][0], *lon[2],
+        )
 
     schema = (
         "doc_id long, byte_order string, width long, height long, "
@@ -3209,7 +2526,7 @@ def mm_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lat_sec_num long, lat_sec_den long, lon_ref string, "
         "lon_deg long, lon_min long, lon_sec_num long, lon_sec_den long"
     )
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -3267,7 +2584,6 @@ def mm_image_convolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort; at 100 TB these are the cheap per-image map features that
     gate which images deserve expensive model inference."""
     import numpy as np
-    import pandas as pd
 
     from specialsid_spark.operators.multimodal import decode_image
     from specialsid_spark.operators.pnm import encode_pnm
@@ -3275,32 +2591,22 @@ def mm_image_convolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
     W, H = 20, 16
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                yy, xx = np.mgrid[0:H, 0:W]
-                a = (
-                    (doc_id * 23 + xx * (doc_id % 7 + 3) + yy * 7 + (xx * yy) % 11)
-                    % 256
-                ).astype(np.uint8)
-                _w, _h, _c, px = decode_image(encode_pnm(W, H, 1, a.tobytes()))
-                a = np.frombuffer(px, dtype=np.uint8).reshape(H, W).astype(np.int64)
-                s = sum(
-                    a[1 + dy : H - 1 + dy, 1 + dx : W - 1 + dx]
-                    for dy in (-1, 0, 1)
-                    for dx in (-1, 0, 1)
-                )
-                blur = (s // 9).sum()
-                grad = np.abs(a[1 : H - 1, 2:] - a[1 : H - 1, : W - 2]).sum()
-                out.append((doc_id, int(blur), int(grad)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "blur_sum", "grad_sum"]
-            ).astype({"doc_id": "int64", "blur_sum": "int64", "grad_sum": "int64"})
+    def kernel(doc_id):
+        yy, xx = np.mgrid[0:H, 0:W]
+        a = (
+            (doc_id * 23 + xx * (doc_id % 7 + 3) + yy * 7 + (xx * yy) % 11) % 256
+        ).astype(np.uint8)
+        _w, _h, _c, px = decode_image(encode_pnm(W, H, 1, a.tobytes()))
+        a = np.frombuffer(px, dtype=np.uint8).reshape(H, W).astype(np.int64)
+        s = sum(
+            a[1 + dy : H - 1 + dy, 1 + dx : W - 1 + dx]
+            for dy in (-1, 0, 1)
+            for dx in (-1, 0, 1)
+        )
+        yield doc_id, (s // 9).sum(), np.abs(a[1 : H - 1, 2:] - a[1 : H - 1, : W - 2]).sum()
 
     schema = "doc_id long, blur_sum long, grad_sum long"
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -3339,7 +2645,7 @@ def mm_wav_decimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the codec-query convention — per-doc independent
     mapInPandas, no shuffle before the sort."""
-    import pandas as pd
+    import numpy as np
 
     from specialsid_spark.operators.audio import (
         decimate_box,
@@ -3349,39 +2655,15 @@ def mm_wav_decimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                k = np.arange(_WAV_N, dtype=np.int64)
-                samples = ((doc_id * 7 + k * 13) % 4096) - 2048
-                blob = encode_wav(16000, samples.astype(np.int16))
-                _rate, _nch, back = decode_wav(blob)
-                dec = decimate_box(back, 4)
-                out.append(
-                    (
-                        doc_id,
-                        int(dec.shape[0]),
-                        int(dec.sum()),
-                        int((dec * dec).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "n_out", "dec_sum", "dec_energy"]
-            ).astype(
-                {
-                    "doc_id": "int64",
-                    "n_out": "int32",
-                    "dec_sum": "int64",
-                    "dec_energy": "int64",
-                }
-            )
+    def kernel(doc_id):
+        k = np.arange(_WAV_N, dtype=np.int64)
+        samples = ((doc_id * 7 + k * 13) % 4096) - 2048
+        _rate, _nch, back = decode_wav(encode_wav(16000, samples.astype(np.int16)))
+        dec = decimate_box(back, 4)
+        yield doc_id, dec.shape[0], dec.sum(), (dec * dec).sum()
 
     schema = "doc_id long, n_out int, dec_sum long, dec_energy long"
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -3479,7 +2761,6 @@ def dedup_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dHash/SimHash — 4 rows of ~10 bytes per image, radius-3 recall
     guaranteed by the pigeonhole principle, never an all-pairs join."""
     import numpy as np
-    import pandas as pd
 
     from specialsid_spark.operators.multimodal import decode_image
     from specialsid_spark.operators.phash import phash64
@@ -3487,76 +2768,21 @@ def dedup_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                base = doc_id - (doc_id % 2)
-                yy, xx = np.mgrid[0:32, 0:32]
-                a = (
-                    6 + base % 37
-                    + (xx * (base % 5 + 1)) // 4
-                    + (yy * (base % 3 + 1)) // 4
-                    + ((xx * (3 + base % 13) + yy * (5 + base % 11)) % 64) * 2
-                )
-                if doc_id % 2:
-                    a = a + 2 * ((xx + yy) % 2)
-                blob = build_tiff(32, 32, 1, a.astype(np.uint8).tobytes(), "packbits")
-                w, h, _ch, px = decode_image(blob)
-                arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w)
-                h0, h1 = phash64(arr)
-                out.append((doc_id, h0, h1))
-            yield pd.DataFrame(out, columns=["doc_id", "h0", "h1"]).astype(
-                {"doc_id": "int64", "h0": "int64", "h1": "int64"}
-            )
+    def kernel(doc_id):
+        base = doc_id - (doc_id % 2)
+        yy, xx = np.mgrid[0:32, 0:32]
+        a = (
+            6 + base % 37
+            + (xx * (base % 5 + 1)) // 4
+            + (yy * (base % 3 + 1)) // 4
+            + ((xx * (3 + base % 13) + yy * (5 + base % 11)) % 64) * 2
+        )
+        if doc_id % 2:
+            a = a + 2 * ((xx + yy) % 2)
+        w, h, _ch, px = decode_image(build_tiff(32, 32, 1, a.astype(np.uint8).tobytes(), "packbits"))
+        yield doc_id, *phash64(np.frombuffer(px, dtype=np.uint8).reshape(h, w))
 
-    hashes = (
-        d.select("doc_id")
-        .mapInPandas(fn, "doc_id long, h0 long, h1 long")
-        .localCheckpoint(eager=True)
-    )
-    blocks = hashes.select(
-        "doc_id",
-        "h0",
-        "h1",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("blk"), (F.col("h0") % 65536).alias("bv")),
-                F.struct(
-                    F.lit(1).alias("blk"),
-                    (F.col("h0") / 65536).cast("long").alias("bv"),
-                ),
-                F.struct(F.lit(2).alias("blk"), (F.col("h1") % 65536).alias("bv")),
-                F.struct(
-                    F.lit(3).alias("blk"),
-                    (F.col("h1") / 65536).cast("long").alias("bv"),
-                ),
-            )
-        ).alias("b"),
-    ).select(
-        "doc_id", "h0", "h1", F.col("b.blk").alias("blk"), F.col("b.bv").alias("bv")
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (
-                F.bit_count(F.col("a.h0").bitwiseXOR(F.col("b.h0")))
-                + F.bit_count(F.col("a.h1").bitwiseXOR(F.col("b.h1")))
-            ).cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 3)
-        .distinct()
-    )
-    return pairs.orderBy("doc_a", "doc_b")
+    return _hamming3_pairs(map_rows(d.select("doc_id"), kernel, "doc_id long, h0 long, h1 long"))
 
 
 # ---------------------------------------------------------------------------
@@ -3646,89 +2872,32 @@ def dedup_audio_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
     SimHash/dHash/pHash — radius-3 recall by pigeonhole, 4 tiny rows
     per clip, never all-pairs."""
     import numpy as np
-    import pandas as pd
 
     from specialsid_spark.operators.audio import decode_wav, encode_wav
     from specialsid_spark.operators.phash import DCT_TABLE
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
+    K = np.asarray(DCT_TABLE, dtype=np.int64)
 
-    def fn(batches):
-        K = np.asarray(DCT_TABLE, dtype=np.int64)
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                base = doc_id - (doc_id % 2)
-                t = np.arange(288)
-                f = t // 32
-                k1 = 2 + (base * (f + 1)) % 15
-                k2 = 1 + (base * 3 + f * 7) % 9
-                x = (
-                    ((t * k1) % 64) * (25 + base % 9)
-                    + ((t * k2 + base % 23) % 32) * (15 + base % 13)
-                    - 2200
-                )
-                if doc_id % 2:
-                    x = x + 3 * (1 - 2 * (t % 2))
-                blob = encode_wav(16000, x.astype(np.int16))
-                _rate, _nch, samples = decode_wav(blob)
-                frames = samples.astype(np.int64).reshape(9, 32)
-                D = frames @ K.T
-                bits = (D[1:] > D[:-1]).astype(np.int64).ravel()
-                h0 = int((bits[:32] << np.arange(32)).sum())
-                h1 = int((bits[32:] << np.arange(32)).sum())
-                out.append((doc_id, h0, h1))
-            yield pd.DataFrame(out, columns=["doc_id", "h0", "h1"]).astype(
-                {"doc_id": "int64", "h0": "int64", "h1": "int64"}
-            )
+    def kernel(doc_id):
+        base = doc_id - (doc_id % 2)
+        t = np.arange(288)
+        f = t // 32
+        k1 = 2 + (base * (f + 1)) % 15
+        k2 = 1 + (base * 3 + f * 7) % 9
+        x = (
+            ((t * k1) % 64) * (25 + base % 9)
+            + ((t * k2 + base % 23) % 32) * (15 + base % 13)
+            - 2200
+        )
+        if doc_id % 2:
+            x = x + 3 * (1 - 2 * (t % 2))
+        _rate, _nch, samples = decode_wav(encode_wav(16000, x.astype(np.int16)))
+        D = samples.astype(np.int64).reshape(9, 32) @ K.T
+        bits = (D[1:] > D[:-1]).astype(np.int64).ravel()
+        yield doc_id, (bits[:32] << np.arange(32)).sum(), (bits[32:] << np.arange(32)).sum()
 
-    hashes = (
-        d.select("doc_id")
-        .mapInPandas(fn, "doc_id long, h0 long, h1 long")
-        .localCheckpoint(eager=True)
-    )
-    blocks = hashes.select(
-        "doc_id",
-        "h0",
-        "h1",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("blk"), (F.col("h0") % 65536).alias("bv")),
-                F.struct(
-                    F.lit(1).alias("blk"),
-                    (F.col("h0") / 65536).cast("long").alias("bv"),
-                ),
-                F.struct(F.lit(2).alias("blk"), (F.col("h1") % 65536).alias("bv")),
-                F.struct(
-                    F.lit(3).alias("blk"),
-                    (F.col("h1") / 65536).cast("long").alias("bv"),
-                ),
-            )
-        ).alias("b"),
-    ).select(
-        "doc_id", "h0", "h1", F.col("b.blk").alias("blk"), F.col("b.bv").alias("bv")
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (
-                F.bit_count(F.col("a.h0").bitwiseXOR(F.col("b.h0")))
-                + F.bit_count(F.col("a.h1").bitwiseXOR(F.col("b.h1")))
-            ).cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 3)
-        .distinct()
-    )
-    return pairs.orderBy("doc_a", "doc_b")
+    return _hamming3_pairs(map_rows(d.select("doc_id"), kernel, "doc_id long, h0 long, h1 long"))
 
 
 @register(
@@ -3776,43 +2945,27 @@ def mm_jpeg_cmyk_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one mapInPandas over a doc-id spine, per-row
     independent encode/decode, no shuffle before the final sort."""
     import numpy as np
-    import pandas as pd
 
     from specialsid_spark.operators.jpeg import decode_jpeg, encode_jpeg
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                img = np.zeros((_IMG_H, _IMG_W, 4), dtype=np.uint8)
-                for by in range(_IMG_H // 8):
-                    for bx in range(_IMG_W // 8):
-                        img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                            (doc_id * 31 + by * 7 + bx * 13) % 256,
-                            (doc_id * 17 + by * 11 + bx * 3) % 256,
-                            (doc_id * 23 + by * 5 + bx * 19) % 256,
-                            (doc_id * 13 + by * 3 + bx * 29) % 128,
-                        )
-                jb = encode_jpeg(_IMG_W, _IMG_H, 4, img.tobytes(), quality=100)
-                w, h, ch, px = decode_jpeg(jb)
-                rgb = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
-                out.append(
-                    (
-                        doc_id,
-                        int(rgb[..., 0].sum()),
-                        int(rgb[..., 1].sum()),
-                        int(rgb[..., 2].sum()),
-                    )
+    def kernel(doc_id):
+        img = np.zeros((_IMG_H, _IMG_W, 4), dtype=np.uint8)
+        for by in range(_IMG_H // 8):
+            for bx in range(_IMG_W // 8):
+                img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
+                    (doc_id * 31 + by * 7 + bx * 13) % 256,
+                    (doc_id * 17 + by * 11 + bx * 3) % 256,
+                    (doc_id * 23 + by * 5 + bx * 19) % 256,
+                    (doc_id * 13 + by * 3 + bx * 29) % 128,
                 )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "r_sum", "g_sum", "b_sum"]
-            ).astype("int64")
+        w, h, ch, px = decode_jpeg(encode_jpeg(_IMG_W, _IMG_H, 4, img.tobytes(), quality=100))
+        rgb = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
+        yield doc_id, *(int(rgb[..., c].sum()) for c in range(3))
 
     schema = "doc_id long, r_sum long, g_sum long, b_sum long"
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 # resize target: 32x24 -> 20x15 (tenths-exact: 5*32 % 20 == 0,
@@ -3877,47 +3030,19 @@ def mm_image_resize_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle) — the 100 TB vision-resize pass is embarrassingly
     parallel."""
     import numpy as np
-    import pandas as pd
 
     from specialsid_spark.operators.multimodal import resize_bilinear_fp10
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
+    pos = (np.arange(_RZ_H)[:, None] * _RZ_W + np.arange(_RZ_W)[None, :]) % 997
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                img = np.asarray(
-                    _fixture_gray(doc_id, 0), dtype=np.uint8
-                ).reshape(_IMG_H, _IMG_W, 1)
-                r = resize_bilinear_fp10(img, _RZ_W, _RZ_H).astype(np.int64)
-                pos = (
-                    np.arange(_RZ_H)[:, None] * _RZ_W + np.arange(_RZ_W)[None, :]
-                ) % 997
-                out.append(
-                    (
-                        doc_id,
-                        _RZ_W,
-                        _RZ_H,
-                        int(r.sum()),
-                        int((r[..., 0] * pos).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "out_w", "out_h", "pix_sum", "pos_ck"]
-            ).astype(
-                {
-                    "doc_id": "int64",
-                    "out_w": "int32",
-                    "out_h": "int32",
-                    "pix_sum": "int64",
-                    "pos_ck": "int64",
-                }
-            )
+    def kernel(doc_id):
+        img = np.asarray(_fixture_gray(doc_id, 0), dtype=np.uint8).reshape(_IMG_H, _IMG_W, 1)
+        r = resize_bilinear_fp10(img, _RZ_W, _RZ_H).astype(np.int64)
+        yield doc_id, _RZ_W, _RZ_H, r.sum(), (r[..., 0] * pos).sum()
 
     schema = "doc_id long, out_w int, out_h int, pix_sum long, pos_ck long"
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -4003,53 +3128,22 @@ def mm_pdf_cff_text_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     both formats still degrade to the r8 glyph-box model.
 
     Scale shape: per-row independent mapInPandas (the font parses once
-    per glyph cache); buffer bounded by page size, never the corpus."""
-    import numpy as np
-    import pandas as pd
-
-    from specialsid_spark.operators.pdfraster import (
-        build_cff_pdf,
-        rasterize_page,
-    )
+    per page render); buffer bounded by page size, never the corpus."""
+    from specialsid_spark.operators.pdfraster import build_cff_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 3 + doc_id % 4
-                text = "".join("LOCH"[(doc_id + k) % 4] for k in range(n))
-                r = rasterize_page(build_cff_pdf(text))
-                if r is None:  # degrade surfaces as an impossible row
-                    out.append((doc_id, -1, -1, -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                buf = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
-                gray = buf[:, :, 0]
-                out.append(
-                    (doc_id, w, h, n,
-                     int((gray != 255).sum()),
-                     int(gray.astype(np.int64).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "n_chars",
-                         "ink_px", "gray_sum"],
-            ).astype({"doc_id": "int64", "width": "int32", "height": "int32",
-                      "n_chars": "int32", "ink_px": "int64",
-                      "gray_sum": "int64"})
+    def kernel(doc_id):
+        n = 3 + doc_id % 4
+        gray = _page_gray(build_cff_pdf("".join("LOCH"[(doc_id + k) % 4] for k in range(n))))
+        if gray is None:  # degrade surfaces as an impossible row
+            yield doc_id, -1, -1, -1, -1, -1
+            return
+        h, w = gray.shape
+        yield doc_id, w, h, n, *_ink(gray)
 
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            fn,
-            "doc_id long, width int, height int, n_chars int,"
-            " ink_px long, gray_sum long",
-        )
-        .orderBy("doc_id")
-    )
+    schema = "doc_id long, width int, height int, n_chars int, ink_px long, gray_sum long"
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -4128,60 +3222,31 @@ def mm_pdf_radial_stitch_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-row independent mapInPandas, no shuffle before
     the final sort."""
-    import numpy as np
-    import pandas as pd
-
-    from specialsid_spark.operators.pdfraster import (
-        build_radial_pdf,
-        rasterize_page,
-    )
+    from specialsid_spark.operators.pdfraster import build_radial_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                stops = (
-                    (30 + (doc_id * 5) % 120) / 255.0,
-                    (220 - doc_id % 40) / 255.0,
-                    (60 + (doc_id * 7) % 100) / 255.0,
-                )
-                blob = build_radial_pdf(
-                    (200, 292, 200, 200), (300, 392, 0, 300, 392, 150),
-                    stops, 0.5,
-                )
-                r = rasterize_page(blob)
-                if r is None:  # degrade surfaces as an impossible row
-                    out.append((doc_id, -1, -1, -1, -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                gray = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)[:, :, 0]
-                region = gray[300:500, 200:400].astype(np.int64)
-                out.append(
-                    (doc_id, w, h,
-                     int((gray != 255).sum()),
-                     int(gray.astype(np.int64).sum()),
-                     int(region.min()), int(region.max()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "ink_px", "gray_sum",
-                         "v_min", "v_max"],
-            ).astype({"doc_id": "int64", "width": "int32", "height": "int32",
-                      "ink_px": "int64", "gray_sum": "int64",
-                      "v_min": "int64", "v_max": "int64"})
-
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            fn,
-            "doc_id long, width int, height int, ink_px long,"
-            " gray_sum long, v_min long, v_max long",
+    def kernel(doc_id):
+        stops = (
+            (30 + (doc_id * 5) % 120) / 255.0,
+            (220 - doc_id % 40) / 255.0,
+            (60 + (doc_id * 7) % 100) / 255.0,
         )
-        .orderBy("doc_id")
+        gray = _page_gray(
+            build_radial_pdf((200, 292, 200, 200), (300, 392, 0, 300, 392, 150), stops, 0.5)
+        )
+        if gray is None:  # degrade surfaces as an impossible row
+            yield doc_id, -1, -1, -1, -1, -1, -1
+            return
+        h, w = gray.shape
+        region = gray[300:500, 200:400]
+        yield doc_id, w, h, *_ink(gray), region.min(), region.max()
+
+    schema = (
+        "doc_id long, width int, height int, ink_px long,"
+        " gray_sum long, v_min long, v_max long"
     )
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -4236,61 +3301,31 @@ def mm_pdf_separation_fill_raster(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale shape: per-row independent mapInPandas, no shuffle before
     the final sort."""
-    import numpy as np
-    import pandas as pd
-
-    from specialsid_spark.operators.pdfraster import (
-        build_separation_pdf,
-        rasterize_page,
-    )
+    from specialsid_spark.operators.pdfraster import build_separation_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
     # disjoint integral rects; areas restated by the oracle
     _RECTS = ((50, 50, 100, 90), (250, 300, 100, 60),
               (400, 500, 120, 80), (80, 650, 60, 80))
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                c0 = (10 + doc_id % 50) / 255.0
-                c1 = (240 - (doc_id * 3) % 60) / 255.0
-                fills = [
-                    (r, ((doc_id + 2 * k) % 8) / 8)
-                    for k, r in enumerate(_RECTS)
-                ]
-                r = rasterize_page(build_separation_pdf(fills, c0, c1))
-                if r is None:  # degrade surfaces as an impossible row
-                    out.append((doc_id, -1, -1, -1, -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                gray = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)[:, :, 0]
-                inked = gray[gray != 255]
-                out.append(
-                    (doc_id, w, h,
-                     int((gray != 255).sum()),
-                     int(gray.astype(np.int64).sum()),
-                     int(inked.min()) if inked.size else -1,
-                     int(inked.max()) if inked.size else -1)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "ink_px", "gray_sum",
-                         "v_min", "v_max"],
-            ).astype({"doc_id": "int64", "width": "int32", "height": "int32",
-                      "ink_px": "int64", "gray_sum": "int64",
-                      "v_min": "int64", "v_max": "int64"})
+    def kernel(doc_id):
+        c0 = (10 + doc_id % 50) / 255.0
+        c1 = (240 - (doc_id * 3) % 60) / 255.0
+        fills = [(r, ((doc_id + 2 * k) % 8) / 8) for k, r in enumerate(_RECTS)]
+        gray = _page_gray(build_separation_pdf(fills, c0, c1))
+        if gray is None:  # degrade surfaces as an impossible row
+            yield doc_id, -1, -1, -1, -1, -1, -1
+            return
+        h, w = gray.shape
+        inked = gray[gray != 255]
+        yield (doc_id, w, h, *_ink(gray),
+               inked.min() if inked.size else -1, inked.max() if inked.size else -1)
 
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            fn,
-            "doc_id long, width int, height int, ink_px long,"
-            " gray_sum long, v_min long, v_max long",
-        )
-        .orderBy("doc_id")
+    schema = (
+        "doc_id long, width int, height int, ink_px long,"
+        " gray_sum long, v_min long, v_max long"
     )
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -4375,54 +3410,27 @@ def mm_pdf_cid_glyph_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-row independent mapInPandas; buffer bounded by
     page size, never the corpus."""
     import numpy as np
-    import pandas as pd
 
-    from specialsid_spark.operators.pdfraster import (
-        build_cid_pdf,
-        rasterize_page,
-    )
+    from specialsid_spark.operators.pdfraster import build_cid_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 3 + doc_id % 4
-                gids = [(doc_id + k) % 4 + 1 for k in range(n)]
-                r = rasterize_page(build_cid_pdf(gids))
-                if r is None:  # degrade surfaces as an impossible row
-                    out.append((doc_id, -1, -1, -1, -1, -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                gray = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)[:, :, 0]
-                cols = np.where((gray != 255).any(axis=0))[0]
-                out.append(
-                    (doc_id, w, h, n,
-                     int((gray != 255).sum()),
-                     int(gray.astype(np.int64).sum()),
-                     int(cols.min()) if cols.size else -1,
-                     int(cols.max()) if cols.size else -1)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "n_chars",
-                         "ink_px", "gray_sum", "col_min", "col_max"],
-            ).astype({"doc_id": "int64", "width": "int32", "height": "int32",
-                      "n_chars": "int32", "ink_px": "int64",
-                      "gray_sum": "int64", "col_min": "int64",
-                      "col_max": "int64"})
+    def kernel(doc_id):
+        n = 3 + doc_id % 4
+        gray = _page_gray(build_cid_pdf([(doc_id + k) % 4 + 1 for k in range(n)]))
+        if gray is None:  # degrade surfaces as an impossible row
+            yield doc_id, -1, -1, -1, -1, -1, -1, -1
+            return
+        h, w = gray.shape
+        cols = np.where((gray != 255).any(axis=0))[0]
+        yield (doc_id, w, h, n, *_ink(gray),
+               cols.min() if cols.size else -1, cols.max() if cols.size else -1)
 
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            fn,
-            "doc_id long, width int, height int, n_chars int,"
-            " ink_px long, gray_sum long, col_min long, col_max long",
-        )
-        .orderBy("doc_id")
+    schema = (
+        "doc_id long, width int, height int, n_chars int,"
+        " ink_px long, gray_sum long, col_min long, col_max long"
     )
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -4464,52 +3472,30 @@ def mm_tiff_g4_scanned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-row independent mapInPandas, state bounded by two
     scanlines; no shuffle before the final sort."""
-    import pandas as pd
-
     from specialsid_spark.operators.tiff import build_tiff, decode_tiff
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
     W, H = 160, 120
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                img = bytes(
-                    0 if (x * 3 + y * 7 + doc_id) % 23 == 0 else 255
-                    for y in range(H)
-                    for x in range(W)
-                )
-                blob = build_tiff(W, H, 1, img, compression="g4")
-                r = decode_tiff(blob)
-                if r is None:  # degrade surfaces as an impossible row
-                    out.append((doc_id, -1, -1, -1, 0, -1))
-                    continue
-                w, h, _ch, px = r
-                out.append(
-                    (doc_id, w, h,
-                     sum(1 for v in px if v == 0),
-                     1 if px == img else 0,
-                     sum(1 for v in px if v == 255))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "n_black",
-                         "roundtrip_ok", "n_white"],
-            ).astype({"doc_id": "int64", "width": "int32", "height": "int32",
-                      "n_black": "int64", "roundtrip_ok": "int64",
-                      "n_white": "int64"})
-
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            fn,
-            "doc_id long, width int, height int, n_black long,"
-            " roundtrip_ok long, n_white long",
+    def kernel(doc_id):
+        img = bytes(
+            0 if (x * 3 + y * 7 + doc_id) % 23 == 0 else 255
+            for y in range(H)
+            for x in range(W)
         )
-        .orderBy("doc_id")
+        r = decode_tiff(build_tiff(W, H, 1, img, compression="g4"))
+        if r is None:  # degrade surfaces as an impossible row
+            yield doc_id, -1, -1, -1, 0, -1
+            return
+        w, h, _ch, px = r
+        yield (doc_id, w, h, sum(1 for v in px if v == 0), 1 if px == img else 0,
+               sum(1 for v in px if v == 255))
+
+    schema = (
+        "doc_id long, width int, height int, n_black long,"
+        " roundtrip_ok long, n_white long"
     )
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -4550,12 +3536,8 @@ def mm_pdf_ccitt_image_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-row independent mapInPandas; two-scanline decoder
     state, page-bounded buffer, no shuffle before the final sort."""
-    import numpy as np
-    import pandas as pd
-
     from specialsid_spark.operators.ccitt import g4_encode
     from specialsid_spark.operators.pdf import _assemble_pdf
-    from specialsid_spark.operators.pdfraster import rasterize_page
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
     W, H = 144, 96
@@ -4598,36 +3580,16 @@ def mm_pdf_ccitt_image_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
         objects[cat - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages
         return _assemble_pdf(objects, cat)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                r = rasterize_page(build(doc_id))
-                if r is None:  # degrade surfaces as an impossible row
-                    out.append((doc_id, -1, -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                gray = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)[:, :, 0]
-                out.append(
-                    (doc_id, w, h,
-                     int((gray != 255).sum()),
-                     int(gray.astype(np.int64).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "n_black", "gray_sum"],
-            ).astype({"doc_id": "int64", "width": "int32", "height": "int32",
-                      "n_black": "int64", "gray_sum": "int64"})
+    def kernel(doc_id):
+        gray = _page_gray(build(doc_id))
+        if gray is None:  # degrade surfaces as an impossible row
+            yield doc_id, -1, -1, -1, -1
+            return
+        h, w = gray.shape
+        yield doc_id, w, h, *_ink(gray)
 
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            fn,
-            "doc_id long, width int, height int, n_black long, gray_sum long",
-        )
-        .orderBy("doc_id")
-    )
+    schema = "doc_id long, width int, height int, n_black long, gray_sum long"
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -4691,10 +3653,8 @@ def mm_pdf_inline_image_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     import zlib
 
     import numpy as np
-    import pandas as pd
 
     from specialsid_spark.operators.pdf import _assemble_pdf
-    from specialsid_spark.operators.pdfraster import rasterize_page
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
     W1, H1, W2, H2 = 96, 64, 40, 30
@@ -4746,53 +3706,26 @@ def mm_pdf_inline_image_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
         objects[cat - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages
         return _assemble_pdf(objects, cat)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                r = rasterize_page(build(doc_id))
-                if r is None:  # degrade surfaces as an impossible row
-                    out.append((doc_id, -1, -1, -1, -1, -1, -1, -1,
-                                -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                buf = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
-                ink = (buf != 255).any(axis=2)
-                rows = np.where(ink.any(axis=1))[0]
-                cols = np.where(ink.any(axis=0))[0]
-                out.append(
-                    (doc_id, w, h, int(ink.sum()),
-                     int(cols.min()) if cols.size else -1,
-                     int(cols.max()) if cols.size else -1,
-                     int(rows.min()) if rows.size else -1,
-                     int(rows.max()) if rows.size else -1,
-                     int(buf[:, :, 0].astype(np.int64).sum()),
-                     int(buf[:, :, 1].astype(np.int64).sum()),
-                     int(buf[:, :, 2].astype(np.int64).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "ink_px",
-                         "col_min", "col_max", "row_min", "row_max",
-                         "r_sum", "g_sum", "b_sum"],
-            ).astype({"doc_id": "int64", "width": "int32",
-                      "height": "int32", "ink_px": "int64",
-                      "col_min": "int64", "col_max": "int64",
-                      "row_min": "int64", "row_max": "int64",
-                      "r_sum": "int64", "g_sum": "int64",
-                      "b_sum": "int64"})
+    def kernel(doc_id):
+        rgb = _page_rgb(build(doc_id))
+        if rgb is None:  # degrade surfaces as an impossible row
+            yield doc_id, *(-1,) * 10
+            return
+        h, w, _ = rgb.shape
+        ink = (rgb != 255).any(axis=2)
+        rows = np.where(ink.any(axis=1))[0]
+        cols = np.where(ink.any(axis=0))[0]
+        yield (doc_id, w, h, ink.sum(),
+               cols.min() if cols.size else -1, cols.max() if cols.size else -1,
+               rows.min() if rows.size else -1, rows.max() if rows.size else -1,
+               *(int(rgb[:, :, c].sum()) for c in range(3)))
 
-    return (
-        d.select("doc_id")
-        .mapInPandas(
-            fn,
-            "doc_id long, width int, height int, ink_px long,"
-            " col_min long, col_max long, row_min long, row_max long,"
-            " r_sum long, g_sum long, b_sum long",
-        )
-        .orderBy("doc_id")
+    schema = (
+        "doc_id long, width int, height int, ink_px long,"
+        " col_min long, col_max long, row_min long, row_max long,"
+        " r_sum long, g_sum long, b_sum long"
     )
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -4833,33 +3766,23 @@ def mm_pdf_lzw_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-doc independent mapInPandas, no shuffle before
     the final sort — identical to the codec-query family."""
-    import pandas as pd
-
     from specialsid_spark.operators.pdf import build_text_pdf, extract_page_text
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                pages = [
-                    f"lzw doc {doc_id} pg {p} w{(doc_id * 13 + p) % 10}\n"
-                    f"coded (e{(doc_id * 9 + p) % 6}) tail\\fin"
-                    for p in range(2)
-                ]
-                blob = build_text_pdf(pages, compress="lzw")
-                assert b"/LZWDecode" in blob
-                texts = extract_page_text(blob)
-                for p, text in enumerate(texts):
-                    out.append((doc_id, p + 1, len(text), text))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "page_no", "n_chars", "page_text"]
-            ).astype({"doc_id": "int64", "page_no": "int32", "n_chars": "int32"})
+    def kernel(doc_id):
+        pages = [
+            f"lzw doc {doc_id} pg {p} w{(doc_id * 13 + p) % 10}\n"
+            f"coded (e{(doc_id * 9 + p) % 6}) tail\\fin"
+            for p in range(2)
+        ]
+        blob = build_text_pdf(pages, compress="lzw")
+        assert b"/LZWDecode" in blob
+        for p, text in enumerate(extract_page_text(blob)):
+            yield doc_id, p + 1, len(text), text
 
     schema = "doc_id long, page_no int, n_chars int, page_text string"
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id", "page_no")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id", "page_no")
 
 
 @register(
@@ -4941,51 +3864,28 @@ def mm_pdf_std14_text_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-doc independent mapInPandas, no shuffle before
     the final sort — the codec-family plan."""
     import numpy as np
-    import pandas as pd
 
-    from specialsid_spark.operators.pdfraster import (
-        build_std14_pdf,
-        rasterize_page,
-    )
+    from specialsid_spark.operators.pdfraster import build_std14_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                face = "Helvetica" if doc_id % 2 == 0 else "Times-Roman"
-                text = f"Tw {doc_id}"
-                r = rasterize_page(build_std14_pdf(text, face))
-                w, h, _ch, px = r
-                buf = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
-                ink = (buf != 255).any(axis=2)
-                rows = np.where(ink.any(axis=1))[0]
-                cols = np.where(ink.any(axis=0))[0]
-                out.append(
-                    (doc_id, face, len(text), w, h, int(ink.sum()),
-                     int(cols.min()), int(cols.max()),
-                     int(rows.min()), int(rows.max()),
-                     int(buf[:, :, 0].astype(np.int64).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "face", "n_chars", "width", "height",
-                         "ink_px", "col_min", "col_max", "row_min",
-                         "row_max", "gray_sum"],
-            ).astype({"doc_id": "int64", "n_chars": "int32",
-                      "width": "int32", "height": "int32",
-                      "ink_px": "int64", "col_min": "int64",
-                      "col_max": "int64", "row_min": "int64",
-                      "row_max": "int64", "gray_sum": "int64"})
+    def kernel(doc_id):
+        face = "Helvetica" if doc_id % 2 == 0 else "Times-Roman"
+        text = f"Tw {doc_id}"
+        rgb = _page_rgb(build_std14_pdf(text, face))
+        h, w, _ = rgb.shape
+        ink = (rgb != 255).any(axis=2)
+        rows = np.where(ink.any(axis=1))[0]
+        cols = np.where(ink.any(axis=0))[0]
+        yield (doc_id, face, len(text), w, h, ink.sum(), cols.min(), cols.max(),
+               rows.min(), rows.max(), rgb[:, :, 0].sum())
 
     schema = (
         "doc_id long, face string, n_chars int, width int, height int,"
         " ink_px long, col_min long, col_max long, row_min long,"
         " row_max long, gray_sum long"
     )
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -5065,49 +3965,25 @@ def mm_pdf_type1_text_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     rendering (gen_pdf_imgLambda.py:51).
 
     Scale shape: per-row independent mapInPandas; the font parses once
-    per task, outlines cache per glyph; buffer bounded by page size."""
-    import numpy as np
-    import pandas as pd
-
-    from specialsid_spark.operators.pdfraster import (
-        build_type1_pdf,
-        rasterize_page,
-    )
+    per page render, outlines cache per glyph; buffer bounded by page size."""
+    from specialsid_spark.operators.pdfraster import build_type1_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 3 + doc_id % 3
-                text = "".join("HLCO"[(doc_id * 2 + k) % 4] for k in range(n))
-                r = rasterize_page(build_type1_pdf(text))
-                if r is None:  # degrade surfaces as an impossible row
-                    out.append((doc_id, -1, -1, -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                buf = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
-                gray = buf[:, :, 0]
-                out.append(
-                    (doc_id, w, h, n,
-                     int((gray != 255).sum()),
-                     int(gray.astype(np.int64).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "n_chars",
-                         "ink_px", "gray_sum"],
-            ).astype({"doc_id": "int64", "width": "int32", "height": "int32",
-                      "n_chars": "int32", "ink_px": "int64",
-                      "gray_sum": "int64"})
+    def kernel(doc_id):
+        n = 3 + doc_id % 3
+        gray = _page_gray(build_type1_pdf("".join("HLCO"[(doc_id * 2 + k) % 4] for k in range(n))))
+        if gray is None:  # degrade surfaces as an impossible row
+            yield doc_id, -1, -1, -1, -1, -1
+            return
+        h, w = gray.shape
+        yield doc_id, w, h, n, *_ink(gray)
 
     schema = (
         "doc_id long, width int, height int, n_chars int,"
         " ink_px long, gray_sum long"
     )
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -5185,50 +4061,26 @@ def mm_pdf_cid0_text_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     Private routing, charset CID->GID) — reference parity for
     Poppler's CID font rendering (gen_pdf_imgLambda.py:51).
 
-    Scale shape: per-row independent mapInPandas; font parses once per
-    task, outlines cache per glyph; buffer bounded by page size."""
-    import numpy as np
-    import pandas as pd
-
-    from specialsid_spark.operators.pdfraster import (
-        build_cid0_pdf,
-        rasterize_page,
-    )
+    Scale shape: per-row independent mapInPandas; the font parses once
+    per page render, outlines cache per glyph; buffer bounded by page size."""
+    from specialsid_spark.operators.pdfraster import build_cid0_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 3 + (doc_id * 5) % 3
-                cids = [101 + (doc_id + 3 * k) % 4 for k in range(n)]
-                r = rasterize_page(build_cid0_pdf(cids))
-                if r is None:  # degrade surfaces as an impossible row
-                    out.append((doc_id, -1, -1, -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                buf = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
-                gray = buf[:, :, 0]
-                out.append(
-                    (doc_id, w, h, n,
-                     int((gray != 255).sum()),
-                     int(gray.astype(np.int64).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "n_chars",
-                         "ink_px", "gray_sum"],
-            ).astype({"doc_id": "int64", "width": "int32", "height": "int32",
-                      "n_chars": "int32", "ink_px": "int64",
-                      "gray_sum": "int64"})
+    def kernel(doc_id):
+        n = 3 + (doc_id * 5) % 3
+        gray = _page_gray(build_cid0_pdf([101 + (doc_id + 3 * k) % 4 for k in range(n)]))
+        if gray is None:  # degrade surfaces as an impossible row
+            yield doc_id, -1, -1, -1, -1, -1
+            return
+        h, w = gray.shape
+        yield doc_id, w, h, n, *_ink(gray)
 
     schema = (
         "doc_id long, width int, height int, n_chars int,"
         " ink_px long, gray_sum long"
     )
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -5305,49 +4157,25 @@ def mm_pdf_textstate_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-doc independent mapInPandas, codec-family plan."""
     import numpy as np
-    import pandas as pd
 
-    from specialsid_spark.operators.pdfraster import (
-        build_textstate_pdf,
-        rasterize_page,
-    )
+    from specialsid_spark.operators.pdfraster import build_textstate_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                text_a = f"Tw {doc_id}"
-                r = rasterize_page(
-                    build_textstate_pdf(text_a, f"ghost {doc_id}")
-                )
-                w, h, _ch, px = r
-                buf = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
-                ink = (buf != 255).any(axis=2)
-                rows = np.where(ink.any(axis=1))[0]
-                out.append(
-                    (doc_id, len(text_a), w, h, int(ink.sum()),
-                     int(ink[200:290].sum()),
-                     int(rows.min()), int(rows.max()),
-                     int(buf[:, :, 0].astype(np.int64).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "n_chars", "width", "height", "ink_px",
-                         "b_band_ink", "row_min", "row_max", "gray_sum"],
-            ).astype({"doc_id": "int64", "n_chars": "int32",
-                      "width": "int32", "height": "int32",
-                      "ink_px": "int64", "b_band_ink": "int64",
-                      "row_min": "int64", "row_max": "int64",
-                      "gray_sum": "int64"})
+    def kernel(doc_id):
+        text_a = f"Tw {doc_id}"
+        rgb = _page_rgb(build_textstate_pdf(text_a, f"ghost {doc_id}"))
+        h, w, _ = rgb.shape
+        ink = (rgb != 255).any(axis=2)
+        rows = np.where(ink.any(axis=1))[0]
+        yield (doc_id, len(text_a), w, h, ink.sum(), ink[200:290].sum(),
+               rows.min(), rows.max(), rgb[:, :, 0].sum())
 
     schema = (
         "doc_id long, n_chars int, width int, height int, ink_px long,"
         " b_band_ink long, row_min long, row_max long, gray_sum long"
     )
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -5393,50 +4221,25 @@ def mm_pdf_type3_text_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     FontMatrix x-scale, NOT from the procs' d0 metrics.
 
     Scale shape: per-row independent mapInPandas, codec-family plan."""
-    import numpy as np
-    import pandas as pd
-
-    from specialsid_spark.operators.pdfraster import (
-        build_type3_pdf,
-        rasterize_page,
-    )
+    from specialsid_spark.operators.pdfraster import build_type3_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 3 + (doc_id * 7) % 4
-                text = "".join(
-                    "r" if (doc_id + k) % 3 == 0 else "t" for k in range(n)
-                )
-                r = rasterize_page(build_type3_pdf(text))
-                if r is None:  # degrade surfaces as an impossible row
-                    out.append((doc_id, -1, -1, -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                buf = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
-                gray = buf[:, :, 0]
-                out.append(
-                    (doc_id, w, h, n,
-                     int((gray != 255).sum()),
-                     int(gray.astype(np.int64).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "n_chars",
-                         "ink_px", "gray_sum"],
-            ).astype({"doc_id": "int64", "width": "int32", "height": "int32",
-                      "n_chars": "int32", "ink_px": "int64",
-                      "gray_sum": "int64"})
+    def kernel(doc_id):
+        n = 3 + (doc_id * 7) % 4
+        text = "".join("r" if (doc_id + k) % 3 == 0 else "t" for k in range(n))
+        gray = _page_gray(build_type3_pdf(text))
+        if gray is None:  # degrade surfaces as an impossible row
+            yield doc_id, -1, -1, -1, -1, -1
+            return
+        h, w = gray.shape
+        yield doc_id, w, h, n, *_ink(gray)
 
     schema = (
         "doc_id long, width int, height int, n_chars int,"
         " ink_px long, gray_sum long"
     )
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -5502,55 +4305,27 @@ def mm_pdf_sampled_shading_raster(spark: SparkSession, sf_dir: str) -> DataFrame
     PDF shadings use.
 
     Scale shape: per-row independent mapInPandas, codec-family plan."""
-    import numpy as np
-    import pandas as pd
-
-    from specialsid_spark.operators.pdfraster import (
-        build_sampled_shading_pdf,
-        rasterize_page,
-    )
+    from specialsid_spark.operators.pdfraster import build_sampled_shading_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                samples = bytes([
-                    (doc_id * 5) % 256,
-                    (doc_id * 7 + 13) % 256,
-                    (doc_id * 11 + 29) % 256,
-                ])
-                r = rasterize_page(build_sampled_shading_pdf(
-                    (80, 600, 340, 100), (100, 0, 400, 0), samples
-                ))
-                if r is None:
-                    out.append((doc_id, -1, -1, -1, -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                buf = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
-                gray = buf[:, :, 0]
-                band = gray[792 - 700 : 792 - 600, 80:420]
-                out.append(
-                    (doc_id, w, h,
-                     int((gray != 255).sum()),
-                     int(gray.astype(np.int64).sum()),
-                     int(band.min()), int(band.max()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "width", "height", "ink_px",
-                         "gray_sum", "v_min", "v_max"],
-            ).astype({"doc_id": "int64", "width": "int32", "height": "int32",
-                      "ink_px": "int64", "gray_sum": "int64",
-                      "v_min": "int64", "v_max": "int64"})
+    def kernel(doc_id):
+        samples = bytes([(doc_id * 5) % 256, (doc_id * 7 + 13) % 256, (doc_id * 11 + 29) % 256])
+        gray = _page_gray(
+            build_sampled_shading_pdf((80, 600, 340, 100), (100, 0, 400, 0), samples)
+        )
+        if gray is None:  # degrade surfaces as an impossible row
+            yield doc_id, -1, -1, -1, -1, -1, -1
+            return
+        h, w = gray.shape
+        band = gray[792 - 700 : 792 - 600, 80:420]
+        yield doc_id, w, h, *_ink(gray), band.min(), band.max()
 
     schema = (
         "doc_id long, width int, height int, ink_px long, gray_sum long,"
         " v_min long, v_max long"
     )
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -5608,57 +4383,32 @@ def mm_pdf_rotate_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-row independent mapInPandas, codec-family plan."""
     import numpy as np
-    import pandas as pd
 
-    from specialsid_spark.operators.pdfraster import (
-        build_rotated_rect_pdf,
-        rasterize_page,
-    )
+    from specialsid_spark.operators.pdfraster import build_rotated_rect_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                rect = (100 + doc_id % 7, 150 + doc_id % 5,
-                        40 + doc_id % 9, 30 + doc_id % 6,
-                        (doc_id * 13) % 200)
-                rot = (doc_id % 4) * 90
-                r = rasterize_page(build_rotated_rect_pdf(rect, rot))
-                if r is None:
-                    out.append((doc_id, rot, -1, -1, -1, -1, -1, -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                buf = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
-                g = buf[:, :, 0]
-                ink = g != 255
-                rows = np.where(ink.any(axis=1))[0]
-                cols = np.where(ink.any(axis=0))[0]
-                out.append(
-                    (doc_id, rot, w, h, int(ink.sum()),
-                     int(cols.min()), int(cols.max()),
-                     int(rows.min()), int(rows.max()),
-                     int(g.astype(np.int64).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "rot", "width", "height", "ink_px",
-                         "col_min", "col_max", "row_min", "row_max",
-                         "gray_sum"],
-            ).astype({"doc_id": "int64", "rot": "int32",
-                      "width": "int32", "height": "int32",
-                      "ink_px": "int64", "col_min": "int64",
-                      "col_max": "int64", "row_min": "int64",
-                      "row_max": "int64", "gray_sum": "int64"})
+    def kernel(doc_id):
+        rect = (100 + doc_id % 7, 150 + doc_id % 5, 40 + doc_id % 9, 30 + doc_id % 6,
+                (doc_id * 13) % 200)
+        rot = (doc_id % 4) * 90
+        g = _page_gray(build_rotated_rect_pdf(rect, rot))
+        if g is None:  # degrade surfaces as an impossible row
+            yield doc_id, rot, *(-1,) * 8
+            return
+        h, w = g.shape
+        ink = g != 255
+        rows = np.where(ink.any(axis=1))[0]
+        cols = np.where(ink.any(axis=0))[0]
+        yield (doc_id, rot, w, h, ink.sum(), cols.min(), cols.max(),
+               rows.min(), rows.max(), g.sum())
 
     schema = (
         "doc_id long, rot int, width int, height int, ink_px long,"
         " col_min long, col_max long, row_min long, row_max long,"
         " gray_sum long"
     )
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")
 
 
 @register(
@@ -5703,16 +4453,12 @@ def mm_pdf_ccitt_k_modes_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     three through the same filter (gen_pdf_imgLambda.py:51).
 
     Scale shape: per-row independent mapInPandas, codec-family plan."""
-    import numpy as np
-    import pandas as pd
-
     from specialsid_spark.operators.ccitt import (
         g3_1d_encode,
         g3_mixed_encode,
         g4_encode,
     )
     from specialsid_spark.operators.pdf import _assemble_pdf
-    from specialsid_spark.operators.pdfraster import rasterize_page
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
     W, H = 96, 64
@@ -5761,33 +4507,17 @@ def mm_pdf_ccitt_k_modes_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
         objects[cat - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages
         return _assemble_pdf(objects, cat), k
 
-    def fn(batches):
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                blob, k = build(doc_id)
-                r = rasterize_page(blob)
-                if r is None:  # degrade surfaces as an impossible row
-                    out.append((doc_id, k, -1, -1, -1, -1))
-                    continue
-                w, h, _ch, px = r
-                buf = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
-                g = buf[:, :, 0]
-                out.append(
-                    (doc_id, k, w, h, int((g == 0).sum()),
-                     int(g.astype(np.int64).sum()))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "k_mode", "width", "height", "n_black",
-                         "gray_sum"],
-            ).astype({"doc_id": "int64", "k_mode": "int32",
-                      "width": "int32", "height": "int32",
-                      "n_black": "int64", "gray_sum": "int64"})
+    def kernel(doc_id):
+        blob, k = build(doc_id)
+        g = _page_gray(blob)
+        if g is None:  # degrade surfaces as an impossible row
+            yield doc_id, k, -1, -1, -1, -1
+            return
+        h, w = g.shape
+        yield doc_id, k, w, h, (g == 0).sum(), g.sum()
 
     schema = (
         "doc_id long, k_mode int, width int, height int, n_black long,"
         " gray_sum long"
     )
-    return d.select("doc_id").mapInPandas(fn, schema).orderBy("doc_id")
+    return map_rows(d.select("doc_id"), kernel, schema).orderBy("doc_id")

@@ -13,8 +13,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from specialsid_spark.catalog import load, load_parallel
-from specialsid_spark.operators.textops import fingerprint, tokens
+from specialsid_spark.operators.textops import fingerprint, lang_guess, quality_gate, tokens
 from specialsid_spark.queries import register
+from specialsid_spark.queries._rows import map_rows
 
 _SQL_TOKENS = "string_split_regex(lower(trim(text)), '\\s+')"
 
@@ -74,26 +75,12 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop_n = F.size(
         F.filter(F.col("toks"), lambda x: x.isin(*_STOPWORDS))
     ).cast("double")
-    distinct_ratio = F.size(F.array_distinct("toks")).cast("double") / n
     return t.select(
         "doc_id",
         (stop_n / n).alias("stopword_ratio"),
-        distinct_ratio.alias("distinct_ratio"),
-        F.when(
-            F.size("toks").between(5, 1000) & (distinct_ratio > 0.1), F.lit(1)
-        )
-        .otherwise(F.lit(0))
-        .alias("quality_ok"),
+        (F.size(F.array_distinct("toks")).cast("double") / n).alias("distinct_ratio"),
+        F.when(quality_gate(F.col("toks")), F.lit(1)).otherwise(F.lit(0)).alias("quality_ok"),
     ).orderBy("doc_id")
-
-
-# stopword votes per language for the n-gram/stopword language heuristic
-_LANG_MARKERS = {
-    "en": ("the", "and", "of"),
-    "es": ("el", "la", "de"),
-    "fr": ("le", "la", "et"),
-    "de": ("der", "die", "und"),
-}
 
 
 @register(
@@ -121,27 +108,7 @@ def text_langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-vote language ID with a fixed tie-break order (en>es>fr>de)."""
     d = load_parallel(spark, sf_dir, "documents")
     t = d.select("doc_id", tokens("text").alias("toks"))
-    def _marker_filter(markers: tuple[str, ...]):
-        # factory keeps the lambda unary: PySpark infers HOF arity from
-        # the Python signature, so default args would break it
-        return lambda x: x.isin(*markers)
-
-    votes = {
-        lang: F.size(F.filter(F.col("toks"), _marker_filter(markers)))
-        for lang, markers in _LANG_MARKERS.items()
-    }
-    guess = (
-        F.when(
-            (votes["en"] >= votes["es"])
-            & (votes["en"] >= votes["fr"])
-            & (votes["en"] >= votes["de"]),
-            "en",
-        )
-        .when((votes["es"] >= votes["fr"]) & (votes["es"] >= votes["de"]), "es")
-        .when(votes["fr"] >= votes["de"], "fr")
-        .otherwise("de")
-    )
-    return t.select("doc_id", guess.alias("lang_guess")).orderBy("doc_id")
+    return t.select("doc_id", lang_guess(F.col("toks")).alias("lang_guess")).orderBy("doc_id")
 
 
 @register(
@@ -674,8 +641,6 @@ def text_bpe_apply_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-join word -> n_tokens back onto per-doc word counts.  The
     shuffle carries (doc_id, word, count); Python touches |vocab| words
     once — the 100 TB application shape."""
-    import pandas as pd
-
     from specialsid_spark.operators.bpe import segment_training_order
 
     merges, _ = _bpe_trained(spark, sf_dir)
@@ -692,19 +657,10 @@ def text_bpe_apply_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = occ.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("n_occ"))
     distinct_words = per_doc.select("word").distinct()
 
-    def seg_counts(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "word": pdf["word"],
-                    "n_tokens": [
-                        len(segment_training_order(w, merges))
-                        for w in pdf["word"]
-                    ],
-                }
-            )
+    def seg_counts(w):
+        yield w, len(segment_training_order(w, merges))
 
-    seg = distinct_words.mapInPandas(seg_counts, "word string, n_tokens bigint")
+    seg = map_rows(distinct_words, seg_counts, "word string, n_tokens bigint")
     return (
         per_doc.join(F.broadcast(seg), "word")
         .groupBy("doc_id")
@@ -751,8 +707,6 @@ def text_bpe_decode_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the Heaps-law-bounded distinct vocabulary; the corpus-scale
     legs are an explode, a broadcast join, and a per-doc collect_list
     of plain lowercase tokens."""
-    import pandas as pd
-
     from specialsid_spark.operators.bpe import decode_bpe, segment_training_order
 
     merges, _ = _bpe_trained(spark, sf_dir)
@@ -768,19 +722,10 @@ def text_bpe_decode_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     distinct_words = occ.select("word").distinct()
 
-    def seg_decode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "word": pdf["word"],
-                    "decoded": [
-                        decode_bpe(segment_training_order(w, merges))
-                        for w in pdf["word"]
-                    ],
-                }
-            )
+    def seg_decode(w):
+        yield w, decode_bpe(segment_training_order(w, merges))
 
-    dec = distinct_words.mapInPandas(seg_decode, "word string, decoded string")
+    dec = map_rows(distinct_words, seg_decode, "word string, decoded string")
     return (
         occ.join(F.broadcast(dec), "word")
         .groupBy("doc_id")
@@ -1723,8 +1668,6 @@ def text_unigram_decode_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Heaps-bounded, never corpus-proportional), decode is concatenation,
     and the reconstruction is broadcast-joined onto the exploded
     occurrences and hashed per doc."""
-    import pandas as pd
-
     from specialsid_spark.operators.unigram import (
         decode_unigram,
         train_unigram,
@@ -1743,19 +1686,10 @@ def text_unigram_decode_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.length("word") <= _UNI_MAXLEN)
     distinct_words = occ.select("word").distinct()
 
-    def seg_decode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "word": pdf["word"],
-                    "decoded": [
-                        decode_unigram(viterbi_segment(w, vocab, total, _UNI_PLEN))
-                        for w in pdf["word"]
-                    ],
-                }
-            )
+    def seg_decode(w):
+        yield w, decode_unigram(viterbi_segment(w, vocab, total, _UNI_PLEN))
 
-    dec = distinct_words.mapInPandas(seg_decode, "word string, decoded string")
+    dec = map_rows(distinct_words, seg_decode, "word string, decoded string")
     return (
         occ.join(F.broadcast(dec), "word")
         .groupBy("doc_id")

@@ -445,34 +445,14 @@ def streaming_corpus_ingest(
     parity of the whole composition plus dedup behavior."""
     from pyspark.sql import functions as F  # noqa: PLC0415
 
-    from specialsid_spark.operators.textops import tokens  # noqa: PLC0415
+    from specialsid_spark.operators.textops import lang_guess, quality_gate, tokens  # noqa: PLC0415
     from specialsid_spark.queries.curation import _PII_EMAIL, _PII_IPV4  # noqa: PLC0415
 
     docs = spark.readStream.schema("doc_id long, ts timestamp, text string").json(
         docs_dir
     )
     toks = tokens("text")
-    n = F.size(toks)
-    markers = {
-        "en": ("the", "and", "of"),
-        "es": ("el", "la", "de"),
-        "fr": ("le", "la", "et"),
-        "de": ("der", "die", "und"),
-    }
-    def _marker_filter(m):
-        # factory keeps the HOF lambda unary (PySpark infers arity;
-        # a 2-arg lambda would receive the element INDEX as arg 2)
-        return lambda x: x.isin(*m)
-
-    votes = {lang: F.size(F.filter(toks, _marker_filter(m))) for lang, m in markers.items()}
-    quality = docs.filter(
-        n.between(5, 1000) & (F.size(F.array_distinct(toks)).cast("double") / n > 0.1)
-    )
-    english = quality.filter(
-        (votes["en"] >= votes["es"])
-        & (votes["en"] >= votes["fr"])
-        & (votes["en"] >= votes["de"])
-    )
+    english = docs.filter(quality_gate(toks) & (lang_guess(toks) == "en"))
     scrubbed = english.withColumn(
         "text",
         F.regexp_replace(
@@ -484,6 +464,18 @@ def streaming_corpus_ingest(
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["text_hash"])
     )
+
+
+def _checkpoint_id(checkpoint_dir: str) -> str:
+    """The streaming query id recorded in ``checkpoint_dir``: the same
+    across restarts from one checkpoint, new for a recreated one ("" if
+    the query has not started).  ``batch_id`` restarts at 0 with a new
+    checkpoint, so a replay token must carry this id as well."""
+    meta_file = os.path.join(checkpoint_dir, "metadata")
+    if not os.path.exists(meta_file):
+        return ""
+    with open(meta_file) as fh:
+        return json.load(fh).get("id", "")
 
 
 def _summary_stream(
@@ -509,11 +501,7 @@ def _summary_stream(
     )
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
-        query_id = ""
-        meta_file = os.path.join(checkpoint_dir, "metadata")
-        if os.path.exists(meta_file):
-            with open(meta_file) as fh:
-                query_id = json.load(fh).get("id", "")
+        query_id = _checkpoint_id(checkpoint_dir)
         try:
             head, manifest = _resolve(path)
         except FileNotFoundError:
@@ -1314,17 +1302,20 @@ def _hop4_gate_stream(
     with ``keys_of`` behind ONE eager barrier (the verdict reads them
     three times and the commit once more), and hands them to ``gate``
     (queries/dedup.py lsh_gate / simhash_gate) with the tag
-    ``hop4-<name>-<batch_id>``.  The gate's commit carries that tag, so
-    commit and idempotency token become visible in the same atomic
-    manifest publish and a crash-replayed micro-batch is a no-op
-    (snapshot_version_by_tag short-circuit)."""
+    ``hop4-<name>-<checkpoint id>-<batch_id>``.  The gate's commit
+    carries that tag, so commit and idempotency token become visible in
+    the same atomic manifest publish and a crash-replayed micro-batch is
+    a no-op (snapshot_version_by_tag short-circuit).  A recreated
+    checkpoint has a new id, so its batches never match the old run's
+    tags: they re-gate the clean zone, and every doc the index already
+    holds is a corpus hit, so nothing is admitted twice."""
     from specialsid_spark.operators.snapshot import snapshot_version_by_tag
 
     schema = spark.read.parquet(clean_dir).schema
     stream = spark.readStream.schema(schema).parquet(clean_dir)
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
-        tag = f"hop4-{name}-{batch_id}"
+        tag = f"hop4-{name}-{_checkpoint_id(checkpoint_dir)}-{batch_id}"
         if snapshot_version_by_tag(index_table, tag) is not None:
             return  # replayed micro-batch: already committed
         docs = (
@@ -1366,9 +1357,11 @@ def hop4_incremental_lsh_gate(
     gate writes in the same layout and can share, where
     streaming_neardup_ingest rewrites its whole index per batch.
 
-    At 100 TB: per batch the shuffle is the batch's band keys only; the
-    index table is distinct (band, bkey) pairs + admitted doc ids,
-    append-only and vacuumable."""
+    At 100 TB: each batch's probe joins its band keys against the WHOLE
+    persisted index (a broadcast or sort-merge join over every
+    generation), so a micro-batch costs O(index), not O(batch) — ROADMAP
+    direction 2 is the fix.  The index table is distinct (band, bkey)
+    pairs + admitted doc ids, append-only and vacuumable."""
     from specialsid_spark.queries.dedup import lsh_band_keys, lsh_gate
 
     return _hop4_gate_stream(
@@ -1391,16 +1384,21 @@ def streaming_ann_postings_ingest(
     ``assign_clusters`` kernel as the batch add, in one map-side pass,
     and the (vec_id, cid) postings append as ONE tagged snapshot
     commit, so crash-replayed micro-batches short-circuit on the
-    idempotency tag.  The index never stores vectors and never touches
-    prior generations; any postings version stays time-travelable.
+    idempotency tag ``ann-add-<checkpoint id>-<batch_id>``.  The append
+    is not idempotent across checkpoints, so a postings table that
+    already holds ``ann-add`` commits of another checkpoint id raises
+    ValueError instead of appending the drops a second time.  The index
+    never stores vectors and never touches prior generations; any
+    postings version stays time-travelable.
 
     At 100 TB: a daily embedding drop indexes in one pass over the
     drop — the k centroids ride the kernel's closure, the commit is
     append-only."""
     from specialsid_spark.operators.kmeans import _mu_vec, assign_clusters
     from specialsid_spark.operators.snapshot import (
+        _read_manifest,
         snapshot_commit,
-        snapshot_version_by_tag,
+        snapshot_versions,
     )
     from specialsid_spark.queries.vectors import ivf_centroids_from_table
 
@@ -1410,9 +1408,24 @@ def streaming_ann_postings_ingest(
 
     def add_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        tag = f"ann-add-{batch_id}"
-        if snapshot_version_by_tag(postings_table, tag) is not None:
+        own = f"ann-add-{_checkpoint_id(checkpoint_dir)}-"
+        tag = f"{own}{batch_id}"
+        tags = {
+            _read_manifest(postings_table, v).get("tag") or ""
+            for v in snapshot_versions(postings_table)
+        }
+        if tag in tags:
             return  # replayed micro-batch
+        foreign = sorted(t for t in tags if t.startswith("ann-add-") and not t.startswith(own))
+        if foreign:
+            raise ValueError(
+                f"streaming_ann_postings_ingest: postings at {postings_table} "
+                f"hold commits of another checkpoint ({foreign[-1]!r}) but the "
+                f"current checkpoint {checkpoint_dir} tags {own!r} — the "
+                "checkpoint dir was lost or recreated. Appending would add "
+                "its drops a second time; rebuild the postings or restore "
+                "the original checkpoint."
+            )
         centroids = ivf_centroids_from_table(sess, quantizer_table)
         mu = batch_df.select("vec_id", _mu_vec(F.col("embedding")).alias("mu"))
         postings = assign_clusters(mu, centroids).select("vec_id", "cid")
@@ -1446,9 +1459,12 @@ def hop4_incremental_simhash_gate(
     their doc ids as ONE tagged snapshot commit (replay-safe, see
     _hop4_gate_stream).
 
-    At 100 TB: per batch the shuffle is the batch's block keys only
-    (4 rows x 4 longs per doc); the index table is append-only,
-    vacuumable, and written in the daily batch gate's layout."""
+    At 100 TB: each batch's probe joins its block keys (4 rows x 4
+    longs per doc) against the WHOLE persisted index (a broadcast or
+    sort-merge join over every generation), so a micro-batch costs
+    O(index), not O(batch) — ROADMAP direction 2 is the fix.  The index
+    table is append-only, vacuumable, and written in the daily batch
+    gate's layout."""
     from specialsid_spark.queries.dedup import (
         _simhash_block_sigs,
         simhash_gate,

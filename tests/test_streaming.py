@@ -1864,6 +1864,88 @@ def test_hop4_simhash_stream_extends_batch_written_index(spark, tmp_path):
     assert _admitted(spark, index) == {0, 1, 2, 3, 12, 13, 14, 15}
 
 
+def test_hop4_recreated_checkpoint_gates_new_docs(spark, tmp_path):
+    """A recreated hop4 checkpoint restarts batch_id at 0.  Its batches
+    must not match the old run's replay tags: the novel doc of the next
+    drop is admitted, and the re-gated old docs are corpus hits, so no
+    old doc is added twice."""
+    import shutil
+
+    from specialsid_spark.streaming.pipeline import hop4_incremental_lsh_gate
+
+    schema = "doc_id long, text string"
+    index, clean_dir, ckpt = (str(tmp_path / n) for n in ("lsh_index", "clean", "ckpt"))
+
+    def gate():
+        hop4_incremental_lsh_gate(
+            spark, clean_dir, index, ckpt, id_expr="doc_id", text_expr="text"
+        ).awaitTermination()
+
+    spark.createDataFrame(
+        [_lsh_gate_doc(i) for i in range(4)], schema
+    ).coalesce(1).write.parquet(clean_dir)
+    gate()
+    assert _admitted(spark, index) == {0, 1, 2, 3}
+    shutil.rmtree(ckpt)
+    spark.createDataFrame(
+        [(10, "P10 a novel document about glaciers and mountain huts in deep winter")],
+        schema,
+    ).coalesce(1).write.mode("append").parquet(clean_dir)
+    gate()
+    assert _admitted(spark, index) == {0, 1, 2, 3, 10}
+    assert snapshot_read(spark, index).filter(F.col("kind") == "doc").count() == 5
+
+
+def test_streaming_ann_postings_recreated_checkpoint_raises(spark, tmp_path):
+    """The ANN postings append is not idempotent across checkpoints: a
+    recreated checkpoint's batch 0 must neither match the old run's tag
+    (skipping its drop) nor append the drop a second time.  It raises,
+    and the postings table is unchanged."""
+    import shutil
+
+    from specialsid_spark.operators.kmeans import _mu_vec, assign_clusters, kmeans_fit
+    from specialsid_spark.operators.snapshot import snapshot_commit, snapshot_versions
+    from specialsid_spark.streaming.pipeline import streaming_ann_postings_ingest
+
+    def vec(i):
+        e = [0.0] * 8
+        e[i % 4] = 1.0 + (i % 3) * 0.01
+        return i, e
+
+    base_df = spark.createDataFrame(
+        [vec(i) for i in range(8)], "vec_id long, embedding array<double>"
+    )
+    centroids, _ = kmeans_fit(base_df, k=4, iterations=2, dim=8)
+    qt, pt = str(tmp_path / "quantizer"), str(tmp_path / "postings")
+    snapshot_commit(
+        spark.createDataFrame(
+            list(enumerate(centroids)), "cid int, centroid array<bigint>"
+        ).coalesce(1),
+        qt,
+    )
+    snapshot_commit(
+        assign_clusters(
+            base_df.select("vec_id", _mu_vec(F.col("embedding")).alias("mu")), centroids
+        ).select("vec_id", "cid").coalesce(1),
+        pt,
+    )
+    vdir = tmp_path / "vec_drops"
+    vdir.mkdir()
+    with open(vdir / "d1.json", "w") as fh:
+        for i in range(8, 12):
+            vid, e = vec(i)
+            fh.write(json.dumps({"vec_id": vid, "embedding": e}) + "\n")
+    ckpt = str(tmp_path / "ann_ckpt")
+    streaming_ann_postings_ingest(spark, str(vdir), qt, pt, ckpt).awaitTermination()
+    before = snapshot_versions(pt)
+    assert snapshot_read(spark, pt).count() == 12
+
+    shutil.rmtree(ckpt)
+    with pytest.raises(Exception, match="another checkpoint"):
+        streaming_ann_postings_ingest(spark, str(vdir), qt, pt, ckpt).awaitTermination()
+    assert snapshot_versions(pt) == before
+
+
 # Spark jobs of one hop4 LSH micro-batch against an existing index:
 # the band barrier, the probe + verdict + commit job and their AQE
 # stage jobs.  An extra eager barrier in the gate adds jobs and fails.

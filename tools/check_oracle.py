@@ -5,11 +5,15 @@ given sf dir, then compares row count, sorted column names, and the
 order-insensitive multiset of stringified values — STRICTER than any
 reasonable hash compare, so passing here implies passing the driver.
 
-Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
+Usage: python tools/check_oracle.py [sf_dir] [query_name_or_pattern ...]
+
+Each name may be a shell-style pattern (``'mm_*' 'dedup_image_*'``);
+no names means every registered query.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import math
 import os
 import sys
@@ -59,7 +63,7 @@ def norm_rows(cols: list[str], rows: list[tuple]) -> list[tuple]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    only = sys.argv[2:]
 
     from specialsid_spark.queries import all_oracles, all_queries
     from specialsid_spark.session import get_spark
@@ -79,7 +83,7 @@ def main() -> int:
     n_pass = n_fail = n_rows_only = 0
     failures: list[str] = []
     for name, fn in sorted(qs.items()):
-        if only and name not in only:
+        if only and not any(fnmatch.fnmatchcase(name, p) for p in only):
             continue
         t0 = time.time()
         try:
