@@ -22,7 +22,6 @@ var on the executor).
 from __future__ import annotations
 
 import hashlib
-import json
 import time
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field

@@ -183,67 +183,6 @@ class _HuffTable:
             code <<= 1
 
 
-class _BitReader:
-    """MSB-first bit reader over the entropy-coded segment with 0xFF00
-    byte-unstuffing; stops (returns marker) at any other 0xFF marker."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.d = data
-        self.p = pos
-        self.acc = 0
-        self.n = 0
-        self.marker: int | None = None
-
-    def _fill(self) -> bool:
-        if self.p >= len(self.d):
-            return False
-        b = self.d[self.p]
-        if b == 0xFF:
-            if self.p + 1 < len(self.d) and self.d[self.p + 1] == 0x00:
-                self.p += 2
-            else:
-                self.marker = self.d[self.p + 1] if self.p + 1 < len(self.d) else None
-                return False
-        else:
-            self.p += 1
-        self.acc = (self.acc << 8) | b
-        self.n += 8
-        return True
-
-    def bits(self, k: int) -> int:
-        while self.n < k:
-            if not self._fill():
-                # T.81 allows the final code to be padded with 1-bits.
-                self.acc = (self.acc << 8) | 0xFF
-                self.n += 8
-        self.n -= k
-        v = (self.acc >> self.n) & ((1 << k) - 1)
-        return v
-
-    def huff(self, t: _HuffTable) -> int:
-        code = self.bits(1)
-        ln = 1
-        while code > t.maxcode[ln]:
-            if ln >= 16:
-                raise ValueError("bad huffman code")
-            code = (code << 1) | self.bits(1)
-            ln += 1
-        return t.vals[t.valptr[ln] + code - t.mincode[ln]]
-
-    def align_to_marker(self) -> int | None:
-        """Drop partial bits and consume a restart marker if present."""
-        self.acc = 0
-        self.n = 0
-        while self.p + 1 < len(self.d):
-            if self.d[self.p] == 0xFF and self.d[self.p + 1] != 0x00:
-                m = self.d[self.p + 1]
-                self.p += 2
-                self.marker = None
-                return m
-            self.p += 1
-        return None
-
-
 def _extend(v: int, t: int) -> int:
     """T.81 F.2.2.1: map t-bit magnitude to signed coefficient."""
     if t == 0:

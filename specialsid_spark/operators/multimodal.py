@@ -37,24 +37,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-IMAGE_META_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("sha", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("format", T.StringType()),
-    ]
+from specialsid_spark.operators.rows import map_rows
+
+IMAGE_META_SCHEMA = (
+    "doc_id long, n_bytes long, sha string, width int, height int, format string"
 )
 
-PAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("page_no", T.IntegerType()),
-        T.StructField("page_bytes", T.BinaryType()),
-    ]
-)
+PAGE_SCHEMA = "doc_id long, page_no int, page_bytes binary"
 
 
 #: JPEG "start of frame" markers that carry dimensions: SOF0-SOF15 minus
@@ -663,31 +652,21 @@ def _decode_bytes(blob: bytes) -> tuple[int, int, str]:
 
 
 def decode_image_stub(df: DataFrame, id_col: str = "doc_id", bin_col: str = "blob") -> DataFrame:
-    """mapInPandas decode: binary column -> typed metadata rows.
-    Arrow-batched; one Python roundtrip per partition batch, never per row."""
+    """Per-row decode (a :func:`map_rows` kernel): binary column ->
+    typed metadata rows."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [_decode_bytes(b) for b in pdf[bin_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_bytes": pdf[bin_col].map(len).astype("int64"),
-                    "sha": pdf[bin_col].map(lambda b: hashlib.sha256(b).hexdigest()),
-                    "width": pd.Series([m[0] for m in metas], dtype="int32"),
-                    "height": pd.Series([m[1] for m in metas], dtype="int32"),
-                    "format": [m[2] for m in metas],
-                }
-            )
+    def decode(doc_id, blob):
+        width, height, fmt = _decode_bytes(blob)
+        yield doc_id, len(blob), hashlib.sha256(blob).hexdigest(), width, height, fmt
 
-    return df.mapInPandas(fn, IMAGE_META_SCHEMA)
+    return map_rows(df.select(id_col, bin_col), decode, IMAGE_META_SCHEMA)
 
 
 def explode_pdf_pages(
     df: DataFrame, id_col: str = "doc_id", bin_col: str = "blob", page_size: int = 100
 ) -> DataFrame:
     """D1 flatMap PDF->pages (ref gen_pdf_imgLambda.py:51-60): 1 row in,
-    N rows out via mapInPandas.
+    N rows out through a :func:`map_rows` kernel.
 
     For an image-per-page PDF (the reference's scanned-catalogue case),
     each output row carries the page's REAL image bytes — the embedded
@@ -699,45 +678,32 @@ def explode_pdf_pages(
     test payloads get fixed-size byte slices."""
     from specialsid_spark.operators.pdf import extract_page_images
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_no, out_bytes = [], [], []
-            for i, blob in zip(pdf[id_col], pdf[bin_col]):
-                blob = bytes(blob)
-                n_real = pdf_page_count(blob)
-                imgs = extract_page_images(blob) if n_real is not None else None
-                if imgs and any(p is not None for p in imgs):
-                    pages = [
-                        p if p is not None else blob[0:0]  # unrenderable page: empty
-                        for p in imgs
-                    ]
-                elif n_real is not None:
-                    # Index-boundary split: page p covers [p*len//n, (p+1)*len//n).
-                    # Unlike a ceil-div even split this emits EXACTLY n_real
-                    # slices for any blob length (a 9-byte 4-page PDF would
-                    # otherwise produce 3 slices, breaking the "fan-out count
-                    # is the real page count" contract).  Small pages may be
-                    # empty when n_real > len(blob).
-                    ln = len(blob)
-                    pages = [
-                        blob[p * ln // n_real : (p + 1) * ln // n_real]
-                        for p in range(n_real)
-                    ]
-                else:
-                    pages = [blob[o : o + page_size] for o in range(0, max(len(blob), 1), page_size)]
-                for pno, pb in enumerate(pages, start=1):
-                    out_id.append(i)
-                    out_no.append(pno)
-                    out_bytes.append(bytes(pb))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_id, dtype="int64"),
-                    "page_no": pd.Series(out_no, dtype="int32"),
-                    "page_bytes": out_bytes,
-                }
-            )
+    def explode(doc_id, blob):
+        n_real = pdf_page_count(blob)
+        imgs = extract_page_images(blob) if n_real is not None else None
+        if imgs and any(p is not None for p in imgs):
+            pages = [
+                p if p is not None else blob[0:0]  # unrenderable page: empty
+                for p in imgs
+            ]
+        elif n_real is not None:
+            # Index-boundary split: page p covers [p*len//n, (p+1)*len//n).
+            # Unlike a ceil-div even split this emits EXACTLY n_real
+            # slices for any blob length (a 9-byte 4-page PDF would
+            # otherwise produce 3 slices, breaking the "fan-out count
+            # is the real page count" contract).  Small pages may be
+            # empty when n_real > len(blob).
+            ln = len(blob)
+            pages = [
+                blob[p * ln // n_real : (p + 1) * ln // n_real]
+                for p in range(n_real)
+            ]
+        else:
+            pages = [blob[o : o + page_size] for o in range(0, max(len(blob), 1), page_size)]
+        for pno, pb in enumerate(pages, start=1):
+            yield doc_id, pno, bytes(pb)
 
-    return df.mapInPandas(fn, PAGE_SCHEMA)
+    return map_rows(df.select(id_col, bin_col), explode, PAGE_SCHEMA)
 
 
 #: Back-compat name from rounds 1-3; for image-per-page PDFs the pages
@@ -757,26 +723,13 @@ def explode_pdf_text(
     text corpus — per-row independent, Arrow-batched, no shuffle."""
     from specialsid_spark.operators.pdf import extract_page_text
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_no, out_text = [], [], []
-            for i, blob in zip(pdf[id_col], pdf[bin_col]):
-                texts = extract_page_text(bytes(blob))
-                if texts is None:
-                    continue
-                for pno, t in enumerate(texts, start=1):
-                    out_id.append(i)
-                    out_no.append(pno)
-                    out_text.append(t)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_id, dtype="int64"),
-                    "page_no": pd.Series(out_no, dtype="int32"),
-                    "page_text": pd.Series(out_text, dtype="object"),
-                }
-            )
+    def explode(doc_id, blob):
+        for pno, text in enumerate(extract_page_text(blob) or (), start=1):
+            yield doc_id, pno, text
 
-    return df.mapInPandas(fn, "doc_id long, page_no int, page_text string")
+    return map_rows(
+        df.select(id_col, bin_col), explode, "doc_id long, page_no int, page_text string"
+    )
 
 
 def crop_regions(

@@ -13,10 +13,12 @@ renderer needed, just the PDF object graph:
   per page — DCTDecode streams verbatim (they are standalone JPEGs;
   specialsid_spark.operators.jpeg decodes them), FlateDecode raw
   samples re-encoded as PNG.
-* :func:`build_image_pdf` writes a well-formed single-image-per-page
-  PDF (xref table, catalog, pages tree, per-page content stream) — the
-  fixture generator for tests AND the inverse sink (pages → scanned
-  catalogue).
+* :class:`PdfWriter` is the one PDF writer (object numbering,
+  catalog and pages tree, stream framing, xref or xref stream); every
+  fixture generator in the package writes through it.
+  :func:`build_image_pdf` uses it for a single-image-per-page PDF —
+  the fixture generator for tests AND the inverse sink (pages →
+  scanned catalogue).
 
 DOCUMENTED LIMITATION (same discipline as pdf_page_count's /ObjStm
 note): pages whose content is vector art, text, or an image variant
@@ -294,11 +296,6 @@ def read_xref(
                 else:
                     trailer.setdefault(key, int(km.group(1)))
     return entries, trailer
-
-
-def _parse_objects(blob: bytes) -> dict[int, tuple[bytes, bytes | None]]:
-    """obj_num -> (dict/body bytes, raw stream bytes or None)."""
-    return _scan_objects(blob)[0]
 
 
 def _page_order(
@@ -943,12 +940,6 @@ def build_text_pdf(
     WinAnsi) AND honored when encoding the page text — characters whose
     glyph the array names are written with the remapped codes, so a
     reader that ignores /Differences provably mis-decodes them."""
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
     char_to_code = None
     enc: bytes = b" /Encoding /WinAnsiEncoding"
     if differences:
@@ -968,12 +959,10 @@ def build_text_pdf(
     def esc(s: str) -> bytes:
         return _pdf_escape(s, char_to_code)
 
-    catalog_num = add(b"")
-    pages_num = add(b"")
-    font_num = add(
+    doc = PdfWriter()
+    font_num = doc.add(
         b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica" + enc + b" >>"
     )
-    page_nums = []
     for text in pages:
         ops = [b"BT /F1 12 Tf 72 720 Td"]
         for li, line in enumerate(text.split("\n")):
@@ -1002,28 +991,11 @@ def build_text_pdf(
         elif compress:
             content = zlib.compress(content)
             filt = b" /Filter /FlateDecode"
-        cont_num = add(
-            b"<< /Length %d%s >>\nstream\n" % (len(content), filt)
-            + content
-            + b"\nendstream"
+        doc.page(
+            doc.stream(content, b"<< /Length %%d%s >>" % filt),
+            b"/Font << /F1 %d 0 R >>" % font_num,
         )
-        page_nums.append(
-            add(
-                b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-                b" /Resources << /Font << /F1 %d 0 R >> >>"
-                b" /Contents %d 0 R >>" % (pages_num, font_num, cont_num)
-            )
-        )
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%s] /Count %d >>" % (
-        kids,
-        len(page_nums),
-    )
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-
-    if layout == "objstm":
-        return _assemble_pdf_objstm(objects, catalog_num)
-    return _assemble_pdf(objects, catalog_num)
+    return doc.bytes(layout)
 
 
 def _jpeg_components(jpg: bytes) -> int:
@@ -1053,15 +1025,7 @@ def build_image_pdf(page_images: list[bytes]) -> bytes:
     xref-table PDF readable by any viewer."""
     from specialsid_spark.operators.multimodal import decode_png, parse_image_meta
 
-    objects: list[bytes] = []  # 1-indexed bodies, object n = index+1
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")  # placeholder, filled after pages exist
-    pages_num = add(b"")
-    page_nums = []
+    doc = PdfWriter()
     for img in page_images:
         meta = parse_image_meta(img)
         if meta is None or meta[2] not in ("jpeg", "png"):
@@ -1081,32 +1045,87 @@ def build_image_pdf(page_images: list[bytes]) -> bytes:
             payload = zlib.compress(bytes(px))
             filt = b"/FlateDecode"
             cs = b"/DeviceGray" if ch == 1 else b"/DeviceRGB"
-        xobj = add(
+        xobj = doc.stream(
+            payload,
             b"<< /Type /XObject /Subtype /Image /Width %d /Height %d"
             b" /ColorSpace %s /BitsPerComponent 8 /Filter %s"
-            b" /Length %d >>\nstream\n" % (w, h, cs, filt, len(payload))
-            + payload
-            + b"\nendstream"
+            b" /Length %%d >>" % (w, h, cs, filt),
         )
-        content = b"q %d 0 0 %d 0 0 cm /Im0 Do Q" % (w, h)
-        cont_num = add(
-            b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
+        doc.page(
+            doc.stream(b"q %d 0 0 %d 0 0 cm /Im0 Do Q" % (w, h)),
+            b"/XObject << /Im0 %d 0 R >>" % xobj,
+            box=(w, h),
         )
-        page_nums.append(
-            add(
-                b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 %d %d]"
-                b" /Resources << /XObject << /Im0 %d 0 R >> >>"
-                b" /Contents %d 0 R >>" % (pages_num, w, h, xobj, cont_num)
+    return doc.bytes()
+
+
+def _pdf_escape_bytes(raw: bytes) -> bytes:
+    """Escape raw bytes (2-byte CID codes, any value) for a PDF literal
+    string: the delimiters and backslash get a backslash, CR and LF
+    their escape letters so no line-end normalization can touch them."""
+    out = bytearray()
+    for x in raw:
+        if x in (0x28, 0x29, 0x5C):  # ( ) backslash
+            out += b"\\" + bytes([x])
+        elif x == 0x0D:
+            out += b"\\r"
+        elif x == 0x0A:
+            out += b"\\n"
+        else:
+            out.append(x)
+    return bytes(out)
+
+
+class PdfWriter:
+    """The one PDF file writer.  Object 1 is the catalog and object 2
+    the page tree, both filled in by :meth:`bytes`; every other object
+    is numbered in call order, so a caller states only its own objects
+    (fonts, images, functions) and content streams."""
+
+    def __init__(self) -> None:
+        self._objects: list[bytes] = [b"", b""]
+        self._pages: list[int] = []
+
+    def add(self, body: bytes) -> int:
+        """Append one object; return its number."""
+        self._objects.append(body)
+        return len(self._objects)
+
+    def stream(self, data: bytes, head: bytes = b"<< /Length %d >>") -> int:
+        """Append a stream object.  ``head`` is its dictionary with one
+        ``%d`` where the byte length of ``data`` goes."""
+        return self.add(head % len(data) + b"\nstream\n" + data + b"\nendstream")
+
+    def page(
+        self,
+        contents: int,
+        resources: bytes | None = None,
+        box: tuple[int, int] = (612, 792),
+        extra: bytes = b"",
+    ) -> None:
+        """Append a page whose content stream is object ``contents``.
+        ``resources`` is the inside of its /Resources dict; ``extra``
+        (e.g. ``b" /Rotate 90"``) goes right after the /MediaBox."""
+        res = b"" if resources is None else b" /Resources << %s >>" % resources
+        self._pages.append(
+            self.add(
+                b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 %d %d]%s%s"
+                b" /Contents %d 0 R >>" % (*box, extra, res, contents)
             )
         )
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%s] /Count %d >>" % (
-        kids,
-        len(page_nums),
-    )
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
 
-    return _assemble_pdf(objects, catalog_num)
+    def bytes(self, layout: str = "classic") -> bytes:
+        """The file: a classic xref table, or with ``layout="objstm"``
+        the PDF 1.5 object-stream + xref-stream layout."""
+        kids = b" ".join(b"%d 0 R" % n for n in self._pages)
+        self._objects[0] = b"<< /Type /Catalog /Pages 2 0 R >>"
+        self._objects[1] = b"<< /Type /Pages /Kids [%s] /Count %d >>" % (
+            kids,
+            len(self._pages),
+        )
+        if layout == "objstm":
+            return _assemble_pdf_objstm(self._objects, 1)
+        return _assemble_pdf(self._objects, 1)
 
 
 def _assemble_pdf_objstm(objects: list[bytes], catalog_num: int) -> bytes:
@@ -1189,8 +1208,8 @@ def _objstm_offsets(packed: list[tuple[int, bytes]]) -> list[tuple[int, int]]:
 
 
 def _assemble_pdf(objects: list[bytes], catalog_num: int) -> bytes:
-    """Serialize numbered objects + xref + trailer (shared by the
-    text / CID-text / image page writers)."""
+    """Serialize numbered objects + xref + trailer: the classic layout
+    of :class:`PdfWriter`, the one writer."""
     out = bytearray(b"%PDF-1.4\n")
     offsets = [0]
     for i, body in enumerate(objects, start=1):
@@ -1254,15 +1273,8 @@ def build_cid_text_pdf(
     cmap_lines.append(b"endcmap\nend\nend")
     cmap_stream = b"\n".join(cmap_lines)
 
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
-    f1_num = add(
+    doc = PdfWriter()
+    f1_num = doc.add(
         b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica"
         b" /Encoding /WinAnsiEncoding >>"
     )
@@ -1271,17 +1283,13 @@ def build_cid_text_pdf(
     if compress:
         cmap_data = zlib.compress(cmap_data)
         filt = b" /Filter /FlateDecode"
-    cmap_num = add(
-        b"<< /Length %d%s >>\nstream\n" % (len(cmap_data), filt)
-        + cmap_data
-        + b"\nendstream"
-    )
-    desc_num = add(
+    cmap_num = doc.stream(cmap_data, b"<< /Length %%d%s >>" % filt)
+    desc_num = doc.add(
         b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /Fixture"
         b" /CIDSystemInfo << /Registry (Adobe) /Ordering (Identity)"
         b" /Supplement 0 >> >>"
     )
-    f2_num = add(
+    f2_num = doc.add(
         b"<< /Type /Font /Subtype /Type0 /BaseFont /Fixture-Identity"
         b" /Encoding /Identity-H /DescendantFonts [%d 0 R]"
         b" /ToUnicode %d 0 R >>" % (desc_num, cmap_num)
@@ -1290,7 +1298,6 @@ def build_cid_text_pdf(
     def hexstr(line: str) -> bytes:
         return b"<" + b"".join(b"%04X" % code_of[c] for c in line) + b">"
 
-    page_nums = []
     for text in pages:
         lines = text.split("\n")
         ops = [b"BT /F1 12 Tf 72 720 Td",
@@ -1307,28 +1314,10 @@ def build_cid_text_pdf(
                 ops.append(b"%s Tj" % hexstr(line))
         ops.append(b"ET")
         content = b"\n".join(ops)
-        cfilt = b""
         if compress:
             content = zlib.compress(content)
-            cfilt = b" /Filter /FlateDecode"
-        cont_num = add(
-            b"<< /Length %d%s >>\nstream\n" % (len(content), cfilt)
-            + content
-            + b"\nendstream"
+        doc.page(
+            doc.stream(content, b"<< /Length %%d%s >>" % filt),
+            b"/Font << /F1 %d 0 R /F2 %d 0 R >>" % (f1_num, f2_num),
         )
-        page_nums.append(
-            add(
-                b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-                b" /Resources << /Font << /F1 %d 0 R /F2 %d 0 R >> >>"
-                b" /Contents %d 0 R >>" % (pages_num, f1_num, f2_num, cont_num)
-            )
-        )
-    kids = b" ".join(b"%d 0 R" % n for n in page_nums)
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%s] /Count %d >>" % (
-        kids,
-        len(page_nums),
-    )
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    if layout == "objstm":
-        return _assemble_pdf_objstm(objects, catalog_num)
-    return _assemble_pdf(objects, catalog_num)
+    return doc.bytes(layout)

@@ -75,7 +75,9 @@ from specialsid_spark.operators.pdf import (
     _DELIMS,
     _NUM_TOKEN_RE,
     _WHITESPACE,
-    read_xref,
+    PdfWriter,
+    _pdf_escape,
+    _pdf_escape_bytes,
 )
 
 # glyph-box model (em fractions) — the oracle restates these
@@ -2231,34 +2233,20 @@ def build_raster_pdf(
     points (x0+20, y0+b) and (x0+w-20, y0+b) to (x0+w, y0), closed
     with ``h`` — a symmetric x-monotone region whose 16-segment
     flattened scanline coverage the oracle re-derives exactly."""
-    from specialsid_spark.operators.pdf import (  # noqa: PLC0415
-        _assemble_pdf,
-        _pdf_escape,
-    )
-
     rx, ry, rw, rh, rc = rect
     iw, ih, ipx = image
     if len(ipx) != iw * ih:
         raise ValueError("image pixel count mismatch")
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
+    doc = PdfWriter()
     # a deliberately NON-Standard-14 name: this fixture family pins the
     # teaching glyph-box model (5x7 px advancing 6), which r11's AFM
     # metrics would otherwise supersede for /Helvetica
-    font_num = add(b"<< /Type /Font /Subtype /Type1 /BaseFont /BoxGlyph >>")
-    payload = zlib.compress(ipx)
-    xobj = add(
+    font_num = doc.add(b"<< /Type /Font /Subtype /Type1 /BaseFont /BoxGlyph >>")
+    xobj = doc.stream(
+        zlib.compress(ipx),
         b"<< /Type /XObject /Subtype /Image /Width %d /Height %d"
         b" /ColorSpace /DeviceGray /BitsPerComponent 8 /Filter /FlateDecode"
-        b" /Length %d >>\nstream\n" % (iw, ih, len(payload))
-        + payload
-        + b"\nendstream"
+        b" /Length %%d >>" % (iw, ih),
     )
     lines = [
         b"%d %d %d %d re" % (rx, ry, rw, rh),
@@ -2273,21 +2261,22 @@ def build_raster_pdf(
             % (cc / 255.0, cx, cy, cx + 20, cy + cb, cx + cw - 20, cy + cb,
                cx + cw, cy)
         )
-    content = b"\n".join(lines)
-    cont_num = add(
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
+    doc.page(
+        doc.stream(b"\n".join(lines)),
+        b"/Font << /F1 %d 0 R >> /XObject << /Im1 %d 0 R >>" % (font_num, xobj),
     )
-    page = add(
-        b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-        b" /Resources << /Font << /F1 %d 0 R >>"
-        b" /XObject << /Im1 %d 0 R >> >>"
-        b" /Contents %d 0 R >>" % (pages_num, font_num, xobj, cont_num)
-    )
-    objects[pages_num - 1] = (
-        b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-    )
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    return _assemble_pdf(objects, catalog_num)
+    return doc.bytes()
+
+
+def _one_font_page(doc: PdfWriter, font_num: int, content: bytes) -> bytes:
+    """Finish a one-page fixture whose only resource is font /F1."""
+    doc.page(doc.stream(content), b"/Font << /F1 %d 0 R >>" % font_num)
+    return doc.bytes()
+
+
+def _show(size: int, td: tuple[int, int], string: bytes) -> bytes:
+    """One escaped string shown in /F1 at ``size`` from ``td``."""
+    return b"BT /F1 %d Tf %d %d Td (%s) Tj ET" % (size, td[0], td[1], string)
 
 
 def build_std14_pdf(
@@ -2303,37 +2292,12 @@ def build_std14_pdf(
     dyadic (w/1000*125 = w/8 — exact in binary), so pen positions are
     exact doubles and the SQL oracle's running-sum restatement is
     order-independent."""
-    from specialsid_spark.operators.pdf import (  # noqa: PLC0415
-        _assemble_pdf,
-        _pdf_escape,
-    )
-
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
-    font_num = add(
+    doc = PdfWriter()
+    font_num = doc.add(
         b"<< /Type /Font /Subtype /Type1 /BaseFont /%s >>"
         % face.encode("latin-1")
     )
-    content = b"BT /F1 %d Tf %d %d Td (%s) Tj ET" % (
-        size, td[0], td[1], _pdf_escape(text),
-    )
-    cont_num = add(
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
-    )
-    page = add(
-        b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-        b" /Resources << /Font << /F1 %d 0 R >> >>"
-        b" /Contents %d 0 R >>" % (pages_num, font_num, cont_num)
-    )
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    return _assemble_pdf(objects, catalog_num)
+    return _one_font_page(doc, font_num, _show(size, td, _pdf_escape(text)))
 
 
 def build_textstate_pdf(
@@ -2351,20 +2315,8 @@ def build_textstate_pdf(
       ink).
 
     Size 125 keeps every advance dyadic ((w/8 + ints) * 0.5)."""
-    from specialsid_spark.operators.pdf import (  # noqa: PLC0415
-        _assemble_pdf,
-        _pdf_escape,
-    )
-
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
-    font_num = add(
+    doc = PdfWriter()
+    font_num = doc.add(
         b"<< /Type /Font /Subtype /Type1 /BaseFont /%s >>"
         % face.encode("latin-1")
     )
@@ -2375,17 +2327,24 @@ def build_textstate_pdf(
         b" 0 Ts 3 Tr 0 -200 Td (%s) Tj"
         b" ET" % (_pdf_escape(line_a), _pdf_escape(line_c))
     )
-    cont_num = add(
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
+    return _one_font_page(doc, font_num, content)
+
+
+def _font_descriptor(
+    doc: PdfWriter, name: bytes, file_key: bytes, program: bytes,
+    head: bytes = b"<< /Length %d >>",
+) -> int:
+    """The font ``program`` as a stream (dictionary ``head``) plus a
+    /FontDescriptor ``name`` pointing at it through ``file_key``
+    (FontFile, FontFile2 or FontFile3), with the fixture fonts' shared
+    metrics (unitsPerEm 1024); returns the descriptor's number."""
+    ff_num = doc.stream(program, head)
+    return doc.add(
+        b"<< /Type /FontDescriptor /FontName /%s /Flags 4"
+        b" /FontBBox [0 -480 1024 832] /ItalicAngle 0 /Ascent 832"
+        b" /Descent -480 /CapHeight 832 /StemV 80 /%s %d 0 R >>"
+        % (name, file_key, ff_num)
     )
-    page = add(
-        b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-        b" /Resources << /Font << /F1 %d 0 R >> >>"
-        b" /Contents %d 0 R >>" % (pages_num, font_num, cont_num)
-    )
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    return _assemble_pdf(objects, catalog_num)
 
 
 def build_glyph_pdf(
@@ -2398,51 +2357,17 @@ def build_glyph_pdf(
     ``Td`` — with unitsPerEm 1024 every device coordinate is an exact
     double (integer + glyph-units / 2^k), so per-character ink
     coverage has closed forms the SQL oracle restates."""
-    from specialsid_spark.operators.pdf import (  # noqa: PLC0415
-        _assemble_pdf,
-        _pdf_escape,
-    )
     from specialsid_spark.operators.truetype import fixture_font  # noqa: PLC0415
 
     if font_program is None:
         font_program = fixture_font()
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
-    ff_num = add(
-        b"<< /Length %d >>\nstream\n" % len(font_program)
-        + font_program
-        + b"\nendstream"
-    )
-    desc_num = add(
-        b"<< /Type /FontDescriptor /FontName /Fixture /Flags 4"
-        b" /FontBBox [0 -480 1024 832] /ItalicAngle 0 /Ascent 832"
-        b" /Descent -480 /CapHeight 832 /StemV 80 /FontFile2 %d 0 R >>"
-        % ff_num
-    )
-    font_num = add(
+    doc = PdfWriter()
+    desc_num = _font_descriptor(doc, b"Fixture", b"FontFile2", font_program)
+    font_num = doc.add(
         b"<< /Type /Font /Subtype /TrueType /BaseFont /Fixture"
         b" /FirstChar 32 /LastChar 126 /FontDescriptor %d 0 R >>" % desc_num
     )
-    content = b"BT /F1 %d Tf %d %d Td (%s) Tj ET" % (
-        size, td[0], td[1], _pdf_escape(text),
-    )
-    cont_num = add(
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
-    )
-    page = add(
-        b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-        b" /Resources << /Font << /F1 %d 0 R >> >>"
-        b" /Contents %d 0 R >>" % (pages_num, font_num, cont_num)
-    )
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    return _assemble_pdf(objects, catalog_num)
+    return _one_font_page(doc, font_num, _show(size, td, _pdf_escape(text)))
 
 
 def build_cff_pdf(
@@ -2456,50 +2381,19 @@ def build_cff_pdf(
     coordinate an exact double at integral sizes, like
     build_glyph_pdf's TrueType twin."""
     from specialsid_spark.operators.cff import fixture_cff  # noqa: PLC0415
-    from specialsid_spark.operators.pdf import (  # noqa: PLC0415
-        _assemble_pdf,
-        _pdf_escape,
-    )
 
     if font_program is None:
         font_program = fixture_cff()
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
-    ff_num = add(
-        b"<< /Subtype /Type1C /Length %d >>\nstream\n" % len(font_program)
-        + font_program
-        + b"\nendstream"
+    doc = PdfWriter()
+    desc_num = _font_descriptor(
+        doc, b"FixtureC", b"FontFile3", font_program,
+        b"<< /Subtype /Type1C /Length %d >>",
     )
-    desc_num = add(
-        b"<< /Type /FontDescriptor /FontName /FixtureC /Flags 4"
-        b" /FontBBox [0 -480 1024 832] /ItalicAngle 0 /Ascent 832"
-        b" /Descent -480 /CapHeight 832 /StemV 80 /FontFile3 %d 0 R >>"
-        % ff_num
-    )
-    font_num = add(
+    font_num = doc.add(
         b"<< /Type /Font /Subtype /Type1 /BaseFont /FixtureC"
         b" /FirstChar 32 /LastChar 126 /FontDescriptor %d 0 R >>" % desc_num
     )
-    content = b"BT /F1 %d Tf %d %d Td (%s) Tj ET" % (
-        size, td[0], td[1], _pdf_escape(text),
-    )
-    cont_num = add(
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
-    )
-    page = add(
-        b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-        b" /Resources << /Font << /F1 %d 0 R >> >>"
-        b" /Contents %d 0 R >>" % (pages_num, font_num, cont_num)
-    )
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    return _assemble_pdf(objects, catalog_num)
+    return _one_font_page(doc, font_num, _show(size, td, _pdf_escape(text)))
 
 
 def build_type1_pdf(
@@ -2513,52 +2407,21 @@ def build_type1_pdf(
     glyphs as the CFF fixture, so the ink oracle transfers piece for
     piece while exercising the entirely separate decrypt + Type 1
     charstring path."""
-    from specialsid_spark.operators.pdf import (  # noqa: PLC0415
-        _assemble_pdf,
-        _pdf_escape,
-    )
     from specialsid_spark.operators.type1 import fixture_type1  # noqa: PLC0415
 
     if font_program is None:
         font_program = fixture_type1()
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
-    ff_num = add(
-        b"<< /Length %d /Length1 0 /Length2 %d /Length3 0 >>\nstream\n"
-        % (len(font_program), len(font_program))
-        + font_program
-        + b"\nendstream"
+    doc = PdfWriter()
+    desc_num = _font_descriptor(
+        doc, b"Fixture1", b"FontFile", font_program,
+        b"<< /Length %%d /Length1 0 /Length2 %d /Length3 0 >>"
+        % len(font_program),
     )
-    desc_num = add(
-        b"<< /Type /FontDescriptor /FontName /Fixture1 /Flags 4"
-        b" /FontBBox [0 -480 1024 832] /ItalicAngle 0 /Ascent 832"
-        b" /Descent -480 /CapHeight 832 /StemV 80 /FontFile %d 0 R >>"
-        % ff_num
-    )
-    font_num = add(
+    font_num = doc.add(
         b"<< /Type /Font /Subtype /Type1 /BaseFont /Fixture1"
         b" /FirstChar 32 /LastChar 126 /FontDescriptor %d 0 R >>" % desc_num
     )
-    content = b"BT /F1 %d Tf %d %d Td (%s) Tj ET" % (
-        size, td[0], td[1], _pdf_escape(text),
-    )
-    cont_num = add(
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
-    )
-    page = add(
-        b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-        b" /Resources << /Font << /F1 %d 0 R >> >>"
-        b" /Contents %d 0 R >>" % (pages_num, font_num, cont_num)
-    )
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    return _assemble_pdf(objects, catalog_num)
+    return _one_font_page(doc, font_num, _show(size, td, _pdf_escape(text)))
 
 
 def build_rotated_rect_pdf(
@@ -2571,28 +2434,11 @@ def build_rotated_rect_pdf(
     axis-parallel rect stays axis-parallel through 90-degree
     rotations; the quad-scanline path counts the same pixels the
     round() path would)."""
-    from specialsid_spark.operators.pdf import _assemble_pdf  # noqa: PLC0415
-
     rx, ry, rw, rh, rc = rect
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
+    doc = PdfWriter()
     content = b"%.6f g %d %d %d %d re f" % (rc / 255.0, rx, ry, rw, rh)
-    cont_num = add(
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
-    )
-    page = add(
-        b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-        b" /Rotate %d /Contents %d 0 R >>" % (pages_num, rot, cont_num)
-    )
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    return _assemble_pdf(objects, catalog_num)
+    doc.page(doc.stream(content), extra=b" /Rotate %d" % rot)
+    return doc.bytes()
 
 
 def build_type3_pdf(
@@ -2612,30 +2458,10 @@ def build_type3_pdf(
     displacement — the fixture for the full-matrix advance rule.
     ``raw_content`` replaces the default one-string content stream
     (used by the q/Q text-state-snapshot fixtures)."""
-    from specialsid_spark.operators.pdf import (  # noqa: PLC0415
-        _assemble_pdf,
-        _pdf_escape,
-    )
-
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
-    rect_proc = b"112 0 d0\n8 16 80 64 re f"
-    tri_proc = b"112 0 d0\n0 0 m 64 0 l 0 64 l h f"
-    rect_num = add(
-        b"<< /Length %d >>\nstream\n" % len(rect_proc)
-        + rect_proc + b"\nendstream"
-    )
-    tri_num = add(
-        b"<< /Length %d >>\nstream\n" % len(tri_proc)
-        + tri_proc + b"\nendstream"
-    )
-    font_num = add(
+    doc = PdfWriter()
+    rect_num = doc.stream(b"112 0 d0\n8 16 80 64 re f")
+    tri_num = doc.stream(b"112 0 d0\n0 0 m 64 0 l 0 64 l h f")
+    font_num = doc.add(
         b"<< /Type /Font /Subtype /Type3"
         b" /FontBBox [0 0 128 128]"
         b" /FontMatrix [0.0078125 %s 0 0.0078125 0 0]"
@@ -2646,20 +2472,8 @@ def build_type3_pdf(
     )
     content = raw_content
     if content is None:
-        content = b"BT /F1 %d Tf %d %d Td (%s) Tj ET" % (
-            size, td[0], td[1], _pdf_escape(text),
-        )
-    cont_num = add(
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
-    )
-    page = add(
-        b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-        b" /Resources << /Font << /F1 %d 0 R >> >>"
-        b" /Contents %d 0 R >>" % (pages_num, font_num, cont_num)
-    )
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    return _assemble_pdf(objects, catalog_num)
+        content = _show(size, td, _pdf_escape(text))
+    return _one_font_page(doc, font_num, content)
 
 
 def build_cid_pdf(
@@ -2674,70 +2488,26 @@ def build_cid_pdf(
     per-glyph ink is pen-invariant) — deliberately different from the
     program's hmtx widths, so a renderer that wrongly reads hmtx
     shifts every glyph and fails the oracle."""
-    from specialsid_spark.operators.pdf import _assemble_pdf  # noqa: PLC0415
     from specialsid_spark.operators.truetype import fixture_font  # noqa: PLC0415
-
-    def esc(raw: bytes) -> bytes:
-        out = bytearray()
-        for x in raw:
-            if x in (0x28, 0x29, 0x5C):  # ( ) backslash
-                out += b"\\" + bytes([x])
-            elif x == 0x0D:
-                out += b"\\r"
-            elif x == 0x0A:
-                out += b"\\n"
-            else:
-                out.append(x)
-        return bytes(out)
 
     if font_program is None:
         font_program = fixture_font()
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
-    ff_num = add(
-        b"<< /Length %d >>\nstream\n" % len(font_program)
-        + font_program
-        + b"\nendstream"
-    )
-    desc_num = add(
-        b"<< /Type /FontDescriptor /FontName /FixtureCID /Flags 4"
-        b" /FontBBox [0 -480 1024 832] /ItalicAngle 0 /Ascent 832"
-        b" /Descent -480 /CapHeight 832 /StemV 80 /FontFile2 %d 0 R >>"
-        % ff_num
-    )
-    cidfont_num = add(
+    doc = PdfWriter()
+    desc_num = _font_descriptor(doc, b"FixtureCID", b"FontFile2", font_program)
+    cidfont_num = doc.add(
         b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /FixtureCID"
         b" /CIDSystemInfo << /Registry (Adobe) /Ordering (Identity)"
         b" /Supplement 0 >> /FontDescriptor %d 0 R /DW 1000"
         b" /W [0 1000 %d] /CIDToGIDMap /Identity >>"
         % (desc_num, w_units)
     )
-    font_num = add(
+    font_num = doc.add(
         b"<< /Type /Font /Subtype /Type0 /BaseFont /FixtureCID"
         b" /Encoding /Identity-H /DescendantFonts [%d 0 R] >>"
         % cidfont_num
     )
     raw = b"".join(bytes([g >> 8, g & 0xFF]) for g in gids)
-    content = b"BT /F1 %d Tf %d %d Td (%s) Tj ET" % (
-        size, td[0], td[1], esc(raw),
-    )
-    cont_num = add(
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
-    )
-    page = add(
-        b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-        b" /Resources << /Font << /F1 %d 0 R >> >>"
-        b" /Contents %d 0 R >>" % (pages_num, font_num, cont_num)
-    )
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    return _assemble_pdf(objects, catalog_num)
+    return _one_font_page(doc, font_num, _show(size, td, _pdf_escape_bytes(raw)))
 
 
 def build_cid0_pdf(
@@ -2755,69 +2525,36 @@ def build_cid0_pdf(
     gids 1-4, so an identity-CID shortcut renders .notdef everywhere
     and fails too."""
     from specialsid_spark.operators.cff import fixture_cid_cff  # noqa: PLC0415
-    from specialsid_spark.operators.pdf import _assemble_pdf  # noqa: PLC0415
-
-    def esc(raw: bytes) -> bytes:
-        out = bytearray()
-        for x in raw:
-            if x in (0x28, 0x29, 0x5C):  # ( ) backslash
-                out += b"\\" + bytes([x])
-            elif x == 0x0D:
-                out += b"\\r"
-            elif x == 0x0A:
-                out += b"\\n"
-            else:
-                out.append(x)
-        return bytes(out)
 
     if font_program is None:
         font_program = fixture_cid_cff()
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
-    ff_num = add(
-        b"<< /Subtype /CIDFontType0C /Length %d >>\nstream\n"
-        % len(font_program)
-        + font_program
-        + b"\nendstream"
+    doc = PdfWriter()
+    desc_num = _font_descriptor(
+        doc, b"FixtureCID0", b"FontFile3", font_program,
+        b"<< /Subtype /CIDFontType0C /Length %d >>",
     )
-    desc_num = add(
-        b"<< /Type /FontDescriptor /FontName /FixtureCID0 /Flags 4"
-        b" /FontBBox [0 -480 1024 832] /ItalicAngle 0 /Ascent 832"
-        b" /Descent -480 /CapHeight 832 /StemV 80 /FontFile3 %d 0 R >>"
-        % ff_num
-    )
-    cidfont_num = add(
+    cidfont_num = doc.add(
         b"<< /Type /Font /Subtype /CIDFontType0 /BaseFont /FixtureCID0"
         b" /CIDSystemInfo << /Registry (Adobe) /Ordering (Identity)"
         b" /Supplement 0 >> /FontDescriptor %d 0 R /DW 1000"
         b" /W [100 110 %d] >>" % (desc_num, w_units)
     )
-    font_num = add(
+    font_num = doc.add(
         b"<< /Type /Font /Subtype /Type0 /BaseFont /FixtureCID0"
         b" /Encoding /Identity-H /DescendantFonts [%d 0 R] >>"
         % cidfont_num
     )
     raw = b"".join(bytes([c >> 8, c & 0xFF]) for c in cids)
-    content = b"BT /F1 %d Tf %d %d Td (%s) Tj ET" % (
-        size, td[0], td[1], esc(raw),
+    return _one_font_page(doc, font_num, _show(size, td, _pdf_escape_bytes(raw)))
+
+
+def _linear_fn(c0: float, c1: float) -> bytes:
+    """A FunctionType 2 (N 1) gray ramp from ``c0`` to ``c1``; repr()
+    writes each stop so the parsed double is exact."""
+    return b"<< /FunctionType 2 /Domain [0 1] /C0 [%s] /C1 [%s] /N 1 >>" % (
+        repr(c0).encode(),
+        repr(c1).encode(),
     )
-    cont_num = add(
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
-    )
-    page = add(
-        b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-        b" /Resources << /Font << /F1 %d 0 R >> >>"
-        b" /Contents %d 0 R >>" % (pages_num, font_num, cont_num)
-    )
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    return _assemble_pdf(objects, catalog_num)
 
 
 def build_separation_pdf(
@@ -2831,39 +2568,25 @@ def build_separation_pdf(
     before its fill, exercising the tint-transform path end to end.
     Tints and stops are written with repr() so the parsed doubles are
     exact; integral rects keep coverage a closed form."""
-    from specialsid_spark.operators.pdf import _assemble_pdf  # noqa: PLC0415
-
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
-    fn_num = add(
-        b"<< /FunctionType 2 /Domain [0 1] /C0 [%s] /C1 [%s] /N 1 >>"
-        % (repr(c0).encode(), repr(c1).encode())
+    doc = PdfWriter()
+    fn_num = doc.add(_linear_fn(c0, c1))
+    cs_num = doc.add(b"[/Separation /Spot /DeviceGray %d 0 R]" % fn_num)
+    content = b" ".join(
+        b"/CS0 cs %s scn %d %d %d %d re f" % (repr(tint).encode(), x, y, w, h)
+        for (x, y, w, h), tint in fills
     )
-    cs_num = add(b"[/Separation /Spot /DeviceGray %d 0 R]" % fn_num)
-    parts = []
-    for (x, y, w, h), tint in fills:
-        parts.append(
-            b"/CS0 cs %s scn %d %d %d %d re f"
-            % (repr(tint).encode(), x, y, w, h)
-        )
-    content = b" ".join(parts)
-    cont_num = add(
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
-    )
-    page = add(
-        b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-        b" /Resources << /ColorSpace << /CS0 %d 0 R >> >>"
-        b" /Contents %d 0 R >>" % (pages_num, cs_num, cont_num)
-    )
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    return _assemble_pdf(objects, catalog_num)
+    doc.page(doc.stream(content), b"/ColorSpace << /CS0 %d 0 R >>" % cs_num)
+    return doc.bytes()
+
+
+def _clipped_shading_page(
+    doc: PdfWriter, clip_rect: tuple[int, int, int, int], sh_num: int,
+) -> bytes:
+    """Finish a one-page fixture that paints shading ``sh_num`` as /Sh0
+    inside the rect clip ``clip_rect``."""
+    content = b"q %d %d %d %d re W n /Sh0 sh Q" % tuple(clip_rect)
+    doc.page(doc.stream(content), b"/Shading << /Sh0 %d 0 R >>" % sh_num)
+    return doc.bytes()
 
 
 def build_sampled_shading_pdf(
@@ -2877,41 +2600,18 @@ def build_sampled_shading_pdf(
     gradient shape.  Sample normalization (v/255), the encode ramp
     (t*(n-1)), the floor/frac interpolation, and the final
     floor(x*255+0.5) are all SQL-restatable doubles."""
-    from specialsid_spark.operators.pdf import _assemble_pdf  # noqa: PLC0415
-
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
-    fn_num = add(
+    doc = PdfWriter()
+    fn_num = doc.stream(
+        samples,
         b"<< /FunctionType 0 /Domain [0 1] /Size [%d]"
-        b" /BitsPerSample 8 /Range [0 1] /Length %d >>\nstream\n"
-        % (len(samples), len(samples))
-        + samples
-        + b"\nendstream"
+        b" /BitsPerSample 8 /Range [0 1] /Length %%d >>" % len(samples),
     )
-    sh_num = add(
+    sh_num = doc.add(
         b"<< /ShadingType 2 /ColorSpace /DeviceGray"
         b" /Coords [%d %d %d %d] /Function %d 0 R /Extend [true true] >>"
         % (*coords, fn_num)
     )
-    cx, cy, cw, chh = clip_rect
-    content = b"q %d %d %d %d re W n /Sh0 sh Q" % (cx, cy, cw, chh)
-    cont_num = add(
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
-    )
-    page = add(
-        b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-        b" /Resources << /Shading << /Sh0 %d 0 R >> >>"
-        b" /Contents %d 0 R >>" % (pages_num, sh_num, cont_num)
-    )
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    return _assemble_pdf(objects, catalog_num)
+    return _clipped_shading_page(doc, clip_rect, sh_num)
 
 
 def build_radial_pdf(
@@ -2927,48 +2627,21 @@ def build_radial_pdf(
     with repr() so the parsed doubles are exact; integral clip/center/
     radii keep the quadratic-root chain a closed-form double the SQL
     oracle restates."""
-    from specialsid_spark.operators.pdf import _assemble_pdf  # noqa: PLC0415
-
     c0, cm, c1 = stops
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
-    f0_num = add(
-        b"<< /FunctionType 2 /Domain [0 1] /C0 [%s] /C1 [%s] /N 1 >>"
-        % (repr(c0).encode(), repr(cm).encode())
-    )
-    f1_num = add(
-        b"<< /FunctionType 2 /Domain [0 1] /C0 [%s] /C1 [%s] /N 1 >>"
-        % (repr(cm).encode(), repr(c1).encode())
-    )
-    fn_num = add(
+    doc = PdfWriter()
+    f0_num = doc.add(_linear_fn(c0, cm))
+    f1_num = doc.add(_linear_fn(cm, c1))
+    fn_num = doc.add(
         b"<< /FunctionType 3 /Domain [0 1] /Functions [%d 0 R %d 0 R]"
         b" /Bounds [%s] /Encode [0 1 0 1] >>"
         % (f0_num, f1_num, repr(bound).encode())
     )
-    sh_num = add(
+    sh_num = doc.add(
         b"<< /ShadingType 3 /ColorSpace /DeviceGray"
         b" /Coords [%d %d %d %d %d %d] /Function %d 0 R"
         b" /Extend [true true] >>" % (*coords, fn_num)
     )
-    cx, cy, cw, chh = clip_rect
-    content = b"q %d %d %d %d re W n /Sh0 sh Q" % (cx, cy, cw, chh)
-    cont_num = add(
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
-    )
-    page = add(
-        b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-        b" /Resources << /Shading << /Sh0 %d 0 R >> >>"
-        b" /Contents %d 0 R >>" % (pages_num, sh_num, cont_num)
-    )
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    return _assemble_pdf(objects, catalog_num)
+    return _clipped_shading_page(doc, clip_rect, sh_num)
 
 
 def build_shading_pdf(
@@ -2983,35 +2656,11 @@ def build_shading_pdf(
     is EXACTLY c0/c1 (shortest round-trip form); integral clip and
     axis coordinates keep every t-projection a closed-form double the
     SQL oracle restates."""
-    from specialsid_spark.operators.pdf import _assemble_pdf  # noqa: PLC0415
-
-    objects: list[bytes] = []
-
-    def add(body: bytes) -> int:
-        objects.append(body)
-        return len(objects)
-
-    catalog_num = add(b"")
-    pages_num = add(b"")
-    fn_num = add(
-        b"<< /FunctionType 2 /Domain [0 1] /C0 [%s] /C1 [%s] /N 1 >>"
-        % (repr(c0).encode(), repr(c1).encode())
-    )
-    sh_num = add(
+    doc = PdfWriter()
+    fn_num = doc.add(_linear_fn(c0, c1))
+    sh_num = doc.add(
         b"<< /ShadingType 2 /ColorSpace /DeviceGray"
         b" /Coords [%d %d %d %d] /Function %d 0 R /Extend [true true] >>"
         % (*coords, fn_num)
     )
-    cx, cy, cw, chh = clip_rect
-    content = b"q %d %d %d %d re W n /Sh0 sh Q" % (cx, cy, cw, chh)
-    cont_num = add(
-        b"<< /Length %d >>\nstream\n" % len(content) + content + b"\nendstream"
-    )
-    page = add(
-        b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-        b" /Resources << /Shading << /Sh0 %d 0 R >> >>"
-        b" /Contents %d 0 R >>" % (pages_num, sh_num, cont_num)
-    )
-    objects[pages_num - 1] = b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-    objects[catalog_num - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages_num
-    return _assemble_pdf(objects, catalog_num)
+    return _clipped_shading_page(doc, clip_rect, sh_num)

@@ -20,8 +20,8 @@ from pyspark.sql.window import Window
 
 from specialsid_spark.catalog import load_parallel
 from specialsid_spark.operators.textops import lang_guess, tokens, word_kgrams
+from specialsid_spark.operators.rows import map_rows
 from specialsid_spark.queries import register
-from specialsid_spark.queries._rows import map_rows
 
 
 @register(

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from specialsid_spark.catalog import load, load_parallel
+from specialsid_spark.catalog import load_parallel
 from specialsid_spark.operators.snapshot import (
     snapshot_commit,
     snapshot_read,
@@ -32,15 +32,14 @@ from specialsid_spark.operators.textops import (
     minhash_component,
     quality_gate,
     simhash16_from_digests,
-    sql_digest16_block,
     sql_minhash_component,
     sql_simhash16_digests,
     token_digest16,
     tokens,
     word_shingles,
 )
+from specialsid_spark.operators.rows import map_rows
 from specialsid_spark.queries import register
-from specialsid_spark.queries._rows import map_rows
 
 _SQL_TOKENS = "string_split_regex(lower(trim(text)), '\\s+')"
 _SQL_SHINGLES = (
@@ -1830,8 +1829,6 @@ def pipeline_retrieval_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     the kept paragraphs (localCheckpointed once, fanned into the
     length and posting legs), and the BM25 stage shuffles only
     query-term postings."""
-    from pyspark.sql.window import Window
-
     d = load_parallel(spark, sf_dir, "documents")
     paras = d.select("doc_id", tokens("text").alias("ts")).select(
         "doc_id",
@@ -2496,6 +2493,27 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+def _epoch_shard_manifest(adm: DataFrame) -> DataFrame:
+    """The daily-ingest manifest: each admitted doc_id's epoch-1 shard
+    (md5 % 8), rolled up to one (shard, n_admitted, id_sum) row per
+    shard."""
+    hx = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":epoch:1")))
+    sharded = adm.select(
+        "doc_id",
+        (F.conv(F.substring(hx, 1, 8), 16, 10).cast("long") % 8).alias("shard"),
+    )
+    return (
+        sharded.groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_admitted"),
+            (F.sum(F.col("doc_id") % 1000000007) % 1000000007)
+            .cast("long")
+            .alias("id_sum"),
+        )
+        .orderBy("shard")
+    )
+
+
 @register(
     "pipeline_daily_ingest",
     oracle=f"""
@@ -2582,21 +2600,7 @@ def pipeline_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("hc") + F.col("hi")) == 0)
         .select("doc_id")
     )
-    hx = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":epoch:1")))
-    sharded = adm.select(
-        "doc_id",
-        (F.conv(F.substring(hx, 1, 8), 16, 10).cast("long") % 8).alias("shard"),
-    )
-    return (
-        sharded.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_admitted"),
-            (F.sum(F.col("doc_id") % 1000000007) % 1000000007)
-            .cast("long")
-            .alias("id_sum"),
-        )
-        .orderBy("shard")
-    )
+    return _epoch_shard_manifest(adm)
 
 
 # the PDF daily-ingest door: doc_id cap (the per-run codec budget —
@@ -2740,15 +2744,6 @@ def pipeline_pdf_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("text")
         )
     )
-    votes = {
-        lang: f"size(filter(toks, t -> t IN ({marks})))"
-        for lang, marks in (
-            ("en", "'the','and','of'"),
-            ("es", "'el','la','de'"),
-            ("fr", "'le','la','et'"),
-            ("de", "'der','die','und'"),
-        )
-    }
     gated = (
         ext.select("doc_id", "text", tokens("text").alias("toks"))
         .filter(F.size("toks") >= _PDI_MIN_TOKENS)
@@ -2761,9 +2756,7 @@ def pipeline_pdf_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.regexp_count("text", F.lit(_PII_EMAIL)) == 0)
         .filter(F.regexp_count("text", F.lit(_PII_IPV4)) == 0)
-        .filter(F.expr(f"{votes['en']} >= {votes['es']}"))
-        .filter(F.expr(f"{votes['en']} >= {votes['fr']}"))
-        .filter(F.expr(f"{votes['en']} >= {votes['de']}"))
+        .filter(lang_guess(F.col("toks")) == "en")
         .select("doc_id", "text")
     )
     corpus = d64.filter(F.col("doc_id") % 3 == 0).select(
@@ -2781,21 +2774,7 @@ def pipeline_pdf_daily_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("admitted") == 1)
         .select("doc_id")
     )
-    hx = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":epoch:1")))
-    sharded = adm.select(
-        "doc_id",
-        (F.conv(F.substring(hx, 1, 8), 16, 10).cast("long") % 8).alias("shard"),
-    )
-    return (
-        sharded.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_admitted"),
-            (F.sum(F.col("doc_id") % 1000000007) % 1000000007)
-            .cast("long")
-            .alias("id_sum"),
-        )
-        .orderBy("shard")
-    )
+    return _epoch_shard_manifest(adm)
 
 
 def _sh_ham(a: str, b: str) -> str:

@@ -30,8 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from specialsid_spark.catalog import load
+from specialsid_spark.operators.rows import map_rows
 from specialsid_spark.queries import register
-from specialsid_spark.queries._rows import map_rows
 from specialsid_spark.session import session_workdir
 
 # scratch roundtrip outputs, written once per (format, sf_dir) per process

@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 
 from specialsid_spark.catalog import load
 from specialsid_spark.operators.multimodal import decode_image_stub, explode_pdf_pages_stub
+from specialsid_spark.operators.rows import map_rows
 from specialsid_spark.queries import register
-from specialsid_spark.queries._rows import map_rows
 
 
 def _as_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3537,7 +3537,7 @@ def mm_pdf_ccitt_image_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-row independent mapInPandas; two-scanline decoder
     state, page-bounded buffer, no shuffle before the final sort."""
     from specialsid_spark.operators.ccitt import g4_encode
-    from specialsid_spark.operators.pdf import _assemble_pdf
+    from specialsid_spark.operators.pdf import PdfWriter
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
     W, H = 144, 96
@@ -3549,36 +3549,19 @@ def mm_pdf_ccitt_image_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
             for x in range(W)
         )
         enc = g4_encode(img, W, H)
-        objects: list[bytes] = []
-
-        def add(body: bytes) -> int:
-            objects.append(body)
-            return len(objects)
-
-        cat = add(b"")
-        pages = add(b"")
-        xo = add(
+        doc = PdfWriter()
+        xo = doc.stream(
+            enc,
             b"<< /Subtype /Image /Width %d /Height %d /BitsPerComponent 1"
             b" /ColorSpace /DeviceGray /Filter /CCITTFaxDecode"
             b" /DecodeParms << /K -1 /Columns %d /Rows %d >>"
-            b" /Length %d >>\nstream\n" % (W, H, W, H, len(enc))
-            + enc + b"\nendstream"
+            b" /Length %%d >>" % (W, H, W, H),
         )
-        content = b"q %d 0 0 %d 120 560 cm /Im0 Do Q" % (W, H)
-        cont = add(
-            b"<< /Length %d >>\nstream\n" % len(content)
-            + content + b"\nendstream"
+        doc.page(
+            doc.stream(b"q %d 0 0 %d 120 560 cm /Im0 Do Q" % (W, H)),
+            b"/XObject << /Im0 %d 0 R >>" % xo,
         )
-        page = add(
-            b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-            b" /Resources << /XObject << /Im0 %d 0 R >> >>"
-            b" /Contents %d 0 R >>" % (pages, xo, cont)
-        )
-        objects[pages - 1] = (
-            b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-        )
-        objects[cat - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages
-        return _assemble_pdf(objects, cat)
+        return doc.bytes()
 
     def kernel(doc_id):
         gray = _page_gray(build(doc_id))
@@ -3654,7 +3637,7 @@ def mm_pdf_inline_image_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
 
-    from specialsid_spark.operators.pdf import _assemble_pdf
+    from specialsid_spark.operators.pdf import PdfWriter
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
     W1, H1, W2, H2 = 96, 64, 40, 30
@@ -3684,27 +3667,9 @@ def mm_pdf_inline_image_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
             + binascii.hexlify(rgb)
             + b"> EI Q"
         )
-        objects: list[bytes] = []
-
-        def add(body: bytes) -> int:
-            objects.append(body)
-            return len(objects)
-
-        cat = add(b"")
-        pages = add(b"")
-        cont = add(
-            b"<< /Length %d >>\nstream\n" % len(content)
-            + content + b"\nendstream"
-        )
-        page = add(
-            b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-            b" /Contents %d 0 R >>" % (pages, cont)
-        )
-        objects[pages - 1] = (
-            b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-        )
-        objects[cat - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages
-        return _assemble_pdf(objects, cat)
+        doc = PdfWriter()
+        doc.page(doc.stream(content))
+        return doc.bytes()
 
     def kernel(doc_id):
         rgb = _page_rgb(build(doc_id))
@@ -4458,7 +4423,7 @@ def mm_pdf_ccitt_k_modes_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
         g3_mixed_encode,
         g4_encode,
     )
-    from specialsid_spark.operators.pdf import _assemble_pdf
+    from specialsid_spark.operators.pdf import PdfWriter
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
     W, H = 96, 64
@@ -4476,36 +4441,19 @@ def mm_pdf_ccitt_k_modes_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
             enc, k = g3_1d_encode(img, W, H, byte_align=False), 0
         else:
             enc, k = g3_mixed_encode(img, W, H, k=4), 4
-        objects: list[bytes] = []
-
-        def add(body: bytes) -> int:
-            objects.append(body)
-            return len(objects)
-
-        cat = add(b"")
-        pages = add(b"")
-        xo = add(
+        doc = PdfWriter()
+        xo = doc.stream(
+            enc,
             b"<< /Subtype /Image /Width %d /Height %d /BitsPerComponent 1"
             b" /ColorSpace /DeviceGray /Filter /CCITTFaxDecode"
             b" /DecodeParms << /K %d /Columns %d /Rows %d >>"
-            b" /Length %d >>\nstream\n" % (W, H, k, W, H, len(enc))
-            + enc + b"\nendstream"
+            b" /Length %%d >>" % (W, H, k, W, H),
         )
-        content = b"q %d 0 0 %d 140 600 cm /Im0 Do Q" % (W, H)
-        cont = add(
-            b"<< /Length %d >>\nstream\n" % len(content)
-            + content + b"\nendstream"
+        doc.page(
+            doc.stream(b"q %d 0 0 %d 140 600 cm /Im0 Do Q" % (W, H)),
+            b"/XObject << /Im0 %d 0 R >>" % xo,
         )
-        page = add(
-            b"<< /Type /Page /Parent %d 0 R /MediaBox [0 0 612 792]"
-            b" /Resources << /XObject << /Im0 %d 0 R >> >>"
-            b" /Contents %d 0 R >>" % (pages, xo, cont)
-        )
-        objects[pages - 1] = (
-            b"<< /Type /Pages /Kids [%d 0 R] /Count 1 >>" % page
-        )
-        objects[cat - 1] = b"<< /Type /Catalog /Pages %d 0 R >>" % pages
-        return _assemble_pdf(objects, cat), k
+        return doc.bytes(), k
 
     def kernel(doc_id):
         blob, k = build(doc_id)

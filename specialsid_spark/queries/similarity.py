@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from specialsid_spark.catalog import load, load_parallel
+from specialsid_spark.catalog import load_parallel
 from specialsid_spark.operators.textops import dot, dot_np, norm
 from specialsid_spark.queries import register
 

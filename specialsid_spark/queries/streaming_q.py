@@ -14,7 +14,6 @@ import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from specialsid_spark.operators.extraction import ExtractionConfig
 from specialsid_spark.queries import register

@@ -12,10 +12,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from specialsid_spark.catalog import load, load_parallel
+from specialsid_spark.catalog import load_parallel
 from specialsid_spark.operators.textops import fingerprint, lang_guess, quality_gate, tokens
+from specialsid_spark.operators.rows import map_rows
 from specialsid_spark.queries import register
-from specialsid_spark.queries._rows import map_rows
 
 _SQL_TOKENS = "string_split_regex(lower(trim(text)), '\\s+')"
 

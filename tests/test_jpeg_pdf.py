@@ -966,13 +966,13 @@ def test_pdf_cid_codes_are_not_latin1():
         _parse_content_text,
         build_cid_text_pdf,
         extract_page_text,
-        _parse_objects,
+        _scan_objects,
         _content_bytes,
     )
 
     pages = ["h\nhello cid"]
     pdf = build_cid_text_pdf(pages)
-    objs = _parse_objects(pdf)
+    objs = _scan_objects(pdf)[0]
     page_head = next(h for h, d in objs.values() if b"/Type /Page " in h or b"/Type /Page/" in h or (b"/Type /Page" in h and b"/Pages" not in h))
     content = _content_bytes(objs, page_head)
     naive = _parse_content_text(content)  # no fonts dict -> latin-1 pass

@@ -1,10 +1,10 @@
-"""map_rows: the one per-row kernel stage (queries/_rows.py)."""
+"""map_rows: the one per-row kernel stage (operators/rows.py)."""
 
 from __future__ import annotations
 
 import pytest
 
-from specialsid_spark.queries._rows import ddl_fields, map_rows
+from specialsid_spark.operators.rows import ddl_fields, map_rows
 
 
 def test_ddl_fields_splits_top_level_commas_only():

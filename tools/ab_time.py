@@ -5,12 +5,16 @@ warmup, interleaved min-of-N rounds, Arrow toPandas materialization —
 so per-query numbers are comparable with bench.py's, while costing
 minutes instead of the full 109-query run.
 
-Usage: python tools/ab_time.py <query> [<query> ...]
+Usage: python tools/ab_time.py <query_or_pattern> [...]
+
+Each name may be a shell-style pattern (``'mm_pdf_*'``), as in
+tools/check_oracle.py; a pattern that matches no query is an error.
 Env:   AB_ROUNDS (default 3), SPARK_GRAFT_SF_DIR (default sf0.1)
 """
 
 from __future__ import annotations
 
+import fnmatch
 import json
 import os
 import sys
@@ -20,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    names = sys.argv[1:]
+    patterns = sys.argv[1:]
     rounds = int(os.environ.get("AB_ROUNDS", "3"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -33,9 +37,11 @@ def main() -> None:
 
     spark = get_spark("ab_time")
     qs = all_queries()
-    unknown = [n for n in names if n not in qs]
+    unknown = [p for p in patterns if not fnmatch.filter(qs, p)]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
+    # argument order, so explicit names time in the order given
+    names = list(dict.fromkeys(n for p in patterns for n in fnmatch.filter(qs, p)))
 
     # same warmup as bench.py
     nat = load(spark, sf_dir, "nation")
