@@ -706,11 +706,6 @@ def explode_pdf_pages(
     return map_rows(df.select(id_col, bin_col), explode, PAGE_SCHEMA)
 
 
-#: Back-compat name from rounds 1-3; for image-per-page PDFs the pages
-#: are no longer stubs.
-explode_pdf_pages_stub = explode_pdf_pages
-
-
 def explode_pdf_text(
     df: DataFrame, id_col: str = "doc_id", bin_col: str = "blob"
 ) -> DataFrame:

@@ -40,6 +40,14 @@ directory can be relocated wholesale; this module is the only writer
 of the manifest format (``sources/pyds.py`` commits through it).
 The foreachBatch summary streams of ``streaming/pipeline.py`` commit
 through it too: each micro-batch is one tagged overwrite.
+
+A manifest also describes its files: ``schema`` (Spark's JSON form) is
+passed to the reader by :func:`_read_files`, the module's one parquet
+read, so a read plans with no inference job, and ``stats`` holds every
+written file's footer [min, max] per integer column, which scan, the
+copy-on-write verbs and the DataSource reader prune by.  An append
+widens the schema by new columns and refuses a changed type.  A
+manifest written before schemas were recorded infers one on read.
 """
 
 from __future__ import annotations
@@ -50,6 +58,7 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _manifest_dir(path: str) -> Path:
@@ -77,23 +86,40 @@ def _dv_file_sql(path: str) -> str:
     )
 
 
-def _subtract_dvs(
-    spark: SparkSession, path: str, df: DataFrame, dvs: list[str]
+#: Schema of a deletion-vector sidecar: (data file, row position) pairs.
+_DV_SCHEMA = "file string, pos long"
+
+
+def _read_files(
+    spark: SparkSession,
+    path: str,
+    files: list[str],
+    schema: dict | str | None,
+    deletes: list[str] | None = None,
 ) -> DataFrame:
-    """Merge-on-read: subtract deletion-vector (file, pos) pairs from
-    ``df`` (which must be a raw parquet read of this table's files, so
-    ``_metadata`` is still resolvable).  The DV side is bounded by
-    |deleted rows| — typically tiny vs the table — so the anti-join is
-    broadcast; data files are untouched.  Matching is on the NORMALIZED
-    ABSOLUTE path of each data file: relative DV entries are resolved
-    against this table's root, absolute entries (clone-external files)
-    pass through — one rule that covers plain tables and shallow
-    clones alike."""
+    """THE parquet read of this module: ``files`` (table-relative, or
+    absolute for a clone's shared files) read with ``schema`` (a
+    manifest's, or DDL), so planning runs no inference job and a column
+    a file predates reads as NULL; None infers it.  No files: an empty
+    frame of ``schema``.  ``deletes`` are deletion-vector sidecars to
+    subtract (merge-on-read); they are bounded by |deleted rows|, so the
+    anti-join is broadcast, and data files are untouched.  Matching is
+    on the NORMALIZED ABSOLUTE path of each data file: relative DV
+    entries are resolved against this table's root, absolute entries
+    (clone-external files) pass through — one rule that covers plain
+    tables and shallow clones alike."""
     from pyspark.sql import functions as F
 
+    if isinstance(schema, dict):
+        schema = StructType.fromJson(schema)
+    if not files:
+        return spark.createDataFrame([], schema or StructType())
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(*[str(Path(path) / f) for f in files])
+    if not deletes:
+        return df
     root = str(Path(path).resolve())
-    dv = spark.read.parquet(*[str(Path(path) / d) for d in dvs])
-    dv_abs = dv.select(
+    dv = _read_files(spark, path, deletes, _DV_SCHEMA).select(
         F.when(F.col("file").startswith("/"), F.col("file"))
         .otherwise(F.concat(F.lit(root + "/"), F.col("file")))
         .alias("__dv_file"),
@@ -102,9 +128,34 @@ def _subtract_dvs(
     return (
         df.withColumn("__dv_file", F.expr(_ABS_PATH_SQL))
         .withColumn("__dv_pos", F.col("_metadata.row_index"))
-        .join(F.broadcast(dv_abs), ["__dv_file", "__dv_pos"], "left_anti")
+        .join(F.broadcast(dv), ["__dv_file", "__dv_pos"], "left_anti")
         .drop("__dv_file", "__dv_pos")
     )
+
+
+def _schema(spark: SparkSession, path: str, m: dict) -> dict:
+    """The schema manifest ``m`` records; one written before schemas
+    were recorded infers it from its files (one Spark job)."""
+    if "schema" in m:
+        return m["schema"]
+    return _read_files(spark, path, m["files"], None).schema.jsonValue()
+
+
+def _widen(head: dict | None, new: dict | None) -> dict | None:
+    """``head``'s columns plus the columns of ``new`` it lacks (additive
+    schema evolution); a column whose type differs raises ValueError.
+    A schema that is not recorded (None) leaves ``head`` as it is."""
+    if head is None or new is None:
+        return head
+    out = StructType.fromJson(head)
+    for f in StructType.fromJson(new).fields:
+        if f.name not in out.names:
+            out.add(f)
+        elif (a := out[f.name].dataType.simpleString()) != (
+            b := f.dataType.simpleString()
+        ):
+            raise ValueError(f"column {f.name!r} changes type from {a} to {b}")
+    return out.jsonValue()
 
 
 def snapshot_versions(path: str) -> list[int]:
@@ -150,12 +201,13 @@ def _routes(stats: dict, rel: str, col: str, lo, hi) -> bool:
 
 def _write_files(
     df: DataFrame, path: str, partition_by: str | None = None
-) -> list[str]:
+) -> tuple[list[str], dict, dict]:
     """Write ``df`` as new immutable parquet files in a commit-unique
-    ``data/v{head+1}-{uuid}`` dir and return their table-relative paths,
-    sorted.  The files stay invisible until a published manifest
-    references them; the dir prefix names the version the writer
-    expected, not the one it lands at (a rebased append lands later)."""
+    ``data/v{head+1}-{uuid}`` dir; returns their table-relative paths
+    (sorted), footer stats and schema (``df``'s, minus ``partition_by``).
+    The files stay invisible until a published manifest references
+    them; the dir prefix names the version the writer expected, not the
+    one it lands at (a rebased append lands later)."""
     root = Path(path)
     versions = snapshot_versions(path)
     head = versions[-1] if versions else 0
@@ -164,9 +216,12 @@ def _write_files(
     if partition_by is not None:
         writer = writer.partitionBy(partition_by)
     writer.parquet(str(data_dir))
-    return sorted(
+    files = sorted(
         str(p.relative_to(root)) for p in data_dir.rglob("*.parquet") if p.is_file()
     )
+    stats = {rel: st for rel in files if (st := _file_stats(root, rel))}
+    schema = StructType([f for f in df.schema.fields if f.name != partition_by])
+    return files, stats, schema.jsonValue()
 
 
 def _publish(path: str, parent: int, op: str, files: list[str], **fields) -> int:
@@ -199,18 +254,36 @@ def _publish(path: str, parent: int, op: str, files: list[str], **fields) -> int
     return version
 
 
+def _publish_derived(
+    path: str, v: int, m: dict, op: str, keep: list[str], df=None, **fields
+) -> int:
+    """Publish ``op`` as version ``v + 1``, derived from manifest ``m``:
+    ``m``'s files ``keep`` stay with their stats, the rows of ``df``
+    (None: no rows to write) land in new files with fresh stats, and
+    ``m``'s schema carries over."""
+    files, new_stats = ([], {}) if df is None else _write_files(df, path)[:2]
+    kept = m.get("stats", {})
+    stats = {**{f: kept[f] for f in keep if f in kept}, **new_stats}
+    return _publish(
+        path, v, op, keep + files, stats=stats, schema=m.get("schema"), **fields
+    )
+
+
 def _commit_files(
     path: str,
     new_files: list[str],
     op: str,
     tag: str | None = None,
     stats: dict | None = None,
+    schema: dict | None = None,
 ) -> int:
     """Commit already-written ``new_files`` as the next version on top
     of the head read NOW, after the data write.  ``append`` inherits the
-    head's files, the stats of those files and its deletion vectors;
-    ``overwrite`` references only ``new_files``.  ``stats`` maps new
-    files to their column stats.
+    head's files, the stats of those files and its deletion vectors, and
+    records the head's schema widened by ``schema`` (:func:`_widen`;
+    a changed column type raises ValueError before any publish);
+    ``overwrite`` references only ``new_files`` and records ``schema``.
+    ``stats`` maps new files to their column stats (others are ignored).
 
     When another writer publishes first, an append re-reads the head
     and rebases — unless a version newer than the head it read carries
@@ -219,13 +292,9 @@ def _commit_files(
     while True:
         versions = snapshot_versions(path)
         head = versions[-1] if versions else 0
-        files, carried, deletes = new_files, {}, []
-        if op == "append" and head:
-            parent = _read_manifest(path, head)
-            files = parent["files"] + new_files
-            pstats = parent.get("stats", {})
-            carried = {f: pstats[f] for f in parent["files"] if f in pstats}
-            deletes = parent.get("deletes", [])
+        parent = _read_manifest(path, head) if op == "append" and head else {}
+        files = parent.get("files", []) + new_files
+        known = {**parent.get("stats", {}), **(stats or {})}
         try:
             return _publish(
                 path,
@@ -233,8 +302,9 @@ def _commit_files(
                 op,
                 files,
                 tag=tag,
-                stats={**carried, **(stats or {})},
-                deletes=deletes,
+                stats={f: known[f] for f in files if f in known},
+                schema=_widen(parent.get("schema"), schema) if parent else schema,
+                deletes=parent.get("deletes"),
             )
         except FileExistsError:
             if op != "append":
@@ -252,12 +322,14 @@ def snapshot_commit(
     new manifest version; returns the committed version number.
 
     ``mode='append'`` keeps the previous version's files (and their
-    stats and deletion vectors) and adds the new ones; ``'overwrite'``
-    references only the new files (old data files remain on disk for
-    time travel until vacuumed).  The head is read after the data
-    write: an append that loses a race to another writer rebases onto
-    the new head, so its returned version may be later than the head
-    it started from; an overwrite that loses raises FileExistsError.
+    stats and deletion vectors) and adds the new ones, widening the
+    recorded schema by any new columns; ``'overwrite'`` references only
+    the new files (old data files remain on disk for time travel until
+    vacuumed).  The new files' footer stats are recorded.  The head is
+    read after the data write: an append that loses a race to another
+    writer rebases onto the new head, so its returned version may be
+    later than the head it started from; an overwrite that loses raises
+    FileExistsError.
 
     ``tag`` (r6) records an idempotency token IN the manifest — commit
     and token become visible in the same atomic publish, which is what
@@ -266,7 +338,8 @@ def snapshot_commit(
     already-committed version instead of appending the batch twice."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown snapshot mode {mode!r}")
-    return _commit_files(path, _write_files(df, path), mode, tag=tag)
+    files, stats, schema = _write_files(df, path)
+    return _commit_files(path, files, mode, tag=tag, stats=stats, schema=schema)
 
 
 def snapshot_commit_generations(
@@ -289,10 +362,14 @@ def snapshot_commit_generations(
     twice."""
     if len(set(gens)) != len(gens):
         raise ValueError(f"duplicate generations in {gens!r}")
-    files = _write_files(df, path, partition_by=gen_col)
+    files, stats, schema = _write_files(df, path, partition_by=gen_col)
     return [
         _commit_files(
-            path, [f for f in files if f"/{gen_col}={g}/" in f], "append"
+            path,
+            [f for f in files if f"/{gen_col}={g}/" in f],
+            "append",
+            stats=stats,
+            schema=schema,
         )
         for g in gens
     ]
@@ -308,32 +385,19 @@ def snapshot_version_by_tag(path: str, tag: str) -> int | None:
 
 
 def snapshot_read(
-    spark: SparkSession,
-    path: str,
-    version: int | None = None,
-    merge_schema: bool = False,
+    spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
-    """The table as of ``version`` (default: latest).  Resolves the
-    manifest once; the returned DataFrame's file list is pinned, so
-    later commits do not affect it (snapshot isolation).
+    """The table as of ``version`` (default: latest), read with the
+    schema its manifest records.  Resolves the manifest once; the
+    returned DataFrame's file list is pinned, so later commits do not
+    affect it (snapshot isolation).
 
-    ``merge_schema=True`` enables ADDITIVE schema evolution: a version
-    whose files carry different (widened) schemas reads as their union,
-    with NULLs for columns a file predates — immutable files are never
-    rewritten for a column add, which at 100 TB is the difference
-    between a metadata operation and a full-table rewrite."""
+    A version widened by an append (ADDITIVE schema evolution) reads as
+    the union, with NULLs for columns a file predates — immutable files
+    are never rewritten for a column add, which at 100 TB is the
+    difference between a metadata operation and a full-table rewrite."""
     _, m = _resolve(path, version)
-    files = m["files"]
-    if not files:
-        return spark.createDataFrame([], schema="dummy string").limit(0)
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(*[str(Path(path) / f) for f in files])
-    dvs = m.get("deletes")
-    if dvs:
-        df = _subtract_dvs(spark, path, df, dvs)
-    return df
+    return _read_files(spark, path, m["files"], m.get("schema"), m.get("deletes"))
 
 
 def snapshot_vacuum(path: str, keep_last: int = 2) -> list[str]:
@@ -403,52 +467,45 @@ def snapshot_diff(
     both versions can be masked differently on each side), so when
     either endpoint carries live DVs the diff falls back to full
     DV-subtracted reads of both versions — correct, at the cost of
-    reading shared files too (ADVICE r10)."""
+    reading shared files too (ADVICE r10).  Both sides are read with
+    one schema, the target's widened by the source's columns, so a
+    diff across a column add lines up."""
     from pyspark.sql import functions as F
 
     m_from = _read_manifest(path, v_from)
     m_to = _read_manifest(path, v_to)
-    if m_from.get("deletes") or m_to.get("deletes"):
-        a = snapshot_read(spark, path, v_from)
-        b = snapshot_read(spark, path, v_to)
-        added = b.exceptAll(a).withColumn("change_type", F.lit("insert"))
-        removed = a.exceptAll(b).withColumn("change_type", F.lit("delete"))
-        return added.unionByName(removed)
-    files_a = set(m_from["files"])
-    files_b = set(m_to["files"])
-    only_a = sorted(files_a - files_b)
-    only_b = sorted(files_b - files_a)
-
-    def _read(files: list[str], other: list[str]) -> DataFrame:
-        if files:
-            return spark.read.parquet(*[str(Path(path) / f) for f in files])
-        # schema-only empty frame from the other side's files
-        return spark.read.parquet(
-            *[str(Path(path) / f) for f in other]
-        ).limit(0)
-
-    if not only_a and not only_b:
-        empty = _read([], sorted(files_a) or sorted(files_b))
-        return empty.withColumn("change_type", F.lit("insert")).limit(0)
-    a = _read(only_a, only_b)
-    b = _read(only_b, only_a)
+    files_a, files_b = m_from["files"], m_to["files"]
+    if not (m_from.get("deletes") or m_to.get("deletes")):
+        files_a, files_b = (
+            sorted(set(files_a) - set(files_b)),
+            sorted(set(files_b) - set(files_a)),
+        )
+    schema = _widen(_schema(spark, path, m_to), _schema(spark, path, m_from))
+    a = _read_files(spark, path, files_a, schema, m_from.get("deletes"))
+    b = _read_files(spark, path, files_b, schema, m_to.get("deletes"))
     added = b.exceptAll(a).withColumn("change_type", F.lit("insert"))
     removed = a.exceptAll(b).withColumn("change_type", F.lit("delete"))
     return added.unionByName(removed)
 
 
-def _file_stats(root: Path, rel: str, cols: list[str]) -> dict:
-    """Per-file min/max for ``cols``, read from the parquet FOOTER the
-    file already carries (no data scan).  A column is recorded ONLY if
-    every row group in the file has usable min/max for it — a partial
-    range (some writers omit stats for oversized binary values) would
-    under-cover the file and make scan() prune a file that still holds
-    matching rows, violating the 'pruning never drops data' invariant.
-    Columns without complete statistics are simply absent — scan()
-    treats that as 'always read'."""
+def _file_stats(root: Path, rel: str) -> dict:
+    """Per-file min/max of every integer column (Spark byte, short, int
+    and long), read from the parquet FOOTER the file already carries
+    (one footer read, no data scan).  Other types stay stats-less, and a
+    stats-less column always routes: dates, timestamps and decimals are
+    integers on disk, but their footer values come back as objects JSON
+    cannot hold, and Spark orders NaN above every double, so a NaN max
+    would prune a file that holds matching rows.  A column is recorded
+    ONLY if every row group in the file has usable min/max for it — a
+    partial range would under-cover the file and make scan() prune a
+    file that still holds matching rows, violating the 'pruning never
+    drops data' invariant."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    md = pq.ParquetFile(str(root / rel)).metadata
+    with pq.ParquetFile(str(root / rel)) as pf:
+        cols = {f.name for f in pf.schema_arrow if pa.types.is_integer(f.type)}
+        md = pf.metadata
     mins: dict = {}
     maxs: dict = {}
     hits: dict = {}
@@ -467,23 +524,6 @@ def _file_stats(root: Path, rel: str, cols: list[str]) -> dict:
         for c in mins
         if hits[c] == md.num_row_groups
     }
-
-
-def snapshot_commit_stats(
-    df: DataFrame, path: str, stats_cols: list[str], mode: str = "append"
-) -> int:
-    """snapshot_commit + per-file min/max column statistics in the
-    manifest (the Iceberg idea: the manifest carries enough metadata to
-    prune files BEFORE any read).  Stats come from the parquet footers
-    of the just-written files; appended manifests inherit the parent's
-    stats for retained files (a retained file committed without stats
-    stays stats-less, so every scan reads it)."""
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"unknown snapshot mode {mode!r}")
-    root = Path(path)
-    files = _write_files(df, path)
-    stats = {rel: _file_stats(root, rel, stats_cols) for rel in files}
-    return _commit_files(path, files, mode, stats=stats)
 
 
 def snapshot_scan(
@@ -509,16 +549,10 @@ def snapshot_scan(
     keep = [rel for rel in m["files"] if _routes(stats, rel, col, lo, hi)]
     from pyspark.sql import functions as F
 
-    # everything pruned: schema-only empty frame from the full file list
-    src = keep if keep else m["files"]
-    df = spark.read.parquet(*[str(Path(path) / f) for f in src])
-    if not keep:
-        df = df.limit(0)
-    elif m.get("deletes"):
-        # stats stay conservative bounds after rows are masked, so the
-        # pruning decision above is unaffected — but the surviving files
-        # must still be read through their deletion vectors (ADVICE r10)
-        df = _subtract_dvs(spark, path, df, m["deletes"])
+    # stats stay conservative bounds after rows are masked, so the
+    # pruning decision above is unaffected — but the surviving files
+    # must still be read through their deletion vectors (ADVICE r10)
+    df = _read_files(spark, path, keep, _schema(spark, path, m), m.get("deletes"))
     return (
         df.filter((F.col(col) >= lo) & (F.col(col) <= hi)),
         len(keep),
@@ -543,13 +577,13 @@ def snapshot_compact(
     gate decision (gates probe set membership).  ``target_files=None``
     keeps natural partitioning — at corpus scale the compaction of a
     100 TB-derived index must not serialize through one write task."""
-    v, _ = _resolve(path)
+    v, m = _resolve(path)
     cur = snapshot_read(spark, path, v)
     if dedup:
         cur = cur.distinct()
     if target_files is not None:
         cur = cur.coalesce(target_files)
-    return _publish(path, v, "compact", _write_files(cur, path))
+    return _publish_derived(path, v, m, "compact", [], cur)
 
 
 def snapshot_delete(
@@ -571,14 +605,13 @@ def snapshot_delete(
     time-travelable because old files are never mutated."""
     from pyspark.sql import functions as F
 
-    root = Path(path)
     v, m = _resolve(path)
     stats = m.get("stats", {})
     dvs = m.get("deletes", [])
     touched, untouched = [], []
     for rel in m["files"]:
         (touched if _routes(stats, rel, col, lo, hi) else untouched).append(rel)
-    new_files: list[str] = []
+    kept = None
     if touched:
         # NULL keys can never match a BETWEEN predicate, but the naive
         # ~(col >= lo AND col <= hi) evaluates to NULL for them and a
@@ -586,25 +619,16 @@ def snapshot_delete(
         # from rewritten files while identical rows in stats-pruned
         # files survive.  Keep NULLs explicitly so "rewrite may never
         # delete non-matching rows" holds regardless of file layout.
-        src_df = spark.read.parquet(*[str(root / f) for f in touched])
-        if dvs:
-            # rows already masked by deletion vectors must not be
-            # resurrected into the rewritten files (ADVICE r10)
-            src_df = _subtract_dvs(spark, path, src_df, dvs)
-        kept = src_df.filter(
+        # Rows already masked by deletion vectors must not be
+        # resurrected into the rewritten files (ADVICE r10).
+        kept = _read_files(spark, path, touched, m.get("schema"), dvs).filter(
             F.col(col).isNull() | ~((F.col(col) >= lo) & (F.col(col) <= hi))
         )
-        new_files = _write_files(kept, path)
-    new_version = _publish(
-        path,
-        v,
-        "delete",
-        untouched + new_files,
-        stats={f: stats[f] for f in untouched if f in stats},
-        # untouched files still need their masks; rewritten files were
-        # read THROUGH the vectors above, so their stale entries match
-        # no manifest file and are inert
-        deletes=dvs if untouched else [],
+    # untouched files still need their masks; rewritten files were read
+    # THROUGH the vectors above, so their stale entries match no manifest
+    # file and are inert
+    new_version = _publish_derived(
+        path, v, m, "delete", untouched, kept, deletes=dvs if untouched else []
     )
     return new_version, len(touched), len(m["files"])
 
@@ -642,7 +666,7 @@ def snapshot_delete_dv(
     n_deleted = 0
     if candidates:
         matched = (
-            spark.read.parquet(*[str(root / f) for f in candidates])
+            _read_files(spark, path, candidates, m.get("schema"))
             .select(
                 F.expr(_dv_file_sql(path)).alias("file"),
                 F.col("_metadata.row_index").alias("pos"),
@@ -652,7 +676,7 @@ def snapshot_delete_dv(
             .drop("__k")
         )
         if deletes:
-            prior = spark.read.parquet(*[str(root / d) for d in deletes])
+            prior = _read_files(spark, path, deletes, _DV_SCHEMA)
             matched = matched.join(prior, ["file", "pos"], "left_anti")
         matched = matched.localCheckpoint(eager=True)
         n_deleted = matched.count()
@@ -660,8 +684,8 @@ def snapshot_delete_dv(
             dv_rel = f"deletes/v{v + 1}-{uuid.uuid4().hex[:8]}"
             matched.write.mode("error").parquet(str(root / dv_rel))
             deletes.append(dv_rel)
-    new_version = _publish(
-        path, v, "delete-dv", m["files"], deletes=deletes, stats=stats
+    new_version = _publish_derived(
+        path, v, m, "delete-dv", m["files"], deletes=deletes
     )
     return new_version, n_deleted
 
@@ -681,13 +705,12 @@ def snapshot_purge_dv(spark: SparkSession, path: str) -> tuple[int, int, int]:
     once no retained manifest references them."""
     from pyspark.sql import functions as F
 
-    root = Path(path)
     v, m = _resolve(path)
     dvs = m.get("deletes", [])
     touched: set[str] = set()
     n_purged = 0
     if dvs:
-        dv = spark.read.parquet(*[str(root / d) for d in dvs])
+        dv = _read_files(spark, path, dvs, _DV_SCHEMA)
         # stale DV entries (files a CoW verb has since rewritten out of
         # the manifest) mask nothing — count and rewrite only live-file
         # entries
@@ -701,23 +724,10 @@ def snapshot_purge_dv(spark: SparkSession, path: str) -> tuple[int, int, int]:
             n_purged = dv.filter(F.col("file").isin(sorted(touched))).count()
     untouched = [f for f in m["files"] if f not in touched]
     rewritten = sorted(f for f in m["files"] if f in touched)
-    new_files: list[str] = []
+    kept = None
     if rewritten:
-        kept = _subtract_dvs(
-            spark,
-            path,
-            spark.read.parquet(*[str(root / f) for f in rewritten]),
-            dvs,
-        )
-        new_files = _write_files(kept, path)
-    stats = m.get("stats", {})
-    new_version = _publish(
-        path,
-        v,
-        "purge-dv",
-        untouched + new_files,
-        stats={f: stats[f] for f in untouched if f in stats},
-    )
+        kept = _read_files(spark, path, rewritten, m.get("schema"), dvs)
+    new_version = _publish_derived(path, v, m, "purge-dv", untouched, kept)
     return new_version, len(rewritten), n_purged
 
 
@@ -735,13 +745,13 @@ def snapshot_restore(path: str, version: int) -> int:
     if version not in versions:
         raise ValueError(f"version {version} not in {versions}")
     m = _read_manifest(path, version)
-    return _publish(
+    return _publish_derived(
         path,
         versions[-1],
+        m,
         "restore",
         m["files"],
         restored_from=version,
-        stats=m.get("stats"),
         # the restored state includes its deletion-vector masks — a
         # restore without them would resurrect deleted rows (ADVICE r10)
         deletes=m.get("deletes"),
@@ -813,6 +823,7 @@ def snapshot_clone(src: str, dst: str) -> int:
         source=str(src_root),
         source_version=src_version,
         stats={str(src_root / f): stats[f] for f in m["files"] if f in stats},
+        schema=m.get("schema"),
         deletes=deletes_rel,
     )
 
@@ -831,12 +842,12 @@ def snapshot_update(
     :func:`snapshot_delete`: only files whose [min, max] for ``col``
     can intersect the predicate are rewritten (stats-less files
     conservatively included), matched rows get each SET column replaced
-    by its expression, unmatched rows — including NULL-key rows, which
-    a BETWEEN can never match — are carried VERBATIM, and untouched
-    files are shared byte-identically into the new version.  Rewritten
-    files get fresh footer stats over the union of columns the old
-    files tracked (SET may move a column's min/max); shared files carry
-    their stats forward.  Returns (new_version, n_files_rewritten,
+    by its expression cast to the column's type, unmatched rows —
+    including NULL-key rows, which a BETWEEN can never match — are
+    carried VERBATIM, and untouched files are shared byte-identically
+    into the new version.  Rewritten files get fresh footer stats (SET
+    may move a column's min/max); shared files carry their stats
+    forward.  Returns (new_version, n_files_rewritten,
     n_files_total_before).
 
     At 100 TB: cost tracks predicate-intersecting files, not table
@@ -844,21 +855,17 @@ def snapshot_update(
     never mutated — identical economics to DELETE."""
     from pyspark.sql import functions as F
 
-    root = Path(path)
     v, m = _resolve(path)
     stats = m.get("stats", {})
     dvs = m.get("deletes", [])
     touched, untouched = [], []
     for rel in m["files"]:
         (touched if _routes(stats, rel, col, lo, hi) else untouched).append(rel)
-    new_files: list[str] = []
-    new_stats: dict[str, dict] = {}
+    updated = None
     if touched:
-        df = spark.read.parquet(*[str(root / f) for f in touched])
-        if dvs:
-            # DV-masked rows must not reappear in the rewritten files
-            # (ADVICE r10); subtract BEFORE the SET transform
-            df = _subtract_dvs(spark, path, df, dvs)
+        # DV-masked rows must not reappear in the rewritten files
+        # (ADVICE r10); subtract BEFORE the SET transform
+        df = _read_files(spark, path, touched, m.get("schema"), dvs)
         missing = set(set_exprs) - set(df.columns)
         if missing:
             raise ValueError(f"SET targets not in table: {sorted(missing)}")
@@ -867,25 +874,18 @@ def snapshot_update(
         match = (F.col(col) >= lo) & (F.col(col) <= hi)
         updated = df.select(
             *[
-                F.when(match, F.expr(set_exprs[c])).otherwise(F.col(c)).alias(c)
+                F.when(match, F.expr(set_exprs[c]))
+                .otherwise(F.col(c))
+                .cast(df.schema[c].dataType)
+                .alias(c)
                 if c in set_exprs
                 else F.col(c)
                 for c in df.columns
             ]
         )
-        new_files = _write_files(updated, path)
-        stat_cols = sorted({c for rel in touched for c in stats.get(rel, {})})
-        for rel in new_files:
-            if stat_cols:
-                new_stats[rel] = _file_stats(root, rel, stat_cols)
-    new_version = _publish(
-        path,
-        v,
-        "update",
-        untouched + new_files,
-        stats={**{f: stats[f] for f in untouched if f in stats}, **new_stats},
-        # same carry rule as snapshot_delete: untouched files keep their
-        # masks; rewritten files were read through the vectors above
-        deletes=dvs if untouched else [],
+    # same carry rule as snapshot_delete: untouched files keep their
+    # masks; rewritten files were read through the vectors above
+    new_version = _publish_derived(
+        path, v, m, "update", untouched, updated, deletes=dvs if untouched else []
     )
     return new_version, len(touched), len(m["files"])

@@ -148,18 +148,6 @@ SQL_TOKEN_DIGEST16 = "list_transform({toks}, t -> ('0x' || substring(md5(t), 1, 
 SQL_TOKEN_MD5S = "list_transform({toks}, t -> md5(t))"
 
 
-def sql_digest16_block(md5s_expr: str, block: int) -> str:
-    """DuckDB 16-bit digest list from hex digits [4b+1 .. 4b+4] of a
-    per-token md5 list — four independent blocks per md5, so a 64-bit
-    SimHash costs one hash per token.  (The Spark side reaches the same
-    digests via explode + substring/conv inside `_simhash_block_sigs`: the
-    explode+SUM shape stays in whole-stage codegen, where an array-fold
-    formulation would fall back to interpreted HOFs.)"""
-    return (
-        f"list_transform({md5s_expr}, m -> ('0x' || substring(m, {4 * block + 1}, 4))::INT)"
-    )
-
-
 def _digest_bit_shift(b: int) -> int:
     # bit b historically lived in hex digit b//4 at position b%4; digit i
     # occupies bits 4*(3-i)..4*(3-i)+3 of the 16-bit digest value

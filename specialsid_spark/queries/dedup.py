@@ -388,9 +388,12 @@ def _gate(verdict, keys: DataFrame, table: str, kind: str, tag: str | None) -> D
     ``kind`` rows (when the table has committed), compute ``verdict``
     under ONE lazy localCheckpoint, and append the admitted docs' key
     rows and doc ids as ONE snapshot commit carrying ``tag`` (the
-    streaming replay token).  The commit is the first action over the
-    verdict, so probe + verdict + write run as one job and the returned
-    frame reuses the blocks that job materialized."""
+    streaming replay token).  The commit write is the first action over
+    the verdict: it materializes the checkpoint in its own SQL execution
+    (probe + verdict, 4 jobs with AQE's stage jobs on a hop4 LSH
+    micro-batch) and then writes (3 jobs); the returned frame reuses the
+    checkpointed blocks.  Reading the index plans with no job, since its
+    manifest records the schema."""
     index = None
     if snapshot_versions(table):
         cols = [c for c in keys.columns if c != "doc_id"]

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from specialsid_spark.catalog import load
-from specialsid_spark.operators.multimodal import decode_image_stub, explode_pdf_pages_stub
+from specialsid_spark.operators.multimodal import decode_image_stub, explode_pdf_pages
 from specialsid_spark.operators.rows import map_rows
 from specialsid_spark.queries import register
 
@@ -182,7 +182,6 @@ def mm_pdf_page_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas work, then the explode's 1→N fan-out; the only shuffle
     is the final order."""
     from specialsid_spark.operators.jpeg import decode_jpeg, encode_jpeg
-    from specialsid_spark.operators.multimodal import explode_pdf_pages
     from specialsid_spark.operators.pdf import build_image_pdf
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < _N_CODEC_DOCS)
@@ -1860,7 +1859,7 @@ def mm_wav_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_pdf_page_explode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1 flatMap 1->N: page counts + per-page sizes from the page slicer."""
-    pages = explode_pdf_pages_stub(_as_binary(spark, sf_dir))
+    pages = explode_pdf_pages(_as_binary(spark, sf_dir))
     return (
         pages.groupBy("doc_id")
         .agg(

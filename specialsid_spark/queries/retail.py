@@ -792,10 +792,10 @@ def _banded_snapshot_table(
 ) -> tuple[str, int, int]:
     """Fixture scaffold shared by the four snapshot-verb queries
     (stats-pruning scan, DELETE, UPDATE, Python-DataSource scan):
-    three rank-third commits of the orders [ok, cents_v] slice with
-    footer stats on ok.  Returns (table_path, lo, hi) where [lo, hi]
-    is the [p40, p60] key band that intersects exactly the middle
-    file.  Scaffold note: r11 removed the last SinglePartition window
+    three rank-third commits of the orders [ok, cents_v] slice (each
+    commit records footer stats on both).  Returns (table_path, lo,
+    hi) where [lo, hi] is the [p40, p60] key band that intersects
+    exactly the middle file.  Scaffold note: r11 removed the last SinglePartition window
     here — the exact rank now comes from the range-partition +
     driver-scanned-offsets idiom (cur_token_packing), so even this
     fixture builder's plan survives arbitrary input size; coalesce(1)
@@ -805,7 +805,7 @@ def _banded_snapshot_table(
 
     from pyspark.sql.window import Window
 
-    from specialsid_spark.operators.snapshot import snapshot_commit_stats
+    from specialsid_spark.operators.snapshot import snapshot_commit
     from specialsid_spark.queries._determinism import cents
     from specialsid_spark.session import session_workdir
 
@@ -849,7 +849,7 @@ def _banded_snapshot_table(
     t = str(Path(session_workdir(prefix)) / "tbl")
     for c in range(3):
         part = ranked.where(chunk == c).select("ok", "cents_v").coalesce(1)
-        snapshot_commit_stats(part, t, ["ok"], mode="append")
+        snapshot_commit(part, t, mode="append")
     return t, lo, hi
 
 
@@ -1249,9 +1249,9 @@ def clean_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFra
     """S10 extension (r9 wave 2) — ADDITIVE schema evolution on the
     manifest lakehouse: version 2 appends files carrying a NEW
     `priority` column without rewriting version 1's immutable files;
-    the merged read unions the schemas and fills NULL where a file
-    predates the column.  At 100 TB a column add is a metadata
-    operation, never a table rewrite.  The md5 checksum over the new
+    the v2 manifest records the widened schema, so its read unions the
+    columns and fills NULL where a file predates the column.  At 100 TB
+    a column add is a metadata operation, never a table rewrite.  The md5 checksum over the new
     column's values proves the evolved column's CONTENT survives, not
     just its shape; time-traveling to v1 still yields the old schema.
 
@@ -1294,7 +1294,7 @@ def clean_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFra
         F.lit(0).cast("long").alias("n_with_priority"),
         F.lit(0).cast("long").alias("priority_ck"),
     )
-    r2 = snapshot_read(spark, t, 2, merge_schema=True)
+    r2 = snapshot_read(spark, t, 2)
     pck = F.conv(F.substring(F.md5("priority"), 1, 8), 16, 10).cast("long")
     a2 = r2.agg(
         F.lit(2).cast("long").alias("version"),

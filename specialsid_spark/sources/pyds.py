@@ -53,6 +53,7 @@ from pyspark.sql.datasource import (
 
 from specialsid_spark.operators.snapshot import (
     _commit_files,
+    _file_stats,
     _read_manifest,
     _resolve,
     _routes,
@@ -198,14 +199,17 @@ class SnapshotArrowWriter(DataSourceArrowWriter):
     publishes those paths as a new manifest version through the same
     put-if-absent commit as ``snapshot_commit``: an append carries the
     head's stats and deletion vectors and rebases if another writer
-    published first; an overwrite that loses the race raises.  Files
+    published first; an overwrite that loses the race raises.  The
+    manifest records the written schema and the new files' footer
+    stats, so even an empty overwrite reads back typed.  Files
     from failed/speculative tasks are never referenced by any manifest,
     so they are invisible to every reader and reclaimable by vacuum: no
     rename dance, no output committer, no partial table ever visible.
     """
 
-    def __init__(self, path: str, overwrite: bool) -> None:
+    def __init__(self, path: str, schema, overwrite: bool) -> None:
         self._root = path
+        self._schema = schema.jsonValue()
         self._overwrite = overwrite
         self._commit_id = f"w-{uuid.uuid4().hex[:12]}"
 
@@ -228,8 +232,13 @@ class SnapshotArrowWriter(DataSourceArrowWriter):
         new_files = sorted(
             rel for m in messages if m is not None for rel in m.rel_files
         )
+        root = Path(self._root)
         _commit_files(
-            self._root, new_files, "overwrite" if self._overwrite else "append"
+            self._root,
+            new_files,
+            "overwrite" if self._overwrite else "append",
+            stats={rel: st for rel in new_files if (st := _file_stats(root, rel))},
+            schema=self._schema,
         )
 
     def abort(self, messages) -> None:
@@ -262,7 +271,7 @@ class SnapshotDataSource(DataSource):
         return SnapshotStreamReader(self.options["path"])
 
     def writer(self, schema, overwrite: bool) -> SnapshotArrowWriter:
-        return SnapshotArrowWriter(self.options["path"], overwrite)
+        return SnapshotArrowWriter(self.options["path"], schema, overwrite)
 
 
 _REGISTERED: set[int] = set()

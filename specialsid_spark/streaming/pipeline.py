@@ -37,7 +37,7 @@ from specialsid_spark.operators.extraction import (
     ExtractionConfig,
     extract_products,
 )
-from specialsid_spark.operators.multimodal import explode_pdf_pages_stub
+from specialsid_spark.operators.multimodal import explode_pdf_pages
 
 
 def hop1_pdf_to_pages(
@@ -58,7 +58,7 @@ def hop1_pdf_to_pages(
     raw = reader.load(raw_dir).select(
         F.col("path").alias("source_path"), F.col("content")
     )
-    pages = explode_pdf_pages_stub(
+    pages = explode_pdf_pages(
         raw.withColumnRenamed("source_path", "doc_path").select(
             F.xxhash64("doc_path").alias("doc_id"), F.col("content").alias("blob")
         )
@@ -560,11 +560,14 @@ def streaming_decontaminate_ingest(
     The eval-gram set ships to executors once via the closure (real
     eval suites are a few million shingles — broadcast territory), and
     the check runs inside ONE Arrow-batched mapInPandas per micro-batch:
-    stateless, no shuffle, no state store, identical semantics batch or
-    stream.  Returns the surviving stream with per-doc overlap columns
-    so downstream audits can see what was near-missed; the caller
-    attaches the sink."""
+    stateless, no shuffle, no state store.  Text is split by
+    ``tokens()`` in Spark, the batch query's tokenizer, so both gates
+    see the same grams.  Returns the surviving stream with per-doc
+    overlap columns so downstream audits can see what was near-missed;
+    the caller attaches the sink."""
     import pandas as pd  # noqa: PLC0415
+
+    from specialsid_spark.operators.textops import tokens  # noqa: PLC0415
 
     docs = spark.readStream.schema("doc_id long, ts timestamp, text string").json(
         docs_dir
@@ -573,7 +576,9 @@ def streaming_decontaminate_ingest(
     def gate(batches):
         for pdf in batches:
             keep_rows = []
-            for doc_id, ts, text in zip(pdf["doc_id"], pdf["ts"], pdf["text"]):
+            for doc_id, ts, text, toks in zip(
+                pdf["doc_id"], pdf["ts"], pdf["text"], pdf["toks"]
+            ):
                 if text is None or (isinstance(text, float) and pd.isna(text)):
                     # NULL/NaN text must surface as an undecodable doc
                     # (n_grams=0, passes the gate vacuously) — NOT be
@@ -581,7 +586,6 @@ def streaming_decontaminate_ingest(
                     # which would fabricate a bogus 1-gram document
                     keep_rows.append((doc_id, ts, None, 0, 0))
                     continue
-                toks = str(text).lower().split()
                 grams = {
                     " ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)
                 }
@@ -594,7 +598,7 @@ def streaming_decontaminate_ingest(
                 columns=["doc_id", "ts", "text", "n_grams", "n_eval_hits"],
             )
 
-    return docs.mapInPandas(
+    return docs.withColumn("toks", tokens("text")).mapInPandas(
         gate, "doc_id long, ts timestamp, text string, n_grams long, n_eval_hits long"
     )
 

@@ -11,7 +11,7 @@ import struct
 from specialsid_spark.operators.multimodal import (
     crop_stub,
     decode_image_stub,
-    explode_pdf_pages_stub,
+    explode_pdf_pages,
     parse_image_meta,
     pdf_page_count,
 )
@@ -253,7 +253,7 @@ def test_pdf_explode_uses_real_page_count(spark):
     df = spark.createDataFrame([(1, _pdf(4)), (2, b"y" * 150)], "doc_id long, blob binary")
     counts = {
         r["doc_id"]: r["n"]
-        for r in explode_pdf_pages_stub(df, page_size=100)
+        for r in explode_pdf_pages(df, page_size=100)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -277,7 +277,7 @@ def test_decode_meta_schema_and_values(spark):
 
 
 def test_pdf_page_explode_counts(spark):
-    pages = explode_pdf_pages_stub(_blob_df(spark), page_size=100)
+    pages = explode_pdf_pages(_blob_df(spark), page_size=100)
     counts = {r["doc_id"]: r["n"] for r in pages.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n")).collect()}
     assert counts == {1: 3, 2: 1, 3: 1}  # 250 bytes -> 3 pages of <=100
@@ -320,7 +320,7 @@ def test_pdf_explode_exact_page_count_non_divisible(spark):
     blob = b"%PDF" + b"/Type/Page " * 60  # 664 bytes, 60 page objects
     assert pdf_page_count(blob) == 60
     df = spark.createDataFrame([(1, blob)], "doc_id long, blob binary")
-    pages = explode_pdf_pages_stub(df).orderBy("page_no").collect()
+    pages = explode_pdf_pages(df).orderBy("page_no").collect()
     assert len(pages) == 60
     assert b"".join(bytes(r["page_bytes"]) for r in pages) == blob
 

@@ -1,7 +1,12 @@
-"""Every import in the package is used: a module-level import somewhere
+"""Package hygiene rules.
+
+Every import in the package is used: a module-level import somewhere
 in its module, a function-level import inside its function.  A line
 marked ``# noqa: F401`` (a deliberate re-export or side effect) is
-exempt."""
+exempt.
+
+``operators/snapshot.py`` reads parquet in one place, ``_read_files``,
+which passes the manifest's recorded schema to the reader."""
 
 from __future__ import annotations
 
@@ -39,3 +44,27 @@ def test_no_unused_imports():
         src = path.read_text()
         unused += _unused(ast.parse(src), src.splitlines(), path)
     assert unused == []
+
+
+def _parquet_reads(path: Path, reader: str) -> list[str]:
+    """``path:line`` of each ``.parquet(`` read call in ``path`` outside
+    the top-level function ``reader``.  A call whose receiver mentions
+    ``write`` (``df.write...``, ``writer``) is a write, not a read."""
+    out = []
+    for top in ast.parse(path.read_text()).body:
+        if getattr(top, "name", None) == reader:
+            continue
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and "write" not in ast.unparse(node.func.value)
+            ):
+                out.append(node.lineno)
+    return [f"{path.relative_to(PKG.parent)}:{n}" for n in sorted(out)]
+
+
+def test_snapshot_reads_parquet_only_in_read_files():
+    snapshot = PKG / "operators" / "snapshot.py"
+    assert _parquet_reads(snapshot, "_read_files") == []

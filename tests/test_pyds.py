@@ -12,21 +12,22 @@ from pyspark.sql.datasource import (
 )
 
 from specialsid_spark.operators.snapshot import (
+    _commit_files,
+    _write_files,
     snapshot_commit,
-    snapshot_commit_stats,
 )
 from specialsid_spark.sources.pyds import SnapshotReader, register_snapshot_source
 
 
 def _table(spark, tmp_path, with_stats=True):
     t = str(tmp_path / "tbl")
-    commit = snapshot_commit_stats if with_stats else None
     for lo, hi in ((0, 100), (100, 200), (200, 300)):
         df = spark.range(lo, hi).selectExpr("id", "id * 10 AS v").coalesce(1)
         if with_stats:
-            snapshot_commit_stats(df, t, ["id"], mode="append")
-        else:
-            snapshot_commit(df, t, mode="append")
+            snapshot_commit(df, t)
+        else:  # files committed without stats, which always route
+            files, _, schema = _write_files(df, t)
+            _commit_files(t, files, "append", schema=schema)
     return t
 
 
@@ -231,9 +232,7 @@ def _dv_table(spark, tmp_path):
     from specialsid_spark.operators.snapshot import snapshot_delete_dv
 
     t = str(tmp_path / "tbl")
-    snapshot_commit_stats(
-        spark.range(0, 100).selectExpr("id", "id * 10 AS v"), t, ["id"]
-    )
+    snapshot_commit(spark.range(0, 100).selectExpr("id", "id * 10 AS v"), t)
     assert snapshot_delete_dv(spark, t, "id", 0, 9) == (2, 10)
     return t
 
@@ -276,3 +275,33 @@ def test_writer_append_keeps_deletion_vectors(spark, tmp_path):
     assert snapshot_read(spark, t).count() == 95
     dvs = _read_manifest(t, 2)["deletes"]
     assert dvs and _read_manifest(t, 3)["deletes"] == dvs
+
+
+def test_writer_records_schema_and_stats(spark, tmp_path):
+    """The custom-format writer records the written schema and its
+    files' footer stats, so an empty overwrite reads back typed (no
+    bogus column) and appended files prune like snapshot_commit's."""
+    from specialsid_spark.operators.snapshot import _read_manifest, snapshot_read
+
+    t = str(tmp_path / "tbl")
+    register_snapshot_source(spark)
+
+    def write(lo, hi, mode):
+        (
+            spark.range(lo, hi)
+            .selectExpr("id", "id * 10 AS v")
+            .coalesce(1)
+            .write.format("specialsid_snapshot")
+            .option("path", t)
+            .mode(mode)
+            .save()
+        )
+
+    write(0, 100, "append")
+    (stats,) = _read_manifest(t, 1)["stats"].values()
+    assert stats == {"id": [0, 99], "v": [0, 990]}
+    write(0, 0, "overwrite")
+    assert _read_manifest(t, 2)["files"] == []
+    empty = snapshot_read(spark, t)
+    assert empty.dtypes == [("id", "bigint"), ("v", "bigint")]
+    assert empty.count() == 0

@@ -313,3 +313,47 @@ def test_streaming_decontaminate_ingest(spark, tmp_path):
     )
     q2.awaitTermination()
     assert spark.read.parquet(sink).count() == 3
+
+
+def test_streaming_decontaminate_tokenizes_like_batch(spark, tmp_path):
+    """The stream gate splits text with the batch query's ``tokens()``:
+    on a leading tab, a U+00A0 and empty text its gram counts and hits
+    equal the batch rule's (word_shingles over tokens), where Python's
+    ``str.split`` would give 1 gram, 2 grams (one a hit) and 0 grams."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from specialsid_spark.operators.textops import tokens, word_shingles
+    from specialsid_spark.streaming.pipeline import streaming_decontaminate_ingest
+
+    docs_dir = tmp_path / "docs"
+    docs_dir.mkdir()
+    texts = {1: "\tthe a b c d", 2: "a\u00a0b c d e f", 3: ""}
+    with open(docs_dir / "b1.json", "w") as fh:
+        for doc_id, text in texts.items():
+            fh.write(json.dumps({"doc_id": doc_id, "ts": "2024-01-01 10:00:00",
+                                 "text": text}) + "\n")
+    eval_grams = frozenset({"b c d e f"})
+    q = (
+        streaming_decontaminate_ingest(spark, str(docs_dir), eval_grams)
+        .writeStream.format("memory")
+        .queryName("decon_tokenizer_parity")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    stream = {
+        r.doc_id: (r.n_grams, r.n_eval_hits)
+        for r in spark.table("decon_tokenizer_parity").collect()
+    }
+    batch = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    grams = batch.select("doc_id", tokens("text").alias("toks")).select(
+        "doc_id", word_shingles(F.col("toks"), k=5).alias("grams")
+    )
+    want = {
+        r.doc_id: (len(r.grams), len(set(r.grams) & eval_grams))
+        for r in grams.collect()
+    }
+    assert want == {1: (2, 0), 2: (1, 0), 3: (0, 0)}
+    assert stream == want

@@ -21,6 +21,15 @@ def _df(spark, lo, hi):
     return spark.range(lo, hi).selectExpr("id", "id * 10 AS v")
 
 
+def _commit_without_stats(df, t, mode="append"):
+    """Commit ``df`` with no file stats, as a table written before every
+    commit recorded them: the never-prune rules apply to its files."""
+    from specialsid_spark.operators.snapshot import _commit_files, _write_files
+
+    files, _, schema = _write_files(df, t)
+    return _commit_files(t, files, mode, schema=schema)
+
+
 def test_append_overwrite_time_travel(spark, tmp_path):
     t = str(tmp_path / "tbl")
     assert snapshot_versions(t) == []
@@ -115,12 +124,12 @@ def test_file_stats_require_complete_row_group_coverage(spark, tmp_path):
         row_group_size=5,
         write_statistics=["a"],
     )
-    stats = _file_stats(root, "f.parquet", ["a", "b"])
+    stats = _file_stats(root, "f.parquet")
     assert stats == {"a": [0, 9]}  # 'b' has no complete coverage → absent
 
     # sanity: full coverage records both
     pq.write_table(tbl, str(root / "g.parquet"), row_group_size=5)
-    stats2 = _file_stats(root, "g.parquet", ["a", "b"])
+    stats2 = _file_stats(root, "g.parquet")
     assert stats2 == {"a": [0, 9], "b": [10, 19]}
 
 
@@ -177,16 +186,11 @@ def test_snapshot_diff_identical_versions_empty(spark, tmp_path):
 def test_snapshot_stats_scan_boundaries(spark, tmp_path):
     """Stats pruning: straddling predicates read both files, stat-less
     files are always read, and pruning never drops rows."""
-    from specialsid_spark.operators.snapshot import (
-        snapshot_commit_stats,
-        snapshot_scan,
-    )
+    from specialsid_spark.operators.snapshot import snapshot_scan
 
     t = str(tmp_path / "tbl")
-    snapshot_commit_stats(_df(spark, 0, 10).coalesce(1), t, ["id"])
-    snapshot_commit_stats(
-        _df(spark, 10, 20).coalesce(1), t, ["id"], mode="append"
-    )
+    snapshot_commit(_df(spark, 0, 10).coalesce(1), t)
+    snapshot_commit(_df(spark, 10, 20).coalesce(1), t)
     # inside file 1 only
     df, scanned, total = snapshot_scan(spark, t, "id", 2, 5)
     assert (scanned, total) == (1, 2) and df.count() == 4
@@ -197,8 +201,7 @@ def test_snapshot_stats_scan_boundaries(spark, tmp_path):
     df, scanned, total = snapshot_scan(spark, t, "id", 100, 200)
     assert (scanned, total) == (0, 2) or df.count() == 0
     # a commit without stats for the column is never pruned
-    snapshot_commit(_df(spark, 50, 55).coalesce(1), t, mode="append")
-    from specialsid_spark.operators.snapshot import snapshot_commit_stats as _s
+    _commit_without_stats(_df(spark, 50, 55).coalesce(1), t)
     df, scanned, total = snapshot_scan(spark, t, "id", 2, 5)
     assert total == 3 and scanned == 2  # file 1 (match) + stat-less file
     assert df.count() == 4
@@ -224,15 +227,15 @@ def test_snapshot_compact_content_identical(spark, tmp_path):
 
 
 def test_snapshot_schema_evolution_additive(spark, tmp_path):
-    """A later append may carry NEW columns; merge_schema reads the
-    union with NULLs for rows that predate the column, old files
+    """A later append may carry NEW columns; the default read returns
+    the union with NULLs for rows that predate the column, old files
     untouched (column add = metadata op, not a rewrite)."""
     t = str(tmp_path / "tbl")
     snapshot_commit(_df(spark, 0, 5), t)  # id, v
     wide = spark.range(5, 8).selectExpr("id", "id * 10 AS v", "id + 100 AS extra")
     snapshot_commit(wide, t, mode="append")
 
-    cur = snapshot_read(spark, t, merge_schema=True)
+    cur = snapshot_read(spark, t)
     assert set(cur.columns) == {"id", "v", "extra"}
     rows = {r["id"]: r["extra"] for r in cur.collect()}
     assert all(rows[k] is None for k in range(0, 5))
@@ -258,15 +261,12 @@ def test_delete_rewrites_only_intersecting_files(spark, tmp_path):
     time-travels."""
     from specialsid_spark.operators.snapshot import (
         _read_manifest,
-        snapshot_commit_stats,
         snapshot_delete,
     )
 
     t = str(tmp_path / "tbl")
     for lo, hi in ((0, 100), (100, 200), (200, 300)):
-        snapshot_commit_stats(
-            _df(spark, lo, hi).coalesce(1), t, ["id"], mode="append"
-        )
+        snapshot_commit(_df(spark, lo, hi).coalesce(1), t)
     v, n_rewritten, n_before = snapshot_delete(spark, t, "id", 120, 180)
     assert (v, n_rewritten, n_before) == (4, 1, 3)
     got = sorted(r.id for r in snapshot_read(spark, t).collect())
@@ -275,8 +275,9 @@ def test_delete_rewrites_only_intersecting_files(spark, tmp_path):
     before = set(_read_manifest(t, 3)["files"])
     after = set(_read_manifest(t, 4)["files"])
     assert len(before & after) == 2
-    # stats for shared files survive; pre-delete version time-travels
-    assert set(_read_manifest(t, 4)["stats"]) == before & after
+    # shared files keep their stats and the rewritten file gets fresh
+    # ones; the pre-delete version time-travels
+    assert set(_read_manifest(t, 4)["stats"]) == after
     assert snapshot_read(spark, t, 3).count() == 300
 
 
@@ -285,13 +286,12 @@ def test_delete_missing_stats_is_conservative(spark, tmp_path):
     retain deleted rows) even when a stats-bearing sibling is pruned."""
     from specialsid_spark.operators.snapshot import (
         snapshot_commit,
-        snapshot_commit_stats,
         snapshot_delete,
     )
 
     t = str(tmp_path / "tbl")
-    snapshot_commit_stats(_df(spark, 0, 100).coalesce(1), t, ["id"])
-    snapshot_commit(_df(spark, 100, 200).coalesce(1), t, mode="append")
+    snapshot_commit(_df(spark, 0, 100).coalesce(1), t)
+    _commit_without_stats(_df(spark, 100, 200).coalesce(1), t)
     # predicate intersects the stats-bearing file AND the stats-less
     # file must be rewritten conservatively: both files touched
     _, n_rewritten, n_before = snapshot_delete(spark, t, "id", 10, 20)
@@ -308,15 +308,12 @@ def test_update_rewrites_only_intersecting_files(spark, tmp_path):
     and the pre-update version still time-travels."""
     from specialsid_spark.operators.snapshot import (
         _read_manifest,
-        snapshot_commit_stats,
         snapshot_update,
     )
 
     t = str(tmp_path / "tbl")
     for lo, hi in ((0, 100), (100, 200), (200, 300)):
-        snapshot_commit_stats(
-            _df(spark, lo, hi).coalesce(1), t, ["id"], mode="append"
-        )
+        snapshot_commit(_df(spark, lo, hi).coalesce(1), t)
     v, n_rewritten, n_before = snapshot_update(
         spark, t, "id", 120, 180, {"v": "v + 1000000"}
     )
@@ -359,6 +356,22 @@ def test_update_keeps_null_key_rows_and_validates_set(spark, tmp_path):
     assert rows == {(1, 10), (5, 100), (None, 99), (9, 90)}
 
 
+def test_update_casts_set_values_to_the_column_type(spark, tmp_path):
+    """A SET expression of another type is cast to the column's type, so
+    rewritten files keep the schema the manifest records."""
+    from specialsid_spark.operators.snapshot import snapshot_update
+
+    t = str(tmp_path / "tbl")
+    snapshot_commit(_df(spark, 0, 10).coalesce(1), t)
+    snapshot_commit(_df(spark, 10, 20).coalesce(1), t, mode="append")
+    _, n_rewritten, _ = snapshot_update(spark, t, "id", 4, 6, {"v": "v * 1.5"})
+    assert n_rewritten == 1
+    cur = snapshot_read(spark, t)
+    assert dict(cur.dtypes) == {"id": "bigint", "v": "bigint"}
+    rows = {r.id: r.v for r in cur.collect()}
+    assert (rows[3], rows[5], rows[15]) == (30, 75, 150)
+
+
 def test_delete_keeps_null_key_rows(spark, tmp_path):
     """NULL-key rows never match a BETWEEN predicate, so a rewrite must
     carry them — the naive ~(col BETWEEN lo AND hi) filter evaluates to
@@ -374,7 +387,7 @@ def test_delete_keeps_null_key_rows(spark, tmp_path):
         "SELECT * FROM VALUES (1, 'a'), (5, 'b'), (CAST(NULL AS BIGINT),"
         " 'n1'), (9, 'c'), (NULL, 'n2') AS t(id, v)"
     ).coalesce(1)
-    snapshot_commit(df, t)  # no stats -> file is conservatively rewritten
+    snapshot_commit(df, t)  # its id range [1, 9] routes the predicate
     _, n_rewritten, _ = snapshot_delete(spark, t, "id", 4, 6)
     assert n_rewritten == 1
     rows = snapshot_read(spark, t).collect()
@@ -384,12 +397,11 @@ def test_delete_keeps_null_key_rows(spark, tmp_path):
 
 def test_delete_no_match_rewrites_nothing(spark, tmp_path):
     from specialsid_spark.operators.snapshot import (
-        snapshot_commit_stats,
         snapshot_delete,
     )
 
     t = str(tmp_path / "tbl")
-    snapshot_commit_stats(_df(spark, 0, 100).coalesce(1), t, ["id"])
+    snapshot_commit(_df(spark, 0, 100).coalesce(1), t)
     v, n_rewritten, _ = snapshot_delete(spark, t, "id", 1000, 2000)
     assert n_rewritten == 0
     assert snapshot_read(spark, t, v).count() == 100
@@ -403,16 +415,13 @@ def test_shallow_clone_zero_copy_then_diverges(spark, tmp_path):
         _read_manifest,
         snapshot_clone,
         snapshot_commit,
-        snapshot_commit_stats,
         snapshot_delete,
     )
 
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
     for lo, hi in ((0, 100), (100, 200)):
-        snapshot_commit_stats(
-            _df(spark, lo, hi).coalesce(1), src, ["id"], mode="append"
-        )
+        snapshot_commit(_df(spark, lo, hi).coalesce(1), src)
     assert snapshot_clone(src, dst) == 1
     # zero copy: the clone has no data files of its own yet
     assert not (Path(dst) / "data").exists()
@@ -421,9 +430,7 @@ def test_shallow_clone_zero_copy_then_diverges(spark, tmp_path):
 
     # divergence: append to the clone (with stats, so the later DELETE
     # can prune it), source unchanged
-    snapshot_commit_stats(
-        _df(spark, 200, 250).coalesce(1), dst, ["id"], mode="append"
-    )
+    snapshot_commit(_df(spark, 200, 250).coalesce(1), dst)
     assert snapshot_read(spark, dst).count() == 250
     assert snapshot_read(spark, src).count() == 200
 
@@ -485,16 +492,13 @@ def test_restore_undoes_bad_overwrite_and_keeps_history(spark, tmp_path):
 
 def test_restore_carries_stats_for_pruning(spark, tmp_path):
     from specialsid_spark.operators.snapshot import (
-        snapshot_commit_stats,
         snapshot_restore,
         snapshot_scan,
     )
 
     t = str(tmp_path / "tbl")
-    snapshot_commit_stats(_df(spark, 0, 100).coalesce(1), t, ["id"])
-    snapshot_commit_stats(
-        _df(spark, 100, 200).coalesce(1), t, ["id"], mode="append"
-    )
+    snapshot_commit(_df(spark, 0, 100).coalesce(1), t)
+    snapshot_commit(_df(spark, 100, 200).coalesce(1), t)
     snapshot_commit(_df(spark, 0, 1), t, mode="overwrite")
     snapshot_restore(t, 2)
     scan, n_scanned, n_total = snapshot_scan(spark, t, "id", 150, 160)
@@ -664,7 +668,6 @@ def test_dv_survives_restore(spark, tmp_path):
 
 def test_dv_survives_cow_delete(spark, tmp_path):
     from specialsid_spark.operators.snapshot import (
-        snapshot_commit_stats,
         snapshot_delete,
         snapshot_delete_dv,
     )
@@ -672,10 +675,8 @@ def test_dv_survives_cow_delete(spark, tmp_path):
     t = str(tmp_path / "tbl")
     # two stats-tracked files with disjoint ranges so the CoW delete
     # rewrites one and carries the other
-    snapshot_commit_stats(_df(spark, 0, 100).coalesce(1), t, ["id"])
-    snapshot_commit_stats(
-        _df(spark, 1000, 1100).coalesce(1), t, ["id"], mode="append"
-    )
+    snapshot_commit(_df(spark, 0, 100).coalesce(1), t)
+    snapshot_commit(_df(spark, 1000, 1100).coalesce(1), t)
     _, n = snapshot_delete_dv(spark, t, "id", 0, 9)       # mask in file A
     assert n == 10
     _, n2 = snapshot_delete_dv(spark, t, "id", 1000, 1009)  # mask in file B
@@ -691,16 +692,13 @@ def test_dv_survives_cow_delete(spark, tmp_path):
 
 def test_dv_survives_cow_update(spark, tmp_path):
     from specialsid_spark.operators.snapshot import (
-        snapshot_commit_stats,
         snapshot_delete_dv,
         snapshot_update,
     )
 
     t = str(tmp_path / "tbl")
-    snapshot_commit_stats(_df(spark, 0, 100).coalesce(1), t, ["id"])
-    snapshot_commit_stats(
-        _df(spark, 1000, 1100).coalesce(1), t, ["id"], mode="append"
-    )
+    snapshot_commit(_df(spark, 0, 100).coalesce(1), t)
+    snapshot_commit(_df(spark, 1000, 1100).coalesce(1), t)
     snapshot_delete_dv(spark, t, "id", 0, 9)
     snapshot_delete_dv(spark, t, "id", 1000, 1009)
     v, n_rw, _ = snapshot_update(spark, t, "id", 50, 59, {"v": "v + 1"})
@@ -714,13 +712,12 @@ def test_dv_survives_cow_update(spark, tmp_path):
 
 def test_dv_scan_applies_vectors(spark, tmp_path):
     from specialsid_spark.operators.snapshot import (
-        snapshot_commit_stats,
         snapshot_delete_dv,
         snapshot_scan,
     )
 
     t = str(tmp_path / "tbl")
-    snapshot_commit_stats(_df(spark, 0, 100).coalesce(1), t, ["id"])
+    snapshot_commit(_df(spark, 0, 100).coalesce(1), t)
     snapshot_delete_dv(spark, t, "id", 20, 29)
     scan, n_scanned, n_total = snapshot_scan(spark, t, "id", 15, 34)
     got = sorted(r["id"] for r in scan.collect())
@@ -765,17 +762,14 @@ def test_dv_survives_clone(spark, tmp_path):
 
 def test_dv_purge_ignores_stale_entries(spark, tmp_path):
     from specialsid_spark.operators.snapshot import (
-        snapshot_commit_stats,
         snapshot_delete,
         snapshot_delete_dv,
         snapshot_purge_dv,
     )
 
     t = str(tmp_path / "tbl")
-    snapshot_commit_stats(_df(spark, 0, 100).coalesce(1), t, ["id"])
-    snapshot_commit_stats(
-        _df(spark, 1000, 1100).coalesce(1), t, ["id"], mode="append"
-    )
+    snapshot_commit(_df(spark, 0, 100).coalesce(1), t)
+    snapshot_commit(_df(spark, 1000, 1100).coalesce(1), t)
     snapshot_delete_dv(spark, t, "id", 0, 9)        # masks in file A
     snapshot_delete_dv(spark, t, "id", 1000, 1009)  # masks in file B
     # CoW-rewrite file A: its DV entries go stale (file left the manifest)
@@ -1043,3 +1037,97 @@ def test_scan_without_versions_raises_file_not_found(spark, tmp_path):
 
     with pytest.raises(FileNotFoundError, match="no committed snapshot"):
         snapshot_scan(spark, str(tmp_path / "never"), "id", 0, 1)
+
+
+# ------------------------------------ the manifest describes its files
+
+
+def test_commit_records_integer_column_stats_only(spark, tmp_path):
+    """Every commit records footer stats for its byte/short/int/long
+    columns.  Dates, timestamps and decimals (integers on disk) and
+    floats and strings stay stats-less, so they always route."""
+    from specialsid_spark.operators.snapshot import _read_manifest
+
+    t = str(tmp_path / "tbl")
+    df = spark.sql(
+        "SELECT CAST(id AS TINYINT) AS b, CAST(id AS SMALLINT) AS s,"
+        " CAST(id AS INT) AS i, id AS l, CAST(id AS DOUBLE) AS d,"
+        " date_add(DATE'2024-01-01', CAST(id AS INT)) AS dt,"
+        " CAST(id AS DECIMAL(9, 2)) AS dec, TIMESTAMP'2024-01-01' AS ts,"
+        " CAST(id AS STRING) AS str FROM range(2, 7)"
+    ).coalesce(1)
+    snapshot_commit(df, t)
+    (stats,) = _read_manifest(t, 1)["stats"].values()
+    assert stats == {c: [2, 6] for c in ("b", "s", "i", "l")}
+
+
+def test_compacted_table_still_prunes(spark, tmp_path):
+    """A compaction records the stats of the files it writes, so a scan
+    of a range outside the table's keys reads none of them."""
+    from specialsid_spark.operators.snapshot import snapshot_compact, snapshot_scan
+
+    t = str(tmp_path / "tbl")
+    snapshot_commit(_df(spark, 0, 50), t)
+    snapshot_commit(_df(spark, 50, 100), t, mode="append")
+    snapshot_compact(spark, t)
+    df, scanned, total = snapshot_scan(spark, t, "id", 1000, 2000)
+    assert (scanned, total) == (0, 1)
+    assert df.count() == 0 and df.columns == ["id", "v"]
+
+
+def test_type_changing_append_raises_and_publishes_nothing(spark, tmp_path):
+    t = str(tmp_path / "tbl")
+    snapshot_commit(_df(spark, 0, 5), t)
+    bad = spark.range(5, 8).selectExpr("CAST(id AS STRING) AS id", "id * 10 AS v")
+    with pytest.raises(ValueError, match="'id' changes type from bigint to string"):
+        snapshot_commit(bad, t, mode="append")
+    assert snapshot_versions(t) == [1]
+    assert dict(snapshot_read(spark, t).dtypes) == {"id": "bigint", "v": "bigint"}
+
+
+def test_diff_across_column_add_lines_up(spark, tmp_path):
+    """Both sides of a diff are read with one schema, so an append that
+    adds a column diffs as its inserted rows, new column included."""
+    from specialsid_spark.operators.snapshot import snapshot_diff
+
+    t = str(tmp_path / "tbl")
+    snapshot_commit(_df(spark, 0, 5), t)
+    wide = spark.range(5, 8).selectExpr("id", "id * 10 AS v", "id + 100 AS extra")
+    snapshot_commit(wide, t, mode="append")
+    got = sorted(
+        (r["change_type"], r["id"], r["extra"])
+        for r in snapshot_diff(spark, t, 1, 2).collect()
+    )
+    assert got == [("insert", k, k + 100) for k in range(5, 8)]
+
+
+@pytest.mark.parametrize("n_files", [1, 32])
+def test_snapshot_read_plans_without_a_job(spark, tmp_path, jobs_in_group, n_files):
+    """The manifest's recorded schema is passed to the reader: planning a
+    read launches no inference job, up to Spark's 32-file listing
+    threshold."""
+    t = str(tmp_path / "tbl")
+    snapshot_commit(_df(spark, 0, 320).repartition(n_files), t)
+    m = json.loads((Path(t) / "_manifests" / "v1.json").read_text())
+    assert len(m["files"]) == n_files and "schema" in m
+    jobs, df = jobs_in_group(f"snap-read-{n_files}", lambda: snapshot_read(spark, t))
+    assert jobs == 0
+    assert df.columns == ["id", "v"] and df.count() == 320
+
+
+def test_manifest_without_schema_reads_by_inference(spark, tmp_path, jobs_in_group):
+    """A manifest written before schemas were recorded still reads: the
+    schema is inferred from its files, at the cost of a Spark job."""
+    t = str(tmp_path / "tbl")
+    snapshot_commit(_df(spark, 0, 10), t)
+    mf = Path(t) / "_manifests" / "v1.json"
+    m = json.loads(mf.read_text())
+    del m["schema"]
+    mf.write_text(json.dumps(m))
+    jobs, df = jobs_in_group("snap-read-legacy", lambda: snapshot_read(spark, t))
+    assert jobs >= 1
+    assert sorted(r.id for r in df.collect()) == list(range(10))
+    # an append on a legacy head keeps it legacy: inference stays in charge
+    snapshot_commit(_df(spark, 10, 12), t, mode="append")
+    assert "schema" not in json.loads((Path(t) / "_manifests" / "v2.json").read_text())
+    assert snapshot_read(spark, t).count() == 12

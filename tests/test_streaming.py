@@ -1946,10 +1946,13 @@ def test_streaming_ann_postings_recreated_checkpoint_raises(spark, tmp_path):
     assert snapshot_versions(pt) == before
 
 
-# Spark jobs of one hop4 LSH micro-batch against an existing index:
-# the band barrier, the probe + verdict + commit job and their AQE
-# stage jobs.  An extra eager barrier in the gate adds jobs and fails.
-_HOP4_LSH_BATCH_JOBS = 11
+# Spark jobs of one hop4 LSH micro-batch against an existing index, as
+# the event log groups them by SQL execution: 3 for the eager band
+# barrier, 4 for the verdict's checkpoint (probe + verdict with its AQE
+# stage jobs) and 3 for the commit write.  The index read plans with no
+# job (its manifest records the schema).  An extra eager barrier in the
+# gate adds jobs and fails.
+_HOP4_LSH_BATCH_JOBS = 10
 
 
 def test_hop4_lsh_micro_batch_job_ceiling(spark, tmp_path):
