@@ -7,11 +7,17 @@ assignments and per-cluster sums (one scan + one |k·d|-sized shuffle),
 and ONLY the k×d centroid matrix is collected to the driver — at 100 TB
 that is a few KB per iteration regardless of corpus size.
 
-Determinism: all distance arithmetic is exact int64 on micro-unit
-components (floor(x*1e6)); new centroids are floored back to micro-units
-each iteration.  So every assignment decision is an integer comparison
-— bit-identical across partitionings, engines, and a numpy reference
-(tests/test_kmeans.py proves assignment-level equality).
+Determinism: this module is the home of the exact-integer lattice that
+every vector query shares with its DuckDB oracle.  Float components snap
+to floor(x·scale) (:func:`lattice`; floor, not round, so no tie is
+decided differently), dots, norms and distances fold in int64
+(:func:`idot`, :func:`inorm2`, :func:`idist2`), and new centroids are
+floored back to micro-units each iteration.  So every assignment
+decision is an integer comparison — bit-identical across partitionings,
+engines, and a numpy reference (tests/test_kmeans.py).  Overflow: a
+64-dim fold of squared differences stays below 2^63 while every lattice
+value is below 1.8e8 in magnitude, i.e. |x| < 180 at scale 1e6
+(embedding components are unit-scale).
 """
 
 from __future__ import annotations
@@ -26,15 +32,59 @@ from pyspark.sql.window import Window
 _MICRO = 1_000_000
 
 
-def _mu_vec(col: Column) -> Column:
-    """float array -> exact integer micro-unit array."""
-    return F.transform(col, lambda x: F.floor(x.cast("double") * _MICRO).cast("long"))
+def lattice(arr: Column, scale: float = _MICRO) -> Column:
+    """Float array -> exact integer lattice array, floor(x * scale) per
+    component: micro-units (1e6) for embeddings, 512 for the coarse
+    semantic-decontamination lattice."""
+    return F.transform(arr, lambda x: F.floor(x.cast("double") * scale).cast("long"))
+
+
+def micro(x: Column) -> Column:
+    """The element form of :func:`lattice`: one float component -> its
+    integer micro-units."""
+    return F.floor(x.cast("double") * _MICRO).cast("long")
+
+
+def _isum(arr: Column) -> Column:
+    return F.aggregate(arr, F.lit(0).cast("long"), lambda acc, v: acc + v)
+
+
+def idot(a: Column, b: Column) -> Column:
+    """Exact integer dot product of two lattice arrays."""
+    return _isum(F.zip_with(a, b, lambda x, y: x * y))
+
+
+def inorm2(a: Column) -> Column:
+    """Exact integer squared norm of a lattice array."""
+    return _isum(F.transform(a, lambda x: x * x))
+
+
+def idist2(a: Column, b: Column) -> Column:
+    """Exact integer squared euclidean distance of two lattice arrays."""
+    return _isum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
+
+
+def nearest_codes(
+    sub: DataFrame, cb: DataFrame, group_col: str = "m", vec_col: str = "sv"
+) -> DataFrame:
+    """The grouped nearest-codeword encoder — the PQ encoder and each
+    :func:`kmeans_fit_grouped` assignment: every (vec_id, group) row of
+    ``sub`` meets its group's rows of the codebook ``cb`` (group_col,
+    cid, cv), broadcast map-side, and keeps the nearest by exact
+    squared L2 ``d``, ties to the lowest cid.  The argmin is a
+    WindowGroupLimit-able row_number over one group's codebook rows, so
+    the only shuffle is keyed on (vec_id, group).  Returns ``sub``'s
+    columns plus cid and d."""
+    d = sub.join(F.broadcast(cb), group_col).withColumn(
+        "d", idist2(F.col(vec_col), F.col("cv"))
+    )
+    w = F.row_number().over(Window.partitionBy("vec_id", group_col).orderBy("d", "cid"))
+    return d.withColumn("rn", w).filter(F.col("rn") == 1).drop("rn", "cv")
 
 
 def _dist2_sql(vec: str, centroid: list[int]) -> str:
-    """Exact squared euclidean distance between a micro-unit vector
-    column and a python-int centroid (|diff| <= 2e6 -> diff^2 <= 4e12,
-    x 64 dims < 2^63: no overflow).
+    """:func:`idist2` between a micro-unit vector column and a
+    python-int centroid, as SQL.
 
     Built as ONE SQL string, not a py4j Column tree: a 64-literal array
     times k centroids times one expression per iteration was ~500 py4j
@@ -51,8 +101,7 @@ def _dist2_sql(vec: str, centroid: list[int]) -> str:
 def _np_d2(x, cents) -> "object":
     """Exact squared distances from each row of one stacked int64 batch
     matrix to every centroid: |x|^2 - 2 x.C^T + |c|^2 expands the same
-    integer lattice arithmetic as :func:`_dist2_sql` (|mu| <= 2e6 ->
-    every term <= ~2.6e14, no overflow)."""
+    integer lattice arithmetic as :func:`idist2`."""
     return (
         (x * x).sum(axis=1)[:, None]
         - 2 * (x @ cents.T)
@@ -118,7 +167,7 @@ def kmeans_fit(
         mu_df = df
     else:
         mu_df = df.select(
-            "vec_id", _mu_vec(F.col(vec_col)).alias("mu")
+            "vec_id", lattice(F.col(vec_col)).alias("mu")
         ).localCheckpoint(eager=False)
     seed_rows = mu_df.orderBy("vec_id").limit(k).collect()
     centroids = [list(r.mu) for r in seed_rows]
@@ -261,21 +310,8 @@ def kmeans_fit_grouped(
             [(g, cid, cv) for (g, cid), cv in sorted(c.items())],
             f"{group_col} int, cid int, cv array<bigint>",
         )
-        d = sub.join(F.broadcast(cb), group_col).withColumn(
-            "d",
-            F.aggregate(
-                F.zip_with(F.col(vec_col), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ),
-        )
-        w = F.row_number().over(
-            Window.partitionBy("vec_id", group_col).orderBy("d", "cid")
-        )
-        return (
-            d.withColumn("rn", w)
-            .filter(F.col("rn") == 1)
-            .select("vec_id", group_col, vec_col, "cid")
+        return nearest_codes(sub, cb, group_col, vec_col).select(
+            "vec_id", group_col, vec_col, "cid"
         )
 
     for _ in range(iterations):

@@ -245,28 +245,3 @@ def norm(a: Column) -> Column:
             lambda acc, v: acc + v,
         )
     )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity between two float vectors as a sequential fold
-    (deterministic summation order; elements cast to double first)."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    nb = F.sqrt(
-        F.aggregate(
-            F.transform(b, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    return dot / (na * nb)

@@ -16,14 +16,15 @@ differ in the last ULPs and hash-mismatch.  Strategy:
 * STDDEV is computed from exact integer sum / sum-of-squares via the
   textbook formula, with identical final double expressions both sides.
 
-Every helper here has a Spark (Column) and a SQL (string) twin that
+Every money helper here has a Spark (Column) and a SQL (string) twin that
 compute bit-identical results.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def cents(col: Column | str) -> Column:
@@ -61,3 +62,18 @@ def money_avg(col: Column | str, alias: str) -> Column:
 
 def sql_money_avg(expr: str, alias: str) -> str:
     return f"CAST(SUM({sql_cents(expr)}) AS DOUBLE) / 100.0 / CAST(COUNT(*) AS DOUBLE) AS {alias}"
+
+
+def neighbor_ranks(scored: DataFrame, score: str) -> DataFrame:
+    """The cross-engine top-5 tie rule shared by the vector searches and
+    their DuckDB oracles: over (query_id, neighbor_id, cs), rank each
+    query's neighbors by ``cs`` descending with ``neighbor_id`` ascending
+    on ties, keep ranks 1-5 with ``rk`` as long and the score rounded to
+    6 places (named ``score``), ordered by query, then rank."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cs").desc(), "neighbor_id")
+    return (
+        scored.withColumn("rk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rk") <= 5)
+        .select("query_id", "neighbor_id", "rk", F.round("cs", 6).alias(score))
+        .orderBy("query_id", "rk")
+    )

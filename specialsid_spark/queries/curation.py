@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from specialsid_spark.catalog import load_parallel
+from specialsid_spark.operators.kmeans import idot, lattice
 from specialsid_spark.operators.textops import lang_guess, tokens, word_kgrams
 from specialsid_spark.operators.rows import map_rows
 from specialsid_spark.queries import register
@@ -1718,22 +1719,6 @@ _SQL_SEM_DECON = f"""
     """
 
 
-def _ilattice(col: F.Column) -> F.Column:
-    return F.transform(
-        col.cast("array<double>"),
-        lambda x: F.floor(x * F.lit(float(_SEM_SCALE))).cast("long"),
-    )
-
-
-def _idot(a: F.Column, b: F.Column) -> F.Column:
-    """Integer dot product as a sequential fold — exact on the lattice."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def _sem_bucket(col: str) -> F.Column:
     b = F.lit(0)
     for i, d in enumerate(_SEM_DIMS):
@@ -1758,7 +1743,7 @@ def cur_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's string-level contamination checks (SURVEY.md north
     star; no reference file computes in embedding space)."""
     emb = load_parallel(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", _ilattice(F.col("embedding")).alias("q"))
+    e = emb.select("vec_id", lattice(F.col("embedding"), _SEM_SCALE).alias("q"))
     ev0 = e.filter(F.col("vec_id") % _SEM_EVAL_MOD == 0).select(
         F.expr(f"CAST(vec_id DIV {_SEM_EVAL_MOD} AS BIGINT)").alias("eval_id"),
         "q",
@@ -1775,18 +1760,18 @@ def cur_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "eval_id",
         "qe",
-        _idot(F.col("qe"), F.col("qe")).alias("nqe"),
+        idot(F.col("qe"), F.col("qe")).alias("nqe"),
         _sem_bucket("qe").alias("bucket"),
     )
     tr = e.select(
         "vec_id",
         "q",
-        _idot(F.col("q"), F.col("q")).alias("nq"),
+        idot(F.col("q"), F.col("q")).alias("nq"),
         _sem_bucket("q").alias("bucket"),
     )
 
     def matches(pairs: DataFrame) -> DataFrame:
-        d = pairs.withColumn("dp", _idot(F.col("qe"), F.col("q")))
+        d = pairs.withColumn("dp", idot(F.col("qe"), F.col("q")))
         return d.filter(
             (F.col("dp") > 0)
             & (

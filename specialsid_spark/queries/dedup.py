@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from specialsid_spark.catalog import load_parallel
+from specialsid_spark.operators.kmeans import lattice
 from specialsid_spark.operators.snapshot import (
     snapshot_commit,
     snapshot_read,
@@ -604,9 +605,10 @@ def dedup_embedding_cosine_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     B = _EMB_TILE_B
-    mu = F.transform("embedding", lambda x: F.floor(x.cast("double") * 1000000.0).cast("long"))
     e = load_parallel(spark, sf_dir, "embeddings").select(
-        "vec_id", mu.alias("mu"), (F.col("vec_id") % B).alias("blk")
+        "vec_id",
+        lattice(F.col("embedding")).alias("mu"),
+        (F.col("vec_id") % B).alias("blk"),
     )
     tiles = _emb_tile_memberships(e, B)
 

@@ -16,6 +16,13 @@ bit-identical in Spark and DuckDB; codebooks are the subvectors of the
 first K corpus vectors (a deterministic stand-in for a trained
 codebook, same device as sim_ivf_topk's centroids).  Ties in the
 argmin break toward the lowest code id in both engines.
+
+Stages: every query is built from one function per stage — the
+subvector split (``_subvectors``, ``_codebook``), the encode
+(``nearest_codes``, the grouped trainer's assignment kernel, in
+operators/kmeans.py with the lattice snap and integer folds), the LUT
+(``_lut``), the ADC score (``_adc``), the shortlist + exact rerank
+(``_rerank``) and the ranked output (``neighbor_ranks``).
 """
 
 from __future__ import annotations
@@ -25,7 +32,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from specialsid_spark.catalog import load_parallel
+from specialsid_spark.operators.kmeans import idot, inorm2, lattice, nearest_codes
 from specialsid_spark.queries import register
+from specialsid_spark.queries._determinism import neighbor_ranks
 
 _M = 8  # subvectors per vector (64 dims -> 8 dims each)
 _K = 16  # codebook entries per subvector
@@ -58,34 +67,111 @@ _SQL_CODES = f"""
 """
 
 
-def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, m, code, d): the PQ encoder — argmin codebook entry per
-    subvector, exact integer squared-L2, ties to the lowest code.
-
-    Scale shape: the codebook is _M × _K tiny rows (broadcast); each
-    corpus vector meets _M × _K candidates map-side, and the argmin is
-    a WindowGroupLimit-able row_number over a _K-row group — no shuffle
-    wider than (vec_id, m) keys carrying one long each."""
-    e = load_parallel(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id",
-        "transform(CAST(embedding AS ARRAY<DOUBLE>), x -> CAST(floor(x * 1000000) AS BIGINT)) AS mu",
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, mu): the corpus on the micro-unit lattice."""
+    return load_parallel(spark, sf_dir, "embeddings").select(
+        "vec_id", lattice(F.col("embedding")).alias("mu")
     )
-    sub = e.selectExpr(
+
+
+def _subvectors(e: DataFrame) -> DataFrame:
+    """(vec_id, m, sv): each micro-unit vector split into _M subvectors."""
+    return e.selectExpr(
         "vec_id", f"explode(sequence(0, {_M - 1})) AS m", "mu"
     ).selectExpr("vec_id", "m", f"slice(mu, {_SUB} * m + 1, {_SUB}) AS sv")
-    cb = sub.filter(F.col("vec_id") < _K).selectExpr("m AS cm", "vec_id AS k", "sv AS cv")
-    dist = sub.join(F.broadcast(cb), F.col("m") == F.col("cm")).selectExpr(
-        "vec_id",
-        "m",
-        "k",
-        "aggregate(zip_with(sv, cv, (a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS d",
+
+
+def _codebook(e: DataFrame) -> DataFrame:
+    """(m, cid, cv): the untrained codebook, the subvectors of the first
+    _K corpus vectors."""
+    return _subvectors(e.filter(F.col("vec_id") < _K)).selectExpr(
+        "m", "vec_id AS cid", "sv AS cv"
     )
-    w = F.row_number().over(Window.partitionBy("vec_id", "m").orderBy("d", "k"))
+
+
+def _lut(sub: DataFrame, cb: DataFrame, n_query: int) -> DataFrame:
+    """(qid, lm, k, pdot, c2): the LUT — each query subvector's exact
+    partial dot with every codebook entry of its subspace, and that
+    entry's squared norm; _M × _K rows per query, computed once."""
+    q = sub.filter(F.col("vec_id") < n_query).withColumnRenamed("vec_id", "qid")
+    return q.join(F.broadcast(cb), "m").select(
+        "qid",
+        F.col("m").alias("lm"),
+        F.col("cid").alias("k"),
+        idot(F.col("sv"), F.col("cv")).alias("pdot"),
+        inorm2(F.col("cv")).alias("c2"),
+    )
+
+
+def _adc(codes: DataFrame, lut: DataFrame) -> DataFrame:
+    """(qid, neighbor_id, adot, r2): ADC scoring — each neighbor's codes
+    meet the broadcast LUT, and the partial dots (and the reconstructed
+    neighbor's squared norm) sum per (query, neighbor)."""
     return (
-        dist.withColumn("rn", w)
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "m", F.col("k").alias("code"), "d")
+        codes.join(
+            F.broadcast(lut),
+            (F.col("m") == F.col("lm"))
+            & (F.col("cid") == F.col("k"))
+            & (F.col("vec_id") != F.col("qid")),
+        )
+        .groupBy("qid", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.sum("pdot").alias("adot"), F.sum("c2").alias("r2"))
     )
+
+
+def _norms(e: DataFrame) -> DataFrame:
+    """(vec_id, mu, nrm): each vector with the IEEE sqrt of its exact
+    integer squared norm."""
+    return e.withColumn("nrm", F.sqrt(inorm2(F.col("mu")).cast("double")))
+
+
+def _adc_ranked(adc: DataFrame, e: DataFrame) -> DataFrame:
+    """Top-5 by ADC cosine: the exact ADC dot over the query's norm and
+    the reconstructed neighbor's (queries: vec_id < 5)."""
+    qn = _norms(e.filter(F.col("vec_id") < 5)).selectExpr(
+        "vec_id AS qid", "nrm AS qnorm"
+    )
+    cs = F.col("adot").cast("double") / (
+        F.col("qnorm") * F.sqrt(F.col("r2").cast("double"))
+    )
+    return neighbor_ranks(
+        adc.join(F.broadcast(qn), "qid").select(
+            F.col("qid").alias("query_id"), "neighbor_id", cs.alias("cs")
+        ),
+        "adc_cos",
+    )
+
+
+def _rerank(adc: DataFrame, nv: DataFrame, r: int, n_query: int) -> DataFrame:
+    """Top-5 by exact cosine over each query's ``r``-candidate ADC
+    shortlist: only the shortlisted neighbors' full vectors (``nv``,
+    from :func:`_norms`) are fetched and re-scored."""
+    ws = Window.partitionBy("qid").orderBy(
+        (F.col("adot").cast("double") / F.sqrt(F.col("r2").cast("double"))).desc(),
+        "neighbor_id",
+    )
+    shortlist = (
+        adc.withColumn("srk", F.row_number().over(ws))
+        .filter(F.col("srk") <= r)
+        .select("qid", "neighbor_id")
+    )
+    nvec = nv.selectExpr("vec_id AS nid", "mu AS nmu", "nrm AS nn")
+    qvec = nv.filter(F.col("vec_id") < n_query).selectExpr(
+        "vec_id AS qvid", "mu AS qmu", "nrm AS qn"
+    )
+    exact = (
+        shortlist.join(nvec, F.col("neighbor_id") == F.col("nid"))
+        .join(F.broadcast(qvec), F.col("qid") == F.col("qvid"))
+        .select(
+            F.col("qid").alias("query_id"),
+            "neighbor_id",
+            (
+                idot(F.col("qmu"), F.col("nmu")).cast("double")
+                / (F.col("qn") * F.col("nn"))
+            ).alias("cs"),
+        )
+    )
+    return neighbor_ranks(exact, "cos_sim")
 
 
 @register(
@@ -111,14 +197,15 @@ def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the r3 gate; tools/check_oracle.py now rejects nested output
     types).  The string is a bijective rendering of the code vector, so
     the hash compare still proves every code exactly."""
-    codes = _pq_codes(spark, sf_dir)
+    e = _embeddings(spark, sf_dir)
     return (
-        codes.groupBy("vec_id")
+        nearest_codes(_subvectors(e), _codebook(e))
+        .groupBy("vec_id")
         .agg(
             F.array_join(
                 F.transform(
-                    F.array_sort(F.collect_list(F.struct("m", "code"))),
-                    lambda s: s["code"],
+                    F.array_sort(F.collect_list(F.struct("m", "cid"))),
+                    lambda s: s["cid"],
                 ),
                 ",",
             ).alias("codes"),
@@ -180,59 +267,9 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Compose with the IVF cells (sim_ivf_topk) for full IVFADC.  The
     approximation quality (vs exact brute force) is pinned by
     tests/test_ann_recall.py."""
-    from pyspark.sql.window import Window
-
-    codes = _pq_codes(spark, sf_dir)
-    e = load_parallel(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id",
-        "transform(CAST(embedding AS ARRAY<DOUBLE>), x -> CAST(floor(x * 1000000) AS BIGINT)) AS mu",
-    )
-    qsub = (
-        e.filter(F.col("vec_id") < 5)
-        .selectExpr("vec_id AS qid", f"explode(sequence(0, {_M - 1})) AS m", "mu")
-        .selectExpr("qid", "m", f"slice(mu, {_SUB} * m + 1, {_SUB}) AS sv")
-    )
-    cb = (
-        e.filter(F.col("vec_id") < _K)
-        .selectExpr("vec_id AS k", f"explode(sequence(0, {_M - 1})) AS cm", "mu")
-        .selectExpr("k", "cm", f"slice(mu, {_SUB} * cm + 1, {_SUB}) AS cv")
-    )
-    lut = qsub.join(F.broadcast(cb), F.col("m") == F.col("cm")).selectExpr(
-        "qid",
-        "m AS lm",
-        "k",
-        "aggregate(zip_with(sv, cv, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS pdot",
-        "aggregate(transform(cv, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS c2",
-    )
-    qn = e.filter(F.col("vec_id") < 5).selectExpr(
-        "vec_id AS qid",
-        "sqrt(CAST(aggregate(transform(mu, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS DOUBLE)) AS qnorm",
-    )
-    scored = (
-        codes.join(
-            F.broadcast(lut),
-            (F.col("m") == F.col("lm"))
-            & (F.col("code") == F.col("k"))
-            & (F.col("vec_id") != F.col("qid")),
-        )
-        .groupBy("qid", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pdot").alias("adot"), F.sum("c2").alias("r2"))
-    )
-    cs = F.col("adot").cast("double") / (F.col("qnorm") * F.sqrt(F.col("r2").cast("double")))
-    w = Window.partitionBy("qid").orderBy(F.col("cs").desc(), "neighbor_id")
-    return (
-        scored.join(F.broadcast(qn), "qid")
-        .withColumn("cs", cs)
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 5)
-        .select(
-            F.col("qid").alias("query_id"),
-            "neighbor_id",
-            "rk",
-            F.round("cs", 6).alias("adc_cos"),
-        )
-        .orderBy("query_id", "rk")
-    )
+    e = _embeddings(spark, sf_dir)
+    sub, cb = _subvectors(e), _codebook(e)
+    return _adc_ranked(_adc(nearest_codes(sub, cb), _lut(sub, cb, 5)), e)
 
 
 _R = 50  # ADC shortlist size fed to exact re-ranking
@@ -294,73 +331,9 @@ def sim_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast LUT; stage 2 is an equi-join of R×|queries| ids against
     the vector table (a semi-join-sized read, pushed to the scan at
     real SFs).  Recall floor pinned in tests/test_ann_recall.py."""
-    codes = _pq_codes(spark, sf_dir)
-    e = load_parallel(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id",
-        "transform(CAST(embedding AS ARRAY<DOUBLE>), x -> CAST(floor(x * 1000000) AS BIGINT)) AS mu",
-    )
-    qsub = (
-        e.filter(F.col("vec_id") < 5)
-        .selectExpr("vec_id AS qid", f"explode(sequence(0, {_M - 1})) AS m", "mu")
-        .selectExpr("qid", "m", f"slice(mu, {_SUB} * m + 1, {_SUB}) AS sv")
-    )
-    cb = (
-        e.filter(F.col("vec_id") < _K)
-        .selectExpr("vec_id AS k", f"explode(sequence(0, {_M - 1})) AS cm", "mu")
-        .selectExpr("k", "cm", f"slice(mu, {_SUB} * cm + 1, {_SUB}) AS cv")
-    )
-    lut = qsub.join(F.broadcast(cb), F.col("m") == F.col("cm")).selectExpr(
-        "qid",
-        "m AS lm",
-        "k",
-        "aggregate(zip_with(sv, cv, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS pdot",
-        "aggregate(transform(cv, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS c2",
-    )
-    adc = (
-        codes.join(
-            F.broadcast(lut),
-            (F.col("m") == F.col("lm"))
-            & (F.col("code") == F.col("k"))
-            & (F.col("vec_id") != F.col("qid")),
-        )
-        .groupBy("qid", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pdot").alias("adot"), F.sum("c2").alias("r2"))
-    )
-    ws = Window.partitionBy("qid").orderBy(
-        (F.col("adot").cast("double") / F.sqrt(F.col("r2").cast("double"))).desc(),
-        "neighbor_id",
-    )
-    shortlist = (
-        adc.withColumn("srk", F.row_number().over(ws))
-        .filter(F.col("srk") <= _R)
-        .select("qid", "neighbor_id")
-    )
-    nvec = e.selectExpr(
-        "vec_id AS nid",
-        "mu AS nmu",
-        "sqrt(CAST(aggregate(transform(mu, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS DOUBLE)) AS nn",
-    )
-    qvec = e.filter(F.col("vec_id") < 5).selectExpr(
-        "vec_id AS qvid",
-        "mu AS qmu",
-        "sqrt(CAST(aggregate(transform(mu, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS DOUBLE)) AS qn",
-    )
-    exact = (
-        shortlist.join(nvec, F.col("neighbor_id") == F.col("nid"))
-        .join(F.broadcast(qvec), F.col("qid") == F.col("qvid"))
-        .selectExpr(
-            "qid AS query_id",
-            "neighbor_id",
-            "CAST(aggregate(zip_with(qmu, nmu, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS DOUBLE) / (qn * nn) AS cs",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cs").desc(), "neighbor_id")
-    return (
-        exact.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id", "rk", F.round("cs", 6).alias("cos_sim"))
-        .orderBy("query_id", "rk")
-    )
+    e = _embeddings(spark, sf_dir)
+    sub, cb = _subvectors(e), _codebook(e)
+    return _rerank(_adc(nearest_codes(sub, cb), _lut(sub, cb, 5)), _norms(e), _R, 5)
 
 
 _N_CELLS = 8  # coarse IVF cells (same deterministic device as sim_ivf_topk)
@@ -448,25 +421,21 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment and final cosines divide exact micro-unit integer dots
     by IEEE sqrt norms (identical doubles both engines), ADC sums are
     pure integers."""
-    codes = _pq_codes(spark, sf_dir)
-    e = load_parallel(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id",
-        "transform(CAST(embedding AS ARRAY<DOUBLE>), x -> CAST(floor(x * 1000000) AS BIGINT)) AS mu",
-    )
-    nv = e.selectExpr(
-        "vec_id",
-        "mu",
-        "sqrt(CAST(aggregate(transform(mu, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS DOUBLE)) AS nrm",
-    )
+    e = _embeddings(spark, sf_dir)
+    sub, cb = _subvectors(e), _codebook(e)
+    nv = _norms(e)
     cent = nv.filter(F.col("vec_id") < _N_CELLS).selectExpr(
         "vec_id AS cid", "mu AS cv", "nrm AS cn"
     )
     ranked_cells = (
         nv.crossJoin(F.broadcast(cent))
-        .selectExpr(
+        .select(
             "vec_id",
             "cid",
-            "CAST(aggregate(zip_with(mu, cv, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS DOUBLE) / (nrm * cn) AS cell_cs",
+            (
+                idot(F.col("mu"), F.col("cv")).cast("double")
+                / (F.col("nrm") * F.col("cn"))
+            ).alias("cell_cs"),
         )
         .withColumn(
             "rn",
@@ -479,73 +448,24 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qprobe = ranked_cells.filter(
         (F.col("rn") <= _N_PROBE) & (F.col("vec_id") < 10)
     ).select(F.col("vec_id").alias("qid"), "cid")
-    qsub = (
-        e.filter(F.col("vec_id") < 10)
-        .selectExpr("vec_id AS qid", f"explode(sequence(0, {_M - 1})) AS m", "mu")
-        .selectExpr("qid", "m", f"slice(mu, {_SUB} * m + 1, {_SUB}) AS sv")
-    )
-    cb = (
-        e.filter(F.col("vec_id") < _K)
-        .selectExpr("vec_id AS k", f"explode(sequence(0, {_M - 1})) AS cm", "mu")
-        .selectExpr("k", "cm", f"slice(mu, {_SUB} * cm + 1, {_SUB}) AS cv")
-    )
-    lut = qsub.join(F.broadcast(cb), F.col("m") == F.col("cm")).selectExpr(
-        "qid AS lqid",
-        "m AS lm",
-        "k",
-        "aggregate(zip_with(sv, cv, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS pdot",
-        "aggregate(transform(cv, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS c2",
-    )
+    lut = _lut(sub, cb, 10).withColumnRenamed("qid", "lqid")
     cand = qprobe.join(
         assign.selectExpr("vec_id AS neighbor_id", "cid AS ncid"),
         (F.col("ncid") == F.col("cid")) & (F.col("neighbor_id") != F.col("qid")),
     ).select("qid", "neighbor_id")
+    # keyed on the query through its probed cells, so not _adc's join
     adc = (
-        cand.join(codes, F.col("vec_id") == F.col("neighbor_id"))
+        cand.join(nearest_codes(sub, cb), F.col("vec_id") == F.col("neighbor_id"))
         .join(
             F.broadcast(lut),
             (F.col("lqid") == F.col("qid"))
             & (F.col("lm") == F.col("m"))
-            & (F.col("k") == F.col("code")),
+            & (F.col("k") == F.col("cid")),
         )
         .groupBy("qid", "neighbor_id")
         .agg(F.sum("pdot").alias("adot"), F.sum("c2").alias("r2"))
     )
-    ws = Window.partitionBy("qid").orderBy(
-        (F.col("adot").cast("double") / F.sqrt(F.col("r2").cast("double"))).desc(),
-        "neighbor_id",
-    )
-    shortlist = (
-        adc.withColumn("srk", F.row_number().over(ws))
-        .filter(F.col("srk") <= _IVFPQ_R)
-        .select("qid", "neighbor_id")
-    )
-    exact = (
-        shortlist.join(
-            nv.selectExpr("vec_id AS nid", "mu AS nmu", "nrm AS nn"),
-            F.col("neighbor_id") == F.col("nid"),
-        )
-        .join(
-            F.broadcast(
-                nv.filter(F.col("vec_id") < 10).selectExpr(
-                    "vec_id AS qvid", "mu AS qmu", "nrm AS qn"
-                )
-            ),
-            F.col("qid") == F.col("qvid"),
-        )
-        .selectExpr(
-            "qid AS query_id",
-            "neighbor_id",
-            "CAST(aggregate(zip_with(qmu, nmu, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS DOUBLE) / (qn * nn) AS cs",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cs").desc(), "neighbor_id")
-    return (
-        exact.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id", "rk", F.round("cs", 6).alias("cos_sim"))
-        .orderBy("query_id", "rk")
-    )
+    return _rerank(adc, nv, _IVFPQ_R, 10)
 
 
 # ------------------------- trained PQ (r7) -------------------------
@@ -651,16 +571,6 @@ def _sql_trained_adc() -> str:
     )
 
 
-def _subvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_parallel(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id",
-        "transform(CAST(embedding AS ARRAY<DOUBLE>), x -> CAST(floor(x * 1000000) AS BIGINT)) AS mu",
-    )
-    return e.selectExpr(
-        "vec_id", f"explode(sequence(0, {_M - 1})) AS m", "mu"
-    ).selectExpr("vec_id", "m", f"slice(mu, {_SUB} * m + 1, {_SUB}) AS sv")
-
-
 # trained-codebook snapshot tables, one per (process, sf_dir)
 _PQ_INDEX_TABLES: dict[str, str] = {}
 
@@ -683,7 +593,7 @@ def pq_codebook_commit(spark: SparkSession, sf_dir: str) -> str:
     t = _PQ_INDEX_TABLES.get(key)
     if t is not None and Path(t).exists():
         return t
-    sub = _subvectors(spark, sf_dir)
+    sub = _subvectors(_embeddings(spark, sf_dir))
     cents, _ = kmeans_fit_grouped(sub, k=_K, iterations=_PQ_ITERS, dim=_SUB)
     df = spark.createDataFrame(
         [(m, cid, cv) for (m, cid), cv in sorted(cents.items())],
@@ -718,60 +628,7 @@ def sim_pq_trained_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf-independent PQ promise."""
     from specialsid_spark.operators.snapshot import snapshot_read
 
-    table = pq_codebook_commit(spark, sf_dir)
-    cb = snapshot_read(spark, table).selectExpr("m AS cm", "cid AS k", "cv")
-    sub = _subvectors(spark, sf_dir).localCheckpoint(eager=True)
-    d = sub.join(F.broadcast(cb), F.col("m") == F.col("cm")).selectExpr(
-        "vec_id",
-        "m",
-        "k",
-        "aggregate(zip_with(sv, cv, (a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS d",
-    )
-    w = F.row_number().over(Window.partitionBy("vec_id", "m").orderBy("d", "k"))
-    chosen = (
-        d.withColumn("rn", w)
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "m", F.col("k").alias("code"))
-    )
-    qsub = sub.filter(F.col("vec_id") < 5).selectExpr("vec_id AS qid", "m AS qm", "sv")
-    lut = qsub.join(F.broadcast(cb), F.col("qm") == F.col("cm")).selectExpr(
-        "qid",
-        "qm AS lm",
-        "k",
-        "aggregate(zip_with(sv, cv, (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS pdot",
-        "aggregate(transform(cv, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS c2",
-    )
-    e = load_parallel(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id",
-        "transform(CAST(embedding AS ARRAY<DOUBLE>), x -> CAST(floor(x * 1000000) AS BIGINT)) AS mu",
-    )
-    qn = e.filter(F.col("vec_id") < 5).selectExpr(
-        "vec_id AS qid",
-        "sqrt(CAST(aggregate(transform(mu, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS DOUBLE)) AS qnorm",
-    )
-    scored = (
-        chosen.join(
-            F.broadcast(lut),
-            (F.col("lm") == F.col("m"))
-            & (F.col("k") == F.col("code"))
-            & (F.col("vec_id") != F.col("qid")),
-        )
-        .groupBy("qid", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("pdot").alias("adot"), F.sum("c2").alias("r2"))
-    )
-    cs = F.col("adot").cast("double") / (
-        F.col("qnorm") * F.sqrt(F.col("r2").cast("double"))
-    )
-    wr = Window.partitionBy("qid").orderBy(cs.desc(), "neighbor_id")
-    return (
-        scored.join(F.broadcast(qn), "qid")
-        .withColumn("rk", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rk") <= 5)
-        .select(
-            F.col("qid").alias("query_id"),
-            "neighbor_id",
-            "rk",
-            F.round(cs, 6).alias("adc_cos"),
-        )
-        .orderBy("query_id", "rk")
-    )
+    cb = snapshot_read(spark, pq_codebook_commit(spark, sf_dir))
+    e = _embeddings(spark, sf_dir)
+    sub = _subvectors(e).localCheckpoint(eager=True)
+    return _adc_ranked(_adc(nearest_codes(sub, cb), _lut(sub, cb, 5)), e)

@@ -20,17 +20,22 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from specialsid_spark.catalog import load, load_parallel
+from specialsid_spark.operators.kmeans import (
+    _MICRO,
+    _dist2_sql,
+    assign_clusters,
+    idot,
+    inorm2,
+    kmeans_fit,
+    kmeans_stats,
+    lattice,
+    micro,
+)
 from specialsid_spark.queries import register
-
-_MICRO = 1_000_000
+from specialsid_spark.queries._determinism import neighbor_ranks
 
 # DuckDB twin of the micro-unit snap for one array element.
 _SQL_MU = "CAST(floor(CAST({x} AS DOUBLE) * 1000000) AS BIGINT)"
-
-
-def _mu(col: F.Column) -> F.Column:
-    """Spark: float component -> exact integer micro-units."""
-    return F.floor(col.cast("double") * _MICRO).cast("long")
 
 
 @register(
@@ -68,7 +73,7 @@ def emb_centroid_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         flat.groupBy("label", "dim")
         .agg(
             (
-                F.sum(_mu(F.col("val"))).cast("double")
+                F.sum(micro(F.col("val"))).cast("double")
                 / _MICRO
                 / F.count(F.lit(1)).cast("double")
             ).alias("centroid"),
@@ -106,11 +111,7 @@ def emb_norm_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit.  Purely map-side until the tiny band aggregation.
     """
     e = load_parallel(spark, sf_dir, "embeddings")
-    sq_sum = F.aggregate(
-        F.transform(F.col("embedding"), lambda x: _mu(x) * _mu(x)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    sq_sum = inorm2(lattice(F.col("embedding")))
     norms = e.select(
         "label", (F.sqrt(sq_sum.cast("double")) / _MICRO).alias("l2")
     )
@@ -162,7 +163,7 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_parallel(spark, sf_dir, "embeddings")
     max_abs = F.aggregate(
-        F.transform(F.col("embedding"), lambda x: F.abs(_mu(x))),
+        F.transform(F.col("embedding"), lambda x: F.abs(micro(x))),
         F.lit(0).cast("long"),
         lambda acc, v: F.greatest(acc, v),
     )
@@ -170,7 +171,7 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_sum = F.aggregate(
         F.transform(
             F.col("embedding"),
-            lambda x: F.floor((_mu(x) * F.lit(127.0)) / F.col("max_abs_mu")).cast(
+            lambda x: F.floor((micro(x) * F.lit(127.0)) / F.col("max_abs_mu")).cast(
                 "long"
             ),
         ),
@@ -291,8 +292,6 @@ def sim_kmeans_quantizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     every arithmetic step is on the int64 micro-unit lattice; numpy
     assignment-level parity is additionally proven by tests/test_kmeans.py.
     """
-    from specialsid_spark.operators.kmeans import kmeans_fit, kmeans_stats
-
     # natural parquet layout (r14): the Lloyd iterations are numpy
     # batch kernels, and fanning a single-row-group fixture to 32
     # partitions multiplies each iteration's Arrow round-trips by the
@@ -383,8 +382,6 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     brief's training-data-pipeline family requires."""
     import numpy as np
     import pandas as pd
-
-    from specialsid_spark.operators.kmeans import kmeans_fit
 
     # natural parquet layout (r14): the Lloyd iterations are numpy
     # batch kernels, and fanning a single-row-group fixture to 32
@@ -612,8 +609,6 @@ def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment is one map-side pass (a numpy pandas_udf whose closure
     carries the k centroids); candidate generation is an equi-join on
     cell id with per-cell work scaled by nprobe — never |Q|×|N|."""
-    from specialsid_spark.operators.kmeans import kmeans_fit
-
     # natural parquet layout (r14): the Lloyd iterations are numpy
     # batch kernels, and fanning a single-row-group fixture to 32
     # partitions multiplies each iteration's Arrow round-trips by the
@@ -635,24 +630,16 @@ def _ivf_search(
     ``assigned`` carries (vec_id, mu, cid) for every indexed vector;
     ``is_query`` picks the rows of ``assigned`` that ask.  Returns
     (query_id, neighbor_id, rk, cos_sim)."""
-    # r13 opt: the checkpoint carries each vector's EXACT integer
-    # squared norm once, so pair scoring costs one fold, not three
-    # (the old shape re-folded n2(qmu) and n2(nmu) per candidate
-    # pair); n2 is an exact int64 sum, so sqrt/divide see the same
-    # doubles as before.
-    n2 = lambda c: F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0).cast("long"), lambda a, v: a + v
-    )
+    # the checkpoint carries each vector's exact squared norm once, so
+    # pair scoring costs one fold (the dot), not three
     assigned = assigned.select(
-        "vec_id", "mu", "cid", n2(F.col("mu")).alias("nn2")
+        "vec_id", "mu", "cid", inorm2(F.col("mu")).alias("nn2")
     ).localCheckpoint(eager=True)
     # query-side probe: rank cells by the SAME exact integer L2 the
     # training used (one selectExpr, SQL-string distances).  A numpy
     # mapInPandas probe was measured and reverted (+4-8%): at
     # |queries| = 50 the Arrow worker round-trip exceeds the k-literal
     # plan's cost — see OPTIMIZATION_r13.md.
-    from specialsid_spark.operators.kmeans import _dist2_sql  # noqa: PLC0415
-
     k = len(centroids)
     d_exprs = [f"{_dist2_sql('mu', c)} AS d{i}" for i, c in enumerate(centroids)]
     qd = assigned.filter(is_query).selectExpr("vec_id", "mu", "nn2", *d_exprs)
@@ -686,11 +673,6 @@ def _ivf_search(
         F.col("nn2").alias("nn2"),
         "cid",
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("qmu"), F.col("nmu"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     scored = (
         F.broadcast(qprobe)
         .join(nbr, (nbr.cid == qprobe.cid) & (F.col("neighbor_id") != F.col("query_id")))
@@ -698,7 +680,7 @@ def _ivf_search(
             "query_id",
             "neighbor_id",
             (
-                dot.cast("double")
+                idot(F.col("qmu"), F.col("nmu")).cast("double")
                 / (
                     F.sqrt(F.col("qn2").cast("double"))
                     * F.sqrt(F.col("nn2").cast("double"))
@@ -706,13 +688,7 @@ def _ivf_search(
             ).alias("cs"),
         )
     )
-    wr = Window.partitionBy("query_id").orderBy(F.col("cs").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(wr).cast("long"))
-        .filter(F.col("rk") <= _IVF_TOPK)
-        .select("query_id", "neighbor_id", "rk", F.round("cs", 6).alias("cos_sim"))
-        .orderBy("query_id", "rk")
-    )
+    return neighbor_ranks(scored, "cos_sim")
 
 
 # trained-quantizer snapshot tables, one per (process, sf_dir) — the
@@ -729,7 +705,6 @@ def ivf_index_commit(spark: SparkSession, sf_dir: str) -> str:
     import os
     from pathlib import Path
 
-    from specialsid_spark.operators.kmeans import kmeans_fit
     from specialsid_spark.operators.snapshot import snapshot_commit
     from specialsid_spark.session import session_workdir
 
@@ -777,15 +752,13 @@ def sim_ivf_from_table_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     training cost amortizes across every query that loads the table
     instead of re-running Lloyd — at 100 TB the difference between a
     usable ANN service and an accidental training job per query."""
-    from specialsid_spark.operators.kmeans import _mu_vec, assign_clusters
-
     table = ivf_index_commit(spark, sf_dir)
     centroids = ivf_centroids_from_table(spark, table)
     # natural parquet layout, as in sim_ivf_trained_topk: the assignment
     # is a numpy pandas_udf, and fanning out a one-row-group fixture
     # multiplies its Arrow round-trips by the partition count
     e = load(spark, sf_dir, "embeddings")
-    mu_df = e.select("vec_id", _mu_vec(F.col("embedding")).alias("mu"))
+    mu_df = e.select("vec_id", lattice(F.col("embedding")).alias("mu"))
     assigned = assign_clusters(mu_df, centroids)
     return _ivf_search(assigned, centroids, F.col("vec_id") < _IVF_NQUERY)
 
@@ -863,11 +836,6 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     index version is time-travelable."""
     from pathlib import Path
 
-    from specialsid_spark.operators.kmeans import (
-        _mu_vec,
-        assign_clusters,
-        kmeans_fit,
-    )
     from specialsid_spark.operators.snapshot import snapshot_commit_generations
     from specialsid_spark.session import session_workdir
 
@@ -885,7 +853,7 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     # seed stay one job.  kmeans_fit detects the ready `mu` column and
     # trains on the filtered view without its own projection job.
     mu_df = e.select(
-        "vec_id", _mu_vec(F.col("embedding")).alias("mu")
+        "vec_id", lattice(F.col("embedding")).alias("mu")
     ).localCheckpoint(eager=False)
     base = mu_df.filter(F.col("vec_id") % 4 != 0)
 

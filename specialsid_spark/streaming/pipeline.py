@@ -24,14 +24,19 @@ aggregations (T8) bound their state by event time.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
+import pandas as pd  # module-level: pandas_udf type hints must
+# resolve in module globals under `from __future__ import annotations`
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from specialsid_spark.operators.clean import clean_products
+from specialsid_spark.operators.clean import CLEAN_SCHEMA, clean_products
 from specialsid_spark.operators.extraction import (
     PRODUCT_JSON_SCHEMA,
     ExtractionConfig,
@@ -140,6 +145,15 @@ def hop2_pages_to_products_json(
     )
 
 
+_CLEAN_PARTS = ("province", "date_range")
+
+# hop3's clean zone as a reader sees it: the partition columns come last
+_CLEAN_ZONE_SCHEMA = T.StructType(
+    [f for f in CLEAN_SCHEMA if f.name not in _CLEAN_PARTS]
+    + [CLEAN_SCHEMA[n] for n in _CLEAN_PARTS]
+)
+
+
 def hop3_json_to_clean(
     spark: SparkSession,
     json_dir: str,
@@ -153,7 +167,7 @@ def hop3_json_to_clean(
         cleaned.writeStream.format("parquet")
         .option("path", clean_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("province", "date_range")
+        .partitionBy(*_CLEAN_PARTS)
         .trigger(availableNow=True)
         .start()
     )
@@ -281,7 +295,6 @@ def streaming_stateful_running_max(
     on event time).  This is the 'operator Spark lacks' escape hatch:
     arbitrary per-key state with bounded cleanup.
     """
-    import pandas as pd  # noqa: PLC0415
     from pyspark.sql.streaming.state import (  # noqa: PLC0415
         GroupState,
         GroupStateTimeout,
@@ -557,50 +570,39 @@ def streaming_decontaminate_ingest(
     whose distinct k-gram overlap with the benchmark set exceeds
     ``max_frac`` (default: ANY overlap) never enter the corpus.
 
-    The eval-gram set ships to executors once via the closure (real
-    eval suites are a few million shingles — broadcast territory), and
-    the check runs inside ONE Arrow-batched mapInPandas per micro-batch:
-    stateless, no shuffle, no state store.  Text is split by
-    ``tokens()`` in Spark, the batch query's tokenizer, so both gates
-    see the same grams.  Returns the surviving stream with per-doc
-    overlap columns so downstream audits can see what was near-missed;
-    the caller attaches the sink."""
-    import pandas as pd  # noqa: PLC0415
+    Grams are the batch query's: ``word_shingles`` over ``tokens()``,
+    in Spark; the eval-gram set ships to executors once in the closure
+    of ONE scalar pandas UDF that counts each doc's hits (real eval
+    suites are a few million shingles — broadcast territory).
+    Stateless, no shuffle, no state store.  NULL text has no grams, so
+    it passes with n_grams = n_eval_hits = 0.  Returns the surviving
+    stream with per-doc overlap columns so downstream audits can see
+    what was near-missed; the caller attaches the sink."""
+    from specialsid_spark.operators.textops import (  # noqa: PLC0415
+        tokens,
+        word_shingles,
+    )
 
-    from specialsid_spark.operators.textops import tokens  # noqa: PLC0415
+    @F.pandas_udf("long")
+    def eval_hits(grams: pd.Series) -> pd.Series:
+        return grams.map(lambda g: len(eval_grams.intersection(g))).astype("int64")
 
     docs = spark.readStream.schema("doc_id long, ts timestamp, text string").json(
         docs_dir
     )
-
-    def gate(batches):
-        for pdf in batches:
-            keep_rows = []
-            for doc_id, ts, text, toks in zip(
-                pdf["doc_id"], pdf["ts"], pdf["text"], pdf["toks"]
-            ):
-                if text is None or (isinstance(text, float) and pd.isna(text)):
-                    # NULL/NaN text must surface as an undecodable doc
-                    # (n_grams=0, passes the gate vacuously) — NOT be
-                    # stringified to the literal token 'nan'/'None',
-                    # which would fabricate a bogus 1-gram document
-                    keep_rows.append((doc_id, ts, None, 0, 0))
-                    continue
-                grams = {
-                    " ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)
-                }
-                n_hits = len(grams & eval_grams)
-                frac = n_hits / max(len(grams), 1)
-                if frac <= max_frac:
-                    keep_rows.append((doc_id, ts, text, len(grams), n_hits))
-            yield pd.DataFrame(
-                keep_rows,
-                columns=["doc_id", "ts", "text", "n_grams", "n_eval_hits"],
-            )
-
-    return docs.withColumn("toks", tokens("text")).mapInPandas(
-        gate, "doc_id long, ts timestamp, text string, n_grams long, n_eval_hits long"
+    scored = (
+        docs.withColumn("toks", tokens("text"))
+        .withColumn("grams", word_shingles(F.col("toks"), k))
+        .select(
+            "doc_id",
+            "ts",
+            "text",
+            F.size("grams").cast("long").alias("n_grams"),
+            eval_hits("grams").alias("n_eval_hits"),
+        )
     )
+    frac = F.col("n_eval_hits") / F.greatest(F.col("n_grams"), F.lit(1))
+    return scored.filter(frac <= max_frac)
 
 
 def streaming_incremental_rollup(
@@ -887,7 +889,6 @@ def streaming_stateful_value_stats_tws(
     both surfaces re-expressed.  The state is one 3-field tuple per
     user: bounded, shuffle-partitioned by key, exactly the shape that
     scales to 100 TB/day keyed streams."""
-    import pandas as pd  # noqa: PLC0415
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle  # noqa: PLC0415
 
     ev = spark.readStream.schema(
@@ -1202,7 +1203,6 @@ def streaming_cusum_monitor(
     by the watermark horizon in hours) per event_type — O(|keys|),
     never O(events); each micro-batch shuffles (event_type, hour,
     cents) partials only."""
-    import pandas as pd  # noqa: PLC0415
     from pyspark.sql.streaming.state import (  # noqa: PLC0415
         GroupState,
         GroupStateTimeout,
@@ -1315,7 +1315,11 @@ def _hop4_gate_stream(
     holds is a corpus hit, so nothing is admitted twice."""
     from specialsid_spark.operators.snapshot import snapshot_version_by_tag
 
-    schema = spark.read.parquet(clean_dir).schema
+    # hop3's clean zone has a known schema, while inferring it from the
+    # files is one Spark job per stream start; a clean zone written
+    # some other way (no hop3 partitions) is still inferred
+    hop3 = glob.glob(os.path.join(clean_dir, f"{_CLEAN_PARTS[0]}=*"))
+    schema = _CLEAN_ZONE_SCHEMA if hop3 else spark.read.parquet(clean_dir).schema
     stream = spark.readStream.schema(schema).parquet(clean_dir)
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
@@ -1398,7 +1402,7 @@ def streaming_ann_postings_ingest(
     At 100 TB: a daily embedding drop indexes in one pass over the
     drop — the k centroids ride the kernel's closure, the commit is
     append-only."""
-    from specialsid_spark.operators.kmeans import _mu_vec, assign_clusters
+    from specialsid_spark.operators.kmeans import assign_clusters, lattice
     from specialsid_spark.operators.snapshot import (
         _read_manifest,
         snapshot_commit,
@@ -1431,7 +1435,7 @@ def streaming_ann_postings_ingest(
                 "the original checkpoint."
             )
         centroids = ivf_centroids_from_table(sess, quantizer_table)
-        mu = batch_df.select("vec_id", _mu_vec(F.col("embedding")).alias("mu"))
+        mu = batch_df.select("vec_id", lattice(F.col("embedding")).alias("mu"))
         postings = assign_clusters(mu, centroids).select("vec_id", "cid")
         snapshot_commit(postings.coalesce(1), postings_table, mode="append", tag=tag)
 

@@ -131,12 +131,13 @@ def test_trained_codebooks_reduce_distortion(spark):
     from specialsid_spark.operators.snapshot import snapshot_read
     from specialsid_spark.queries.pq import (
         _K,
+        _embeddings,
         _subvectors,
         pq_codebook_commit,
     )
 
     sf = "/root/testdata/sf0.001"
-    sub = _subvectors(spark, sf).localCheckpoint(eager=True)
+    sub = _subvectors(_embeddings(spark, sf)).localCheckpoint(eager=True)
 
     def distortion(cb):
         d = sub.join(F.broadcast(cb), F.col("m") == F.col("cm")).selectExpr(

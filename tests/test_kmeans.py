@@ -4,6 +4,8 @@ on micro-unit components (no float summation order anywhere)."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 
@@ -69,7 +71,7 @@ def test_ivf_index_time_travel_reproduces_search(
         _ivf_search,
         ivf_centroids_from_table,
     )
-    from specialsid_spark.operators.kmeans import _mu_vec
+    from specialsid_spark.operators.kmeans import lattice
     from pyspark.sql import functions as F
 
     e = load(spark, sf_dir, "embeddings")
@@ -87,7 +89,7 @@ def test_ivf_index_time_travel_reproduces_search(
     assert ivf_centroids_from_table(spark, t, 1) == c1
     assert ivf_centroids_from_table(spark, t) == c2
 
-    mu_df = e.select("vec_id", _mu_vec(F.col("embedding")).alias("mu"))
+    mu_df = e.select("vec_id", lattice(F.col("embedding")).alias("mu"))
 
     def run(cs):
         return [
@@ -108,7 +110,7 @@ def test_assign_clusters_matches_sql_referee(spark, sf_dir, assign_clusters_sql)
     lowest-cid tie-break."""
     from pyspark.sql import functions as F
 
-    from specialsid_spark.operators.kmeans import _mu_vec, assign_clusters
+    from specialsid_spark.operators.kmeans import assign_clusters, lattice
 
     e = load(spark, sf_dir, "embeddings")
     centroids, _ = kmeans_fit(e, k=8, iterations=1)
@@ -116,7 +118,7 @@ def test_assign_clusters_matches_sql_referee(spark, sf_dir, assign_clusters_sql)
     # the lowest cid
     centroids = list(centroids)
     centroids[5] = list(centroids[2])
-    mu_df = e.select("vec_id", _mu_vec(F.col("embedding")).alias("mu"))
+    mu_df = e.select("vec_id", lattice(F.col("embedding")).alias("mu"))
     sql_map = {
         r.vec_id: r.cid
         for r in assign_clusters_sql(mu_df, centroids).select("vec_id", "cid").collect()
@@ -136,14 +138,14 @@ def test_grouped_kmeans_matches_ungrouped_on_single_group(spark, sf_dir):
     assignments — same seed device, same integer lattice."""
     from pyspark.sql import functions as F
 
-    from specialsid_spark.operators.kmeans import _mu_vec, kmeans_fit_grouped
+    from specialsid_spark.operators.kmeans import kmeans_fit_grouped, lattice
 
     e = load(spark, sf_dir, "embeddings")
     plain_c, plain_a = kmeans_fit(e, k=4, iterations=2)
     sub = e.select(
         "vec_id",
         F.lit(0).alias("m"),
-        _mu_vec(F.col("embedding")).alias("sv"),
+        lattice(F.col("embedding")).alias("sv"),
     )
     cents, assigned = kmeans_fit_grouped(sub, k=4, iterations=2, dim=64)
     assert [cents[(0, i)] for i in range(4)] == plain_c
@@ -177,3 +179,56 @@ def test_kmeans_stats_exact_when_batch_sum_passes_int64(spark):
         spark.conf.set(key, old)
     assert counts == {0: n}
     assert total == n * dim * mag * mag
+
+
+def test_lattice_vocabulary_matches_python_ints(spark):
+    """The lattice snap and the integer folds against Python's
+    arbitrary-precision ints: floor (not truncation) on negative
+    components, components at the ±1e6 lattice magnitude, and the
+    overflow bound the module states (64 dims of ±1.8e8 lattice values
+    fold exactly below 2^63)."""
+    from pyspark.sql import functions as F
+
+    from specialsid_spark.operators.kmeans import (
+        idist2,
+        idot,
+        inorm2,
+        lattice,
+        micro,
+    )
+
+    a = [-1.0, 1.0, -0.0000005, 0.9999995, -0.25, 0.0, 0.3, -0.7, -0.001]
+    b = [1.0, -1.0, 0.5, -0.9999995, -0.0000001, 0.75, -0.3, 0.7, 0.002]
+    big = [179_999_999, -179_999_999] * 32
+    df = spark.createDataFrame(
+        [(a, b, big, [-v for v in big])],
+        "a array<double>, b array<double>, p array<bigint>, q array<bigint>",
+    )
+    la, lb = lattice(F.col("a")), lattice(F.col("b"))
+    r = df.select(
+        la.alias("la"),
+        lb.alias("lb"),
+        F.transform("a", micro).alias("ma"),
+        lattice(F.col("a"), 512).alias("l512"),
+        idot(la, lb).alias("dot"),
+        inorm2(la).alias("n2"),
+        idist2(la, lb).alias("d2"),
+        idot(F.col("p"), F.col("q")).alias("big_dot"),
+        inorm2(F.col("p")).alias("big_n2"),
+        idist2(F.col("p"), F.col("q")).alias("big_d2"),
+    ).first()
+
+    pa = [math.floor(x * 1_000_000) for x in a]
+    pb = [math.floor(x * 1_000_000) for x in b]
+    assert r.la == r.ma == pa and r.lb == pb
+    assert pa[0] == -1_000_000 and pa[1] == 1_000_000
+    # floor, not truncation: -0.5 micro-units and -0.512 (at 512) go down
+    assert pa[2] == -1 and int(a[2] * 1_000_000) == 0
+    assert r.l512 == [math.floor(x * 512) for x in a] and r.l512[-1] == -1
+    assert r.dot == sum(x * y for x, y in zip(pa, pb))
+    assert r.n2 == sum(x * x for x in pa)
+    assert r.d2 == sum((x - y) ** 2 for x, y in zip(pa, pb))
+    q = [-v for v in big]
+    assert r.big_dot == sum(x * y for x, y in zip(big, q))
+    assert r.big_n2 == sum(x * x for x in big)
+    assert r.big_d2 == sum((x - y) ** 2 for x, y in zip(big, q)) < 2**63

@@ -57,6 +57,19 @@ def test_broadcast_part_revenue_is_broadcast(spark, qs):
     assert "BroadcastHashJoin" in p
 
 
+@pytest.mark.parametrize(
+    "name,n_bhj",
+    [("sim_pq_adc_topk", 4), ("sim_pq_rerank_topk", 5), ("sim_pq_trained_adc_topk", 4)],
+)
+def test_pq_codebook_and_lut_joins_broadcast(spark, qs, name, n_bhj):
+    # encode (codebook), LUT build and ADC score (LUT) each meet a tiny
+    # broadcast side; the query-vector joins broadcast too — a
+    # SortMergeJoin here would shuffle the corpus-sized side
+    tree = plan_of(spark, qs[name](spark, SF_DIR)).split("\n\n")[0]
+    assert tree.count("BroadcastHashJoin") == n_bhj
+    assert "SortMergeJoin" not in tree
+
+
 def test_no_accidental_cartesian_products(spark, qs):
     # every equi-join query must plan a hash/merge join; cartesian and
     # broadcast-nested-loop are reserved for the queries built on them

@@ -1417,7 +1417,7 @@ def test_streaming_ann_postings_ingest_matches_batch_assignment(
     import json as _json
     import os
 
-    from specialsid_spark.operators.kmeans import _mu_vec, assign_clusters, kmeans_fit
+    from specialsid_spark.operators.kmeans import assign_clusters, kmeans_fit, lattice
     from specialsid_spark.operators.snapshot import (
         snapshot_commit,
         snapshot_read,
@@ -1454,7 +1454,7 @@ def test_streaming_ann_postings_ingest_matches_batch_assignment(
     pt = str(tmp_path / "postings")
     snapshot_commit(
         assign_clusters(
-            base_df.select("vec_id", _mu_vec(F.col("embedding")).alias("mu")),
+            base_df.select("vec_id", lattice(F.col("embedding")).alias("mu")),
             centroids,
         ).select("vec_id", "cid").coalesce(1),
         pt,
@@ -1481,7 +1481,7 @@ def test_streaming_ann_postings_ingest_matches_batch_assignment(
     want = {
         (r.vec_id, r.cid)
         for r in assign_clusters_sql(
-            all_df.select("vec_id", _mu_vec(F.col("embedding")).alias("mu")),
+            all_df.select("vec_id", lattice(F.col("embedding")).alias("mu")),
             ivf_centroids_from_table(spark, qt),
         ).select("vec_id", "cid").collect()
     }
@@ -1903,7 +1903,7 @@ def test_streaming_ann_postings_recreated_checkpoint_raises(spark, tmp_path):
     and the postings table is unchanged."""
     import shutil
 
-    from specialsid_spark.operators.kmeans import _mu_vec, assign_clusters, kmeans_fit
+    from specialsid_spark.operators.kmeans import assign_clusters, kmeans_fit, lattice
     from specialsid_spark.operators.snapshot import snapshot_commit, snapshot_versions
     from specialsid_spark.streaming.pipeline import streaming_ann_postings_ingest
 
@@ -1925,7 +1925,7 @@ def test_streaming_ann_postings_recreated_checkpoint_raises(spark, tmp_path):
     )
     snapshot_commit(
         assign_clusters(
-            base_df.select("vec_id", _mu_vec(F.col("embedding")).alias("mu")), centroids
+            base_df.select("vec_id", lattice(F.col("embedding")).alias("mu")), centroids
         ).select("vec_id", "cid").coalesce(1),
         pt,
     )
@@ -1944,6 +1944,42 @@ def test_streaming_ann_postings_recreated_checkpoint_raises(spark, tmp_path):
     with pytest.raises(Exception, match="another checkpoint"):
         streaming_ann_postings_ingest(spark, str(vdir), qt, pt, ckpt).awaitTermination()
     assert snapshot_versions(pt) == before
+
+
+def test_hop4_stream_start_runs_no_job_on_hop3_clean_zone(spark, tmp_path):
+    """hop3's clean zone has a known schema, so starting the hop4 stream
+    over it runs no schema-inference job: no job lands in the starting
+    thread's job group, and the stream reads the schema a batch read
+    infers from the files."""
+    from pyspark.sql import types as T
+
+    from specialsid_spark.streaming.pipeline import hop4_incremental_lsh_gate
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    _write_pdf(raw / "flyer_a.pdf", b"A" * 250)
+    clean_dir = run_full_pipeline(
+        spark, str(raw), str(tmp_path / "work"), ExtractionConfig(requests_per_second=0)
+    )
+    sc = spark.sparkContext
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup("hop4-stream-start", "hop4 stream start")
+    try:
+        q = hop4_incremental_lsh_gate(
+            spark, clean_dir, str(tmp_path / "index"), str(tmp_path / "ckpt4")
+        )
+        q.awaitTermination()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", group)
+    assert sc.statusTracker().getJobIdsForGroup("hop4-stream-start") == []
+    assert len(q.recentProgress) == 1  # the micro-batch ran
+
+    source = q._jsq.streamingQuery().logicalPlan().child()  # noqa: SLF001
+    streamed = T.StructType.fromJson(json.loads(source.schema().json()))
+    inferred = spark.read.parquet(clean_dir).schema
+    assert [(f.name, f.dataType) for f in streamed] == [
+        (f.name, f.dataType) for f in inferred
+    ]
 
 
 # Spark jobs of one hop4 LSH micro-batch against an existing index, as
