@@ -64,21 +64,16 @@ def idist2(a: Column, b: Column) -> Column:
     return _isum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
 
 
-def nearest_codes(
-    sub: DataFrame, cb: DataFrame, group_col: str = "m", vec_col: str = "sv"
-) -> DataFrame:
+def nearest_codes(sub: DataFrame, cb: DataFrame) -> DataFrame:
     """The grouped nearest-codeword encoder — the PQ encoder and each
-    :func:`kmeans_fit_grouped` assignment: every (vec_id, group) row of
-    ``sub`` meets its group's rows of the codebook ``cb`` (group_col,
-    cid, cv), broadcast map-side, and keeps the nearest by exact
-    squared L2 ``d``, ties to the lowest cid.  The argmin is a
-    WindowGroupLimit-able row_number over one group's codebook rows, so
-    the only shuffle is keyed on (vec_id, group).  Returns ``sub``'s
-    columns plus cid and d."""
-    d = sub.join(F.broadcast(cb), group_col).withColumn(
-        "d", idist2(F.col(vec_col), F.col("cv"))
-    )
-    w = F.row_number().over(Window.partitionBy("vec_id", group_col).orderBy("d", "cid"))
+    :func:`kmeans_fit_grouped` assignment: every (vec_id, m, sv) row of
+    ``sub`` meets its subspace's rows of the codebook ``cb`` (m, cid,
+    cv), broadcast map-side, and keeps the nearest by exact squared L2
+    ``d``, ties to the lowest cid.  The argmin is a WindowGroupLimit-able
+    row_number over one subspace's codebook rows, so the only shuffle is
+    keyed on (vec_id, m).  Returns ``sub``'s columns plus cid and d."""
+    d = sub.join(F.broadcast(cb), "m").withColumn("d", idist2(F.col("sv"), F.col("cv")))
+    w = F.row_number().over(Window.partitionBy("vec_id", "m").orderBy("d", "cid"))
     return d.withColumn("rn", w).filter(F.col("rn") == 1).drop("rn", "cv")
 
 
@@ -273,16 +268,11 @@ def _floored_mean(s: int, n: int) -> int:
 
 
 def kmeans_fit_grouped(
-    sub: DataFrame,
-    k: int,
-    iterations: int,
-    dim: int,
-    group_col: str = "m",
-    vec_col: str = "sv",
+    sub: DataFrame, k: int, iterations: int, dim: int
 ) -> tuple[dict[tuple[int, int], list[int]], DataFrame]:
-    """GROUPED Lloyd's algorithm: one independent k-means per value of
-    ``group_col`` over micro-unit vectors in ``vec_col`` — the product-
-    quantization trainer (one codebook per subspace), r7.  Same exact-
+    """GROUPED Lloyd's algorithm: one independent k-means per subspace
+    ``m`` over micro-unit vectors in ``sv`` — the product-quantization
+    trainer (one codebook per subspace), r7.  Same exact-
     integer discipline as :func:`kmeans_fit` (int64 distances,
     floored-mean updates, ties to the lowest cid, empty clusters keep
     position) and the same deterministic seed (each group's
@@ -297,9 +287,9 @@ def kmeans_fit_grouped(
     spark = sub.sparkSession
     sub = sub.localCheckpoint(eager=True)
     seed = sub.filter(F.col("vec_id") < k).select(
-        F.col(group_col).cast("int").alias("g"),
+        F.col("m").cast("int").alias("g"),
         F.col("vec_id").cast("int").alias("cid"),
-        F.col(vec_col).alias("cv"),
+        F.col("sv").alias("cv"),
     )
     cents: dict[tuple[int, int], list[int]] = {
         (r.g, r.cid): list(r.cv) for r in seed.collect()
@@ -308,17 +298,15 @@ def kmeans_fit_grouped(
     def assign(c: dict) -> DataFrame:
         cb = spark.createDataFrame(
             [(g, cid, cv) for (g, cid), cv in sorted(c.items())],
-            f"{group_col} int, cid int, cv array<bigint>",
+            "m int, cid int, cv array<bigint>",
         )
-        return nearest_codes(sub, cb, group_col, vec_col).select(
-            "vec_id", group_col, vec_col, "cid"
-        )
+        return nearest_codes(sub, cb).select("vec_id", "m", "sv", "cid")
 
     for _ in range(iterations):
         assigned = assign(cents)
         sums = (
-            assigned.select(group_col, "cid", F.posexplode(vec_col).alias("pos", "v"))
-            .groupBy(group_col, "cid", "pos")
+            assigned.select("m", "cid", F.posexplode("sv").alias("pos", "v"))
+            .groupBy("m", "cid", "pos")
             .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
             .collect()
         )

@@ -64,16 +64,20 @@ def sql_money_avg(expr: str, alias: str) -> str:
     return f"CAST(SUM({sql_cents(expr)}) AS DOUBLE) / 100.0 / CAST(COUNT(*) AS DOUBLE) AS {alias}"
 
 
+#: neighbors kept per query by :func:`neighbor_ranks` and its oracles
+TOPK = 5
+
+
 def neighbor_ranks(scored: DataFrame, score: str) -> DataFrame:
     """The cross-engine top-5 tie rule shared by the vector searches and
     their DuckDB oracles: over (query_id, neighbor_id, cs), rank each
     query's neighbors by ``cs`` descending with ``neighbor_id`` ascending
-    on ties, keep ranks 1-5 with ``rk`` as long and the score rounded to
-    6 places (named ``score``), ordered by query, then rank."""
+    on ties, keep ranks 1-TOPK with ``rk`` as long and the score rounded
+    to 6 places (named ``score``), ordered by query, then rank."""
     w = Window.partitionBy("query_id").orderBy(F.col("cs").desc(), "neighbor_id")
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 5)
+        .filter(F.col("rk") <= TOPK)
         .select("query_id", "neighbor_id", "rk", F.round("cs", 6).alias(score))
         .orderBy("query_id", "rk")
     )

@@ -14,6 +14,7 @@ from pyspark.sql.window import Window
 from specialsid_spark.catalog import load_parallel
 from specialsid_spark.operators.textops import dot, dot_np, norm
 from specialsid_spark.queries import register
+from specialsid_spark.queries._determinism import neighbor_ranks
 
 _SQL_COS = (
     "list_dot_product(a.v, b.v)"
@@ -200,13 +201,7 @@ def sim_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cs"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cs").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id", "rk", F.round("cs", 6).alias("cos_sim"))
-        .orderBy("query_id", "rk")
-    )
+    return neighbor_ranks(scored, "cos_sim")
 
 
 #: Multi-table sign-LSH: 4 hash tables, each keyed on the signs of 8
@@ -352,13 +347,7 @@ def sim_lsh_multitable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (dot_np(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cs"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cs").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id", "rk", F.round("cs", 6).alias("cos_sim"))
-        .orderBy("query_id", "rk")
-    )
+    return neighbor_ranks(scored, "cos_sim")
 
 
 _N_CENTROIDS = 8  # coarse-quantizer cells (stand-in for k-means output)
@@ -454,13 +443,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cs"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cs").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id", "rk", F.round("cs", 6).alias("cos_sim"))
-        .orderBy("query_id", "rk")
-    )
+    return neighbor_ranks(scored, "cos_sim")
 
 
 _SQL_MU_VEC = "list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(floor(x * 1000000) AS BIGINT))"

@@ -32,7 +32,7 @@ from specialsid_spark.operators.kmeans import (
     micro,
 )
 from specialsid_spark.queries import register
-from specialsid_spark.queries._determinism import neighbor_ranks
+from specialsid_spark.queries._determinism import TOPK, neighbor_ranks
 
 # DuckDB twin of the micro-unit snap for one array element.
 _SQL_MU = "CAST(floor(CAST({x} AS DOUBLE) * 1000000) AS BIGINT)"
@@ -548,7 +548,6 @@ def emb_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IVF_NPROBE = 2
 _IVF_NQUERY = 10
-_IVF_TOPK = 5
 
 
 def _ivf_trained_oracle() -> str:
@@ -590,7 +589,7 @@ def _ivf_trained_oracle() -> str:
                  row_number() OVER (PARTITION BY query_id
                                     ORDER BY cs DESC, neighbor_id) AS rk
           FROM scored)
-    WHERE rk <= {_IVF_TOPK}
+    WHERE rk <= {TOPK}
     ORDER BY query_id, rk"""
     )
 
@@ -806,7 +805,7 @@ def _ivf_incremental_oracle() -> str:
                  row_number() OVER (PARTITION BY query_id
                                     ORDER BY cs DESC, neighbor_id) AS rk
           FROM scored)
-    WHERE rk <= {_IVF_TOPK}
+    WHERE rk <= {TOPK}
     ORDER BY query_id, rk"""
     )
 

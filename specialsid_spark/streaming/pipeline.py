@@ -24,9 +24,9 @@ aggregations (T8) bound their state by event time.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
+from pathlib import Path
 
 import pandas as pd  # module-level: pandas_udf type hints must
 # resolve in module globals under `from __future__ import annotations`
@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from specialsid_spark.operators.clean import CLEAN_SCHEMA, clean_products
+from specialsid_spark.operators.clean import clean_products
 from specialsid_spark.operators.extraction import (
     PRODUCT_JSON_SCHEMA,
     ExtractionConfig,
@@ -145,15 +145,6 @@ def hop2_pages_to_products_json(
     )
 
 
-_CLEAN_PARTS = ("province", "date_range")
-
-# hop3's clean zone as a reader sees it: the partition columns come last
-_CLEAN_ZONE_SCHEMA = T.StructType(
-    [f for f in CLEAN_SCHEMA if f.name not in _CLEAN_PARTS]
-    + [CLEAN_SCHEMA[n] for n in _CLEAN_PARTS]
-)
-
-
 def hop3_json_to_clean(
     spark: SparkSession,
     json_dir: str,
@@ -167,7 +158,7 @@ def hop3_json_to_clean(
         cleaned.writeStream.format("parquet")
         .option("path", clean_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .partitionBy(*_CLEAN_PARTS)
+        .partitionBy("province", "date_range")
         .trigger(availableNow=True)
         .start()
     )
@@ -574,8 +565,11 @@ def streaming_decontaminate_ingest(
     in Spark; the eval-gram set ships to executors once in the closure
     of ONE scalar pandas UDF that counts each doc's hits (real eval
     suites are a few million shingles — broadcast territory).
-    Stateless, no shuffle, no state store.  NULL text has no grams, so
-    it passes with n_grams = n_eval_hits = 0.  Returns the surviving
+    Stateless, no shuffle, no state store.  The UDF is marked
+    nondeterministic so the keep filter is not pushed below it: pushed,
+    the filter would carry a second copy of the UDF and every doc's
+    grams would cross Arrow twice.  NULL text has no grams, so it
+    passes with n_grams = n_eval_hits = 0.  Returns the surviving
     stream with per-doc overlap columns so downstream audits can see
     what was near-missed; the caller attaches the sink."""
     from specialsid_spark.operators.textops import (  # noqa: PLC0415
@@ -584,8 +578,10 @@ def streaming_decontaminate_ingest(
     )
 
     @F.pandas_udf("long")
-    def eval_hits(grams: pd.Series) -> pd.Series:
+    def _eval_hits(grams: pd.Series) -> pd.Series:
         return grams.map(lambda g: len(eval_grams.intersection(g))).astype("int64")
+
+    eval_hits = _eval_hits.asNondeterministic()
 
     docs = spark.readStream.schema("doc_id long, ts timestamp, text string").json(
         docs_dir
@@ -1289,6 +1285,30 @@ def streaming_cusum_monitor(
     )
 
 
+def _parquet_data_schema(path: str) -> T.StructType:
+    """The data columns of the Spark-written parquet directory ``path``,
+    as Spark records them in every file's footer: ONE driver-side footer
+    read of the first data file, where ``spark.read.parquet(path).schema``
+    runs a Spark job.  Hidden names (``_spark_metadata``, ``.crc``) are
+    skipped as Spark skips them.  A stream given these columns infers
+    the ``key=value`` partition columns from the directory listing
+    itself, so its schema is the one a batch read infers."""
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    root = Path(path)
+    files = sorted(
+        f
+        for f in root.rglob("*.parquet")
+        if not any(p.startswith(("_", ".")) for p in f.relative_to(root).parts)
+    )
+    if not files:
+        raise FileNotFoundError(f"no parquet data file under {path}")
+    meta = pq.read_schema(files[0]).metadata
+    return T.StructType.fromJson(
+        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+    )
+
+
 def _hop4_gate_stream(
     spark: SparkSession,
     clean_dir: str,
@@ -1315,12 +1335,7 @@ def _hop4_gate_stream(
     holds is a corpus hit, so nothing is admitted twice."""
     from specialsid_spark.operators.snapshot import snapshot_version_by_tag
 
-    # hop3's clean zone has a known schema, while inferring it from the
-    # files is one Spark job per stream start; a clean zone written
-    # some other way (no hop3 partitions) is still inferred
-    hop3 = glob.glob(os.path.join(clean_dir, f"{_CLEAN_PARTS[0]}=*"))
-    schema = _CLEAN_ZONE_SCHEMA if hop3 else spark.read.parquet(clean_dir).schema
-    stream = spark.readStream.schema(schema).parquet(clean_dir)
+    stream = spark.readStream.schema(_parquet_data_schema(clean_dir)).parquet(clean_dir)
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
         tag = f"hop4-{name}-{_checkpoint_id(checkpoint_dir)}-{batch_id}"

@@ -357,3 +357,30 @@ def test_streaming_decontaminate_tokenizes_like_batch(spark, tmp_path):
     }
     assert want == {1: (2, 0), 2: (1, 0), 3: (0, 0)}
     assert stream == want
+
+
+def test_streaming_decontaminate_scores_each_doc_once(spark, tmp_path):
+    """The keep filter reads the eval-hit count, so an optimizer that
+    pushed it below the scoring projection would plan the hit-count UDF
+    twice and ship every doc's grams through Arrow twice.  The
+    micro-batch's physical plan holds ONE ArrowEvalPython."""
+    import json
+
+    from specialsid_spark.streaming.pipeline import streaming_decontaminate_ingest
+
+    docs_dir = tmp_path / "docs"
+    docs_dir.mkdir()
+    with open(docs_dir / "b1.json", "w") as fh:
+        for doc_id, text in enumerate(["a b c d e f g", "x y z w v u", None]):
+            fh.write(json.dumps({"doc_id": doc_id, "ts": "2024-01-01 10:00:00",
+                                 "text": text}) + "\n")
+    q = (
+        streaming_decontaminate_ingest(spark, str(docs_dir), frozenset({"a b c d e"}))
+        .writeStream.format("memory")
+        .queryName("decon_scored_once")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert {r.doc_id for r in spark.table("decon_scored_once").collect()} == {1, 2}
+    assert q._jsq.explainInternal(False).count("ArrowEvalPython") == 1  # noqa: SLF001
